@@ -878,7 +878,7 @@ def simhash_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
 SIMHASH_KERNEL_BYTES = 2 << 20
 
 # Above this estimated input size the pair stage switches again, from the
-# 8-bit-band Arrow kernel to multi-index hashing (see _simhash_mih_pairs):
+# 8-bit-band Arrow kernel to multi-index hashing (see mih_pairs):
 # 8-bit bands have only 256 values, so bucket occupancy — and the
 # occupancy² pair term — grows linearly with the corpus no matter how the
 # work is kernelized (measured: 487 s at sf10/500k docs, ~2000 docs per
@@ -934,8 +934,7 @@ def _mih_planned_compares(c, width: int, s: int) -> float:
 
 
 def _np_pop64(x):
-    """Branch-free SWAR popcount over a uint64 ndarray (same constants as
-    the in-kernel copy in simhash_near_dup_pairs)."""
+    """Branch-free SWAR popcount over a uint64 ndarray."""
     import numpy as np
 
     m1 = np.uint64(0x5555555555555555)
@@ -946,6 +945,44 @@ def _np_pop64(x):
     x = (x & m2) + ((x >> np.uint64(2)) & m2)
     x = (x + (x >> np.uint64(4))) & m4
     return (x * h) >> np.uint64(56)
+
+
+def _band_combo_pairs(
+    ex: DataFrame,
+    sig_cols: tuple[str, ...],
+    max_hamming: int,
+    keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """No-Python pair tail of the exact-match banded plans: ``ex`` holds
+    one row per (doc, band) with ``doc_id``, ``keys``, ``band``,
+    ``band_val`` and the signature columns ``sig_cols``. Each bucket's
+    docs are collected, sorted, and paired in-row (a<b combos), verified
+    by the full ``bit_count`` sum over ``sig_cols``; a pair colliding in
+    several bands is deduped by the final groupBy (its hamming is the
+    same in every collision)."""
+    grp = (
+        ex.groupBy(*keys, "band", "band_val")
+        .agg(
+            F.array_sort(F.collect_list(F.struct("doc_id", *sig_cols))).alias(
+                "ds"
+            )
+        )
+        .where(F.size("ds") >= 2)
+    )
+    ham = " + ".join(f"bit_count(x.{c} ^ y.{c})" for c in sig_cols)
+    combos = F.expr(
+        "flatten(transform(ds, (x, i) -> "
+        "transform(slice(ds, i + 2, size(ds)), y -> "
+        "struct(x.doc_id AS doc_a, y.doc_id AS doc_b, "
+        f"cast({ham} as bigint) AS hamming))))"
+    )
+    return (
+        grp.select(*keys, F.explode(combos).alias("p"))
+        .select(*keys, "p.doc_a", "p.doc_b", "p.hamming")
+        .where(F.col("hamming") <= max_hamming)
+        .groupBy(*keys, "doc_a", "doc_b")
+        .agg(F.max("hamming").alias("hamming"))
+    )
 
 
 def mih_bands(max_hamming: int) -> int:
@@ -978,148 +1015,168 @@ def mih_bands(max_hamming: int) -> int:
     )
 
 
-def _simhash_mih_pairs(
-    agg: DataFrame,
+def _swar_lanes(agg: DataFrame, names: tuple[str, ...]) -> DataFrame:
+    """``mih_pairs`` input from a SWAR aggregate: doc_id plus one guarded
+    32-bit signature lane per name (lane q = signature bits [32q, 32q+32)).
+
+    The repartition is a deliberate exchange barrier: without it
+    CollapseProject inlines the full SWAR majority-vote expression into
+    every band-key expression ``mih_pairs`` emits, and Catalyst planning
+    alone costs seconds (data-size-independent; same pathology as
+    deriving band keys from sh_lo/sh_hi in the banded plan, see
+    simhash_near_dup_pairs)."""
+    return agg.select(
+        "doc_id", *[_swar_half(32 * q, n) for q, n in enumerate(names)]
+    ).repartition("doc_id")
+
+
+def mih_pairs(
+    sigs: DataFrame,
+    n_bands: int,
     max_hamming: int,
     n_docs: int | None = None,
     max_compares: float | None = None,
+    keys: tuple[str, ...] = (),
+    name: str = "simhash",
+    sig: str = "signatures",
 ) -> DataFrame:
-    """Multi-index-hashing pair stage (Norouzi/Punjani/Fleet, CVPR'12):
-    the corpus-scale plan shape for simhash_near_dup_pairs, value-equal
-    to the banded plans.
+    """Multi-index-hashing pair miner (Norouzi/Punjani/Fleet, CVPR'12),
+    the corpus-scale pair stage of the 64-bit and 128-bit SimHash
+    families and of ``multimodal.media_near_dup``.
 
-    Geometry: the 64-bit signature splits into ``mih_bands(max_hamming)``
-    disjoint w-bit bands (w = 64/b) with per-band search radius
-    r = max_hamming // b (0 or 1 — callers with max_hamming > 7 stay on
-    the banded kernel). Pigeonhole: if every band differed in ≥ r+1 bits
-    the total distance would be ≥ b(r+1) > max_hamming, so every
-    qualifying pair agrees with some band to within r bits. The final
-    pair set is exactly {a<b : hamming ≤ max_hamming} — identical to the
-    other two plan shapes (asserted in tests/test_properties.py).
+    Input: ``sigs`` holds ``doc_id``, the group ``keys`` (pairs never
+    cross a key group) and, in every other column, the signature as
+    32-bit lanes — lane q is a non-negative BIGINT holding signature
+    bits [32q, 32q+32). Output: ``[keys…,] doc_a, doc_b, hamming`` with
+    doc_a < doc_b — exactly {a<b : hamming ≤ max_hamming} per group,
+    the same pair set as every banded plan (asserted in tests).
 
-    Transport shape (the third-decade rebuild): the Arrow task key is
-    (band, __sub) where __sub is the TOP s bits of the band value, so a
-    task owns a contiguous 2^(w-s)-value slice of one band's bucket
-    space. Band-distance-1 pairs whose differing bit is one of the LOW
-    w-s bits live in the SAME task already — the kernel finds them by
-    comparing bucket v with bucket v^bit in-memory, no variant row
-    needed. Only the s TOP-bit flips cross task boundaries, so each doc
-    emits 1+s keys per band instead of 1+w: at w=16/s=8 the exploded
-    row volume drops 17→9 per doc-band (47%), at w=32/s=8 33→9 (73%),
-    and each low-bit neighbor compare runs ONCE (v < v^bit ordering)
-    instead of twice (both variant orientations) — the quadratic
-    kernel term roughly halves on top of the transport saving
-    (measured at sf30/1.5M docs: 114 s → see SCALING.md third decade).
+    Geometry: the signature splits into ``n_bands`` disjoint w-bit
+    bands (w = 32·lanes/n_bands ∈ {16, 32}, so band k nests in one
+    lane) with per-band radius r = max_hamming // n_bands ≤ 1.
+    Pigeonhole: if every band differed in ≥ r+1 bits the distance would
+    be ≥ b(r+1) > max_hamming, so every qualifying pair agrees with some
+    band to within r bits. Verification is always the full popcount
+    over all lanes, so over-generation is impossible.
 
-    The kernel sorts its slice by (band_val, kind) and walks buckets
-    via np.unique boundaries — no per-bucket pandas groupby. For each
-    bucket v with exact rows E(v) and cross-sub variant rows V(v):
-    E(v)×E(v) upper triangle (band distance 0), E(v)×V(v) (top-bit
-    distance 1; found in both orientations across the two subs, deduped
-    by the final pair groupBy), and E(v)×E(v^bit) for each low bit with
-    v < v^bit (low-bit distance 1, found once). Verification is always
-    the full 64-bit SWAR popcount, so over-generation is impossible.
+    Transport: the Arrow task key is (keys, band, __sub) where __sub is
+    the TOP s bits of the band value, so a task owns a contiguous
+    2^(w-s)-value slice of one band's bucket space. Band-distance-1
+    pairs whose differing bit is one of the LOW w-s bits live in the
+    same task — the kernel compares bucket v with bucket v^bit
+    in-memory, once (v < v^bit), no variant row shipped. Only the s
+    top-bit flips cross tasks, and by the SET-BIT rule a flip emits a
+    variant key only when the flipped bit is set in the origin (a
+    value decrease): a band-distance-1 pair differs in exactly that
+    bit, so exactly one side casts into the other's bucket — full
+    recall, one discovery orientation, s/2 expected variants per
+    doc-band. Transport, not compute, sets this design: an Arrow kernel
+    shipping all 1+w keys per doc-band regressed media at sf30 (339.7 s
+    vs 231.9 s). The key is ONE bigint ``bvk`` = band_val·2 + kind, so
+    a single sort puts each bucket's exacts before its variants.
 
-    The repartition between signature assembly and key emit is a
-    deliberate exchange barrier: without it CollapseProject inlines the
-    full SWAR majority-vote expression into all b·(1+s) variant-key
-    expressions and Catalyst planning alone costs seconds
-    (data-size-independent; same pathology as deriving band keys from
-    sh_lo/sh_hi in the banded plan, see simhash_near_dup_pairs).
+    s sizing: start at the s = 4 floor (16 tasks/band; per-group
+    applyInPandas overhead dominated near-empty slices, ~1.7 s on 6k
+    rows) and grow only while a task would exceed ~500k rows — fewer
+    sub bits ship fewer variant rows while the extra in-task neighbor
+    compares stay NumPy-cheap (s = 4 measured ~10% faster than s = 8 at
+    1.8M assets). Any s in [1, w-1] is value-exact.
+
+    PLANNED-COMPARE refusal (round 13, MIH_MAX_COMPARES): past
+    ``MIH_PROBE_MIN_DOCS`` one column-pruned (keys, band, value)
+    histogram prices the kernel before any pair task launches and
+    refuses above ``max_compares``. At w ≤ 16 the dense histogram
+    (bounded collect ≤ groups·b·2^w rows) gives the EXACT kernel term
+    (``_mih_planned_compares``). A dense 2^32 histogram is unbuildable,
+    so at w = 32 the within-bucket triangle term Σ c(c−1)/2 is summed
+    server-side (one-row collect) — a certified LOWER bound that omits
+    the distance-1 neighbor products, so it refuses only plans that
+    certainly exceed the budget. ``name`` and ``sig`` word the refusal
+    for the calling operator.
     """
     import numpy as np
     import pandas as pd
 
-    b = mih_bands(max_hamming)
-    w = 64 // b
-    mask = (1 << w) - 1
+    lanes = [c for c in sigs.columns if c != "doc_id" and c not in keys]
+    b = n_bands
+    w = 32 * len(lanes) // b
     r = max_hamming // b
-    # Sub-bit count s: tasks = b·2^s. Floor-first sizing (round 11,
-    # ported from the media twin's A/B — s = 4 measured ~10% faster
-    # than the old s = 8 start at 1.8M assets): start at the s = 4
-    # small-corpus floor (16 tasks/band; near-empty bucket slices pay
-    # one applyInPandas group call each, measured ~1.7 s of pure
-    # per-group overhead on 6k rows) and GROW only while the
-    # ~500k-rows-per-task target is exceeded — fewer sub bits ship
-    # fewer variant rows per doc (1 + s/2 expected per doc-band, see
-    # the set-bit rule below) while the extra in-task neighbor-bit
-    # compares stay NumPy-cheap. Any s in [1, w-1] is value-exact;
-    # s ≤ w-1 keeps at least one low bit in-task.
+    if w not in (16, 32) or b * w != 32 * len(lanes) or r > 1:
+        raise ValueError(
+            f"MIH needs 16- or 32-bit bands and max_hamming // n_bands <= 1"
+            f" (got {len(lanes)} lanes, n_bands={b}, max_hamming="
+            f"{max_hamming})"
+        )
+    mask = (1 << w) - 1
     s = min(4, w - 1)
     if n_docs:
-        while s < min(w - 1, 16) and n_docs * (2 + s) * b > 1_000_000 * b * (1 << s):
+        while s < min(w - 1, 16) and n_docs * (2 + s) > 1_000_000 << s:
             s += 1
     low = w - s
-    sigs = agg.select(
-        "doc_id", _swar_half(0, "sh_lo"), _swar_half(32, "sh_hi")
-    ).repartition("doc_id")
-    # PLANNED-COMPARE refusal (round 13, the sixth-decade finding — see
-    # MIH_MAX_COMPARES): one column-pruned per-band bucket histogram
-    # (bounded collect ≤ b·2^w rows, the band-value domain) feeds the
-    # exact kernel compare term before any pair task launches. Applies
-    # to the 16-bit geometry only: 32-bit bands (h ≤ 3) have occupancy
-    # n/2^32 and their collision term stays under 1e12 compares until
-    # ~4e10 docs — far past a single job's corpus.
-    budget = MIH_MAX_COMPARES if max_compares is None else max_compares
-    if w == 16 and n_docs and n_docs >= MIH_PROBE_MIN_DOCS:
-        import numpy as _np
 
-        hsts = []
-        for k in range(b):
-            src = "sh_lo" if (k + 1) * w <= 32 else "sh_hi"
-            shift = (k * w) % 32
-            hsts.append(
-                f"struct({k} AS band,"
-                f" (shiftrightunsigned({src}, {shift}) & {mask}) AS v)"
-            )
-        rows = (
-            sigs.select(
-                F.explode(F.expr("array(" + ",".join(hsts) + ")")).alias(
-                    "bk"
-                )
-            )
-            .groupBy(F.col("bk.band").alias("band"), F.col("bk.v").alias("v"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
+    def band(k: int) -> str:
+        return (
+            f"(shiftrightunsigned({lanes[k * w // 32]}, {k * w % 32})"
+            f" & {mask})"
         )
-        planned = 0.0
-        for k in range(b):
-            c = _np.zeros(1 << w, dtype=_np.float64)
-            for row in rows:
-                if row["band"] == k:
-                    c[int(row["v"])] = float(row["c"])
-            planned += _mih_planned_compares(c, w, s)
+
+    budget = MIH_MAX_COMPARES if max_compares is None else max_compares
+    if n_docs and n_docs >= MIH_PROBE_MIN_DOCS:
+        hist = (
+            sigs.select(
+                *keys,
+                F.explode(
+                    F.expr(
+                        "array("
+                        + ",".join(
+                            f"struct({k} AS band, {band(k)} AS v)"
+                            for k in range(b)
+                        )
+                        + ")"
+                    )
+                ).alias("bk"),
+            )
+            .groupBy(
+                *keys,
+                F.col("bk.band").alias("band"),
+                F.col("bk.v").alias("v"),
+            )
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
+        if w <= 16:
+            per: dict[tuple, list] = {}
+            for row in hist.collect():
+                per.setdefault(tuple(row[:-2]), []).append(
+                    (int(row["v"]), float(row["c"]))
+                )
+            planned = 0.0
+            for vc in per.values():
+                c = np.zeros(1 << w, dtype=np.float64)
+                c[[v for v, _ in vc]] = [n for _, n in vc]
+                planned += _mih_planned_compares(c, w, s)
+        else:
+            c = F.col("c").cast("double")
+            planned = float(
+                hist.where(F.col("c") >= 2)
+                .agg(F.sum(c * (c - 1.0) / 2.0))
+                .collect()[0][0]
+                or 0.0
+            )
         if planned > budget:
             raise ValueError(
-                f"simhash MIH planned compare volume {planned:.2e} exceeds "
+                f"{name} MIH planned compare volume {planned:.2e} exceeds "
                 f"max_compares={budget:.0e} at the {b}×{w}-bit band "
-                f"geometry: band-collision work is Θ(n²/2^{w}) per band "
-                f"and this corpus's bucket histogram concentrates it "
-                f"(mass-duplicate or low-entropy signatures are the usual "
-                f"cause — ONE signature value with c docs plans c²/2 "
-                f"compares from a single bucket). Exact-dedup identical "
-                f"signatures first, shard the corpus, or raise "
-                f"max_compares after sizing the cluster."
+                f"geometry: band-collision work is Θ(n²/2^{w}) per band, "
+                f"and this corpus's bucket histogram concentrates the "
+                f"planned MIH compare volume (mass-duplicate {sig} are the "
+                f"usual cause — ONE value shared by c docs plans c²/2 "
+                f"compares from a single bucket at any band width). "
+                f"Exact-dedup identical {sig} first, shard the corpus, or "
+                f"raise max_compares after sizing the cluster."
             )
-    # Key encoding: ONE bigint ``bvk`` = band_val·2 + kind — the kind
-    # flag rides the low bit, so the kernel sorts a single key (exacts
-    # land before variants of the same bucket for free) and one shipped
-    # column replaces two. SET-BIT variant rule: a top-bit flip emits a
-    # variant key only when the flipped bit is SET in the origin (the
-    # variant is a value DECREASE). A band-distance-1 pair differs in
-    # exactly that bit, so exactly one side has it set — the set side
-    # casts the variant into the cleared side's bucket, every pair is
-    # still met (full recall) but in exactly ONE orientation: expected
-    # variant volume halves (s/2 per doc-band, uniform bits) and the
-    # duplicated-discovery kernel work the old both-orientations
-    # transport paid disappears with it.
     structs = []
     for k in range(b):
-        # band k covers signature bits [k·w, (k+1)·w); sh_lo holds bits
-        # 0..31, sh_hi bits 32..63 (w ∈ {16, 32} always nests in one half)
-        src = "sh_lo" if (k + 1) * w <= 32 else "sh_hi"
-        shift = (k * w) % 32
-        bv = f"(shiftrightunsigned({src}, {shift}) & {mask})"
+        bv = band(k)
         structs.append(
             f"struct({k} AS band, cast({bv} * 2 as bigint) AS bvk)"
         )
@@ -1131,114 +1188,93 @@ def _simhash_mih_pairs(
                 " null)"
                 for i in range(low, w)
             )
-    ex = (
-        sigs.select(
-            "doc_id",
-            "sh_lo",
-            "sh_hi",
-            F.explode(
-                F.expr(
-                    "filter(array(" + ",".join(structs) + "),"
-                    " x -> x is not null)"
-                )
-            ).alias("bk"),
-        )
-        .select("doc_id", "sh_lo", "sh_hi", "bk.band", "bk.bvk")
-    )
-
-    _EMPTY = {
-        "doc_a": pd.Series(dtype="int64"),
-        "doc_b": pd.Series(dtype="int64"),
-        "hamming": pd.Series(dtype="int64"),
-    }
+    ex = sigs.select(
+        "doc_id",
+        *keys,
+        *lanes,
+        F.explode(
+            F.expr(
+                "filter(array(" + ",".join(structs) + "), x -> x is not null)"
+            )
+        ).alias("bk"),
+    ).select("doc_id", *keys, *lanes, "bk.band", "bk.bvk")
     in_task_bits = low if r >= 1 else 0
 
     def _mih_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         bvk = pdf["bvk"].to_numpy()
         order = np.argsort(bvk, kind="stable")
         bvk = bvk[order]
-        vals = bvk >> 1
         ids = pdf["doc_id"].to_numpy()[order]
-        lo_v = pdf["sh_lo"].to_numpy()[order].astype(np.uint64)
-        hi_v = pdf["sh_hi"].to_numpy()[order].astype(np.uint64)
-        uvals, starts = np.unique(vals, return_index=True)
-        bounds = np.append(starts, len(vals))
+        lv = [pdf[c].to_numpy()[order].astype(np.uint64) for c in lanes]
+        # lane pairs packed into 64-bit words: one popcount per 64 bits
+        words = [
+            lv[q] | (lv[q + 1] << np.uint64(32)) if q + 1 < len(lv) else lv[q]
+            for q in range(0, len(lv), 2)
+        ]
+        uvals, starts = np.unique(bvk >> 1, return_index=True)
+        bounds = np.append(starts, len(bvk))
         # the packed key sorts exacts (kind bit 0) before variants of
         # the same bucket, so the exact segment is a prefix
         n_exact = np.searchsorted(bvk, uvals * 2 + 1, side="left") - starts
         idx = {int(v): i for i, v in enumerate(uvals)}
-        outs = [pd.DataFrame(_EMPTY)]
+        found = [np.empty((3, 0), dtype=np.int64)]
 
-        def emit(ham, mask_m, ids_r, ids_c):
-            rr, cc = np.nonzero(mask_m)
+        def compare(r0, r1, c0, c1, m=None):
+            ham = _np_pop64(words[0][r0:r1, None] ^ words[0][None, c0:c1])
+            for x in words[1:]:
+                ham = ham + _np_pop64(x[r0:r1, None] ^ x[None, c0:c1])
+            ham = ham.astype(np.int64)
+            m = ham <= max_hamming if m is None else m & (ham <= max_hamming)
+            rr, cc = np.nonzero(m)
             if len(rr):
-                a = ids_r[rr]
-                bb = ids_c[cc]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "doc_a": np.minimum(a, bb),
-                            "doc_b": np.maximum(a, bb),
-                            "hamming": ham[rr, cc],
-                        }
-                    )
-                )
+                a, bb = ids[r0 + rr], ids[c0 + cc]
+                lo, hi = np.minimum(a, bb), np.maximum(a, bb)
+                found.append(np.stack([lo, hi, ham[rr, cc]]))
 
         for i in range(len(uvals)):
             s0, s1 = bounds[i], bounds[i + 1]
             n_e = int(n_exact[i])
             if n_e == 0:
                 continue
-            # (1) bucket-local: exact×exact triangle + exact×variant
+            # (1) bucket-local: exact×exact triangle + exact×variant;
+            # 4096-row chips bound the XOR matrix even on a mass-dup bucket
             if s1 - s0 >= 2:
                 cols = np.arange(s1 - s0)[None, :]
                 for c0 in range(0, n_e, 4096):
                     c1 = min(c0 + 4096, n_e)
-                    ham = (
-                        _np_pop64(lo_v[s0 + c0 : s0 + c1, None] ^ lo_v[None, s0:s1])
-                        + _np_pop64(hi_v[s0 + c0 : s0 + c1, None] ^ hi_v[None, s0:s1])
-                    ).astype(np.int64)
                     rows = np.arange(c0, c1)[:, None]
-                    m = (
-                        ((cols < n_e) & (rows < cols)) | (cols >= n_e)
-                    ) & (ham <= max_hamming)
-                    emit(ham, m, ids[s0 + c0 : s0 + c1], ids[s0:s1])
+                    tri = ((cols < n_e) & (rows < cols)) | (cols >= n_e)
+                    compare(s0 + c0, s0 + c1, s0, s1, tri)
             # (2) low-bit neighbor buckets, each unordered pair once
             v = int(uvals[i])
             for t in range(in_task_bits):
                 u = v ^ (1 << t)
-                if u < v:
-                    continue
-                j = idx.get(u)
-                if j is None:
-                    continue
-                t0 = bounds[j]
-                n_e2 = int(n_exact[j])
-                if n_e2 == 0:
+                j = idx.get(u) if u > v else None
+                if j is None or n_exact[j] == 0:
                     continue
                 for c0 in range(0, n_e, 4096):
                     c1 = min(c0 + 4096, n_e)
-                    ham = (
-                        _np_pop64(
-                            lo_v[s0 + c0 : s0 + c1, None]
-                            ^ lo_v[None, t0 : t0 + n_e2]
-                        )
-                        + _np_pop64(
-                            hi_v[s0 + c0 : s0 + c1, None]
-                            ^ hi_v[None, t0 : t0 + n_e2]
-                        )
-                    ).astype(np.int64)
-                    m = ham <= max_hamming
-                    emit(ham, m, ids[s0 + c0 : s0 + c1], ids[t0 : t0 + n_e2])
-        return pd.concat(outs, ignore_index=True)
+                    t0 = bounds[j]
+                    compare(s0 + c0, s0 + c1, t0, t0 + n_exact[j])
+        a, bb, h = np.concatenate(found, axis=1)
+        return pd.DataFrame(
+            {
+                **{k: pdf[k].iloc[0] for k in keys},
+                "doc_a": a,
+                "doc_b": bb,
+                "hamming": h,
+            }
+        )
 
-    coarse = ex.withColumn(
-        "__sub", F.expr(f"shiftrightunsigned(bvk, {low + 1})")
+    schema = ", ".join(
+        [f"{k} {sigs.schema[k].dataType.simpleString()}" for k in keys]
+        + ["doc_a long", "doc_b long", "hamming long"]
     )
     return (
-        coarse.groupBy("band", "__sub")
-        .applyInPandas(_mih_kernel, "doc_a long, doc_b long, hamming long")
-        .groupBy("doc_a", "doc_b")
+        ex.withColumn("__sub", F.expr(f"shiftrightunsigned(bvk, {low + 1})"))
+        .groupBy(*keys, "band", "__sub")
+        .applyInPandas(_mih_kernel, schema)
+        .groupBy(*keys, "doc_a", "doc_b")
         .agg(F.max("hamming").alias("hamming"))
     )
 
@@ -1304,12 +1340,17 @@ def simhash_near_dup_pairs(
     # geometry from the radius — 2×32-bit at h ≤ 3, 4×16-bit at h ≤ 7).
     # The pair set is the same {hamming ≤ max_hamming} regardless of
     # geometry — every plan shape has full recall — so the switch is
-    # purely a cost decision; see _simhash_mih_pairs. Only radii ≤ 7
-    # keep the variant enumeration at one flip per band. The count()
-    # job sizes the Arrow transport granularity (trivial next to the
-    # pair stage it sizes — the resolve_planes convention).
+    # purely a cost decision; see mih_pairs. Only radii ≤ 7 keep the
+    # variant enumeration at one flip per band. The count() job sizes
+    # the Arrow transport granularity (trivial next to the pair stage it
+    # sizes — the resolve_planes convention).
     if max_hamming <= 7 and _estimated_bytes(df) >= SIMHASH_MIH_BYTES:
-        return _simhash_mih_pairs(agg, max_hamming, n_docs=df.count())
+        return mih_pairs(
+            _swar_lanes(agg, ("sh_lo", "sh_hi")),
+            mih_bands(max_hamming),
+            max_hamming,
+            n_docs=df.count(),
+        )
     bands = F.expr(
         "array("
         + ",".join(
@@ -1351,42 +1392,9 @@ def simhash_near_dup_pairs(
     import pandas as pd
 
     if _estimated_bytes(df) < SIMHASH_KERNEL_BYTES:
-        grp = (
-            ex.groupBy("band", "band_val")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("doc_id", "sh_lo", "sh_hi"))
-                ).alias("ds")
-            )
-            .where(F.size("ds") >= 2)
-        )
-        combos = F.expr(
-            "flatten(transform(ds, (x, i) -> "
-            "transform(slice(ds, i + 2, size(ds)), y -> "
-            "struct(x.doc_id AS doc_a, y.doc_id AS doc_b, "
-            "cast(bit_count(x.sh_lo ^ y.sh_lo) + "
-            "bit_count(x.sh_hi ^ y.sh_hi) as bigint) AS hamming))))"
-        )
-        return (
-            grp.select(F.explode(combos).alias("p"))
-            .select("p.doc_a", "p.doc_b", "p.hamming")
-            .where(F.col("hamming") <= max_hamming)
-            .groupBy("doc_a", "doc_b")
-            .agg(F.max("hamming").alias("hamming"))
-        )
+        return _band_combo_pairs(ex, ("sh_lo", "sh_hi"), max_hamming)
 
     sub_groups = 64
-
-    def _pop64(x):
-        m1 = np.uint64(0x5555555555555555)
-        m2 = np.uint64(0x3333333333333333)
-        m4 = np.uint64(0x0F0F0F0F0F0F0F0F)
-        h = np.uint64(0x0101010101010101)
-        x = x - ((x >> np.uint64(1)) & m1)
-        x = (x & m2) + ((x >> np.uint64(2)) & m2)
-        x = (x + (x >> np.uint64(4))) & m4
-        return (x * h) >> np.uint64(56)
-
     _EMPTY = {
         "doc_a": pd.Series(dtype="int64"),
         "doc_b": pd.Series(dtype="int64"),
@@ -1407,8 +1415,8 @@ def simhash_near_dup_pairs(
             for c0 in range(0, len(ids), 4096):
                 c1 = min(c0 + 4096, len(ids))
                 ham = (
-                    _pop64(lo[c0:c1, None] ^ lo[None, :])
-                    + _pop64(hi[c0:c1, None] ^ hi[None, :])
+                    _np_pop64(lo[c0:c1, None] ^ lo[None, :])
+                    + _np_pop64(hi[c0:c1, None] ^ hi[None, :])
                 ).astype(np.int64)
                 rows = np.arange(c0, c1)[:, None]
                 cols = np.arange(len(ids))[None, :]
@@ -1526,15 +1534,13 @@ def simhash128_near_dup_pairs(
       8×16 geometry's occupancy is n/65536, not n/256, so the
       interpreted combo term stays trivial at every size this arm
       serves.)
-    - LARGE inputs: 4×32-bit-band MIH with the set-bit variant
-      transport and the two-lane popcount kernel
-      (``_simhash128_mih_pairs``). The AVERAGE-occupancy collision term
-      is Θ(n²/2^32) per band — under the 1e12 budget until ~4e10 docs —
+    - LARGE inputs: ``mih_pairs`` over the four 32-bit halves with
+      4×32-bit bands. The AVERAGE-occupancy collision term is
+      Θ(n²/2^32) per band — under the 1e12 budget until ~4e10 docs —
       but average occupancy says nothing about CONCENTRATION: one
       mass-duplicated 128-bit signature of c docs still plans c²/2
       kernel compares from a single bucket at any band width, so the
-      MIH arm runs a bounded heavy-bucket probe (round 14, per driver
-      advice; see ``_simhash128_mih_pairs``) and refuses above
+      MIH arm runs the bounded triangle probe and refuses above
       ``max_compares`` (default ``MIH_MAX_COMPARES``).
     """
     if max_hamming > 7:
@@ -1545,8 +1551,13 @@ def simhash128_near_dup_pairs(
         )
     agg = _simhash128_agg(df, text_col)
     if _estimated_bytes(df) >= SIMHASH_MIH_BYTES:
-        return _simhash128_mih_pairs(
-            agg, max_hamming, n_docs=df.count(), max_compares=max_compares
+        return mih_pairs(
+            _swar_lanes(agg, ("sh_0", "sh_1", "sh_2", "sh_3")),
+            4,
+            max_hamming,
+            n_docs=df.count(),
+            max_compares=max_compares,
+            name="simhash128",
         )
     bands = F.expr(
         "array("
@@ -1567,243 +1578,7 @@ def simhash128_near_dup_pairs(
     ).select(
         "doc_id", "sh_0", "sh_1", "sh_2", "sh_3", "bk.band", "bk.band_val"
     )
-    grp = (
-        ex.groupBy("band", "band_val")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct("doc_id", "sh_0", "sh_1", "sh_2", "sh_3")
-                )
-            ).alias("ds")
-        )
-        .where(F.size("ds") >= 2)
-    )
-    ham = " + ".join(f"bit_count(x.sh_{i} ^ y.sh_{i})" for i in range(4))
-    combos = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), y -> "
-        "struct(x.doc_id AS doc_a, y.doc_id AS doc_b, "
-        f"cast({ham} as bigint) AS hamming))))"
-    )
-    return (
-        grp.select(F.explode(combos).alias("p"))
-        .select("p.doc_a", "p.doc_b", "p.hamming")
-        .where(F.col("hamming") <= max_hamming)
-        .groupBy("doc_a", "doc_b")
-        .agg(F.max("hamming").alias("hamming"))
-    )
-
-
-def _simhash128_mih_pairs(
-    agg: DataFrame,
-    max_hamming: int,
-    n_docs: int | None = None,
-    max_compares: float | None = None,
-) -> DataFrame:
-    """4×32-bit-band MIH pair stage for 128-bit signatures — the
-    geometry whose band-collision term is 2^16× smaller than the
-    64-bit family's (the round-13 sixth-decade remedy). Mechanics are
-    the ``_simhash_mih_pairs`` transport ported to two popcount lanes:
-    band k IS the packed half sh_k, the set-bit rule emits one variant
-    orientation per SET top bit, tasks own contiguous 2^(32-s) bucket
-    slices, and verification is the full 128-bit popcount over the
-    four halves. Any s in [1, 31] is value-exact.
-
-    Concentration refusal (round 14, per driver advice): wide bands fix
-    the AVERAGE-occupancy term (Θ(n²/2^32) per band, sub-dominant to
-    ~4e10 docs), but a mass-duplicated signature value of c docs still
-    plans c²/2 within-bucket compares regardless of band width — the
-    exact pathology ``MIH_MAX_COMPARES`` refuses in the 16-bit twins.
-    A dense 2^32 histogram is unbuildable, so the probe aggregates the
-    EXACT within-bucket triangle term Σ_buckets c(c−1)/2 per band
-    server-side (groupBy (band, value) → per-band SUM; the collect is
-    ≤ b rows, never the value domain) and refuses above the budget.
-    This is a certified LOWER bound on planned compares — it omits the
-    distance-1 neighbor products, which need a paired mass value at
-    v^bit — so refusal fires only on plans that certainly exceed the
-    budget; the diffuse remainder is the sub-dominant average term."""
-    import numpy as np
-    import pandas as pd
-
-    b, w = 4, 32
-    r = max_hamming // b
-    s = min(4, w - 1)
-    if n_docs:
-        while s < min(w - 1, 16) and n_docs * (2 + s) * b > 1_000_000 * b * (
-            1 << s
-        ):
-            s += 1
-    low = w - s
-    sigs = agg.select(
-        "doc_id",
-        _swar_half(0, "sh_0"),
-        _swar_half(32, "sh_1"),
-        _swar_half(64, "sh_2"),
-        _swar_half(96, "sh_3"),
-    ).repartition("doc_id")
-    budget = MIH_MAX_COMPARES if max_compares is None else max_compares
-    if n_docs and n_docs >= MIH_PROBE_MIN_DOCS:
-        vals = F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("band"), F.col(f"sh_{k}").alias("v")
-                    )
-                    for k in range(b)
-                ]
-            )
-        ).alias("bk")
-        tri = (
-            sigs.select(vals)
-            .select(F.col("bk.band").alias("band"), F.col("bk.v").alias("v"))
-            .groupBy("band", "v")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .where(F.col("c") >= 2)
-            .groupBy("band")
-            .agg(
-                F.sum(
-                    F.col("c").cast("double")
-                    * (F.col("c") - 1).cast("double")
-                    / 2.0
-                ).alias("tri")
-            )
-            .collect()
-        )
-        planned = sum(float(row["tri"] or 0.0) for row in tri)
-        if planned > budget:
-            raise ValueError(
-                f"simhash128 MIH planned within-bucket compare volume "
-                f"{planned:.2e} exceeds max_compares={budget:.0e} at the "
-                f"{b}×{w}-bit band geometry: the corpus concentrates "
-                f"mass-duplicated signature values (c docs in one bucket "
-                f"plan c²/2 compares at ANY band width). Exact-dedup "
-                f"identical fingerprints first (exact_dedup collapses "
-                f"them to one representative), shard the corpus, or "
-                f"raise max_compares after sizing the cluster."
-            )
-    structs = []
-    for k in range(b):
-        bv = f"sh_{k}"
-        structs.append(
-            f"struct({k} AS band, cast({bv} * 2 as bigint) AS bvk)"
-        )
-        if r >= 1:
-            structs.extend(
-                f"if((shiftrightunsigned({bv}, {i}) & 1) = 1,"
-                f" struct({k} AS band,"
-                f" cast(({bv} ^ {1 << i}) * 2 + 1 as bigint) AS bvk),"
-                " null)"
-                for i in range(low, w)
-            )
-    ex = sigs.select(
-        "doc_id",
-        "sh_0",
-        "sh_1",
-        "sh_2",
-        "sh_3",
-        F.explode(
-            F.expr(
-                "filter(array(" + ",".join(structs) + "),"
-                " x -> x is not null)"
-            )
-        ).alias("bk"),
-    ).select(
-        "doc_id", "sh_0", "sh_1", "sh_2", "sh_3", "bk.band", "bk.bvk"
-    )
-
-    _EMPTY = {
-        "doc_a": pd.Series(dtype="int64"),
-        "doc_b": pd.Series(dtype="int64"),
-        "hamming": pd.Series(dtype="int64"),
-    }
-    in_task_bits = low if r >= 1 else 0
-
-    def _mih_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        bvk = pdf["bvk"].to_numpy()
-        order = np.argsort(bvk, kind="stable")
-        bvk = bvk[order]
-        vals = bvk >> 1
-        ids = pdf["doc_id"].to_numpy()[order]
-        halves = [
-            pdf[f"sh_{i}"].to_numpy()[order].astype(np.uint64)
-            for i in range(4)
-        ]
-        uvals, starts = np.unique(vals, return_index=True)
-        bounds = np.append(starts, len(vals))
-        n_exact = np.searchsorted(bvk, uvals * 2 + 1, side="left") - starts
-        idx = {int(v): i for i, v in enumerate(uvals)}
-        outs = [pd.DataFrame(_EMPTY)]
-
-        def ham_block(r0, r1, c0, c1):
-            h = _np_pop64(halves[0][r0:r1, None] ^ halves[0][None, c0:c1])
-            for q in range(1, 4):
-                h = h + _np_pop64(
-                    halves[q][r0:r1, None] ^ halves[q][None, c0:c1]
-                )
-            return h.astype(np.int64)
-
-        def emit(ham, mask_m, ids_r, ids_c):
-            rr, cc = np.nonzero(mask_m)
-            if len(rr):
-                a = ids_r[rr]
-                bb = ids_c[cc]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "doc_a": np.minimum(a, bb),
-                            "doc_b": np.maximum(a, bb),
-                            "hamming": ham[rr, cc],
-                        }
-                    )
-                )
-
-        for i in range(len(uvals)):
-            s0, s1 = bounds[i], bounds[i + 1]
-            n_e = int(n_exact[i])
-            if n_e == 0:
-                continue
-            if s1 - s0 >= 2:
-                cols = np.arange(s1 - s0)[None, :]
-                for c0 in range(0, n_e, 4096):
-                    c1 = min(c0 + 4096, n_e)
-                    ham = ham_block(s0 + c0, s0 + c1, s0, s1)
-                    rows = np.arange(c0, c1)[:, None]
-                    m = (
-                        ((cols < n_e) & (rows < cols)) | (cols >= n_e)
-                    ) & (ham <= max_hamming)
-                    emit(ham, m, ids[s0 + c0 : s0 + c1], ids[s0:s1])
-            v = int(uvals[i])
-            for t in range(in_task_bits):
-                u = v ^ (1 << t)
-                if u < v:
-                    continue
-                j = idx.get(u)
-                if j is None:
-                    continue
-                t0 = bounds[j]
-                n_e2 = int(n_exact[j])
-                if n_e2 == 0:
-                    continue
-                for c0 in range(0, n_e, 4096):
-                    c1 = min(c0 + 4096, n_e)
-                    ham = ham_block(s0 + c0, s0 + c1, t0, t0 + n_e2)
-                    m = ham <= max_hamming
-                    emit(
-                        ham, m, ids[s0 + c0 : s0 + c1], ids[t0 : t0 + n_e2]
-                    )
-        return pd.concat(outs, ignore_index=True)
-
-    coarse = ex.withColumn(
-        "__sub", F.expr(f"shiftrightunsigned(bvk, {low + 1})")
-    )
-    return (
-        coarse.groupBy("band", "__sub")
-        .applyInPandas(
-            _mih_kernel, "doc_a long, doc_b long, hamming long"
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.max("hamming").alias("hamming"))
-    )
+    return _band_combo_pairs(ex, ("sh_0", "sh_1", "sh_2", "sh_3"), max_hamming)
 
 
 def _island_spans(ps: str, k: int) -> Column:
@@ -2293,6 +2068,9 @@ def incremental_line_dedup(
         .groupBy("__hl1", "__hl2")
         .agg(F.min("__k").alias("__mk"))
     )
+    kept = ~F.col("__elig") | (
+        (F.col("__k") == F.col("__mk")) & F.col("__dup").isNull()
+    )
     flagged = (
         lines.select(
             "doc_id",
@@ -2314,21 +2092,8 @@ def incremental_line_dedup(
             "pos",
             # removed lines ship no text into the rebuild exchange —
             # see line_dedup (round 15, guide §2.3)
-            F.when(
-                ~F.col("__elig")
-                | (
-                    (F.col("__k") == F.col("__mk"))
-                    & F.col("__dup").isNull()
-                ),
-                F.col("line"),
-            ).alias("line"),
-            (
-                ~F.col("__elig")
-                | (
-                    (F.col("__k") == F.col("__mk"))
-                    & F.col("__dup").isNull()
-                )
-            ).alias("__kept"),
+            F.when(kept, F.col("line")).alias("line"),
+            kept.alias("__kept"),
         )
     )
     agg = flagged.groupBy("doc_id").agg(

@@ -1039,6 +1039,8 @@ def _media_banded_pairs(fp: DataFrame, max_hamming: int) -> DataFrame:
     the MIH arm by the same argument (every qualifying pair collides in
     ≥ 1 band; verification is exact; multi-band collisions dedup in the
     final groupBy)."""
+    from .dedup import _band_combo_pairs
+
     bands = F.expr(
         "array("
         + ",".join(
@@ -1051,78 +1053,37 @@ def _media_banded_pairs(fp: DataFrame, max_hamming: int) -> DataFrame:
     ex = fp.select(
         "doc_id", "media_type", "phash", F.explode(bands).alias("bk")
     ).select("doc_id", "media_type", "phash", "bk.band", "bk.band_val")
-    grp = (
-        ex.groupBy("media_type", "band", "band_val")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("doc_id", "phash"))
-            ).alias("ds")
-        )
-        .where(F.size("ds") >= 2)
-    )
-    combos = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), y -> "
-        "struct(x.doc_id AS doc_a, y.doc_id AS doc_b, "
-        "cast(bit_count(x.phash ^ y.phash) as bigint) AS hamming))))"
-    )
-    return (
-        grp.select("media_type", F.explode(combos).alias("p"))
-        .select("media_type", "p.doc_a", "p.doc_b", "p.hamming")
-        .where(F.col("hamming") <= max_hamming)
-        .groupBy("media_type", "doc_a", "doc_b")
-        .agg(F.max("hamming").alias("hamming"))
-    )
+    return _band_combo_pairs(ex, ("phash",), max_hamming, keys=("media_type",))
 
 
 def media_near_dup(
     fp: DataFrame,
     max_hamming: int = 7,
-    n_bands: int = 4,
     n_assets: int | None = None,
     max_compares: float | None = None,
 ) -> DataFrame:
     """Near-duplicate media pairs from perceptual fingerprints: Hamming
     distance ≤ ``max_hamming`` over the 64-bit ``phash`` column, mined
-    with the multi-index-hashing geometry the text SimHash family's
-    corpus-scale plan uses (``dedup._simhash_mih_pairs``, Norouzi et
-    al. CVPR'12): the signature splits into ``n_bands`` disjoint w-bit
-    bands (w = 64/n_bands) and, by pigeonhole, every qualifying pair
-    agrees with some band to within r = max_hamming // n_bands bits —
-    distance-0 bands meet exact×exact, distance-1 bands meet
-    exact×variant. Verification is always the full 64-bit popcount on
-    the true phash values, so over-generation is impossible and the
-    pair set is EXACTLY {a<b : hamming ≤ max_hamming} per modality
+    by ``dedup.mih_pairs`` (multi-index hashing, Norouzi et al.
+    CVPR'12) — the pair miner of the text SimHash family — over the two
+    32-bit halves of phash, grouped by ``media_type``. The band count
+    follows the text family's rule, ``dedup.mih_bands(max_hamming)``:
+    2×32-bit bands at h ≤ 3, 4×16-bit at h ≤ 7; h > 7 raises. The pair
+    set is EXACTLY {a<b : hamming ≤ max_hamming} per modality
     (property-tested against brute force). Pairs never cross
     modalities (an image pHash and an audio energy profile are
     different spaces); mass-duplicate fingerprints should be
-    exact-deduped on phash first, as with SimHash.
+    exact-deduped on phash first, as with SimHash — the miner's
+    planned-compare probe refuses them above ``max_compares`` past
+    ``dedup.MIH_PROBE_MIN_DOCS`` assets.
 
-    Transport shape (round-10, ported from the text family as a UNIT —
-    the round-9 negative result showed the Arrow kernel without the
-    transport reduction REGRESSES at sf30, 339.7 vs 231.9 s, because
-    shipping 1+w keys/doc-band through Arrow dominates): the shuffle
-    key is (media_type, band, __sub) where __sub is the TOP s bits of
-    the band value, so a task owns a contiguous 2^(w-s)-value slice of
-    one band's bucket space. Band-distance-1 pairs whose differing bit
-    is one of the LOW w-s bits live in the SAME task — the kernel
-    finds them by comparing bucket v with bucket v^bit in-memory, once
-    (v < v^bit ordering), no variant row shipped. Only the s top-bit
-    flips cross task boundaries: each asset ships 1+s keys per band
-    instead of 1+w (at w=16/s=8: 17→9 rows, 47% less transport), and
-    the low-bit neighbor compares run once instead of twice. Pair
-    evaluation is a vectorized NumPy SWAR-popcount matrix per bucket
-    (4096-row chips bound the working set), not an in-row occupancy²
-    array — the round-9 collect_list shape held its whole bucket pair
-    matrix in ONE row.
-
-    Why 16-bit bands at all (the round-9 rebuild): 8-bit buckets hold
+    Why wide bands at all (the round-9 rebuild): 8-bit buckets hold
     n/256 assets per modality and the pair term is occupancy² — 500k
     assets put ~10⁹ structs on single tasks and OOM'd a 32 GiB heap.
     16-bit buckets hold n/65536 exacts; past ~10M assets/modality the
-    geometry grows ``s`` (500k-rows-per-task target, pass ``n_assets``
-    from a count the caller already has) and band widening applies
-    unchanged (SCALING.md geometry contract).
+    miner grows its sub-bit count (pass ``n_assets`` from a count the
+    caller already has) and band widening applies unchanged (SCALING.md
+    geometry contract).
 
     Full value-hash driver check (round 11): the upstream fingerprints
     are integer-exact and variant-invariant, so the oracle replays
@@ -1130,19 +1091,9 @@ def media_near_dup(
     with bit_count(xor(...)) — see ``SQL_MEDIA_NEAR_DUP``. The recall
     property (planted resized/decimated variants are recovered,
     distinct assets are not) stays pinned in tests as well."""
-    import numpy as np
+    from .dedup import mih_bands, mih_pairs
 
-    from .dedup import _np_pop64
-
-    if 64 % n_bands != 0:
-        raise ValueError("band width must divide the 64-bit phash")
-    width = 64 // n_bands
-    r = max_hamming // n_bands
-    if r > 1:
-        raise ValueError(
-            f"per-band radius {r} > 1: raise n_bands so "
-            f"max_hamming//n_bands <= 1 (single-bit variant enumeration)"
-        )
+    n_bands = mih_bands(max_hamming)
     # SMALL-corpus arm (round 11, the simhash family's gated-plan
     # precedent): below MEDIA_MIH_MIN_ASSETS the whole pair stage runs
     # as in-row expression combos over exact-match pigeonhole bands —
@@ -1164,215 +1115,19 @@ def media_near_dup(
         and max_hamming <= 7
     ):
         return _media_banded_pairs(fp, max_hamming)
-    mask = (1 << width) - 1
-    # Sub-bit count s: tasks = modalities·b·2^s. Floor-first sizing
-    # (round 11): start at s = 4 — 16 tasks/band, the small-corpus
-    # floor where per-group applyInPandas overhead stays negligible —
-    # and GROW only while the 500k-rows-per-task target is exceeded
-    # (n·(1 + s/2) expected rows per band spread over 2^s tasks; see
-    # the set-bit rule below). Fewer sub bits means fewer variant rows
-    # per asset, and the round-11 A/B at 1.8M assets measured s = 4
-    # ~10% faster than the old s = 8 start — transport scales with the
-    # variant count while the extra in-task neighbor-bit compares are
-    # NumPy-cheap. Any s in [1, w-1] is exact — only
-    # transport/parallelism move; s ≤ w-1 keeps at least one low bit
-    # in-task.
-    s = min(4, width - 1)
-    if n_assets:
-        while (
-            s < min(width - 1, 16)
-            and n_assets * (2 + s) * n_bands
-            > 1_000_000 * n_bands * (1 << s)
-        ):
-            s += 1
-    low = width - s
-    # PLANNED-COMPARE refusal (round 13, the sixth-decade finding —
-    # dedup.MIH_MAX_COMPARES): with 16-bit bands the kernel's compare
-    # volume is Θ(n²/2^16) per band per modality — wall tracked that
-    # term, not the emit volume, between the 10M and 30M decades
-    # (SCALING.md). The exact term is computable pre-launch from the
-    # per-(modality, band) bucket histogram: a BOUNDED collect
-    # (≤ modalities·n_bands·2^width rows — the band-value domain times
-    # the media_type enum, never the corpus). Refusal names the
-    # remedies; mass-duplicate fingerprints are the usual cause (the
-    # docstring already mandates exact-dedup on phash first — this
-    # gate ENFORCES the cost of skipping it instead of discovering it
-    # mid-shuffle).
-    from .dedup import (
-        MIH_MAX_COMPARES,
-        MIH_PROBE_MIN_DOCS,
-        _mih_planned_compares,
-    )
-
-    budget = MIH_MAX_COMPARES if max_compares is None else max_compares
-    if width == 16 and n_assets and n_assets >= MIH_PROBE_MIN_DOCS:
-        hsts = [
-            f"struct({k} AS band,"
-            f" (shiftrightunsigned(phash, {width * k}) & {mask}) AS v)"
-            for k in range(n_bands)
-        ]
-        rows = (
-            fp.select(
-                "media_type",
-                F.explode(F.expr("array(" + ",".join(hsts) + ")")).alias(
-                    "bk"
-                ),
-            )
-            .groupBy(
-                "media_type",
-                F.col("bk.band").alias("band"),
-                F.col("bk.v").alias("v"),
-            )
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        )
-        per: dict[tuple, list] = {}
-        for row in rows:
-            per.setdefault((row["media_type"], row["band"]), []).append(
-                (int(row["v"]), float(row["c"]))
-            )
-        planned = 0.0
-        for vc in per.values():
-            c = np.zeros(1 << width, dtype=np.float64)
-            vals = np.array([v for v, _ in vc], dtype=np.int64)
-            c[vals] = [cnt for _, cnt in vc]
-            planned += _mih_planned_compares(c, width, s)
-        if planned > budget:
-            raise ValueError(
-                f"media_near_dup planned MIH compare volume {planned:.2e} "
-                f"exceeds max_compares={budget:.0e} at the "
-                f"{n_bands}×{width}-bit band geometry: band-collision "
-                f"work is Θ(n²/2^{width}) per band per modality and this "
-                f"corpus's bucket histogram concentrates it "
-                f"(mass-duplicate fingerprints are the usual cause — ONE "
-                f"phash value with c assets plans c²/2 compares from a "
-                f"single bucket). Exact-dedup identical phash values "
-                f"first, shard the corpus per modality/time, or raise "
-                f"max_compares after sizing the cluster."
-            )
-    # Key encoding + SET-BIT variant rule (the text twin's round-11
-    # transport, dedup._simhash_mih_pairs): ``bvk`` = band_val·2 + kind
-    # packs the kind flag into the key's low bit (one sort key, one
-    # shipped column), and a top-bit flip emits a variant row only when
-    # the flipped bit is SET in the origin — a band-distance-1 pair
-    # differs in exactly that bit, so exactly one side casts into the
-    # other's bucket: full recall, ONE discovery orientation, expected
-    # variant volume halved (s/2 per asset-band).
-    structs = []
-    for k in range(n_bands):
-        bv = f"(shiftrightunsigned(phash, {width * k}) & {mask})"
-        structs.append(f"struct({k} AS band, {bv} * 2 AS bvk)")
-        if r >= 1:
-            structs.extend(
-                f"if((shiftrightunsigned({bv}, {i}) & 1) = 1,"
-                f" struct({k} AS band, ({bv} ^ {1 << i}) * 2 + 1 AS bvk),"
-                " null)"
-                for i in range(low, width)
-            )
-    ex = fp.select(
+    lanes = fp.select(
         "doc_id",
         "media_type",
-        "phash",
-        F.explode(
-            F.expr(
-                "filter(array(" + ",".join(structs) + "),"
-                " x -> x is not null)"
-            )
-        ).alias("bk"),
-    ).select("doc_id", "media_type", "phash", "bk.band", "bk.bvk")
-
-    _EMPTY = {
-        "media_type": pd.Series(dtype="object"),
-        "doc_a": pd.Series(dtype="int64"),
-        "doc_b": pd.Series(dtype="int64"),
-        "hamming": pd.Series(dtype="int64"),
-    }
-    in_task_bits = low if r >= 1 else 0
-
-    def _mih_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        mt = pdf["media_type"].iloc[0]
-        bvk = pdf["bvk"].to_numpy()
-        order = np.argsort(bvk, kind="stable")
-        bvk = bvk[order]
-        vals = bvk >> 1
-        ids = pdf["doc_id"].to_numpy()[order]
-        ph = pdf["phash"].to_numpy()[order].astype(np.uint64)
-        uvals, starts = np.unique(vals, return_index=True)
-        bounds = np.append(starts, len(vals))
-        # the packed key sorts exacts (kind bit 0) before variants of
-        # the same bucket, so the exact segment is a prefix
-        n_exact = np.searchsorted(bvk, uvals * 2 + 1, side="left") - starts
-        idx = {int(v): i for i, v in enumerate(uvals)}
-        outs = [pd.DataFrame(_EMPTY)]
-
-        def emit(ham, mask_m, ids_r, ids_c):
-            rr, cc = np.nonzero(mask_m)
-            if len(rr):
-                a = ids_r[rr]
-                bb = ids_c[cc]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "media_type": mt,
-                            "doc_a": np.minimum(a, bb),
-                            "doc_b": np.maximum(a, bb),
-                            "hamming": ham[rr, cc],
-                        }
-                    )
-                )
-
-        for i in range(len(uvals)):
-            s0, s1 = bounds[i], bounds[i + 1]
-            n_e = int(n_exact[i])
-            if n_e == 0:
-                continue
-            # (1) bucket-local: exact×exact triangle + exact×variant
-            if s1 - s0 >= 2:
-                cols = np.arange(s1 - s0)[None, :]
-                for c0 in range(0, n_e, 4096):
-                    c1 = min(c0 + 4096, n_e)
-                    ham = _np_pop64(
-                        ph[s0 + c0 : s0 + c1, None] ^ ph[None, s0:s1]
-                    ).astype(np.int64)
-                    rows = np.arange(c0, c1)[:, None]
-                    m = (
-                        ((cols < n_e) & (rows < cols)) | (cols >= n_e)
-                    ) & (ham <= max_hamming)
-                    emit(ham, m, ids[s0 + c0 : s0 + c1], ids[s0:s1])
-            # (2) low-bit neighbor buckets, each unordered pair once
-            v = int(uvals[i])
-            for t in range(in_task_bits):
-                u = v ^ (1 << t)
-                if u < v:
-                    continue
-                j = idx.get(u)
-                if j is None:
-                    continue
-                t0 = bounds[j]
-                n_e2 = int(n_exact[j])
-                if n_e2 == 0:
-                    continue
-                for c0 in range(0, n_e, 4096):
-                    c1 = min(c0 + 4096, n_e)
-                    ham = _np_pop64(
-                        ph[s0 + c0 : s0 + c1, None]
-                        ^ ph[None, t0 : t0 + n_e2]
-                    ).astype(np.int64)
-                    m = ham <= max_hamming
-                    emit(
-                        ham, m, ids[s0 + c0 : s0 + c1], ids[t0 : t0 + n_e2]
-                    )
-        return pd.concat(outs, ignore_index=True)
-
-    coarse = ex.withColumn(
-        "__sub", F.expr(f"shiftrightunsigned(bvk, {low + 1})")
+        F.col("phash").bitwiseAND(F.lit(0xFFFFFFFF)).alias("ph_lo"),
+        F.shiftrightunsigned("phash", 32).alias("ph_hi"),
     )
-    return (
-        coarse.groupBy("media_type", "band", "__sub")
-        .applyInPandas(
-            _mih_kernel,
-            "media_type string, doc_a long, doc_b long, hamming long",
-        )
-        .groupBy("media_type", "doc_a", "doc_b")
-        .agg(F.max("hamming").alias("hamming"))
+    return mih_pairs(
+        lanes,
+        n_bands,
+        max_hamming,
+        n_docs=n_assets,
+        max_compares=max_compares,
+        keys=("media_type",),
+        name="media_near_dup",
+        sig="phash values",
     )

@@ -1177,7 +1177,7 @@ def lsh_near_dup_pairs(
     (``_lsh_pairs_kernel``) — the sf100 continuation measured the join
     plan at 918 s with ~10⁹ interpreted per-candidate HOF dots as the
     bottleneck. The kernel replays every quantized step bit-identically
-    (the cosine_topk convention), uses the MIH twins' SET-BIT variant
+    (the cosine_topk convention), uses mih_pairs' SET-BIT variant
     transport (each vector emits its bucket + one variant per SET
     bucket bit, so a bucket-distance-1 pair meets exactly once, in the
     cleared side's group; distance-0 pairs meet in their shared

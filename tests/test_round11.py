@@ -513,8 +513,11 @@ def test_mih_kernel_planted_single_flip_pairs_every_band(spark):
 
     got = {
         (r.doc_a, r.doc_b, r.hamming)
-        for r in D._simhash_mih_pairs(
-            agg, max_hamming=7, n_docs=len(sigs)
+        for r in D.mih_pairs(
+            D._swar_lanes(agg, ("sh_lo", "sh_hi")),
+            D.mih_bands(7),
+            max_hamming=7,
+            n_docs=len(sigs),
         ).collect()
     }
     want = set()

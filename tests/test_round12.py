@@ -201,11 +201,12 @@ def test_mih_sub_bit_geometry_grows_past_ten_million(spark):
     assert s_of(
         multimodal.media_near_dup(fp, max_hamming=7, n_assets=30_000)
     ) == 4
+    lanes = dedup._swar_lanes(agg, ("sh_lo", "sh_hi"))
     assert s_of(
-        dedup._simhash_mih_pairs(agg, max_hamming=7, n_docs=10_000_000)
+        dedup.mih_pairs(lanes, 4, max_hamming=7, n_docs=10_000_000)
     ) == 7
     assert s_of(
-        dedup._simhash_mih_pairs(agg, max_hamming=7, n_docs=30_000)
+        dedup.mih_pairs(lanes, 4, max_hamming=7, n_docs=30_000)
     ) == 4
 
 

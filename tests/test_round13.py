@@ -585,8 +585,14 @@ def test_simhash128_twin_plans_equal_brute_force(spark):
     assert small == want
     mih = {
         tuple(r)
-        for r in dedup._simhash128_mih_pairs(
-            dedup._simhash128_agg(docs, "text"), 7, n_docs=len(ids)
+        for r in dedup.mih_pairs(
+            dedup._swar_lanes(
+                dedup._simhash128_agg(docs, "text"),
+                ("sh_0", "sh_1", "sh_2", "sh_3"),
+            ),
+            4,
+            7,
+            n_docs=len(ids),
         ).collect()
     }
     assert mih == want

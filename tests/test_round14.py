@@ -101,18 +101,20 @@ def test_simhash128_mih_refuses_mass_duplicate_concentration(
         [(i, "the same boilerplate text repeated everywhere") for i in range(100)],
         "doc_id long, text string",
     )
-    agg = dedup._simhash128_agg(docs, "text")
+    lanes = dedup._swar_lanes(
+        dedup._simhash128_agg(docs, "text"), ("sh_0", "sh_1", "sh_2", "sh_3")
+    )
     monkeypatch.setattr(dedup, "MIH_PROBE_MIN_DOCS", 10)
     # 100 identical sigs -> 4 bands x 4950 = 19800 planned compares
     with pytest.raises(ValueError) as exc:
-        dedup._simhash128_mih_pairs(
-            agg, 7, n_docs=100, max_compares=1_000
+        dedup.mih_pairs(
+            lanes, 4, 7, n_docs=100, max_compares=1_000, name="simhash128"
         ).collect()
     msg = str(exc.value)
     assert "max_compares" in msg and "simhash128" in msg
     # under a budget that fits, the same corpus runs and finds all pairs
-    out = dedup._simhash128_mih_pairs(
-        agg, 7, n_docs=100, max_compares=1e12
+    out = dedup.mih_pairs(
+        lanes, 4, 7, n_docs=100, max_compares=1e12, name="simhash128"
     )
     assert out.count() == 100 * 99 // 2
 
@@ -149,9 +151,7 @@ def test_public_contracts_raise_valueerror_not_assert(spark):
         text.repetition_metrics(docs, keep=("keep",))
     fp = spark.createDataFrame([(1, 5)], "doc_id long, phash long")
     with pytest.raises(ValueError):
-        multimodal.media_near_dup(fp, n_bands=7)
-    with pytest.raises(ValueError):
-        multimodal.media_near_dup(fp, n_bands=2, max_hamming=7)
+        multimodal.media_near_dup(fp, max_hamming=8)
 
 
 # ------------------ streaming zone: idempotent (exactly-once) landing

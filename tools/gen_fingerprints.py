@@ -11,7 +11,8 @@ Two tables, written to ``out_dir`` (default .scale/mih10m, gitignored):
   contract of ``multimodal.media_near_dup``. One modality ("image/bmp")
   so the asset count per modality is the headline 10M.
 - ``simhash_agg.parquet`` (doc_id, __n, w0..w15): the SWAR vertical-
-  popcount frame ``dedup._simhash_mih_pairs`` consumes — planted with
+  popcount frame the text adapter ``dedup._swar_lanes`` decodes into
+  ``dedup.mih_pairs`` lanes — planted with
   ``__n = 1`` via the inverse of the ``_swar_bits_sql`` position math
   (bit j -> packed word q = (60 if j<32 else 28) - 4*((j%32)//4) +
   (j%32)%4, lane q%16, shift 16*(q//16)), so the majority decode

@@ -5,15 +5,20 @@ the 64-bit family's history (occupancy² OOM at 500k, the sixth-decade
 10.7× step) shows where arithmetic needs a measurement.
 
 Protocol (the repo's measurement discipline): ONE process, interleaved
-10M → 30M → 10M; wall = full pair mine (`_simhash128_mih_pairs` on the
-pre-built SWAR frame) materialized through a count. The planted corpora
-come from ``gen_fingerprints.py <n> <dir> 0.02 128``. Alongside wall,
-the PLANNED within-bucket triangle term is computed the same way the
+10M → 30M → 10M; wall = full pair mine (`dedup.mih_pairs` over the
+four lanes decoded from the pre-built SWAR frame) materialized through
+a count. The planted corpora come from
+``gen_fingerprints.py <n> <dir> 0.02 128``. Alongside wall, the
+PLANNED within-bucket triangle term is computed the same way the
 round-14 concentration probe computes it (exact, server-side aggregate)
 and the selected sub-bit geometry s is reported from the sizing rule —
 the two numbers SCALING.md tracks against wall.
 
 Usage: python tools/mih128_decades.py [dir10m] [dir30m]
+       python tools/mih128_decades.py check <dir> [n]
+The check mode mines the first n rows (default 50k) of ``<dir>`` and
+asserts the pair set equals a NumPy brute force over the same 128-bit
+signatures; it prints one JSON line.
 """
 
 from __future__ import annotations
@@ -63,14 +68,65 @@ def selected_s(n: int) -> int:
     return s
 
 
+LANES = ("sh_0", "sh_1", "sh_2", "sh_3")
+
+
+def mine(agg, n: int):
+    return dedup.mih_pairs(dedup._swar_lanes(agg, LANES), 4, 7, n_docs=n)
+
+
 def run(spark, path: str, n: int) -> tuple[int, float]:
     agg = spark.read.parquet(f"{path}/simhash128_agg.parquet")
     t0 = time.monotonic()
-    pairs = dedup._simhash128_mih_pairs(agg, 7, n_docs=n).count()
+    pairs = mine(agg, n).count()
     return pairs, time.monotonic() - t0
 
 
+def check(spark, path: str, n: int) -> None:
+    import json
+
+    import numpy as np
+
+    agg = spark.read.parquet(f"{path}/simhash128_agg.parquet").where(
+        f"doc_id < {n}"
+    )
+    got = {tuple(r) for r in mine(agg, n).collect()}
+    pdf = dedup._swar_lanes(agg, LANES).toPandas().sort_values("doc_id")
+    ids = pdf["doc_id"].to_numpy()
+    lanes = [pdf[c].to_numpy().astype(np.uint64) for c in LANES]
+    words = [
+        lanes[0] | (lanes[1] << np.uint64(32)),
+        lanes[2] | (lanes[3] << np.uint64(32)),
+    ]
+    want = set()
+    for i in range(0, len(ids), 256):
+        ham = sum(
+            dedup._np_pop64(x[i : i + 256, None] ^ x[None, :]) for x in words
+        ).astype(np.int64)
+        rr, cc = np.nonzero(ham <= 7)
+        for a, b, h in zip(ids[i + rr], ids[cc], ham[rr, cc]):
+            if a < b:
+                want.add((int(a), int(b), int(h)))
+    assert got == want, f"brute force mismatch: {len(got)} vs {len(want)}"
+    print(
+        json.dumps(
+            {
+                "mode": "check",
+                "rows": n,
+                "pairs": len(got),
+                "brute_force_equal": True,
+            }
+        )
+    )
+
+
 def main() -> None:
+    if len(sys.argv) > 2 and sys.argv[1] == "check":
+        n = int(sys.argv[3]) if len(sys.argv) > 3 else 50_000
+        spark = get_spark(app_name="mih128_check")
+        spark.sparkContext.setLogLevel("ERROR")
+        check(spark, sys.argv[2], n)
+        return
     d10 = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scale/mih128_10m"
     d30 = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.scale/mih128_30m"
     spark = get_spark(app_name="mih128_decades")
@@ -78,14 +134,7 @@ def main() -> None:
 
     for path, n in ((d10, 10_000_000), (d30, 30_000_000)):
         agg = spark.read.parquet(f"{path}/simhash128_agg.parquet")
-        sigs = agg.select(
-            "doc_id",
-            dedup._swar_half(0, "sh_0"),
-            dedup._swar_half(32, "sh_1"),
-            dedup._swar_half(64, "sh_2"),
-            dedup._swar_half(96, "sh_3"),
-        )
-        tri = planned_triangles(sigs)
+        tri = planned_triangles(dedup._swar_lanes(agg, LANES))
         print(
             f"{path}: n={n} s={selected_s(n)} "
             f"planned within-bucket triangles = {tri:.3e}"

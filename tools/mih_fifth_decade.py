@@ -1,15 +1,17 @@
 """Fifth-decade MIH pair-stage measurement (SCALING.md geometry
-contract): run both MIH pair miners SOLO over the 10M-fingerprint
-corpus from ``tools/gen_fingerprints.py`` and record wall time plus the
-sub-bit geometry each one selects (the claim under test: past ~10M
-assets the s-growth loop leaves the s = 4 floor).
+contract): run the MIH pair miner ``dedup.mih_pairs`` SOLO through
+its media and text adapters over the 10M-fingerprint corpus from
+``tools/gen_fingerprints.py`` and record wall time plus the sub-bit
+geometry it selects (the claim under test: past ~10M assets the
+s-growth loop leaves the s = 4 floor).
 
 Modes:
-  python tools/mih_fifth_decade.py check [n]   cross-twin equality at n
-      rows (default 50k): media_near_dup and _simhash_mih_pairs consume
-      the SAME planted signatures, so their pair sets must be identical
-      — a full end-to-end equivalence of the two independently-coded
-      miners, plus brute-force NumPy verification of the pair set.
+  python tools/mih_fifth_decade.py check [n]   cross-adapter equality at
+      n rows (default 50k): media_near_dup (lanes split from phash) and
+      the text adapter (lanes decoded from the SWAR aggregate) feed the
+      SAME planted signatures to the one miner, so their pair sets must
+      be identical — an end-to-end check of both input paths, plus
+      brute-force NumPy verification of the pair set.
   python tools/mih_fifth_decade.py media|text [rows]   timed solo run
       (default: all 10M rows), one warm pass measured after a session
       warmup no-op; prints one JSON line.
@@ -64,12 +66,15 @@ def main() -> None:
         }
         text = {
             (r["doc_a"], r["doc_b"], r["hamming"])
-            for r in dedup._simhash_mih_pairs(
-                agg, max_hamming=7, n_docs=n
+            for r in dedup.mih_pairs(
+                dedup._swar_lanes(agg, ("sh_lo", "sh_hi")),
+                4,
+                max_hamming=7,
+                n_docs=n,
             ).collect()
         }
         assert media == text, (
-            f"twin pair sets differ: {len(media)} vs {len(text)}; "
+            f"adapter pair sets differ: {len(media)} vs {len(text)}; "
             f"only-media={list(media - text)[:5]} "
             f"only-text={list(text - media)[:5]}"
         )
@@ -84,8 +89,8 @@ def main() -> None:
         from data_lakehouse_hygiene_spark.operators.dedup import _np_pop64
 
         want = set()
-        for i in range(0, len(sigs), 2048):
-            ham = _np_pop64(sigs[i : i + 2048, None] ^ sigs[None, :]).astype(
+        for i in range(0, len(sigs), 256):
+            ham = _np_pop64(sigs[i : i + 256, None] ^ sigs[None, :]).astype(
                 np.int64
             )
             rr, cc = np.nonzero(ham <= 7)
@@ -101,7 +106,7 @@ def main() -> None:
                     "mode": "check",
                     "rows": n,
                     "pairs": len(media),
-                    "twins_equal": True,
+                    "adapters_equal": True,
                     "brute_force_equal": True,
                 }
             )
@@ -115,7 +120,12 @@ def main() -> None:
     if mode == "media":
         out = multimodal.media_near_dup(fp, max_hamming=7, n_assets=n)
     else:
-        out = dedup._simhash_mih_pairs(agg, max_hamming=7, n_docs=n)
+        out = dedup.mih_pairs(
+            dedup._swar_lanes(agg, ("sh_lo", "sh_hi")),
+            4,
+            max_hamming=7,
+            n_docs=n,
+        )
     n_pairs = out.count()
     dt = time.time() - t0
     # OBSERVE the selected sub-bit geometry from the analyzed plan (not
