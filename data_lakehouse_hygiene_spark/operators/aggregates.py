@@ -706,7 +706,10 @@ def heavy_hitters(
         rows = sketch.collect()  # ≤ (c+1)·P rows by construction
         total = sum(r["__pn"] for r in rows if r["__pn"] is not None)
         vals = sorted({r[col] for r in rows if r[col] is not None})
-        if len(vals) <= HH_ISIN_MAX:
+        if (
+            len(vals) <= HH_ISIN_MAX
+            and sum(len(str(v)) for v in vals) <= 100 * HH_ISIN_MAX
+        ):
             # Round 15 (guide §2.4): the candidate set is usually tens
             # of values (≤ (c+1)·P by construction, c+1 per partition
             # SEEN, far fewer after dedup) — an InSet literal filter on
@@ -714,9 +717,10 @@ def heavy_hitters(
             # createDataFrame → BroadcastExchange → semi-join chain
             # (one plan node vs a driver round-trip, a broadcast build
             # and a join; interleaved A/B below). The gate keeps huge
-            # candidate sets (tiny phi × many partitions) off the plan
-            # — a multi-MB IN-list bloats every task closure — on the
-            # broadcast path instead.
+            # candidate sets (tiny phi × many partitions) and long
+            # values (URLs, n-grams: ~1 MB of summed value text) off
+            # the plan — a multi-MB IN-list bloats every task closure —
+            # on the broadcast path instead.
             cand_filter = F.col(col).isin(vals)
         else:
             cand = df.sparkSession.createDataFrame(
@@ -753,7 +757,8 @@ HH_COLLECT_MAX = 2_000_000
 # literal filter; bigger sets go through the broadcast semi-join (an
 # IN-list is serialized into every task closure, a broadcast is shipped
 # once per executor). 10k values of (token-sized) strings is ~100 KB of
-# plan — well under closure-bloat territory.
+# plan — well under closure-bloat territory; the summed value text is
+# capped at 100 × this (~1 MB) so a few long values cannot bloat it.
 HH_ISIN_MAX = 10_000
 
 

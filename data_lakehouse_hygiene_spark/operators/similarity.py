@@ -64,6 +64,50 @@ def norms(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     )
 
 
+def _present(df: DataFrame, vec_col: str) -> DataFrame:
+    """The retrieval family's NULL rule: a row whose vector is NULL is
+    absent — neither a corpus row nor a query."""
+    return df.where(F.col(vec_col).isNotNull())
+
+
+def _topk(
+    scored: DataFrame, score: str, k: int, desc: bool = True
+) -> DataFrame:
+    """The one per-query top-k tail: rank each query's candidates by
+    ``score`` (descending for cosines, ascending for distances), ties
+    to the lowest vec_id, and keep ranks 1..k — a k-bounded window
+    partitioned by query."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(score) if desc else F.asc(score), F.asc("vec_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "vec_id", score, "rank")
+    )
+
+
+def _keyed_cosine_topk(
+    corpus: DataFrame, queries: DataFrame, key: str, vec_col: str, k: int
+) -> DataFrame:
+    """Exact-cosine top-k over keyed candidates (``ivf_ann``'s cell,
+    ``lsh_ann``'s probed bucket): the corpus (vec_id, vec_col, norm,
+    key) meets the broadcast queries (query_id, qv, qnorm, key) in one
+    equi-join on the key, self-matches excluded, cosine quantized to 6
+    decimals, then ``_topk``."""
+    cos = dot_exact(F.col("qv"), F.col(vec_col)) / (
+        F.col("qnorm") * F.col("norm")
+    )
+    scored = (
+        corpus.join(F.broadcast(queries), on=key)
+        .where(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id", quantize(cos, 6).alias("cosine"))
+    )
+    return _topk(scored, "cosine", k)
+
+
 N_BLOCKS = 16
 
 # Self-sizing targets for the cluster-blocked exact path (round 9): the
@@ -175,28 +219,55 @@ def _prune_block_pairs(
     return kept
 
 
+def _nearest(X, C):
+    """The family's one nearest-centroid kernel: for each row of the int64
+    matrix ``X``, the index of the nearest row of the int64 centroid
+    matrix ``C`` (FIRST minimum, so ties go to the lowest centroid index)
+    and its exact squared distance.
+
+    Distances use the ||a||² + ||c||² − 2a·c expansion as one int64
+    matmul per 2048-row chip, so the temp is O(chip·k), not the
+    O(chip·k·dim) broadcast of the (x−y)² form. Every term is an integer
+    and int64 arithmetic is a ring (mod 2^64), so each distance equals
+    the Σ(x−y)² of the difference form bit for bit — and so do the
+    argmin and everything the Lloyd updates derive from it. Components
+    are ≤ KMEANS_SCALE in unit-norm use, so the terms stay ≤
+    dim·KMEANS_SCALE² ≈ 6.4e13 ≪ 2^63."""
+    import numpy as np
+
+    cn = (C * C).sum(axis=1)
+    idx = np.empty(len(X), dtype=np.int32)
+    dist = np.empty(len(X), dtype=np.int64)
+    for c0 in range(0, len(X), 2048):
+        Xc = X[c0 : c0 + 2048]
+        d = (Xc * Xc).sum(axis=1)[:, None] + cn[None, :] - 2 * (Xc @ C.T)
+        i = d.argmin(axis=1)
+        idx[c0 : c0 + 2048] = i
+        dist[c0 : c0 + 2048] = d[np.arange(len(d)), i]
+    return idx, dist
+
+
+def _int_rows(col):
+    """An Arrow batch's array<bigint> column as an (n, dim) int64 matrix."""
+    import numpy as np
+
+    return np.stack([np.asarray(v, dtype=np.int64) for v in col])
+
+
 def _kmeans_fit_local(sx, k: int, n_iter: int):
     """Driver-local exact-integer Lloyd over the collected sample matrix
     ``sx`` (int64, rows already vec_id-ascending so the id-ordered init
-    matches the engine's convention): init = first k rows, argmin ties to
-    the lowest cluster, floor(sum/count) update, emptied clusters keep
-    their centroid. All arithmetic is int64 (deterministic across
-    platforms); returns a (k', dim) int64 array with k' = min(k, rows).
-
-    Distances use the ||a||² + ||c||² − 2a·c expansion (int64 matmul) so
-    memory is O(n·k), not the O(n·k·dim) broadcast temp — with the
-    round-9 self-sized k (up to 256) the broadcast form would be a
-    multi-GB allocation per iteration. Components are ≤ KMEANS_SCALE, so
-    every int64 term is ≤ dim·KMEANS_SCALE² ≈ 6.4e13 ≪ 2^63 — exact."""
+    matches the engine's convention): init = first k rows, ``_nearest``
+    assignment (ties to the lowest cluster), floor(sum/count) update,
+    emptied clusters keep their centroid. All arithmetic is int64
+    (deterministic across platforms); returns a (k', dim) int64 array
+    with k' = min(k, rows)."""
     import numpy as np
 
     k = min(k, len(sx))
     cents = sx[:k].copy()
-    sn = (sx * sx).sum(axis=1)
     for _ in range(n_iter):
-        cn = (cents * cents).sum(axis=1)
-        d = sn[:, None] + cn[None, :] - 2 * (sx @ cents.T)
-        cl = d.argmin(axis=1)  # first occurrence = lowest cluster index
+        cl, _ = _nearest(sx, cents)
         for ci in range(k):
             m = sx[cl == ci]
             if len(m):
@@ -205,14 +276,12 @@ def _kmeans_fit_local(sx, k: int, n_iter: int):
 
 
 def _np_assign(base: DataFrame, cents_arr, kscale: float) -> DataFrame:
-    """Scan-shaped Arrow assignment pass: per row, the nearest centroid by
-    exact int64 squared distance (ties to the lowest cluster index — same
-    rule as ``_kmeans_assign``) plus the member-centroid cosine ``cm`` for
-    the radius aggregate. The centroid matrix ships inside the serialized
-    function (ship-the-model); rows are chunked so the n×k×dim distance
-    temp stays ~2048·k·dim int64s. numpy int64 replaces the interpreted
-    zip_with expression tree (CodegenFallback) — measured ~10× on this
-    pass at sf0.1."""
+    """Scan-shaped Arrow assignment pass: per row, the ``_nearest``
+    centroid plus the member-centroid cosine ``cm`` for the radius
+    aggregate. The centroid matrix ships inside the serialized function
+    (ship-the-model). numpy int64 replaces the interpreted zip_with
+    expression tree (CodegenFallback) — measured ~10× on this pass at
+    sf0.1."""
     import numpy as np
     import pandas as pd
 
@@ -221,37 +290,31 @@ def _np_assign(base: DataFrame, cents_arr, kscale: float) -> DataFrame:
 
     def gen(it):
         for pdf in it:
-            for lo in range(0, len(pdf), 2048):
-                chunk = pdf.iloc[lo : lo + 2048]
-                V = np.vstack(chunk["v"].to_numpy()).astype(np.float64)
-                Q = np.floor(V * kscale + 0.5).astype(np.int64)
-                na2 = (Q * Q).sum(axis=1)
-                # ||a||²+||c||²−2a·c expansion: O(chunk·k) int64 temp vs
-                # the O(chunk·k·dim) broadcast (matters at self-sized k)
-                d = na2[:, None] + nc2_all[None, :] - 2 * (Q @ C.T)
-                cl = d.argmin(axis=1)
-                dmin = d[np.arange(len(d)), cl]
-                nc2 = nc2_all[cl]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cm = np.where(
-                        (na2 > 0) & (nc2 > 0),
-                        (na2 + nc2 - dmin).astype(np.float64)
-                        / (
-                            2.0
-                            * np.sqrt(na2.astype(np.float64))
-                            * np.sqrt(nc2.astype(np.float64))
-                        ),
-                        -1.0,
-                    )
-                yield pd.DataFrame(
-                    {
-                        "vec_id": chunk["vec_id"].to_numpy(),
-                        "v": chunk["v"],
-                        "cluster": cl.astype(np.int32),
-                        "cm": cm,
-                        "na2": na2,
-                    }
+            V = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
+            Q = np.floor(V * kscale + 0.5).astype(np.int64)
+            na2 = (Q * Q).sum(axis=1)
+            cl, dmin = _nearest(Q, C)
+            nc2 = nc2_all[cl]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cm = np.where(
+                    (na2 > 0) & (nc2 > 0),
+                    (na2 + nc2 - dmin).astype(np.float64)
+                    / (
+                        2.0
+                        * np.sqrt(na2.astype(np.float64))
+                        * np.sqrt(nc2.astype(np.float64))
+                    ),
+                    -1.0,
                 )
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["vec_id"].to_numpy(),
+                    "v": pdf["v"],
+                    "cluster": cl,
+                    "cm": cm,
+                    "na2": na2,
+                }
+            )
 
     return base.mapInPandas(
         gen, "vec_id long, v array<float>, cluster int, cm double, na2 long"
@@ -355,6 +418,7 @@ def cosine_pairs(
     from .cleaning import spread
     from .dedup import _estimated_bytes
 
+    df = _present(df, vec_col)
     # _estimated_bytes maps Catalyst's unknown-stats sentinel to 0
     # (round 9): stat-less in-memory plans take the small-input path;
     # the gate protects against pointing the exact path at a
@@ -774,10 +838,9 @@ def cosine_topk(
     import numpy as np
     import pandas as pd
 
-    from pyspark.sql.window import Window
-
     if query_pred is None:
         query_pred = F.col("vec_id") < 3
+    df = _present(df, vec_col)
     queries = (
         norms(df.where(query_pred), vec_col)
         .orderBy("vec_id")
@@ -850,14 +913,7 @@ def cosine_topk(
     scored = df.select("vec_id", vec_col).mapInPandas(
         gen, "query_id bigint, vec_id bigint, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return _topk(scored, "cosine", k)
 
 
 # The deterministic hyperplanes are DATA-INDEPENDENT constants (component
@@ -1242,12 +1298,10 @@ def ivf_ann(
     cluster column, and joining it back on vec_id self-joined the
     embeddings table — two extra corpus scans for a column that was in
     the scan all along)."""
-    from pyspark.sql.window import Window
-
     if query_pred is None:
         query_pred = F.col("vec_id") < 3
     v = F.col(vec_col)
-    n = df.select(
+    n = _present(df, vec_col).select(
         "vec_id",
         v.alias(vec_col),
         F.sqrt(dot_exact(v, v)).alias("norm"),
@@ -1259,22 +1313,7 @@ def ivf_ann(
         F.col("norm").alias("qnorm"),
         cluster_col,
     )
-    cos = dot_exact(F.col("qv"), F.col(vec_col)) / (
-        F.col("qnorm") * F.col("norm")
-    )
-    scored = (
-        n.join(F.broadcast(q), on=cluster_col)
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", quantize(cos, 6).alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return _keyed_cosine_topk(n, q, cluster_col, vec_col, k)
 
 
 def _norm_bucket_frame(
@@ -1371,8 +1410,7 @@ def lsh_ann(
     candidate-side exact cosine stays column algebra — it touches only
     ~9·occupancy rows per query.
     """
-    from pyspark.sql.window import Window
-
+    df = _present(df, vec_col)
     n_planes = resolve_planes(df, n_planes)
     if query_pred is None:
         query_pred = F.col("vec_id") < 3
@@ -1400,22 +1438,7 @@ def lsh_ann(
             ],
         )
         q = q.withColumn("bucket", F.explode(probes))
-    cos = dot_exact(F.col("qv"), F.col(vec_col)) / (
-        F.col("qnorm") * F.col("norm")
-    )
-    scored = (
-        n.join(F.broadcast(q), on="bucket")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", quantize(cos, 6).alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return _keyed_cosine_topk(n, q, "bucket", vec_col, k)
 
 
 # semantic_dedup's within-cluster pair budget: the operator's scale
@@ -1548,110 +1571,15 @@ def _kq(v: Column) -> Column:
     )
 
 
-def _kmeans_assign(
-    q: DataFrame, cents: list[list[int]], carry: tuple[str, ...] = ()
-) -> DataFrame:
-    """One assignment pass: exact integer squared distance to each centroid
-    (centroids ship in the kernel CLOSURE — the model broadcasts with the
-    task, no join), argmin with ties to the lowest cluster index.
-    ``carry`` names extra input columns passed through unchanged.
+def _quantized(df: DataFrame, vec_col: str, *carry: str) -> DataFrame:
+    """The k-means / PQ family's one input stage: the rows whose vector
+    is not NULL (``_present``), ``spread()`` for the per-row kernels, as
+    (vec_id, qv = the ``_kq``-quantized vector, *carry)."""
+    from .cleaning import spread
 
-    Round-10 kernel rationale (the ``_norm_bucket_frame`` economics):
-    the column-algebra form — k ``aggregate``/``zip_with`` lambdas, then
-    array_min/array_position — evaluates k interpreted O(dim) walks per
-    row (HOFs are CodegenFallback). The NumPy kernel computes the SAME
-    exact int64 (x−y)² sums with ``argmin`` taking the FIRST minimum
-    (ties → lowest cluster, the same rule), so assignments, distances,
-    and every downstream centroid update are bit-identical (oracle
-    replay unchanged — the whole kmeans/PQ/IVF family re-verified)."""
-    import numpy as np
-    import pandas as pd
-
-    C = np.asarray(cents, dtype=np.int64)
-
-    def gen(it):
-        for pdf in it:
-            V = np.stack(
-                [np.asarray(v, dtype=np.int64) for v in pdf["qv"]]
-            )
-            # chip the (rows, k, dim) int64 difference temp over rows
-            # (the _mih_kernel convention): the project session pins
-            # 1024-row Arrow batches, but library callers on a default
-            # session (10k rows/batch) would otherwise materialize
-            # multi-GB temps per task
-            cl = np.empty(len(V), dtype=np.int32)
-            ds = np.empty(len(V), dtype=np.int64)
-            for c0 in range(0, len(V), 1024):
-                c1 = min(c0 + 1024, len(V))
-                D = (
-                    (V[c0:c1, None, :] - C[None, :, :]) ** 2
-                ).sum(axis=2)
-                cl[c0:c1] = D.argmin(axis=1).astype(np.int32)
-                ds[c0:c1] = D.min(axis=1)
-            out = {"vec_id": pdf["vec_id"], "qv": pdf["qv"]}
-            for c in carry:
-                out[c] = pdf[c]
-            out["cluster"] = cl
-            out["dist"] = ds
-            yield pd.DataFrame(out)
-
-    carry_schema = "".join(
-        f", {f.name} {f.dataType.simpleString()}"
-        for f in q.schema.fields
-        if f.name in carry
+    return spread(_present(df, vec_col), key="vec_id").select(
+        "vec_id", _kq(F.col(vec_col)).alias("qv"), *carry
     )
-    return q.select("vec_id", "qv", *carry).mapInPandas(
-        gen,
-        f"vec_id bigint, qv array<bigint>{carry_schema},"
-        " cluster int, dist bigint",
-    )
-
-
-def _kmeans_fit(
-    q: DataFrame,
-    k: int,
-    n_iter: int,
-    init_cents: list[list[int]] | None = None,
-) -> list[list[int]]:
-    """The Lloyd driver loop shared by ``kmeans_fit_assign`` and the
-    cluster-blocked pair generator: id-ordered init, exact-integer
-    assignment, floor(sum/count) update; returns the final centroid list
-    (possibly shorter than ``k`` when the input has fewer rows). Driver
-    traffic per iteration = k·dim longs. ``init_cents`` (the PQ batched
-    init) skips the init job — the caller already collected the k
-    lowest-vec_id rows; passing their slices is bit-identical to
-    per-subspace init collects."""
-    import math
-
-    if init_cents is None:
-        init = q.orderBy("vec_id").limit(k).collect()
-        cents = [list(r["qv"]) for r in init]
-    else:
-        cents = [list(c) for c in init_cents]
-    k = min(k, len(cents))
-    for _ in range(n_iter):
-        if not cents:
-            break
-        a = _kmeans_assign(q, cents)
-        stats = (
-            a.select("cluster", F.posexplode("qv").alias("pos", "val"))
-            .groupBy("cluster", "pos")
-            .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("c"))
-            .collect()
-        )
-        bycl: dict[int, dict[int, tuple[int, int]]] = {}
-        for r in stats:
-            bycl.setdefault(r["cluster"], {})[r["pos"]] = (r["s"], r["c"])
-        cents = [
-            [
-                math.floor(bycl[ci][p][0] / bycl[ci][p][1])
-                for p in range(len(cents[ci]))
-            ]
-            if ci in bycl
-            else cents[ci]
-            for ci in range(k)
-        ]
-    return cents
 
 
 def kmeans_fit_assign(
@@ -1669,31 +1597,22 @@ def kmeans_fit_assign(
     lowest-vec_id vectors; ties in assignment go to the lowest cluster
     index; an emptied cluster keeps its previous centroid.
 
-    Scale shape per iteration: ONE scan-shaped assignment pass (centroids
-    are literal arrays in the plan — ship-the-model, no join) + one
-    map-side-combined (cluster, dim) aggregate whose output is k·dim rows
-    — the only driver traffic (k=4·dim=64 = 256 longs/round, the
-    dedup_clusters-style bounded collect). Returns the FINAL assignment
-    (vec_id, cluster, dist) after ``n_iter`` updates.
+    This is product quantization with ONE subspace: the fit is
+    ``_pq_fit_books`` at m = 1 (one Arrow assignment pass + one k·dim-row
+    stats aggregate per iteration — the only driver traffic) and the
+    final assignment is ``_pq_encode_frame``, whose single code is the
+    cluster and whose quantization error is the squared distance.
+    Returns the FINAL assignment (vec_id, cluster, dist) after
+    ``n_iter`` updates.
     """
-    from .cleaning import spread
-
-    q = spread(df, key="vec_id").select(
-        "vec_id", _kq(F.col(vec_col)).alias("qv")
+    q = _quantized(df, vec_col)
+    books = _pq_fit_books(q, 1, k, n_iter)
+    return _pq_encode_frame(q, books).select(
+        "vec_id",
+        F.col("codes")[0].alias("cluster"),
+        F.col("err").alias("dist"),
     )
-    # _kmeans_fit clamps k to the row count internally (fewer rows than k
-    # means the init collect IS the centroid set).
-    cents = _kmeans_fit(q, k, n_iter)
-    if not cents:  # empty input: typed empty result, not a zero-arg least()
-        return (
-            q.select(
-                "vec_id",
-                F.lit(None).cast("int").alias("cluster"),
-                F.lit(None).cast("bigint").alias("dist"),
-            )
-            .where(F.lit(False))
-        )
-    return _kmeans_assign(q, cents).select("vec_id", "cluster", "dist")
+
 
 def kcenter_sample(
     df: DataFrame, vec_col: str = "embedding", k: int = 8
@@ -1729,11 +1648,7 @@ def kcenter_sample(
     stateless literal form is cheaper than k materialization barriers
     (the bigram-LM checkpoint lesson, text.py).
     """
-    from .cleaning import spread
-
-    q = spread(df, key="vec_id").select(
-        "vec_id", _kq(F.col(vec_col)).alias("qv")
-    )
+    q = _quantized(df, vec_col)
     spark = df.sparkSession
     out_schema = "sel_rank int, vec_id bigint, dist bigint"
     seed = q.orderBy("vec_id").limit(1).collect()
@@ -1778,7 +1693,7 @@ def pq_encode(
     compression half of the standard IVF+PQ ANN stack: split each
     vector into ``m`` contiguous subspaces, train an independent
     ``k``-centroid codebook per subspace with the deterministic
-    integer-space Lloyd fit (``_kmeans_fit`` — exact BIGINT distances,
+    integer-space Lloyd fit (``_pq_fit_books`` — exact BIGINT distances,
     id-ordered init, floor(sum/count) updates), and encode every vector
     as its ``m`` nearest-centroid code ids. A 64-dim float32 vector
     becomes m small ints — with m=4, k=8 that is 4 × 3 bits of
@@ -1795,50 +1710,38 @@ def pq_encode(
 
     Scale shape: the fits see only k·(dim/m)-long driver rows per
     subspace per iteration (the bounded kmeans collect); the encode
-    pass is ONE scan-shaped projection — all m codebooks ship as
-    literal arrays in the plan (ship-the-model, no joins, no shuffle
-    beyond the scan).
+    pass is ONE scan-shaped Arrow kernel — all m codebooks ship in its
+    closure (ship-the-model, no joins, no shuffle beyond the scan).
+    ``books`` lets callers that already fitted the deterministic
+    codebooks on this exact (data, m, k, n_iter) skip the refit — the
+    fit is a pure function of those inputs, so passing them is
+    value-identical (the registry's shared-books cache).
     """
-    from .cleaning import spread
-
-    q = spread(df, key="vec_id").select(
-        "vec_id", _kq(F.col(vec_col)).alias("qv")
-    )
-    first = q.select(F.size("qv").alias("d")).limit(1).collect()
-    out_schema = "vec_id bigint, codes array<int>, err bigint"
-    if not first:
-        return df.sparkSession.createDataFrame([], out_schema)
-    dim = first[0]["d"]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible into {m} subspaces")
-    sub = dim // m
+    q = _quantized(df, vec_col)
     if books is None:
-        # ``books`` lets callers that already fitted the deterministic
-        # codebooks on this exact (data, m, k, n_iter) skip the refit —
-        # the fit is a pure function of those inputs, so passing them
-        # is value-identical (the registry's shared-books cache)
-        books = _pq_fit_books(q, m, sub, k, n_iter)
-    return _pq_encode_frame(q, books, sub)
+        books = _pq_fit_books(q, m, k, n_iter)
+    return _pq_encode_frame(q, books)
 
 
 def _pq_fit_books(
-    q: DataFrame, m: int, sub: int, k: int, n_iter: int
+    q: DataFrame, m: int, k: int, n_iter: int
 ) -> list[list[list[int]]]:
     """One independent integer-kmeans codebook per contiguous subspace
-    (the shared fit stage of ``pq_encode`` / ``pq_ann`` / ``ivfpq_ann``),
-    fitted with ONE job per Lloyd round for ALL m subspaces (round-11):
+    (the one Lloyd fit of the family: ``pq_encode`` / ``ivfpq_ann`` /
+    ``pq_ann``, and ``kmeans_fit_assign`` at m = 1), fitted with ONE job
+    per Lloyd round for ALL m subspaces:
 
     - INIT is one job: every per-subspace fit seeds from the k
       lowest-vec_id vectors, and slicing commutes with that selection,
       so one k-row collect of the FULL vectors, sliced on the driver,
-      is bit-identical to m per-subspace init collects.
+      is bit-identical to m per-subspace init collects. The dimension
+      comes from those rows, so the dim % m check costs no job.
     - Each Lloyd round is ONE Arrow kernel that computes all m
-      subspace assignments from the full vector (the m codebooks ride
-      in the closure), followed by ONE (subspace, cluster, pos) stats
-      aggregate — m·k·sub output rows, the only driver traffic.
-      Measured 1.5 → 0.8 s warm at sf0.1 vs the round-10 m-thread
-      variant, books bit-identical (the assignment argmin and the
-      floor(sum/count) update are unchanged integer arithmetic).
+      subspace assignments (``_nearest``) from the full vector (the m
+      codebooks ride in the closure), followed by ONE (subspace,
+      cluster, pos) stats aggregate — m·k·sub output rows, the only
+      driver traffic; the update is floor(sum/count), and an emptied
+      cluster keeps its centroid.
 
     Why this fusion works where two earlier ones failed (both
     measured): the r9 fused-lambda projection (2.4× slower) and the
@@ -1846,9 +1749,10 @@ def _pq_fit_books(
     CODEGEN branches — m column-algebra sub-plans compiling serially
     inside one plan. Here the m-way work lives inside a single Python
     kernel (no codegen at all) and the stats agg is one ordinary
-    grouped plan, so there is nothing to compile m times; the m-thread
-    variant this replaces paid m concurrent plan compiles + m job
-    schedulings per round instead.
+    grouped plan, so there is nothing to compile m times.
+
+    Returns m lists of k' = min(k, rows) centroids (m empty lists on an
+    empty input).
     """
     import math
 
@@ -1858,6 +1762,10 @@ def _pq_fit_books(
     init = q.orderBy("vec_id").limit(k).collect()
     if not init:
         return [[] for _ in range(m)]
+    dim = len(init[0]["qv"])
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible into {m} subspaces")
+    sub = dim // m
     books = [
         [list(r["qv"])[s * sub : (s + 1) * sub] for r in init]
         for s in range(m)
@@ -1868,22 +1776,12 @@ def _pq_fit_books(
 
         def gen(it):
             for pdf in it:
-                V = np.stack(
-                    [np.asarray(v, dtype=np.int64) for v in pdf["qv"]]
-                )
+                V = _int_rows(pdf["qv"])
                 out = {"qv": pdf["qv"]}
                 for s in range(m):
-                    Vs = V[:, s * sub : (s + 1) * sub]
-                    cl = np.empty(len(V), dtype=np.int32)
-                    # row-chip the (rows, k, sub) temp (the
-                    # _kmeans_assign convention)
-                    for c0 in range(0, len(V), 1024):
-                        c1 = min(c0 + 1024, len(V))
-                        D = (
-                            (Vs[c0:c1, None, :] - Cs[s][None, :, :]) ** 2
-                        ).sum(axis=2)
-                        cl[c0:c1] = D.argmin(axis=1).astype(np.int32)
-                    out[f"__c{s}"] = cl
+                    out[f"__c{s}"], _ = _nearest(
+                        V[:, s * sub : (s + 1) * sub], Cs[s]
+                    )
                 yield pd.DataFrame(out)
 
         a = q.select("qv").mapInPandas(
@@ -1930,8 +1828,7 @@ def _pq_fit_books(
 
 
 def _pq_encode_frame(
-    q: DataFrame, books: list[list[list[int]]], sub: int,
-    carry: tuple[str, ...] = (),
+    q: DataFrame, books: list[list[list[int]]], carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Encode pass over already-fitted codebooks: ONE vectorized Arrow
     kernel with the codebooks in its closure (ship-the-model — no
@@ -1939,39 +1836,26 @@ def _pq_encode_frame(
     columns passed through unchanged (ivfpq_ann carries the coarse
     cell label).
 
-    Round-10 kernel rationale (the ``_norm_bucket_frame`` economics):
-    the column-algebra form evaluated m·k ``aggregate``/``zip_with``
-    lambdas per row in CodegenFallback interpreted mode — 32
-    interpreted O(sub) walks per vector at m=4/k=8, the bulk of the
-    sf10 pq_encode row. The kernel computes the SAME exact int64
-    arithmetic in NumPy — (x−y)² sums over the ``_kq``-quantized
-    components, ``argmin`` taking the FIRST minimum (ties → lowest
-    code id, the F.least/CASE-chain rule) — so codes and err are
-    bit-identical (oracle replay + equivalence tests unchanged)."""
+    Per subspace the code is the ``_nearest`` centroid (FIRST minimum —
+    ties → lowest code id) and err sums the exact integer squared
+    distances, so codes and err are the same integers the SQL oracle
+    derives. The column-algebra form this kernel replaced evaluated m·k
+    interpreted ``aggregate``/``zip_with`` lambdas per row
+    (CodegenFallback) — the bulk of the sf10 pq_encode row."""
     import numpy as np
     import pandas as pd
 
-    m = len(books)
-    cents = [
-        np.asarray(b, dtype=np.int64).reshape(len(b), sub) for b in books
-    ]
+    cents = [np.asarray(b, dtype=np.int64) for b in books]
 
     def gen(it):
         for pdf in it:
-            V = np.stack(
-                [np.asarray(v, dtype=np.int64) for v in pdf["qv"]]
-            )
+            V = _int_rows(pdf["qv"])
             err = np.zeros(len(V), dtype=np.int64)
-            codes = np.zeros((len(V), m), dtype=np.int32)
-            for s in range(m):
-                Vs = V[:, s * sub : (s + 1) * sub]
-                C = cents[s]
-                # (n, k) exact integer squared distances
-                D = (
-                    (Vs[:, None, :] - C[None, :, :]) ** 2
-                ).sum(axis=2)
-                codes[:, s] = D.argmin(axis=1)  # first min = lowest id
-                err += D.min(axis=1)
+            codes = np.zeros((len(V), len(cents)), dtype=np.int32)
+            for s, C in enumerate(cents):
+                w = C.shape[1]
+                codes[:, s], d = _nearest(V[:, s * w : (s + 1) * w], C)
+                err += d
             out = {"vec_id": pdf["vec_id"]}
             for c in carry:
                 out[c] = pdf[c]
@@ -1989,6 +1873,7 @@ def _pq_encode_frame(
         f"vec_id bigint{carry_schema}, codes array<int>, err bigint",
     )
 
+
 def pq_ann(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -2004,94 +1889,28 @@ def pq_ann(
     every vector as the SUM of per-subspace lookup-table entries
     table[s][code] = exact integer distance(query_subvector,
     codebook_centroid), so the corpus side touches only its m small
-    code ids, never the raw vectors. This is the memory shape that
-    searches a 100 TB corpus from RAM: per vector m bytes of codes
-    instead of 4·dim bytes of floats.
+    code ids, never the raw vectors.
 
-    Deterministic end-to-end: codebooks and codes come from the
-    integer-kmeans PQ fit (``pq_encode``), the per-query tables are
-    exact integer distances computed once on the driver (m·k·n_queries
-    small ints — bounded), and they ship as literal arrays so the
-    scoring pass is ONE scan-shaped projection over the code table —
-    no joins, no shuffle except the per-query top-k window (partitioned
-    by query, k-bounded). Ties rank by lowest vec_id. The SQL oracle
-    replays fit, encode, tables, and ranking exactly.
+    This is ``ivfpq_ann`` over ONE constant cell: with every vector in
+    the probed cell the IVF stage prunes nothing, and fit, encode,
+    tables, scorer and ranking are that operator's (see its docstring).
+    Ties rank by lowest vec_id; the SQL oracle replays fit, encode,
+    tables, and ranking exactly.
 
     Returns (query_id, vec_id, adc, rank): adc = the integer
     approximate squared distance (KMEANS_SCALE² units), rank 1..k per
     query, self-matches excluded.
     """
-    from pyspark.sql.window import Window
-
-    from .cleaning import spread
-
-    if query_pred is None:
-        query_pred = F.col("vec_id") < 3
-    q = spread(df, key="vec_id").select(
-        "vec_id", _kq(F.col(vec_col)).alias("qv")
-    )
-    first = q.select(F.size("qv").alias("d")).limit(1).collect()
-    out_schema = "query_id bigint, vec_id bigint, adc bigint, rank int"
-    if not first:
-        return df.sparkSession.createDataFrame([], out_schema)
-    dim = first[0]["d"]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible into {m} subspaces")
-    sub = dim // m
-    # the query-row collect is independent of the fit — overlap it with
-    # the fit's job chain from a side thread (same convention as the m
-    # fit threads; one job latency saved)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as _ex:
-        _fq = _ex.submit(
-            lambda: q.where(query_pred)
-            .select("vec_id", "qv")
-            .orderBy("vec_id")
-            .collect()
-        )
-        if books is None:
-            # caller-supplied books skip the refit (pure function of
-            # (data, m, n_codes, n_iter) — the shared-books cache)
-            books = _pq_fit_books(q, m, sub, n_codes, n_iter)
-        queries = _fq.result()
-    # encode from the SAME fitted books (a pq_encode call would refit
-    # every codebook a second time — measured 11.7 -> ~6 s at sf0.1)
-    codes = _pq_encode_frame(q, books, sub).select("vec_id", "codes")
-    if not queries:
-        return df.sparkSession.createDataFrame([], out_schema)
-    # per-query ADC lookup tables, exact integer arithmetic on the driver
-    # (n_queries · m · n_codes small ints — bounded driver work)
-    structs = []
-    for row in queries:
-        qid, qv = row["vec_id"], list(row["qv"])
-        adc = None
-        for s, cents in enumerate(books):
-            qs = qv[s * sub:(s + 1) * sub]
-            tbl = [
-                sum((a - b) * (a - b) for a, b in zip(qs, c)) for c in cents
-            ]
-            lookup = F.element_at(
-                F.array(*[F.lit(int(t)).cast("bigint") for t in tbl]),
-                F.col("codes")[s] + F.lit(1),
-            )
-            adc = lookup if adc is None else adc + lookup
-        structs.append(
-            F.struct(
-                F.lit(int(qid)).cast("bigint").alias("query_id"),
-                adc.cast("bigint").alias("adc"),
-            )
-        )
-    scored = (
-        codes.select("vec_id", F.explode(F.array(*structs)).alias("p"))
-        .select(F.col("p.query_id"), "vec_id", F.col("p.adc"))
-        .where(F.col("vec_id") != F.col("query_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "adc", "rank")
+    return ivfpq_ann(
+        df.withColumn("__cell", F.lit(0)),
+        vec_col,
+        "__cell",
+        query_pred,
+        k,
+        m,
+        n_codes,
+        n_iter,
+        books=books,
     )
 
 
@@ -2113,14 +1932,12 @@ def ivfpq_ann(
     coarse quantizer ``ivf_ann`` consumes), and within the probed cell
     candidates are scored by ADC over PQ codes — so the corpus side
     touches only (cell label, m code bytes) per vector, never the raw
-    floats, AND only ~n/n_cells of those rows reach the scorer. The two
-    existing arms each did half: ``ivf_ann`` pruned cells but scored
-    raw vectors; ``pq_ann`` scored codes but scanned every vector.
+    floats, AND only ~n/n_cells of those rows reach the scorer.
 
     Codebooks are GLOBAL (fitted on the whole corpus, not per-cell
     residuals — the simpler published variant), so fit/encode reuse
     ``_pq_fit_books`` / ``_pq_encode_frame`` verbatim and the encode
-    stays one scan-shaped projection with the books as plan literals.
+    stays one scan-shaped pass with the books in the kernel closure.
 
     Scale shape: the per-query ADC lookup tables (m·k small ints each)
     ride in a BROADCAST query table keyed by cell label; candidates
@@ -2142,32 +1959,19 @@ def ivfpq_ann(
     carries exactly one label. Centroid means cost one k·dim-bounded
     aggregate + collect (the kmeans driver-traffic convention).
     Probing ALL cells makes the candidate set the whole corpus, so
-    ``n_probe = n_cells`` is EXACTLY ``pq_ann`` — the equivalence the
-    test suite pins as the multi-probe correctness anchor.
+    ``n_probe = n_cells`` is EXACTLY ``pq_ann`` (one constant cell) —
+    the equivalence the test suite pins as the multi-probe
+    correctness anchor.
 
     Returns (query_id, vec_id, adc, rank) — rank 1..k within the probed
     cell(s), self-matches excluded.
     """
-    from pyspark.sql.window import Window
-
-    from .cleaning import spread
-
     if query_pred is None:
         query_pred = F.col("vec_id") < 3
-    q = spread(df, key="vec_id").select(
-        "vec_id", _kq(F.col(vec_col)).alias("qv"), F.col(cluster_col)
-    )
-    first = q.select(F.size("qv").alias("d")).limit(1).collect()
+    q = _quantized(df, vec_col, cluster_col)
     out_schema = "query_id bigint, vec_id bigint, adc bigint, rank int"
-    if not first:
-        return df.sparkSession.createDataFrame([], out_schema)
-    dim = first[0]["d"]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible into {m} subspaces")
-    sub = dim // m
     # overlap the fit-independent collects (query rows; the n_probe>1
-    # per-cell centroid means) with the fit's job chain — side threads,
-    # same convention as the m fit threads
+    # per-cell centroid means) with the fit's job chain — side threads
     from concurrent.futures import ThreadPoolExecutor
 
     def _collect_queries():
@@ -2202,10 +2006,10 @@ def ivfpq_ann(
         if books is None:
             # caller-supplied books skip the refit (pure function of
             # (data, m, n_codes, n_iter) — the shared-books cache)
-            books = _pq_fit_books(q, m, sub, n_codes, n_iter)
+            books = _pq_fit_books(q, m, n_codes, n_iter)
         queries = _fq.result()
         cm = _fcm.result() if _fcm is not None else None
-    codes = _pq_encode_frame(q, books, sub, carry=(cluster_col,)).select(
+    codes = _pq_encode_frame(q, books, carry=(cluster_col,)).select(
         "vec_id", cluster_col, "codes"
     )
     if not queries:
@@ -2225,8 +2029,9 @@ def ivfpq_ann(
         for r in cm:
             acc.setdefault(r[cluster_col], {})[r["pos"]] = int(r["mu"])
         cent_vec = {
-            lab: [d[p] for p in range(dim)] for lab, d in acc.items()
+            lab: [d[p] for p in range(len(d))] for lab, d in acc.items()
         }
+    sub = len(books[0][0])
     qrows = []
     for row in queries:
         qv = list(row["qv"])
@@ -2263,12 +2068,12 @@ def ivfpq_ann(
         ]
         + [
             StructField(f"__tbl{s}", ArrayType(LongType()))
-            for s in range(m)
+            for s in range(len(books))
         ]
     )
     qdf = df.sparkSession.createDataFrame(qrows, qschema)
     adc = None
-    for s in range(m):
+    for s in range(len(books)):
         lookup = F.element_at(
             F.col(f"__tbl{s}"), F.col("codes")[s] + F.lit(1)
         )
@@ -2278,9 +2083,4 @@ def ivfpq_ann(
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", adc.cast("bigint").alias("adc"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "adc", "rank")
-    )
+    return _topk(scored, "adc", k, desc=False)

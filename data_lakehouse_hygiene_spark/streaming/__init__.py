@@ -87,7 +87,14 @@ def run_to_memory(
     million-row passthrough rows (streaming_enrich/debounce at sf1) that
     driver round trip dominated the whole stream's wall. The checkpoint
     materializes the same rows once in executor storage; the returned
-    DataFrame is independent of the dropped view."""
+    DataFrame is independent of the dropped view.
+
+    ``localCheckpoint`` truncates lineage and keeps its blocks only in
+    executor storage, so this assumes static allocation on one node: an
+    executor lost (or released by dynamic allocation) takes its blocks
+    with it and the result cannot be recomputed. The blocks also stay
+    resident while the result is referenced — callers should let the
+    returned DataFrame go out of scope when done with it."""
     spark = stream_df.sparkSession
     sink = f"stream_sink_{uuid.uuid4().hex[:12]}"
     q = (

@@ -131,11 +131,14 @@ def test_media_near_dup_s_growth_stays_exact(spark):
 
 
 def test_pq_fit_books_equals_per_subspace_fits(spark):
-    """The shared-init threaded fit must be bit-identical to m
-    independent per-subspace _kmeans_fit chains (the pre-r10 shape)."""
+    """The shared-init fused fit must be bit-identical to m independent
+    per-subspace Lloyd fits (``_kmeans_fit_local`` over the collected,
+    vec_id-sorted subspace slices)."""
+    import numpy as np
+
     from data_lakehouse_hygiene_spark.operators.cleaning import spread
     from data_lakehouse_hygiene_spark.operators.similarity import (
-        _kmeans_fit,
+        _kmeans_fit_local,
         _kq,
         _pq_fit_books,
     )
@@ -146,15 +149,12 @@ def test_pq_fit_books_equals_per_subspace_fits(spark):
         "vec_id", _kq(F.col("embedding")).alias("qv")
     )
     m, sub, k, n_iter = 4, 16, 8, 2
-    got = _pq_fit_books(q, m, sub, k, n_iter)
+    got = _pq_fit_books(q, m, k, n_iter)
+    X = np.array(
+        [r["qv"] for r in q.orderBy("vec_id").collect()], dtype=np.int64
+    )
     ref = [
-        _kmeans_fit(
-            q.select(
-                "vec_id", F.slice("qv", s * sub + 1, sub).alias("qv")
-            ),
-            k,
-            n_iter,
-        )
+        _kmeans_fit_local(X[:, s * sub : (s + 1) * sub], k, n_iter).tolist()
         for s in range(m)
     ]
     assert got == ref

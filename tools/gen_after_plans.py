@@ -1,10 +1,10 @@
 """Dump `.explain("formatted")` for the named declared queries to
-plans/r14/<query>_after.txt — the judge-checkable evidence for every
-round-14 plan claim (pairs with the <query>_before.txt files captured
-at round open).
+<plan_dir>/<query>_<suffix>.txt — the checkable evidence for a plan
+claim: run it with ``before`` on the parent checkout and with ``after``
+on the change, then diff the pairs.
 
-Usage: python tools/gen_after_plans.py q1 q2 ...
-(default: every query touched in round 14)
+Usage: python tools/gen_after_plans.py <plan_dir> <before|after> q1 q2 ...
+(input tables: $SPARK_GRAFT_SF_DIR, default the sf0.1 test data)
 """
 
 from __future__ import annotations
@@ -19,44 +19,23 @@ from data_lakehouse_hygiene_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Rows whose plans round 14 changed (session 1: de-skew, spread fan-out,
-# global_rank rewrite; session 2: key128 digests, fused media pipeline).
-DEFAULT = [
-    "substring_dedup",
-    "substring_dedup_apply",
-    "substring_dedup_keep_first",
-    "line_dedup",
-    "ngram_jaccard",
-    "media_near_dup",
-    "shard_assign",
-    "pii_scrub",
-    "char_stats",
-    "gopher_quality",
-    "simhash_near_dup",
-    "simhash128_near_dup",
-    "minhash_near_dup",
-]
-
 
 def main() -> None:
-    names = sys.argv[1:] or DEFAULT
+    if len(sys.argv) < 4 or sys.argv[2] not in ("before", "after"):
+        sys.exit(__doc__)
+    plan_dir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     spark = get_spark(app_name="gen_after_plans")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
-    here = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r14",
-    )
-    os.makedirs(here, exist_ok=True)
+    os.makedirs(plan_dir, exist_ok=True)
     for name in names:
         df = qs[name](spark, SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        with open(os.path.join(here, f"{name}_after.txt"), "w") as fh:
+        with open(os.path.join(plan_dir, f"{name}_{suffix}.txt"), "w") as fh:
             fh.write(plan)
-        print("wrote", name)
+        print("wrote", name, suffix)
 
 
 if __name__ == "__main__":
