@@ -747,38 +747,50 @@ _SWAR_MASK = 0x0001000100010001  # one 16-bit counting lane per mask bit
 _SWAR_LANE_LIMIT = 65535  # max shingles/doc before a 16-bit lane overflows
 
 
-def _simhash_agg(df: DataFrame, text_col: str) -> DataFrame:
-    """SWAR vertical-popcount aggregate shared by ``simhash_signatures``
-    and ``simhash_near_dup_pairs``: one row per document with the shingle
-    count ``__n`` and 16 packed lane sums ``w0..w15``.
+def _simhash_agg(df: DataFrame, text_col: str, lanes: int = 1) -> DataFrame:
+    """SWAR vertical-popcount aggregate of the SimHash family: one row per
+    document with the shingle count ``__n`` and 16 packed lane sums
+    ``w0..w15`` per 64-bit word of the signature (``lanes`` = 1 for
+    64-bit SimHash, 2 for 128-bit, which adds ``x0..x15``).
 
-    The 64-bit shingle hash (md5 prefix, parsed with TWO conv() calls —
-    c0 = digits 1-8 in bits 32-63, c1 = digits 9-16 in bits 0-31) is
-    AND-masked into four 16-bit counting lanes (``0x0001000100010001``)
-    at each of 16 shift offsets, so ONE hash aggregate carries 16 packed
-    BIGINT sums + a count instead of 64 per-bit sums — 17 agg buffer
-    slots vs 64, which halves both per-row work and the Janino compile
-    of the generated aggregate. Lane arithmetic is exact as long as
-    every per-bit count fits 16 bits (enforced downstream via
-    ``_swar_guard``); the packed sum may wrap Long.MAX via lane 48 —
-    harmless: lanes are extracted with ``shiftrightunsigned``, and the
-    session pins ANSI off so SUM wraps instead of erroring.
+    Word 0 is md5 hex digits 1-16 (parsed with TWO conv() calls — digits
+    1-8 in bits 32-63, digits 9-16 in bits 0-31), word 1 digits 17-32
+    with the same layout. Each word is AND-masked into four 16-bit
+    counting lanes (``0x0001000100010001``) at each of 16 shift offsets,
+    so ONE hash aggregate carries 16 packed BIGINT sums per word + a
+    count instead of 64 per-bit sums — 17 agg buffer slots vs 64, which
+    halves both per-row work and the Janino compile of the generated
+    aggregate. Lane arithmetic is exact as long as every per-bit count
+    fits 16 bits (enforced downstream via ``_swar_halves``); the packed
+    sum may wrap Long.MAX via lane 48 — harmless: lanes are extracted
+    with ``shiftrightunsigned``, and the session pins ANSI off so SUM
+    wraps instead of erroring.
     """
-    # cost=2: 16 SWAR shift-mask sums per shingle row (round-14 width
-    # sweep: simhash64 median 1.11 s @width 3 → 0.84 s @16 at sf0.1).
-    df = spread(df, cost=2)
+    # cost=2 per word: 16 SWAR shift-mask sums per shingle row (round-14
+    # width sweep at sf0.1: simhash64 median 1.11 s @width 3 → 0.84 s
+    # @16, simhash128 1.48 s → 0.99 s).
+    df = spread(df, cost=2 * lanes)
     ex = shingle_rows(df, text_col, alias="tok").select(
         "doc_id", F.md5("tok").alias("__h")
     )
-    h = F.shiftleft(
-        F.conv(F.substring("__h", 1, 8), 16, 10).cast("bigint"), 32
-    ).bitwiseOR(F.conv(F.substring("__h", 9, 8), 16, 10).cast("bigint"))
-    hh = ex.select("doc_id", h.alias("__w"))
+
+    def word(d0: int) -> Column:
+        return F.shiftleft(
+            F.conv(F.substring("__h", d0, 8), 16, 10).cast("bigint"), 32
+        ).bitwiseOR(
+            F.conv(F.substring("__h", d0 + 8, 8), 16, 10).cast("bigint")
+        )
+
+    pres = "wx"[:lanes]
+    hh = ex.select(
+        "doc_id", *[word(1 + 16 * i).alias(f"__{p}") for i, p in enumerate(pres)]
+    )
     # SQL-string form: ONE py4j parse per lane sum instead of ~6 Column
-    # round-trips each — see _swar_bits on why driver-side construction
-    # cost matters here.
+    # round-trips each — see _swar_bits_sql on why driver-side
+    # construction cost matters here.
     sums = [
-        F.expr(f"sum(shiftrightunsigned(__w, {k}) & {_SWAR_MASK}) AS w{k}")
+        F.expr(f"sum(shiftrightunsigned(__{p}, {k}) & {_SWAR_MASK}) AS {p}{k}")
+        for p in pres
         for k in range(16)
     ]
     return hh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("__n"), *sums)
@@ -832,64 +844,78 @@ def _swar_bits_sql(j0: int, n_bits: int) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def _swar_half(j0: int, alias: str) -> Column:
-    """Guarded 32-bit signature half: ``assert_true`` keeps every 16-bit
-    counting lane exact (> 65535 distinct shingles in ONE document means
+def _swar_halves(names: tuple[str, ...]) -> list[Column]:
+    """Guarded 32-bit signature halves, one per name (half q = signature
+    bits [32q, 32q+32)): ``assert_true`` keeps every 16-bit counting
+    lane exact (> 65535 distinct shingles in ONE document means
     ~verbatim-unique text that no near-dup pass should fingerprint
     whole; chunk first). Routing the value through the if(... is null)
     keeps the guard from being pruned as an unused column."""
-    return F.expr(
-        f"if(assert_true(__n <= {_SWAR_LANE_LIMIT}) is null, "
-        f"cast(({_swar_bits_sql(j0, 32)}) as bigint), null) AS {alias}"
+    return [
+        F.expr(
+            f"if(assert_true(__n <= {_SWAR_LANE_LIMIT}) is null, "
+            f"cast(({_swar_bits_sql(32 * q, 32)}) as bigint), null) AS {n}"
+        )
+        for q, n in enumerate(names)
+    ]
+
+
+def _simhash_signatures(
+    df: DataFrame, text_col: str, halves: tuple[str, ...]
+) -> DataFrame:
+    """SimHash per document over ``32·len(halves)`` bits: the bit string
+    ``simhash_bits`` plus one packed 32-bit column per name in
+    ``halves`` (half q = signature bits [32q, 32q+32), LSB-first)."""
+    agg = _simhash_agg(df, text_col, len(halves) // 2)
+    packed = agg.select("doc_id", *_swar_halves(halves))
+    # Bit string rendered from the integer halves (LSB-first to match the
+    # j-ascending definition) — 3 string ops per half instead of one
+    # CASE branch per bit.
+    bits = F.concat(
+        *[
+            F.reverse(F.lpad(F.conv(F.col(n).cast("string"), 10, 2), 32, "0"))
+            for n in halves
+        ]
     )
+    return packed.select("doc_id", bits.alias("simhash_bits"), *halves)
 
 
 def simhash_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """64-bit SimHash per document as a 64-char bit string.
+    """64-bit SimHash per document as a 64-char bit string plus the two
+    packed halves ``sh_lo`` (bits 0-31) and ``sh_hi`` (bits 32-63).
 
     Features are distinct word 3-gram shingles (not unigram tokens: on a
     small shared vocabulary every document uses nearly the same token SET,
     which collapses unigram SimHash — shingles carry sequence information).
     Per shingle, md5 supplies 64 bits; bit j of the signature is the
     majority vote over shingles. Aggregation and bit-assembly mechanics:
-    ``_simhash_agg`` / ``_swar_bits``.
+    ``_simhash_agg`` / ``_swar_bits_sql``.
     """
-    agg = _simhash_agg(df, text_col)
-    packed = agg.select(
-        "doc_id", _swar_half(0, "sh_lo"), _swar_half(32, "sh_hi")
-    )
-    # Bit string rendered from the integer halves (LSB-first to match the
-    # j-ascending definition) — 6 string ops instead of 64 CASE branches.
-    bits = F.concat(
-        F.reverse(F.lpad(F.conv(F.col("sh_lo").cast("string"), 10, 2), 32, "0")),
-        F.reverse(F.lpad(F.conv(F.col("sh_hi").cast("string"), 10, 2), 32, "0")),
-    )
-    return packed.select(
-        "doc_id", bits.alias("simhash_bits"), "sh_lo", "sh_hi"
-    )
+    return _simhash_signatures(df, text_col, ("sh_lo", "sh_hi"))
 
 
 # Above this estimated input size the simhash pair stage switches from
-# in-row expression combos to the Arrow popcount kernel (see
-# simhash_near_dup_pairs) — the interpreted O(occupancy^2) term crosses
-# the fixed Arrow/worker overhead around this scale (estimates are
-# COMPRESSED parquet bytes: ~0.6 MB at sf0.1 where the expression path
-# wins 1.5 s vs 3.2 s, ~4 MB at sf1 where the kernel wins 5.8 s vs 13 s).
+# in-row expression combos to the Arrow popcount kernel of ``mih_pairs``
+# at per-band radius 0 (see _simhash_near_dup) — the interpreted
+# O(occupancy^2) term crosses the fixed Arrow/worker overhead around this
+# scale (estimates are COMPRESSED parquet bytes: ~0.6 MB at sf0.1 where
+# the expression path wins 1.5 s vs 3.2 s, ~4 MB at sf1 where the kernel
+# wins 5.8 s vs 13 s).
 SIMHASH_KERNEL_BYTES = 2 << 20
 
-# Above this estimated input size the pair stage switches again, from the
-# 8-bit-band Arrow kernel to multi-index hashing (see mih_pairs):
+# Above this estimated input size the pair stage switches again, from
+# exact-band matching to per-band radius 1 (multi-index hashing proper):
+# at radius 0 the h ≤ 7 contract needs 8 bands, and the 64-bit family's
 # 8-bit bands have only 256 values, so bucket occupancy — and the
 # occupancy² pair term — grows linearly with the corpus no matter how the
 # work is kernelized (measured: 487 s at sf10/500k docs, ~2000 docs per
-# bucket). MIH swaps the geometry for 4×16-bit bands + single-bit-flip
-# variant keys: 65536 bucket values, occupancy n/65536, identical final
-# pair set. Crossover: the kernel path wins below ~50k docs (its emit
-# volume is 8 rows/doc vs MIH's 68), MIH wins above.
+# bucket). Radius 1 halves the band count (4×16-bit bands + single-bit-
+# flip variant keys: occupancy n/65536), identical final pair set.
+# Crossover: radius 0 wins below ~50k docs (its emit volume is 8
+# rows/doc vs radius 1's 68), radius 1 wins above.
 SIMHASH_MIH_BYTES = 16 << 20
 
-SIMHASH_BANDS = 8  # 8 disjoint 8-bit bands of the 64-bit signature
-SIMHASH_MAX_HAMMING = 7  # must stay < SIMHASH_BANDS for the recall guarantee
+SIMHASH_MAX_HAMMING = 7  # the widest radius mih_bands can serve
 
 # MIH planned-compare refusal (round 13). The sixth-decade measurement
 # (SCALING.md: 30M fingerprints, in-process interleaved vs the 10M
@@ -985,33 +1011,38 @@ def _band_combo_pairs(
     )
 
 
-def mih_bands(max_hamming: int) -> int:
-    """Band count for the MIH geometry: the WIDEST single-flip-feasible
-    bands. Pigeonhole over b bands: a pair at Hamming ≤ h has some band
-    at distance ≤ floor(h/b); the kernel matches band distance 0
-    (exact×exact) and 1 (exact×single-flip-variant), so feasibility
-    needs floor(h/b) ≤ 1, i.e. b ≥ floor(h/2)+1. Subject to that, WIDER
-    bands are strictly better at every corpus size: occupancy is
-    n/2^(64/b) (each halving of b squares the bucket count) while keys
-    per doc b·(1+64/b) = b+64 barely moves (66 at b=2 vs 68 at b=4).
-    So the width knob is RADIUS-bound, not corpus-bound — the widest
-    feasible geometry wins wherever the MIH plan is selected at all
-    (the corpus-size decision is the SIMHASH_MIH_BYTES gate upstream):
+def mih_bands(max_hamming: int, radius: int = 1, lanes: int = 2) -> int:
+    """Band count of every banded pair plan: the FEWEST (widest) bands
+    b ∈ {2, 4, 8} with b ≥ ``lanes`` (so a band nests in one 32-bit
+    lane) and max_hamming // b ≤ ``radius``. Pigeonhole over b bands: a
+    pair at Hamming ≤ h has some band at distance ≤ floor(h/b); radius 0
+    matches identical bands only, radius 1 also exact×single-flip
+    variants. Subject to feasibility, WIDER bands are strictly better at
+    every corpus size: occupancy is n/2^(32·lanes/b) (each halving of b
+    squares the bucket count) while radius-1 keys per doc
+    b·(1+32·lanes/b) barely move. So the band count is RADIUS-bound, not
+    corpus-bound; the corpus-size decision is the radius itself
+    (SIMHASH_KERNEL_BYTES / SIMHASH_MIH_BYTES upstream). For 64-bit
+    signatures:
 
-    - h ≤ 3 → 2×32-bit bands, occupancy n/2^32: a TRILLION-doc corpus
-      averages < 1 doc per bucket — third-decade-safe outright.
-    - h 4..7 → 4×16-bit bands, occupancy n/65536: the h ≤ 7 contract's
-      widest single-flip geometry. Growing past ~10^8 docs means either
-      trading the radius down to ≤ 3 (the n_bands knob precedent) or
-      paying r = 2 variant enumeration (C(w,2) keys/doc) — documented
-      in SCALING.md, not silently attempted.
-    - h ≥ 8 never reaches MIH (the dispatch keeps the banded kernel).
+    - radius 1: h ≤ 3 → 2×32-bit bands, occupancy n/2^32 (a
+      TRILLION-doc corpus averages < 1 doc per bucket); h 4..7 →
+      4×16-bit, occupancy n/65536. Growing past ~10^8 docs at h ≤ 7
+      means either trading the radius down to ≤ 3 or paying r = 2
+      variant enumeration (C(w,2) keys/doc) — documented in
+      SCALING.md, not silently attempted.
+    - radius 0: h ≤ 1 → 2 bands, h ≤ 3 → 4, h ≤ 7 → 8×8-bit.
+
+    h > 7 raises at every radius: 8 bands at radius 1 would serve h ≤ 15,
+    but the small and mid-size arms run at radius 0, where no b ≤ 8
+    serves h > 7 — and one operator keeps one contract across its arms.
     """
-    for b in (2, 4):
-        if max_hamming // b <= 1:
-            return b
-    raise ValueError(
-        f"max_hamming={max_hamming} exceeds the single-flip MIH radius"
+    if max_hamming > 7:
+        raise ValueError(
+            f"max_hamming={max_hamming} exceeds the banded plans' radius 7"
+        )
+    return next(
+        b for b in (2, 4, 8) if b >= lanes and max_hamming // b <= radius
     )
 
 
@@ -1025,9 +1056,7 @@ def _swar_lanes(agg: DataFrame, names: tuple[str, ...]) -> DataFrame:
     alone costs seconds (data-size-independent; same pathology as
     deriving band keys from sh_lo/sh_hi in the banded plan, see
     simhash_near_dup_pairs)."""
-    return agg.select(
-        "doc_id", *[_swar_half(32 * q, n) for q, n in enumerate(names)]
-    ).repartition("doc_id")
+    return agg.select("doc_id", *_swar_halves(names)).repartition("doc_id")
 
 
 def mih_pairs(
@@ -1052,8 +1081,10 @@ def mih_pairs(
     the same pair set as every banded plan (asserted in tests).
 
     Geometry: the signature splits into ``n_bands`` disjoint w-bit
-    bands (w = 32·lanes/n_bands ∈ {16, 32}, so band k nests in one
-    lane) with per-band radius r = max_hamming // n_bands ≤ 1.
+    bands (w = 32·lanes/n_bands ∈ {8, 16, 32}, so band k nests in one
+    lane) with per-band radius r = max_hamming // n_bands ≤ 1
+    (``mih_bands`` picks n_bands). At r = 0 no variant keys are
+    emitted and the kernel only pairs identical band values.
     Pigeonhole: if every band differed in ≥ r+1 bits the distance would
     be ≥ b(r+1) > max_hamming, so every qualifying pair agrees with some
     band to within r bits. Verification is always the full popcount
@@ -1085,13 +1116,14 @@ def mih_pairs(
     PLANNED-COMPARE refusal (round 13, MIH_MAX_COMPARES): past
     ``MIH_PROBE_MIN_DOCS`` one column-pruned (keys, band, value)
     histogram prices the kernel before any pair task launches and
-    refuses above ``max_compares``. At w ≤ 16 the dense histogram
-    (bounded collect ≤ groups·b·2^w rows) gives the EXACT kernel term
-    (``_mih_planned_compares``). A dense 2^32 histogram is unbuildable,
-    so at w = 32 the within-bucket triangle term Σ c(c−1)/2 is summed
-    server-side (one-row collect) — a certified LOWER bound that omits
-    the distance-1 neighbor products, so it refuses only plans that
-    certainly exceed the budget. ``name`` and ``sig`` word the refusal
+    refuses above ``max_compares``. At r = 1 and w ≤ 16 the dense
+    histogram (bounded collect ≤ groups·b·2^w rows) gives the EXACT
+    kernel term (``_mih_planned_compares``). Otherwise the within-bucket
+    triangle term Σ c(c−1)/2 is summed server-side (one-row collect):
+    exact at r = 0, and at r = 1, w = 32 (a dense 2^32 histogram is
+    unbuildable) a certified LOWER bound that omits the distance-1
+    neighbor products, so it refuses only plans that certainly exceed
+    the budget. ``name`` and ``sig`` word the refusal
     for the calling operator.
     """
     import numpy as np
@@ -1101,10 +1133,10 @@ def mih_pairs(
     b = n_bands
     w = 32 * len(lanes) // b
     r = max_hamming // b
-    if w not in (16, 32) or b * w != 32 * len(lanes) or r > 1:
+    if w not in (8, 16, 32) or b * w != 32 * len(lanes) or r > 1:
         raise ValueError(
-            f"MIH needs 16- or 32-bit bands and max_hamming // n_bands <= 1"
-            f" (got {len(lanes)} lanes, n_bands={b}, max_hamming="
+            "MIH needs 8-, 16- or 32-bit bands and max_hamming // n_bands"
+            f" <= 1 (got {len(lanes)} lanes, n_bands={b}, max_hamming="
             f"{max_hamming})"
         )
     mask = (1 << w) - 1
@@ -1143,7 +1175,7 @@ def mih_pairs(
             )
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        if w <= 16:
+        if r and w <= 16:
             per: dict[tuple, list] = {}
             for row in hist.collect():
                 per.setdefault(tuple(row[:-2]), []).append(
@@ -1279,204 +1311,93 @@ def mih_pairs(
     )
 
 
-def simhash_near_dup_pairs(
+def _simhash_near_dup(
     df: DataFrame,
-    text_col: str = "text",
-    max_hamming: int = SIMHASH_MAX_HAMMING,
-    n_bands: int = SIMHASH_BANDS,
+    text_col: str,
+    halves: tuple[str, ...],
+    max_hamming: int,
+    max_compares: float | None = None,
+    name: str = "simhash",
 ) -> DataFrame:
-    """SimHash near-dup pairs over the WHOLE corpus: Hamming distance ≤
-    ``max_hamming``, blocked on signature prefix bands with guaranteed
-    recall (Manku/Jain/Sarma-style, WWW'07).
+    """Pair stage of both SimHash widths; ``halves`` names the 32-bit
+    signature lanes (two for 64-bit, four for 128-bit). Every plan has
+    pigeonhole-guaranteed recall and full popcount verification, so the
+    size gate is a cost decision only (value identity test-asserted):
 
-    Band math (pigeonhole): the 64-bit signature splits into 8 disjoint
-    8-bit bands. A pair at Hamming distance h has its h differing bits in
-    at most h distinct bands, so for h ≤ 7 at least one of the 8 bands is
-    IDENTICAL in both signatures — every qualifying pair is guaranteed to
-    collide in ≥1 band bucket. The blocked result therefore EQUALS the
-    all-pairs definition, which is exactly what the (brute-force, sf0.01)
-    oracle SQL computes. On the test corpus the planted near-dup pairs
-    have Hamming 1–7 and the closest non-planted pair is at 16 — the
-    operator returns precisely the planted set.
-
-    Scale shape: one signature pass (pure projection + one hash agg), an
-    8-way band explode (narrow), one groupBy on (band, band_val) with
-    in-row a<b pair generation — no self-join, so the signature subtree is
-    evaluated once. A band bucket is a 1/256 slice of signature space
-    (~n/256 docs uniform); corpora with mass-duplication clusters should
-    run ``exact_dedup_groups`` first — k identical signatures in a bucket
-    are exact duplicates, not near-duplicates. Pairs colliding in several
-    bands are deduped by a groupBy on the pair key (hamming is identical
-    in every collision, so any-value aggregation is exact).
-
-    The 8-bit band keys are assembled straight from the SWAR lane sums
-    (``_swar_bits(8k, 8)``) in the SAME projection that assembles
-    sh_lo/sh_hi — deriving them from sh_lo/sh_hi instead makes
-    CollapseProject inline 4+ copies of each 32-bit assembly expression
-    into the band array, and the resulting Catalyst planning time (~1.4s
-    per call, data-size-independent) dominated the whole operator at
-    sf0.1. Band k of the signature equals bits [8k, 8k+8) in both
-    formulations, so blocked-pair results are unchanged.
-
-    ``n_bands`` is the SCALE knob (must divide 64; the guarantee needs
-    ``max_hamming < n_bands``): a band bucket holds ~n / 2^(64/n_bands)
-    docs, and the in-bucket pair term grows with occupancy², so growing
-    the corpus 2^k× while keeping bucket occupancy — and therefore
-    per-task pair work — constant means WIDENING bands by k bits (fewer,
-    wider bands), trading down the guaranteed Hamming radius: 8×8-bit
-    bands guarantee h≤7 at ~n/256 occupancy; 4×16-bit bands guarantee
-    h≤3 at ~n/65536. Measured in SCALING.md (7.1× time at 10× corpus
-    with the default geometry — the quadratic term, not the shuffle, is
-    what the knob controls).
+    - < SIMHASH_KERNEL_BYTES: exact-band in-row combos over
+      ``mih_bands(h, 0, lanes)`` bands, no Python stage (~1.3 s of
+      Arrow/worker overhead saved at sf0.1).
+    - < SIMHASH_MIH_BYTES: the same bands through ``mih_pairs`` at
+      radius 0. The combos are CodegenFallback-interpreted and
+      O(occupancy²) per bucket (16.3 s at sf1 vs ~6 s for a kernel).
+    - above: ``mih_pairs`` at radius 1 with its planned-compare refusal;
+      the count() job sizes its Arrow transport granularity.
     """
-    if 64 % n_bands != 0:
-        raise ValueError("band width must divide the 64-bit signature")
-    if max_hamming >= n_bands:
-        raise ValueError("recall guarantee needs max_hamming < n_bands")
-    width = 64 // n_bands
-    agg = _simhash_agg(df, text_col)
-    # CORPUS-SCALE plan: multi-index hashing (b wide bands + 1-bit-flip
-    # variant keys; ``mih_bands`` picks the widest single-flip-feasible
-    # geometry from the radius — 2×32-bit at h ≤ 3, 4×16-bit at h ≤ 7).
-    # The pair set is the same {hamming ≤ max_hamming} regardless of
-    # geometry — every plan shape has full recall — so the switch is
-    # purely a cost decision; see mih_pairs. Only radii ≤ 7 keep the
-    # variant enumeration at one flip per band. The count() job sizes
-    # the Arrow transport granularity (trivial next to the pair stage it
-    # sizes — the resolve_planes convention).
-    if max_hamming <= 7 and _estimated_bytes(df) >= SIMHASH_MIH_BYTES:
+    lanes = len(halves)
+    b = mih_bands(max_hamming, 0, lanes)
+    agg = _simhash_agg(df, text_col, lanes // 2)
+    size = _estimated_bytes(df)
+    if size >= SIMHASH_MIH_BYTES:
         return mih_pairs(
-            _swar_lanes(agg, ("sh_lo", "sh_hi")),
-            mih_bands(max_hamming),
+            _swar_lanes(agg, halves),
+            mih_bands(max_hamming, 1, lanes),
             max_hamming,
             n_docs=df.count(),
+            max_compares=max_compares,
+            name=name,
         )
+    if size >= SIMHASH_KERNEL_BYTES:
+        return mih_pairs(_swar_lanes(agg, halves), b, max_hamming)
+    w = 32 * lanes // b
     bands = F.expr(
         "array("
         + ",".join(
-            f"struct({k} AS band, ({_swar_bits_sql(width * k, width)})"
-            " AS band_val)"
-            for k in range(n_bands)
+            f"struct({k} AS band, ({_swar_bits_sql(w * k, w)}) AS band_val)"
+            for k in range(b)
         )
         + ")"
     )
     ex = agg.select(
         "doc_id",
-        _swar_half(0, "sh_lo"),
-        _swar_half(32, "sh_hi"),
+        *_swar_halves(halves),
         F.explode(bands).alias("bk"),
-    ).select("doc_id", "sh_lo", "sh_hi", "bk.band", "bk.band_val")
-    # Size-gated pair stage (the ngram_jaccard two-plan-shapes precedent;
-    # value-identical either way, asserted in tests):
-    #
-    # - SMALL inputs (estimated < SIMHASH_KERNEL_BYTES): in-row expression
-    #   combos per bucket. The interpreted per-pair cost is small when
-    #   bucket occupancy is, and the no-Python plan avoids ~1.3 s of
-    #   Arrow/worker overhead at sf0.1.
-    # - LARGE inputs: an Arrow applyInPandas kernel — numpy XOR + SWAR
-    #   popcount over each bucket's signature vectors. The expression
-    #   combos are CodegenFallback-interpreted and O(occupancy²) per
-    #   bucket — measured 16.3 s at sf1 where the kernel measures ~6 s;
-    #   the gap widens quadratically with occupancy.
-    #
-    # The Arrow GROUP is deliberately COARSER than the bucket: grouping
-    # on the raw (band, band_val) ships one Arrow batch per bucket, and
-    # the ~2.7 ms per-group Python round-trip made 2048 tiny buckets cost
-    # 6 s at sf0.1. Instead the shuffle key is (band, band_val mod
-    # sub_groups) — n_bands·sub_groups Arrow groups of ~n/sub_groups rows
-    # — and the kernel sub-groups by exact band_val in pandas (C-speed,
-    # no per-bucket round-trip). Same buckets, same pairs; only the
-    # transport granularity changes. Size ``sub_groups`` so a task holds
-    # ~500k rows (n_bands·sub_groups tasks must also cover the cluster).
-    import numpy as np
-    import pandas as pd
-
-    if _estimated_bytes(df) < SIMHASH_KERNEL_BYTES:
-        return _band_combo_pairs(ex, ("sh_lo", "sh_hi"), max_hamming)
-
-    sub_groups = 64
-    _EMPTY = {
-        "doc_a": pd.Series(dtype="int64"),
-        "doc_b": pd.Series(dtype="int64"),
-        "hamming": pd.Series(dtype="int64"),
-    }
-
-    def _bucket_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = [pd.DataFrame(_EMPTY)]
-        for _, g in pdf.groupby("band_val", sort=False):
-            if len(g) < 2:
-                continue
-            order = np.argsort(g["doc_id"].to_numpy())
-            ids = g["doc_id"].to_numpy()[order]
-            lo = g["sh_lo"].to_numpy()[order].astype(np.uint64)
-            hi = g["sh_hi"].to_numpy()[order].astype(np.uint64)
-            # chunk rows so the XOR matrix stays ~4096·occupancy int64s
-            # even on a pathological mass-duplicate bucket
-            for c0 in range(0, len(ids), 4096):
-                c1 = min(c0 + 4096, len(ids))
-                ham = (
-                    _np_pop64(lo[c0:c1, None] ^ lo[None, :])
-                    + _np_pop64(hi[c0:c1, None] ^ hi[None, :])
-                ).astype(np.int64)
-                rows = np.arange(c0, c1)[:, None]
-                cols = np.arange(len(ids))[None, :]
-                m = (rows < cols) & (ham <= max_hamming)
-                r, c = np.nonzero(m)
-                if len(r):
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "doc_a": ids[r + c0],
-                                "doc_b": ids[c],
-                                "hamming": ham[r, c],
-                            }
-                        )
-                    )
-        return pd.concat(outs, ignore_index=True)
-
-    coarse = ex.withColumn("__sub", F.pmod("band_val", F.lit(sub_groups)))
-    return (
-        coarse.groupBy("band", "__sub")
-        .applyInPandas(
-            _bucket_kernel, "doc_a long, doc_b long, hamming long"
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.max("hamming").alias("hamming"))
-    )
+    ).select("doc_id", *halves, "bk.band", "bk.band_val")
+    return _band_combo_pairs(ex, halves, max_hamming)
 
 
-def _simhash128_agg(df: DataFrame, text_col: str) -> DataFrame:
-    """Two-lane SWAR aggregate for 128-bit SimHash (round 13): the full
-    md5 supplies 128 bits per shingle — hex digits 1-16 feed lane __w
-    (identical to ``_simhash_agg``), digits 17-32 feed lane __x with the
-    SAME in-lane layout — so one hash aggregate carries 32 packed
-    BIGINT sums (w0..w15, x0..x15) + the count. Everything downstream
-    (``_swar_bits_sql`` with its j ≥ 64 → x-prefix rule, ``_swar_half``)
-    reads both lanes through one position formula."""
-    # cost=4: 32 SWAR shift-mask sums per shingle row — twice the
-    # 64-bit lane count (round-14 width sweep: simhash128 median 1.48 s
-    # @width 3 → 0.99 s @16 at sf0.1).
-    df = spread(df, cost=4)
-    ex = shingle_rows(df, text_col, alias="tok").select(
-        "doc_id", F.md5("tok").alias("__h")
-    )
+def simhash_near_dup_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    max_hamming: int = SIMHASH_MAX_HAMMING,
+) -> DataFrame:
+    """SimHash near-dup pairs over the WHOLE corpus: Hamming distance ≤
+    ``max_hamming`` (≤ 7, else ValueError) between 64-bit signatures,
+    blocked on signature bands with guaranteed recall
+    (Manku/Jain/Sarma-style, WWW'07).
 
-    def _lane(d0: int):
-        return F.shiftleft(
-            F.conv(F.substring("__h", d0, 8), 16, 10).cast("bigint"), 32
-        ).bitwiseOR(
-            F.conv(F.substring("__h", d0 + 8, 8), 16, 10).cast("bigint")
-        )
+    Band math (pigeonhole): a pair at Hamming distance h < b has some
+    one of b disjoint bands IDENTICAL, so every qualifying pair collides
+    in ≥1 band bucket and the blocked result EQUALS the all-pairs
+    definition the (brute-force, sf0.01) oracle SQL computes. On the
+    test corpus the planted near-dup pairs have Hamming 1–7 and the
+    closest non-planted pair is at 16. b comes from the radius
+    (``mih_bands``): 8×8-bit bands at the default h ≤ 7, 4×16-bit at
+    h ≤ 3 (occupancy ~n/65536 instead of ~n/256); plans by input size:
+    ``_simhash_near_dup``. The small plan is one signature pass, a
+    b-way band explode and one groupBy on (band, band_val) with in-row
+    a<b pairs — no self-join. Mass-duplication clusters should go
+    through ``exact_dedup_groups`` first.
 
-    hh = ex.select("doc_id", _lane(1).alias("__w"), _lane(17).alias("__x"))
-    sums = [
-        F.expr(
-            f"sum(shiftrightunsigned(__{p}, {k}) & {_SWAR_MASK}) AS {p}{k}"
-        )
-        for p in ("w", "x")
-        for k in range(16)
-    ]
-    return hh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("__n"), *sums)
+    The band keys are assembled straight from the SWAR lane sums
+    (``_swar_bits_sql(w·k, w)``) in the SAME projection that assembles
+    sh_lo/sh_hi — deriving them from sh_lo/sh_hi instead makes
+    CollapseProject inline 4+ copies of each 32-bit assembly expression
+    into the band array, and the resulting Catalyst planning time (~1.4s
+    per call, data-size-independent) dominated the whole operator at
+    sf0.1. Band k of the signature equals bits [w·k, w·k+w) in both
+    formulations, so blocked-pair results are unchanged.
+    """
+    return _simhash_near_dup(df, text_col, ("sh_lo", "sh_hi"), max_hamming)
 
 
 def simhash128_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -1490,27 +1411,7 @@ def simhash128_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
     stays sub-dominant until ~4e10 docs. Output: the 128-char bit
     string plus four packed 32-bit halves (sh_0 = bits 0-31 ...
     sh_3 = bits 96-127, LSB-first like the 64-bit family)."""
-    agg = _simhash128_agg(df, text_col)
-    packed = agg.select(
-        "doc_id",
-        _swar_half(0, "sh_0"),
-        _swar_half(32, "sh_1"),
-        _swar_half(64, "sh_2"),
-        _swar_half(96, "sh_3"),
-    )
-    bits = F.concat(
-        *[
-            F.reverse(
-                F.lpad(
-                    F.conv(F.col(f"sh_{i}").cast("string"), 10, 2), 32, "0"
-                )
-            )
-            for i in range(4)
-        ]
-    )
-    return packed.select(
-        "doc_id", bits.alias("simhash_bits"), "sh_0", "sh_1", "sh_2", "sh_3"
-    )
+    return _simhash_signatures(df, text_col, ("sh_0", "sh_1", "sh_2", "sh_3"))
 
 
 def simhash128_near_dup_pairs(
@@ -1519,66 +1420,26 @@ def simhash128_near_dup_pairs(
     max_hamming: int = 7,
     max_compares: float | None = None,
 ) -> DataFrame:
-    """128-bit SimHash near-dup pairs, Hamming ≤ ``max_hamming`` over
-    the whole corpus — the corpus-scale answer to the sixth-decade
-    band-collision finding (see ``simhash128_signatures``). EXACT over
-    its fingerprint: every plan shape has pigeonhole-guaranteed recall
-    and full 128-bit popcount verification.
-
-    Twin plans (the family convention; value-identical, test-asserted):
-    - SMALL inputs (< SIMHASH_MIH_BYTES): the ORACLE-SHAPED plan —
-      h ≤ 7 < 8 disjoint 16-bit bands means one band is IDENTICAL in
-      any qualifying pair, so exact-match banding with in-row a<b
-      combos suffices; no variant keys, no Python stage. (The 64-bit
-      family's mid-size Arrow bucket kernel is unnecessary here: the
-      8×16 geometry's occupancy is n/65536, not n/256, so the
-      interpreted combo term stays trivial at every size this arm
-      serves.)
-    - LARGE inputs: ``mih_pairs`` over the four 32-bit halves with
-      4×32-bit bands. The AVERAGE-occupancy collision term is
-      Θ(n²/2^32) per band — under the 1e12 budget until ~4e10 docs —
-      but average occupancy says nothing about CONCENTRATION: one
-      mass-duplicated 128-bit signature of c docs still plans c²/2
-      kernel compares from a single bucket at any band width, so the
-      MIH arm runs the bounded triangle probe and refuses above
-      ``max_compares`` (default ``MIH_MAX_COMPARES``).
+    """128-bit SimHash near-dup pairs, Hamming ≤ ``max_hamming`` (≤ 7,
+    else ValueError) over the whole corpus — the corpus-scale answer to
+    the sixth-decade band-collision finding (see
+    ``simhash128_signatures``). The plans are the 64-bit family's
+    (``_simhash_near_dup``) over four lanes: 8×16-bit exact bands
+    (4×32-bit at h ≤ 3), and 4×32-bit radius-1 bands at corpus scale,
+    whose average collision term Θ(n²/2^32) per band stays under the
+    1e12 budget until ~4e10 docs. Average occupancy says nothing about
+    CONCENTRATION (c identical signatures plan c²/2 compares in one
+    bucket), so that arm still probes and refuses above
+    ``max_compares`` (default ``MIH_MAX_COMPARES``).
     """
-    if max_hamming > 7:
-        raise ValueError(
-            "simhash128_near_dup_pairs requires max_hamming <= 7: h > 7 "
-            "needs 8×16-bit MIH bands — the 64-bit family's geometry and "
-            "collision term; use simhash_near_dup_pairs' banding math"
-        )
-    agg = _simhash128_agg(df, text_col)
-    if _estimated_bytes(df) >= SIMHASH_MIH_BYTES:
-        return mih_pairs(
-            _swar_lanes(agg, ("sh_0", "sh_1", "sh_2", "sh_3")),
-            4,
-            max_hamming,
-            n_docs=df.count(),
-            max_compares=max_compares,
-            name="simhash128",
-        )
-    bands = F.expr(
-        "array("
-        + ",".join(
-            f"struct({k} AS band, ({_swar_bits_sql(16 * k, 16)})"
-            " AS band_val)"
-            for k in range(8)
-        )
-        + ")"
+    return _simhash_near_dup(
+        df,
+        text_col,
+        ("sh_0", "sh_1", "sh_2", "sh_3"),
+        max_hamming,
+        max_compares=max_compares,
+        name="simhash128",
     )
-    ex = agg.select(
-        "doc_id",
-        _swar_half(0, "sh_0"),
-        _swar_half(32, "sh_1"),
-        _swar_half(64, "sh_2"),
-        _swar_half(96, "sh_3"),
-        F.explode(bands).alias("bk"),
-    ).select(
-        "doc_id", "sh_0", "sh_1", "sh_2", "sh_3", "bk.band", "bk.band_val"
-    )
-    return _band_combo_pairs(ex, ("sh_0", "sh_1", "sh_2", "sh_3"), max_hamming)
 
 
 def _island_spans(ps: str, k: int) -> Column:
@@ -1950,7 +1811,7 @@ def line_dedup(
     # multiply wraps SILENTLY under the session's non-ANSI mode);
     # outside that envelope it would mis-elect keep-first winners, so
     # enforce all three bounds at runtime (same assert_true-routing
-    # trick as simhash's _swar_half — the if() keeps the guard from
+    # trick as simhash's _swar_halves — the if() keeps the guard from
     # being pruned as unused).
     max_doc = (1 << 63) // LINE_STRIDE - 1
     key = F.expr(

@@ -1032,21 +1032,23 @@ MEDIA_MIH_MIN_ASSETS = 20_000
 
 
 def _media_banded_pairs(fp: DataFrame, max_hamming: int) -> DataFrame:
-    """Small-corpus pair arm: 8 disjoint 8-bit bands, exact-match
-    pigeonhole (h ≤ 7 < 8 bands ⇒ some band identical), in-row a<b pair
-    combos with full-64-bit bit_count verification — the media mirror
-    of the simhash family's small expression plan. Value-identical to
-    the MIH arm by the same argument (every qualifying pair collides in
-    ≥ 1 band; verification is exact; multi-band collisions dedup in the
-    final groupBy)."""
-    from .dedup import _band_combo_pairs
+    """Small-corpus pair arm: b = ``mih_bands(h, 0)`` disjoint w-bit
+    bands (8×8-bit at h ≤ 7), exact-match pigeonhole (h < b ⇒ some band
+    identical), in-row a<b pair combos with full-64-bit bit_count
+    verification — the media mirror of the simhash family's small
+    expression plan. Value-identical to the MIH arm by the same argument
+    (every qualifying pair collides in ≥ 1 band; verification is exact;
+    multi-band collisions dedup in the final groupBy)."""
+    from .dedup import _band_combo_pairs, mih_bands
 
+    b = mih_bands(max_hamming, 0)
+    w = 64 // b
     bands = F.expr(
         "array("
         + ",".join(
-            f"struct({k} AS band,"
-            f" (shiftrightunsigned(phash, {8 * k}) & 255) AS band_val)"
-            for k in range(8)
+            f"struct({k} AS band, (shiftrightunsigned(phash, {w * k})"
+            f" & {(1 << w) - 1}) AS band_val)"
+            for k in range(b)
         )
         + ")"
     )
@@ -1109,11 +1111,7 @@ def media_near_dup(
     # (~1.4 s) rides every run. Value-identical to the MIH arm
     # (test-asserted); pass n_assets=None to force the corpus-scale
     # plan.
-    if (
-        n_assets is not None
-        and n_assets <= MEDIA_MIH_MIN_ASSETS
-        and max_hamming <= 7
-    ):
+    if n_assets is not None and n_assets <= MEDIA_MIH_MIN_ASSETS:
         return _media_banded_pairs(fp, max_hamming)
     lanes = fp.select(
         "doc_id",

@@ -378,15 +378,15 @@ def test_ann_recall_deterministic_and_pinned(spark):
 
 
 def test_simhash_band_geometry_knob_exact_at_reduced_radius(spark):
-    """The n_bands scale knob (wider bands -> smaller buckets -> lower
-    guaranteed Hamming radius) must stay EXACT: 4x16-bit bands at
-    max_hamming=3 must return precisely the default 8x8-bit result
-    filtered to hamming <= 3 (both are pigeonhole-complete at h<=3)."""
+    """The radius-derived band geometry (lower radius -> wider bands ->
+    smaller buckets) must stay EXACT: max_hamming=3 (4x16-bit bands)
+    must return precisely the default 8x8-bit result filtered to
+    hamming <= 3 (both are pigeonhole-complete at h<=3)."""
     docs = load_table(spark, SF_ORACLE, "documents")
     wide = {
         (r["doc_a"], r["doc_b"]): r["hamming"]
         for r in dedup.simhash_near_dup_pairs(
-            docs, max_hamming=3, n_bands=4
+            docs, max_hamming=3
         ).collect()
     }
     default = {

@@ -418,23 +418,24 @@ def test_cosine_pairs_size_gate(spark):
 
 
 def test_simhash_kernel_path_matches_expression_path(spark):
-    """The size-gated Arrow popcount kernel must produce exactly the
-    expression-combo result (integer ops both sides), and the small
-    fixture corpus must stay on the no-Python plan."""
+    """For both SimHash widths the size-gated Arrow popcount kernel must
+    produce exactly the expression-combo result (integer ops both
+    sides), and the small fixture corpus must stay on the no-Python
+    plan."""
     from data_lakehouse_hygiene_spark.operators import dedup as D
 
     df = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    expr_pairs = sorted(
-        tuple(r) for r in D.simhash_near_dup_pairs(df).collect()
-    )
-    old = D.SIMHASH_KERNEL_BYTES
-    D.SIMHASH_KERNEL_BYTES = 0  # force the kernel path
-    try:
-        kern_pairs = sorted(
-            tuple(r) for r in D.simhash_near_dup_pairs(df).collect()
-        )
-    finally:
-        D.SIMHASH_KERNEL_BYTES = old
-    assert expr_pairs == kern_pairs and len(expr_pairs) > 0
-    plan = D.simhash_near_dup_pairs(df)._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" not in plan  # fixture stays no-Python
+    for pairs in (D.simhash_near_dup_pairs, D.simhash128_near_dup_pairs):
+        expr_pairs = sorted(tuple(r) for r in pairs(df).collect())
+        plan = pairs(df)._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapGroupsInPandas" not in plan  # fixture: no Python
+        old = D.SIMHASH_KERNEL_BYTES
+        D.SIMHASH_KERNEL_BYTES = 0  # force the kernel path
+        try:
+            kern = pairs(df)
+            kern_plan = kern._jdf.queryExecution().executedPlan().toString()
+            kern_pairs = sorted(tuple(r) for r in kern.collect())
+        finally:
+            D.SIMHASH_KERNEL_BYTES = old
+        assert expr_pairs == kern_pairs and len(expr_pairs) > 0
+        assert "FlatMapGroupsInPandas" in kern_plan

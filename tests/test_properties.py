@@ -326,26 +326,27 @@ _doc_text = st.lists(_word, min_size=1, max_size=12).map(" ".join)
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_simhash_kernel_equals_expression_on_random_docs(spark, texts):
-    """The size-gated Arrow popcount kernel and the expression-combo path
-    must emit identical pair sets on arbitrary small corpora (integer ops
-    both sides)."""
+    """For both SimHash widths the size-gated Arrow popcount kernel and
+    the expression-combo path must emit identical pair sets on arbitrary
+    small corpora (integer ops both sides), and the gate must really
+    switch the plan."""
     from data_lakehouse_hygiene_spark.operators import dedup as D
 
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
     )
-    expr_pairs = sorted(
-        tuple(r) for r in D.simhash_near_dup_pairs(df).collect()
-    )
-    old = D.SIMHASH_KERNEL_BYTES
-    D.SIMHASH_KERNEL_BYTES = 0
-    try:
-        kern_pairs = sorted(
-            tuple(r) for r in D.simhash_near_dup_pairs(df).collect()
-        )
-    finally:
-        D.SIMHASH_KERNEL_BYTES = old
-    assert expr_pairs == kern_pairs
+    for pairs in (D.simhash_near_dup_pairs, D.simhash128_near_dup_pairs):
+        expr_pairs = sorted(tuple(r) for r in pairs(df).collect())
+        old = D.SIMHASH_KERNEL_BYTES
+        D.SIMHASH_KERNEL_BYTES = 0
+        try:
+            kern = pairs(df)
+            plan = kern._jdf.queryExecution().executedPlan().toString()
+            kern_pairs = sorted(tuple(r) for r in kern.collect())
+        finally:
+            D.SIMHASH_KERNEL_BYTES = old
+        assert expr_pairs == kern_pairs
+        assert "FlatMapGroupsInPandas" in plan
 
 
 @given(

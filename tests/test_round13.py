@@ -587,7 +587,7 @@ def test_simhash128_twin_plans_equal_brute_force(spark):
         tuple(r)
         for r in dedup.mih_pairs(
             dedup._swar_lanes(
-                dedup._simhash128_agg(docs, "text"),
+                dedup._simhash_agg(docs, "text", 2),
                 ("sh_0", "sh_1", "sh_2", "sh_3"),
             ),
             4,

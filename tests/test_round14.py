@@ -102,7 +102,7 @@ def test_simhash128_mih_refuses_mass_duplicate_concentration(
         "doc_id long, text string",
     )
     lanes = dedup._swar_lanes(
-        dedup._simhash128_agg(docs, "text"), ("sh_0", "sh_1", "sh_2", "sh_3")
+        dedup._simhash_agg(docs, "text", 2), ("sh_0", "sh_1", "sh_2", "sh_3")
     )
     monkeypatch.setattr(dedup, "MIH_PROBE_MIN_DOCS", 10)
     # 100 identical sigs -> 4 bands x 4950 = 19800 planned compares
@@ -142,9 +142,7 @@ def test_public_contracts_raise_valueerror_not_assert(spark):
         [(1, "a b c", "s")], "doc_id long, text string, source string"
     )
     with pytest.raises(ValueError):
-        dedup.simhash_near_dup_pairs(docs, n_bands=7)
-    with pytest.raises(ValueError):
-        dedup.simhash_near_dup_pairs(docs, n_bands=8, max_hamming=8)
+        dedup.simhash_near_dup_pairs(docs, max_hamming=8)
     with pytest.raises(ValueError):
         sampling.mixture_resample(docs, "source", alpha=0.7)
     with pytest.raises(ValueError):

@@ -38,7 +38,7 @@ def test_simhash_mih_r0_geometry(spark):
     df = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
     base = sorted(
         tuple(r)
-        for r in D.simhash_near_dup_pairs(df, n_bands=4, max_hamming=3).collect()
+        for r in D.simhash_near_dup_pairs(df, max_hamming=3).collect()
     )
     old = D.SIMHASH_MIH_BYTES
     D.SIMHASH_MIH_BYTES = 0
@@ -46,7 +46,7 @@ def test_simhash_mih_r0_geometry(spark):
         mih = sorted(
             tuple(r)
             for r in D.simhash_near_dup_pairs(
-                df, n_bands=4, max_hamming=3
+                df, max_hamming=3
             ).collect()
         )
     finally:

@@ -247,17 +247,39 @@ def test_ivfpq_ann_probe_is_broadcast_join(spark):
 
 
 def test_simhash_mih_auto_width_preserves_pair_set(spark):
-    """mih_bands picks the widest single-flip-feasible geometry from the
-    radius (2x32-bit at h<=3, 4x16-bit at h<=7); both must emit exactly
-    the banded plan's pair set on the fixture corpus."""
+    """mih_bands picks the widest feasible geometry from the radius
+    (per-band radius 1: 2x32-bit at h<=3, 4x16-bit at h<=7; radius 0:
+    2, 4 or 8 bands; never fewer bands than 32-bit lanes); both MIH
+    geometries must emit exactly the banded plan's pair set on the
+    fixture corpus, and h = 8 is refused by all three families."""
     from data_lakehouse_hygiene_spark.operators import dedup as D
+    from data_lakehouse_hygiene_spark.operators.multimodal import (
+        media_near_dup,
+    )
 
     assert D.mih_bands(3) == 2
     assert D.mih_bands(7) == 4
-    with pytest.raises(ValueError):
-        D.mih_bands(8)
+    assert [D.mih_bands(h, 1) for h in range(8)] == [2] * 4 + [4] * 4
+    assert [D.mih_bands(h, 0) for h in range(8)] == [2] * 2 + [4] * 2 + [8] * 4
+    assert [D.mih_bands(h, 1, 4) for h in range(8)] == [4] * 8
+    assert [D.mih_bands(h, 0, 4) for h in range(8)] == [4] * 4 + [8] * 4
+    for radius in (0, 1):
+        for lanes in (2, 4):
+            with pytest.raises(ValueError):
+                D.mih_bands(8, radius, lanes)
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    with pytest.raises(ValueError):
+        D.simhash_near_dup_pairs(docs, max_hamming=8)
+    with pytest.raises(ValueError):
+        D.simhash128_near_dup_pairs(docs, max_hamming=8)
+    fp = spark.createDataFrame(
+        [(1, "image/bmp", 5)], "doc_id long, media_type string, phash long"
+    )
+    for n_assets in (1, None):  # the banded and the MIH arm
+        with pytest.raises(ValueError):
+            media_near_dup(fp, max_hamming=8, n_assets=n_assets)
+
     for h in (3, 7):
         banded = sorted(
             tuple(r)

@@ -3,9 +3,8 @@ elections (VERDICT round-13 item 1/2): the OLD unbounded-frame-window
 plans vs the NEW partial-agg+join plans, on a PLANTED MASS-DUPLICATE
 corpus — the adversarial input the windows serialized into one task.
 
-Arms (both measured in ONE process, interleaved old,new,old,new,…,
-judged by median — the repo's measurement discipline; a single
-before/after pair is ambient noise on this box):
+Arms (both measured in ONE process by ``ab.interleave``, judged by
+median — a single before/after pair is ambient noise on a shared host):
 
 - line election: the pre-round-14 ``line_dedup`` body (MIN window
   PARTITIONED BY the raw line string) vs the shipped
@@ -19,8 +18,8 @@ Corpus (deterministic, synthesized — this is an adversarial-skew tool,
 not an oracle row, so the planted shape IS the point): ``n_docs``
 documents; every document carries the SAME hot boilerplate line /
 8-token header (hot-key multiplicity = n_docs) plus unique filler.
-Value equality of the two arms is asserted on (doc count, total
-removed, sha256 over sorted rows) before any timing is trusted.
+Value equality of the two arms is checked on (doc count, total removed)
+in every timed run and on the sha256 over sorted rows once after timing.
 
 Also reports the PLANNED-WORK terms the SCALING.md entry tracks:
 duplicated-position count (rows entering the election exchange) and
@@ -36,16 +35,16 @@ case, n_docs/5 * hot_per_doc for the token case.)
 
 from __future__ import annotations
 
-import hashlib
+import os
 import sys
-import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from ab import interleave, rows_sha256  # noqa: E402
 from data_lakehouse_hygiene_spark.operators import dedup  # noqa: E402
 from data_lakehouse_hygiene_spark.operators.cleaning import spread  # noqa: E402
 from data_lakehouse_hygiene_spark.operators.text import tokens  # noqa: E402
@@ -173,17 +172,11 @@ def old_substring_keep_first(
     )
 
 
-def _materialize(df: DataFrame) -> tuple[int, int]:
-    r = df.agg(
+def _materialize(df: DataFrame) -> DataFrame:
+    return df.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(df.columns[-1]).alias("removed"),
-    ).collect()[0]
-    return int(r["n"]), int(r["removed"])
-
-
-def _hash(df: DataFrame) -> str:
-    rows = sorted("|".join(str(v) for v in r) for r in df.collect())
-    return hashlib.sha256("\n".join(rows).encode()).hexdigest()
+    )
 
 
 def main() -> None:
@@ -241,30 +234,27 @@ def main() -> None:
     only = sys.argv[4] if len(sys.argv) > 4 else None
     if only:
         cases = {only: cases[only]}
-    import os
-
     skip_eq = os.environ.get("AB_SKIP_EQ") == "1"
     for name, (docs, old_fn, new_fn) in cases.items():
-        if not skip_eq:
-            assert _materialize(old_fn(docs)) == _materialize(new_fn(docs))
-        walls: dict[str, list[float]] = {"old": [], "new": []}
-        for _ in range(reps):
-            for arm, fn in (("old", old_fn), ("new", new_fn)):
-                t0 = time.monotonic()
-                _materialize(fn(docs))
-                walls[arm].append(time.monotonic() - t0)
-        med = {a: sorted(w)[len(w) // 2] for a, w in walls.items()}
+        res = interleave(
+            {
+                "old": lambda: _materialize(old_fn(docs)),
+                "new": lambda: _materialize(new_fn(docs)),
+            },
+            reps,
+        )
+        assert skip_eq or res["hashes_equal"], name
         print(
-            f"{name}: old(window) median {med['old']:.2f}s "
-            f"{['%.2f' % w for w in walls['old']]} | "
-            f"new(agg+join) median {med['new']:.2f}s "
-            f"{['%.2f' % w for w in walls['new']]} | "
-            f"ratio old/new {med['old'] / med['new']:.2f}x"
+            f"{name}: old(window) median {res['old']['median']:.2f}s "
+            f"{res['old']['sec']} | new(agg+join) median "
+            f"{res['new']['median']:.2f}s {res['new']['sec']} | "
+            f"ratio old/new {res['old']['median'] / res['new']['median']:.2f}x"
         )
     # full value-hash equality once per case (collect-heavy, after timing)
     if not skip_eq:
         for name, (docs, old_fn, new_fn) in cases.items():
-            assert _hash(old_fn(docs)) == _hash(new_fn(docs)), name
+            old, new = old_fn(docs).collect(), new_fn(docs).collect()
+            assert rows_sha256(old) == rows_sha256(new), name
             print(f"{name}: value-hash equality OK")
 
 

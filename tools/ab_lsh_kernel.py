@@ -3,8 +3,8 @@ synthesized 200k-vector corpus (round-13 VERDICT items 3 + 7): the
 round-12 sf100 readings (join 918.2 s vs kernel 705.4 s) were
 cross-session SINGLES on a box documented to swing 2.5x — judge the
 kernel-vs-join delta by interleaved medians in ONE process instead
-(memory/box-measurement-discipline), and give the kernel arm a RECALL
-spec at auto planes, not just a throughput one.
+(``ab.interleave``), and give the kernel arm a RECALL spec at auto
+planes, not just a throughput one.
 
 Corpus: 200k random 64-d vectors + 10k planted near-dups (base + small
 noise, ids offset by 1e9). Ground truth = planted pairs whose float64
@@ -12,28 +12,26 @@ cosine clears the threshold with margin (random 64-d pairs essentially
 never reach 0.85, so planted pairs are the true pair set).
 
 Arms share the SAME parquet-backed corpus; the gate constant
-LSH_KERNEL_BYTES is monkeypatched between calls (both arms live in the
-same module behind the runtime gate, so no module copies are needed —
-the round-11b reload trap does not apply):
-  A (join):   LSH_KERNEL_BYTES = 1<<60  -> expression-join plan
-  B (kernel): LSH_KERNEL_BYTES = 0      -> bucket-grouped Arrow kernel
+LSH_KERNEL_BYTES is set per call:
+  join:   LSH_KERNEL_BYTES = 1<<60  -> expression-join plan
+  kernel: LSH_KERNEL_BYTES = 0      -> bucket-grouped Arrow kernel
 
-Prints one JSON line: per-pass times, medians, pair-set equality, and
-recall@threshold for n_planes in {8, 15, auto}.
+Prints one JSON line: per-pass times, medians, IQRs, pair-set value
+hashes (equal iff the arms return the same pairs), and recall@threshold
+for n_planes in {8, 15, auto}.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np  # noqa: E402
 
+from ab import interleave  # noqa: E402
 from data_lakehouse_hygiene_spark.operators import similarity  # noqa: E402
 from data_lakehouse_hygiene_spark.session import get_spark  # noqa: E402
 
@@ -42,14 +40,12 @@ N_PLANT = int(os.environ.get("AB_LSH_PLANT", "10000"))
 DIM = 64
 THRESHOLD = float(os.environ.get("AB_LSH_T", "0.85"))
 NOISE = 0.18  # ~0.985 expected cosine to the base vector
-PASSES = int(os.environ.get("AB_PASSES", "3"))
+PASSES = int(os.environ.get("AB_PASSES", "6"))
 OUT = os.environ.get("AB_LSH_OUT", "/tmp/ab_lsh_corpus.parquet")
 
 
 def main() -> None:
-    spark = get_spark(
-        app_name="ab-lsh-kernel", master="local[32]", shuffle_partitions=32
-    )
+    spark = get_spark(app_name="ab-lsh-kernel")
     rng = np.random.default_rng(1303)
     base = rng.normal(size=(N_BASE, DIM))
     noise = rng.normal(scale=NOISE, size=(N_PLANT, DIM))
@@ -92,46 +88,31 @@ def main() -> None:
 
     auto_planes = similarity.resolve_planes(df, "auto")
 
-    def run(arm: str, planes: int, count_only: bool = True):
+    def pairs(arm: str, planes: int):
         similarity.LSH_KERNEL_BYTES = (1 << 60) if arm == "join" else 0
-        t0 = time.time()
-        out = similarity.lsh_near_dup_pairs(
+        return similarity.lsh_near_dup_pairs(
             df, threshold=THRESHOLD, n_planes=planes
-        )
-        if count_only:
-            n = out.count()
-            return time.time() - t0, n, None
-        rows = out.select("vec_a", "vec_b").collect()
-        pairs = {(r.vec_a, r.vec_b) for r in rows}
-        return time.time() - t0, len(rows), pairs
+        ).select("vec_a", "vec_b")
 
-    # ---- interleaved A/B at auto planes (the sf100 protocol scale-down)
-    run("join", auto_planes)  # warmup both arms
-    run("kernel", auto_planes)
-    a, b, na, nb = [], [], set(), set()
-    for _ in range(PASSES):
-        ta, ca, _ = run("join", auto_planes)
-        tb, cb, _ = run("kernel", auto_planes)
-        a.append(ta)
-        b.append(tb)
-        na.add(ca)
-        nb.add(cb)
+    # ---- interleaved A/B at auto planes (the sf100 protocol scale-down);
+    # the value hashes also check pair-set equality at this scale
+    ab = interleave(
+        {
+            "join": lambda: pairs("join", auto_planes),
+            "kernel": lambda: pairs("kernel", auto_planes),
+        },
+        PASSES,
+    )
 
-    # ---- pair-set equality at this scale (not just counts)
-    _, _, pj = run("join", auto_planes, count_only=False)
-    _, _, pk = run("kernel", auto_planes, count_only=False)
-    sets_equal = pj == pk
-
-    # ---- recall table (kernel arm; join arm is pair-set-identical)
+    # ---- recall table (kernel arm; join arm is pair-set-identical;
+    # untimed: single walls are noise, the A/B above times the arms)
     recall = {}
     for label, planes in (("8", 8), ("15", 15), ("auto", auto_planes)):
-        t, n, pairs = run("kernel", planes, count_only=False)
-        found = len(truth & pairs)
+        found = {(r.vec_a, r.vec_b) for r in pairs("kernel", planes).collect()}
         recall[label] = {
             "planes": planes,
-            "pairs": n,
-            "recall": round(found / max(len(truth), 1), 4),
-            "sec": round(t, 1),
+            "pairs": len(found),
+            "recall": round(len(truth & found) / max(len(truth), 1), 4),
         }
 
     print(
@@ -142,13 +123,7 @@ def main() -> None:
                 "threshold": THRESHOLD,
                 "truth_pairs": len(truth),
                 "auto_planes": auto_planes,
-                "join_sec": [round(x, 2) for x in a],
-                "kernel_sec": [round(x, 2) for x in b],
-                "join_median": round(statistics.median(a), 2),
-                "kernel_median": round(statistics.median(b), 2),
-                "pair_counts_join": sorted(na),
-                "pair_counts_kernel": sorted(nb),
-                "pair_sets_equal": sets_equal,
+                **ab,
                 "recall": recall,
             }
         )

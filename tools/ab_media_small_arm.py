@@ -3,39 +3,36 @@ sf0.1 (round-11 VERDICT item 5): the registry row passes
 n_assets ≈ 6000 ≤ MEDIA_MIH_MIN_ASSETS (20k), so it must take the
 no-Python banded-expression arm; the docstring predicts ~3.0 → ~1.5 s
 but the driver benches read 2.0-2.1 s, within ambient swing. Judge by
-interleaved medians in ONE process (box swings 2.5× across minutes —
-memory/box-measurement-discipline).
+interleaved medians in ONE process (``ab.interleave``).
 
 Arms share the SAME fingerprint DataFrame (localCheckpointed so the
 phash pipeline cost is paid once and excluded — the A/B isolates the
 pair stage the gate switches):
-  A: n_assets=6000  -> small-corpus banded arm (no Python)
-  B: n_assets=None  -> MIH Arrow-kernel arm
-Prints per-pass times and medians as one JSON line.
+  small: n_assets=6000  -> small-corpus banded arm (no Python)
+  mih:   n_assets=None  -> MIH Arrow-kernel arm
+Prints the interleave result (times, medians, IQRs, value hashes) as one
+JSON line.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry  # noqa: E402
+from ab import interleave  # noqa: E402
 from data_lakehouse_hygiene_spark.operators import multimodal  # noqa: E402
 from data_lakehouse_hygiene_spark.session import get_spark  # noqa: E402
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-PASSES = int(os.environ.get("AB_PASSES", "5"))
+PASSES = int(os.environ.get("AB_PASSES", "6"))
 
 
 def main() -> None:
-    spark = get_spark(
-        app_name="ab-media-arm", master="local[32]", shuffle_partitions=32
-    )
+    spark = get_spark(app_name="ab-media-arm")
     from pyspark.sql import functions as F
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -48,37 +45,26 @@ def main() -> None:
     n_assets = fp.count()
     assert n_assets <= multimodal.MEDIA_MIH_MIN_ASSETS, n_assets
 
-    # the registry row must actually take the gated arm: its plan at
-    # sf0.1 contains no Python stage
-    reg_plan = (
-        entry.q_media_near_dup(spark, SF)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    # the registry row must actually take the gated arm: its pair stage
+    # at sf0.1 has no applyInPandas kernel (the fingerprint mapInPandas
+    # stays)
+    reg = entry.q_media_near_dup(spark, SF)
+    reg_plan = reg._jdf.queryExecution().executedPlan().toString()
+    gated = "FlatMapGroupsInPandas" not in reg_plan
+    res = interleave(
+        {
+            "small": lambda: multimodal.media_near_dup(fp, 7, n_assets),
+            "mih": lambda: multimodal.media_near_dup(fp, 7, None),
+        },
+        PASSES,
     )
-    gated = "mapInPandas" not in reg_plan and "ArrowEvalPython" not in reg_plan
-
-    def run(n):
-        t0 = time.time()
-        multimodal.media_near_dup(fp, max_hamming=7, n_assets=n).count()
-        return time.time() - t0
-
-    run(n_assets)  # warmup both codegen paths
-    run(None)
-    a, b = [], []
-    for _ in range(PASSES):
-        a.append(run(n_assets))
-        b.append(run(None))
     print(
         json.dumps(
             {
                 "sf_dir": SF,
                 "n_assets": n_assets,
                 "registry_row_takes_small_arm": gated,
-                "small_arm_sec": [round(x, 3) for x in a],
-                "mih_arm_sec": [round(x, 3) for x in b],
-                "small_median": round(statistics.median(a), 3),
-                "mih_median": round(statistics.median(b), 3),
+                **res,
             }
         )
     )

@@ -11,8 +11,8 @@ n_iter=2 — real geometric cells (hash cells would make recall@n_probe
 trivially n_probe/256).
 
 Protocol: ONE process; ground truth and the k-means fit once; then the
-n_probe arms interleaved 1,4,16,1,4,16 (two reps), wall = full
-ivfpq_ann materialization via count; recall from collected row sets.
+n_probe arms interleaved by ``ab.interleave`` (two rounds), wall = full
+ivfpq_ann materialization via collect; recall from one more collect.
 
 Usage: python tools/ivfpq_decade.py [emb_dir] [n_queries]
 """
@@ -27,6 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from ab import interleave  # noqa: E402
 from data_lakehouse_hygiene_spark.operators import similarity  # noqa: E402
 from data_lakehouse_hygiene_spark.session import get_spark  # noqa: E402
 
@@ -65,29 +66,20 @@ def main() -> None:
     print(f"brute-force cosine top-5 ground truth ({n_q} queries): "
           f"{time.monotonic() - t0:.1f}s, {len(truth)} pairs", flush=True)
 
-    walls: dict[int, list[float]] = {1: [], 4: [], 16: []}
-    recalls: dict[int, float] = {}
-    for rep in range(2):
-        for np_ in (1, 4, 16):
-            t0 = time.monotonic()
-            got = similarity.ivfpq_ann(
-                labeled, query_pred=qpred, k=5, n_probe=np_
-            )
-            rows = got.collect()
-            walls[np_].append(time.monotonic() - t0)
-            hits = {(r["query_id"], r["vec_id"]) for r in rows}
-            recalls[np_] = len(hits & truth) / max(len(truth), 1)
-            print(
-                f"rep{rep} n_probe={np_}: wall={walls[np_][-1]:.1f}s "
-                f"rows={len(rows)} recall@5={recalls[np_]:.3f}",
-                flush=True,
-            )
-    print("--- summary (min wall of 2 reps; fit excluded, ADC fit runs "
-          "inside each arm) ---")
-    for np_ in (1, 4, 16):
+    def ann(n_probe: int):
+        return similarity.ivfpq_ann(
+            labeled, query_pred=qpred, k=5, n_probe=n_probe
+        )
+
+    probes = (1, 4, 16)
+    res = interleave({p: lambda p=p: ann(p) for p in probes}, 2)
+    print("--- median wall of 2 rounds; fit excluded, ADC fit runs inside "
+          "each arm ---")
+    for p in probes:
+        hits = {(r["query_id"], r["vec_id"]) for r in ann(p).collect()}
         print(
-            f"n_probe={np_}: wall={min(walls[np_]):.1f}s "
-            f"recall@5={recalls[np_]:.3f}"
+            f"n_probe={p}: wall={res[p]['median']:.1f}s rows={len(hits)} "
+            f"recall@5={len(hits & truth) / max(len(truth), 1):.3f}"
         )
 
 

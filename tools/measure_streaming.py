@@ -11,14 +11,14 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql.streaming import StreamingQueryListener  # noqa: E402
+
 import __spark_entry__ as entrymod  # noqa: E402
-from data_lakehouse_hygiene_spark import streaming  # noqa: E402
+from ab import interleave, noop  # noqa: E402
 from data_lakehouse_hygiene_spark.session import get_spark  # noqa: E402
 
 ROWS = [
@@ -34,29 +34,29 @@ ROWS = [
     "streaming_heavy_hitters",
 ]
 
-_PROGRESS: list[dict] = []
-_orig_run = streaming.run_to_memory
 
+class FinalProgress(StreamingQueryListener):
+    """The last progress record of every streaming query started since
+    the previous ``drain``, read from Spark's listener bus — the rows run
+    through the real ``streaming.run_to_memory``."""
 
-def _instrumented(stream_df, output_mode="complete"):
-    """run_to_memory twin that records the final progress of the query."""
-    import uuid
+    def __init__(self, spark):
+        self.spark = spark
+        self.last: dict[str, dict] = {}
 
-    spark = stream_df.sparkSession
-    sink = f"stream_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if q.lastProgress:
-        _PROGRESS.append(q.lastProgress)
-    out = spark.table(sink).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(sink)
-    return out
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    def onQueryProgress(self, event) -> None:
+        self.last[str(event.progress.runId)] = json.loads(event.progress.json)
+
+    def onQueryTerminated(self, event) -> None:
+        pass
+
+    def drain(self) -> list[dict]:
+        self.spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        out, self.last = list(self.last.values()), {}
+        return out
 
 
 def main() -> None:
@@ -64,34 +64,30 @@ def main() -> None:
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 5
     spark = get_spark(app_name="measure_streaming")
     spark.sparkContext.setLogLevel("ERROR")
-    streaming.run_to_memory = _instrumented
+    listener = FinalProgress(spark)
+    spark.streams.addListener(listener)
     qs = entrymod.queries()
     results = {}
     for name in ROWS:
         if name not in qs:
             continue
         # warmup (also captures state metrics)
-        _PROGRESS.clear()
-        df = qs[name](spark, sf_dir)
-        n_out = df.count()
+        listener.drain()
+        n_out = qs[name](spark, sf_dir).count()
         state_rows = 0
         state_mem = 0
         batches = 0
-        for p in _PROGRESS:
+        for p in listener.drain():
             batches += 1
             for so in p.get("stateOperators", []):
                 state_rows += so.get("numRowsTotal", 0)
                 state_mem += so.get("memoryUsedBytes", 0)
-        ts = []
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            ts.append(time.perf_counter() - t0)
+        timed = interleave(
+            {name: lambda: noop(qs[name](spark, sf_dir))}, reps
+        )[name]
         results[name] = {
-            "median_sec": round(statistics.median(ts), 3),
-            "runs": [round(t, 2) for t in ts],
+            "median_sec": timed["median"],
+            "runs": timed["sec"],
             "out_rows": n_out,
             "state_rows_total": state_rows,
             "state_memory_bytes": state_mem,

@@ -2,7 +2,7 @@
 (round-15 / round-14 verdict stretch item 8): fused structured_phash vs
 the chained synthesize→phash operators at 6k/60k/600k assets, plus the
 full media_near_dup pipeline wall per decade, interleaved in one process
-and judged by medians (the repo's measurement discipline).
+(``ab.interleave``) and judged by medians.
 
 Usage: python tools/media_decades.py [reps]
 """
@@ -10,14 +10,13 @@ Usage: python tools/media_decades.py [reps]
 from __future__ import annotations
 
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from ab import interleave, noop  # noqa: E402
 from data_lakehouse_hygiene_spark.operators import multimodal as M  # noqa: E402
 from data_lakehouse_hygiene_spark.session import get_spark  # noqa: E402
 
@@ -51,17 +50,10 @@ def main() -> None:
     sizes = [6_000, 60_000, 600_000]
     arms = {"fused_fp": fused, "chained_fp": chained, "pipeline": pipeline}
     for n in sizes:
-        for a, fn in arms.items():
-            fn(n).write.format("noop").mode("overwrite").save()  # warmup
-        times: dict[str, list[float]] = {}
-        for _ in range(reps):
-            for a, fn in arms.items():
-                t0 = time.perf_counter()
-                fn(n).write.format("noop").mode("overwrite").save()
-                times.setdefault(a, []).append(time.perf_counter() - t0)
-        line = " ".join(
-            f"{a}={statistics.median(ts):.2f}s" for a, ts in times.items()
+        res = interleave(
+            {a: lambda fn=fn: noop(fn(n)) for a, fn in arms.items()}, reps
         )
+        line = " ".join(f"{a}={res[a]['median']:.2f}s" for a in arms)
         print(f"n={n}: {line}")
 
 
