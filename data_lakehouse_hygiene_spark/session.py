@@ -22,6 +22,35 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Arrow transfer granularity for mapInPandas. The default 10k rows/batch
+# is fine for scalar columns but fatal for binary payload columns: the
+# JVM re-batches between CHAINED Python ops at this size, so 10k-row
+# batches of 12 KB media payloads put ~120 MB per task in flight
+# JVM-side (x32 tasks OOM'd a 24 GiB heap at the 500k-doc rehearsal) no
+# matter how small the kernels' own yields are. 1k rows keeps payload
+# batches ~12 MB; the extra per-batch round-trips are noise for scalar
+# workloads (grouped applyInPandas is NOT affected — groups ship whole
+# regardless of this conf).
+ARROW_BATCH_ROWS = 1024
+
+# Whole-stage-codegen class cache (STATIC conf — must be set at session
+# build; a driver-owned session keeps its own default). The default 100
+# entries thrashes on any many-query workload: the 55-query bench
+# generates ~820 codegen units, so EVERY warm pass re-ran ~820 Janino
+# compiles (~9 ms each, measured via
+# CodegenMetrics.METRIC_COMPILATION_TIME). At 8192 entries warm passes
+# compile 2-4 units; an A/B/A across processes measured 34 s
+# steady-state passes vs 54-97 s. Cache memory is generated bytecode
+# (KBs/class) — tens of MB at this size, the right trade for any
+# long-lived multi-query application.
+CODEGEN_CACHE_ENTRIES = 8192
+
+# Collector of the driver JVM, which in local mode is the only executor
+# (TUNING.md, "Local JVM collector"). defaultJavaOptions, not
+# extraJavaOptions: ``--driver-java-options`` sets the latter and would
+# replace the flag instead of adding to it.
+DRIVER_DEFAULT_JAVA_OPTIONS = "-XX:+UseParallelGC"
+
 
 def get_spark(
     app_name: str = "data-lakehouse-hygiene-spark",
@@ -41,35 +70,16 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Arrow transfer granularity for mapInPandas. The default 10k
-        # rows/batch is fine for scalar columns but fatal for binary
-        # payload columns: the JVM re-batches between CHAINED Python
-        # ops at this size, so 10k-row batches of 12 KB media payloads
-        # put ~120 MB per task in flight JVM-side (x32 tasks OOM'd a
-        # 24 GiB heap at the 500k-doc rehearsal) no matter how small
-        # the kernels' own yields are. 1k rows keeps payload batches
-        # ~12 MB; the extra per-batch round-trips are noise for scalar
-        # workloads (grouped applyInPandas is NOT affected — groups
-        # ship whole regardless of this conf).
         .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_ARROW_BATCH", "1024"),
+            "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS)
         )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        # Whole-stage-codegen class cache (STATIC conf — must be set at
-        # session build; a driver-owned session keeps its own default).
-        # The default 100 entries thrashes on any many-query workload:
-        # the 55-query bench generates ~820 codegen units, so EVERY
-        # warm pass re-ran ~820 Janino compiles (~9 ms each, measured
-        # via CodegenMetrics.METRIC_COMPILATION_TIME). At 8192 entries
-        # warm passes compile 2-4 units; an A/B/A across processes
-        # measured 34 s steady-state passes vs 54-97 s. Cache memory is
-        # generated bytecode (KBs/class) — tens of MB at this size, the
-        # right trade for any long-lived multi-query application.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_CODEGEN_CACHE", "8192"),
-        )
+        # Parallel GC, not G1: Tungsten pages (1-64 MiB) are at least half
+        # a G1 region at local heap sizes, so each is a humongous object
+        # and can start a concurrent-mark cycle; and C2 takes ~20% longer
+        # per method when it must compile G1's barriers.
+        .config("spark.driver.defaultJavaOptions", DRIVER_DEFAULT_JAVA_OPTIONS)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         # Keep catalog artifacts (bucketed saveAsTable) out of the repo dir.
         .config(
@@ -97,10 +107,9 @@ def pin_session(spark: SparkSession) -> SparkSession:
         "spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_CPUS", "32")
     )
     # Payload-column Arrow batches must stay small on ANY session that
-    # runs the multimodal queries — see the factory comment.
+    # runs the multimodal queries — see ARROW_BATCH_ROWS.
     spark.conf.set(
-        "spark.sql.execution.arrow.maxRecordsPerBatch",
-        os.environ.get("SPARK_ARROW_BATCH", "1024"),
+        "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS)
     )
     # Deliberate session-wide pin (not restored): schemas.load_table reads
     # TIMESTAMP(NANOS) parquet columns as raw longs under this flag, and the
