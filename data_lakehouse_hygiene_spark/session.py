@@ -45,11 +45,18 @@ ARROW_BATCH_ROWS = 1024
 # long-lived multi-query application.
 CODEGEN_CACHE_ENTRIES = 8192
 
-# Collector of the driver JVM, which in local mode is the only executor
-# (TUNING.md, "Local JVM collector"). defaultJavaOptions, not
-# extraJavaOptions: ``--driver-java-options`` sets the latter and would
-# replace the flag instead of adding to it.
-DRIVER_DEFAULT_JAVA_OPTIONS = "-XX:+UseParallelGC"
+# Collector and C2 thresholds of the driver JVM, which in local mode is
+# the only executor (TUNING.md, "Local JVM options"). defaultJavaOptions,
+# not extraJavaOptions: ``--driver-java-options`` sets the latter and
+# would replace these flags instead of adding to them.
+DRIVER_DEFAULT_JAVA_OPTIONS = " ".join([
+    "-XX:+UseParallelGC",
+    # C2 invocation thresholds 3x the JDK's: a short-lived process never
+    # earns back C2 compiles of lukewarm planner methods.
+    "-XX:Tier4InvocationThreshold=15000",
+    "-XX:Tier4MinInvocationThreshold=1800",
+    "-XX:Tier4CompileThreshold=45000",
+])
 
 
 def get_spark(

@@ -16,10 +16,16 @@ import json
 from data_lakehouse_hygiene_spark.session import get_spark
 
 spark = get_spark(app_name="test_session", master="local[1]")
-mf = spark._jvm.java.lang.management.ManagementFactory
+jvm = spark._jvm
+mf = jvm.java.lang.management.ManagementFactory
+hotspot = mf.getPlatformMXBean(
+    jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
 print(json.dumps({
     "collectors": [b.getName() for b in mf.getGarbageCollectorMXBeans()],
     "args": list(mf.getRuntimeMXBean().getInputArguments()),
+    "tier4": {n: hotspot.getVMOption(n).getValue() for n in (
+        "Tier4InvocationThreshold", "Tier4MinInvocationThreshold",
+        "Tier4CompileThreshold", "Tier4BackEdgeThreshold")},
 }))
 spark.stop()
 """
@@ -41,3 +47,11 @@ def test_driver_jvm_runs_parallel_gc_beside_driver_java_options():
     assert sorted(probe["collectors"]) == ["PS MarkSweep", "PS Scavenge"]
     assert "-Dprobe=1" in probe["args"]
     assert "-XX:+UseParallelGC" in probe["args"]
+    # effective values: C2 invocation thresholds 3x the JDK's, back-edge
+    # threshold at its default
+    assert probe["tier4"] == {
+        "Tier4InvocationThreshold": "15000",
+        "Tier4MinInvocationThreshold": "1800",
+        "Tier4CompileThreshold": "45000",
+        "Tier4BackEdgeThreshold": "40000",
+    }
