@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .cleaning import _estimated_bytes
+
 
 def exact_sum(col: str | Column, scale: int = 2, precision: int = 18) -> Column:
     """Order-independent SUM of a fractional double column.
@@ -496,8 +498,6 @@ def rank_select(
 
 
 def _robust_select_applies(df: DataFrame) -> bool:
-    from .dedup import _estimated_bytes
-
     return _estimated_bytes(df) >= ROBUST_SELECT_BYTES
 
 
@@ -688,8 +688,6 @@ def heavy_hitters(
     # the bounded-collect guarantee weakens, never exactness, and
     # HH_COLLECT_MAX keeps ~order-of-magnitude headroom for it (2M rows
     # of (value, count) pairs is tens of MB on a driver sized in GBs).
-    from .dedup import _estimated_bytes
-
     spark = df.sparkSession
     try:
         shuffle_parts = int(
@@ -886,8 +884,6 @@ def group_heavy_hitters(
         )
 
     c = max(1, math.ceil(1.0 / phi))
-
-    from .dedup import _estimated_bytes
 
     if _estimated_bytes(base) > GHH_PREGATE_BYTES:
         # Coarse pre-gate (see docstring): the 0.8 margin absorbs HLL

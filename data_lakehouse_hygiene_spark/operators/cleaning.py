@@ -92,6 +92,27 @@ def compound_predicate(
     return (metric > F.lit(threshold)) | F.lower(label).contains(needle)
 
 
+def _estimated_bytes(df: DataFrame, unknown: int | None = 0) -> int | None:
+    """Catalyst's estimated size of ``df``'s input (file-size based for
+    parquet scans) — a planning-time statistic, no job runs. Returns
+    ``unknown`` (0 by default: the small-input plan) if the stats walk
+    fails, AND when Catalyst reports its unknown-stats sentinel:
+    LogicalRDD / createDataFrame-backed plans have no file statistics and
+    surface ``spark.sql.defaultSizeInBytes`` (Long.MaxValue by default),
+    which is "size unknown", not "huge" — treating it as huge would route
+    tiny in-memory inputs onto the corpus-scale plans (and, pre-round-9,
+    did)."""
+    try:
+        size = int(
+            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
+    except Exception:
+        return unknown
+    # Long.MaxValue sentinel (or any absurd >=2^62 estimate product of it
+    # propagating through multipliers): stats are unknown.
+    return unknown if size >= (1 << 62) else size
+
+
 # Bytes of (estimated) input per spread() fan-out task at cost=1. Read
 # at call time (module global) so width experiments can interleave arms
 # in one process by patching it. Round 14: 256 KB → 128 KB after an
@@ -138,11 +159,8 @@ def spread(df, key: str = "doc_id", cost: int = 1):
     scan planner's own splits already exceed the core count).
     """
     target = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return df
-    if size >= target * (128 << 20):
+    size = _estimated_bytes(df, unknown=None)
+    if size is None or size >= target * (128 << 20):
         return df
     n = min(target, max(2, int(size * cost // SPREAD_BYTES_PER_TASK) + 1))
     return df.repartition(n, key)

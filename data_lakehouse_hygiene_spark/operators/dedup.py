@@ -26,8 +26,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .aggregates import quantize
-from .cleaning import spread
-from .text import tokens
+from .cleaning import _estimated_bytes, spread
+from .text import tokens, word_ngrams
 
 N_HASHES = 16
 N_BANDS = 4
@@ -87,6 +87,19 @@ def content_key128(col: Column) -> tuple[Column, Column]:
     return F.xxhash64(col), F.xxhash64(F.lit(1), col)
 
 
+def _inrow_pairs(arr: str, fields: str) -> Column:
+    """Exploded in-row a<b pairs of the array column ``arr``, aliased
+    ``p``: one ``struct(fields)`` per pair of elements x = arr[i],
+    y = arr[j] with i < j. The pair generator of every join-free pair
+    miner here — sort ``arr`` first for a deterministic pair order; rows
+    per array are size·(size-1)/2, so callers bound the array."""
+    return F.explode(
+        F.expr(
+            f"flatten(transform({arr}, (x, i) -> "
+            f"transform(slice({arr}, i + 2, size({arr})), y -> "
+            f"struct({fields}))))"
+        )
+    ).alias("p")
 
 
 def exact_dedup_groups(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -130,52 +143,35 @@ def incremental_dedup(
     ).drop("__digest")
 
 
-def shingles(text_col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a single-space-joined text column.
-
-    Documents shorter than ``n`` tokens contribute the whole text as one
-    shingle (so they still participate in dedup).
-
-    NOTE: evaluating this directly over a raw text column re-evaluates the
-    token split for every element reference inside the transform lambda
-    (~n per shingle) — use :func:`shingle_rows`, which materializes the
-    token array behind a projection boundary, for any full-corpus path.
-    """
-    toks = tokens(text_col)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - F.lit(n)),
-        lambda i: F.concat_ws(" ", *[toks[i + F.lit(j)] for j in range(n)]),
-    )
-    return F.when(F.size(toks) >= n, F.array_distinct(grams)).otherwise(
-        F.array(text_col)
-    )
-
-
 def shingle_rows(
     df: DataFrame, text_col: str = "text", n: int = 3, alias: str = "s"
 ) -> DataFrame:
-    """Exploded (doc_id, shingle) rows with the token array split ONCE.
+    """Exploded (doc_id, shingle) rows: the DISTINCT word n-grams of each
+    document (``text.word_ngrams``), with the token array split ONCE.
+    Documents shorter than ``n`` tokens contribute the whole text as one
+    shingle (so they still participate in dedup); a NULL text has no
+    shingles at all, so it is filtered out before the split.
 
     The split is pinned in its own projection so Catalyst cannot inline it
     into the shingle lambda: CollapseProject keeps the boundary because a
     non-cheap expression (split) is referenced more than once above it.
     Without the boundary, every one of the ~n element accesses per shingle
     re-runs the split over the whole text — an O(n_tokens·n) scan-side
-    blowup measured at ~7× wall on the bench corpus. Same output as
-    ``explode(shingles(col))`` row for row.
+    blowup measured at ~7× wall on the bench corpus.
     """
-    elems = ", ".join(f"__toks[i + {j}]" for j in range(n))
     # Backtick-quote the column identifier (doubling any embedded backtick)
     # so names with spaces/dots/SQL metachars parse as identifiers, not SQL.
     ident = "`" + text_col.replace("`", "``") + "`"
     sh = F.expr(
-        f"if(size(__toks) >= {n}, "
-        f"array_distinct(transform(sequence(0, size(__toks) - {n}), "
-        f"i -> concat_ws(' ', {elems}))), array({ident}))"
+        f"if(size(__toks) >= {n}, array_distinct({word_ngrams(n)}), "
+        f"array({ident}))"
     )
-    return df.select(
-        "doc_id", F.col(text_col), tokens(F.col(text_col)).alias("__toks")
-    ).select("doc_id", F.explode(sh).alias(alias))
+    t = F.col(text_col)
+    return (
+        df.where(t.isNotNull())
+        .select("doc_id", t, tokens(t).alias("__toks"))
+        .select("doc_id", F.explode(sh).alias(alias))
+    )
 
 
 def minhash_signatures(
@@ -268,16 +264,14 @@ def minhash_near_dup_pairs(
         .agg(F.array_sort(F.collect_list(F.struct("doc_id", "sig"))).alias("ds"))
         .where((F.size("ds") >= 2) & (F.size("ds") <= bucket_cap))
     )
-    combos = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), y -> "
-        "struct(x.doc_id AS doc_a, y.doc_id AS doc_b, "
-        "size(filter(zip_with(x.sig, y.sig, (u, v) -> u = v), t -> t)) "
-        "AS eq))))"
+    combos = _inrow_pairs(
+        "ds",
+        "x.doc_id AS doc_a, y.doc_id AS doc_b, "
+        "size(filter(zip_with(x.sig, y.sig, (u, v) -> u = v), t -> t)) AS eq",
     )
     est = F.col("p.eq").cast("double") / F.lit(float(N_HASHES))
     return (
-        grp.select(F.explode(combos).alias("p"))
+        grp.select(combos)
         .select("p.doc_a", "p.doc_b", est.alias("est_jaccard"))
         .groupBy("doc_a", "doc_b")
         .agg(F.max("est_jaccard").alias("est_jaccard"))
@@ -289,10 +283,10 @@ DF_CAP = 100
 
 
 # Estimated-input-bytes crossover between the two ngram_jaccard plan
-# shapes (see ngram_jaccard_pairs docstring). Below: the 3-branch
+# shapes (see ngram_jaccard_pairs docstring). At or below: the 2-scan
 # broadcast form (branches overlap on idle cores, scans are page-cached —
 # measured 1.59 vs 1.94 s interleaved min-of-5 at sf0.1). Above: the
-# single-scan form (scan I/O is real and 3x scan + 3x shingle exchange
+# single-scan form (scan I/O is real and 2x scan + 2x shingle exchange
 # costs more than 1x scan + 2 exchanges).
 NGRAM_SINGLE_SCAN_BYTES = 8 * 1024**3
 # Above this input estimate, the broadcast-path candidate explode gets an
@@ -306,7 +300,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     threshold: float = 0.5,
     df_cap: int = DF_CAP,
-    single_scan: bool | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity over INFORMATIVE shingles, join-free
     on the fact side.
@@ -337,29 +330,27 @@ def ngram_jaccard_pairs(
     bounded by df_cap²/2.
 
     TWO plan shapes for the Jaccard denominator, value-identical
-    (test-asserted), selected by ``single_scan`` (None = by the optimizer's
-    estimated input size vs ``NGRAM_SINGLE_SCAN_BYTES``):
+    (test-asserted), selected by the optimizer's estimated input size
+    against ``NGRAM_SINGLE_SCAN_BYTES``:
 
-    - ``single_scan=False`` (small inputs): per-doc sizes become a tiny
-      size table broadcast-joined onto the pairs. The size table's three
-      transitive consumers have diverging column prunings that defeat
-      ReuseExchange, so Catalyst re-scans the corpus and re-runs the
-      shingle window once per consumer (3 scans, 9 exchanges) — but the
-      branches run CONCURRENTLY on idle cores over page-cached parquet,
-      so wall time ≈ max(branch), not sum. Measured 1.59 s vs the
-      single-scan form's 1.94 s at sf0.1 (interleaved min-of-5; round 5
-      shipped single-scan unconditionally and regressed 1.67×).
-    - ``single_scan=True`` (large inputs): per-doc capped set sizes ride
+    - at or below it (small inputs): per-doc sizes become a tiny size
+      table broadcast-joined onto the pairs. The size table's branch
+      re-runs the shingle explode over a second corpus scan (2 scans;
+      round 15's LEFT size joins removed the third, see
+      ``_ngram_pairs_broadcast_sizes``) — but the branches run
+      CONCURRENTLY on idle cores over page-cached parquet, so wall time
+      ≈ max(branch), not sum. Measured 1.59 s vs the single-scan form's
+      1.94 s at sf0.1 (interleaved min-of-5; round 5 shipped
+      single-scan unconditionally and regressed 1.67×).
+    - above it (large inputs): per-doc capped set sizes ride
       a SECOND count window (partitioned by doc_id) on the same stream
       and travel inside the collect_list structs through pair
       generation — 1 scan, 5 exchanges, no joins. At 100 TB the cluster
-      has no idle cores to hide triple scans behind, and
-      3·(scan + shingle-exchange) > 1·scan + 2 exchanges, so the linear
+      has no idle cores to hide a second scan behind, and
+      2·(scan + shingle-exchange) > 1·scan + 2 exchanges, so the linear
       chain wins; a localCheckpoint hybrid measured slower still (it
       materializes the full shingle stream)."""
     est = _estimated_bytes(df)
-    if single_scan is None:
-        single_scan = est > NGRAM_SINGLE_SCAN_BYTES
     df = spread(df)
     # Key the exploded shingle stream by the 128-bit xxhash pair instead
     # of the raw shingle string (round 14): "s" is equality-only from
@@ -376,7 +367,7 @@ def ngram_jaccard_pairs(
         .where(F.col("df") <= df_cap)
     )
     sh_ok = sh.join(dfc.hint("shuffle_hash"), ["s1", "s2"])
-    if not single_scan:
+    if est <= NGRAM_SINGLE_SCAN_BYTES:
         return _ngram_pairs_broadcast_sizes(
             sh_ok, threshold, spread_explode=est > NGRAM_SPREAD_EXPLODE_BYTES
         )
@@ -401,14 +392,11 @@ def ngram_jaccard_pairs(
     pair_lists = pair_lists.repartition(
         df.sparkSession.sparkContext.defaultParallelism, "s1", "s2"
     )
-    combos = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), y -> "
-        "struct(x.doc_id AS doc_a, y.doc_id AS doc_b, "
-        "x.n AS na, y.n AS nb))))"
+    combos = _inrow_pairs(
+        "ds", "x.doc_id AS doc_a, y.doc_id AS doc_b, x.n AS na, y.n AS nb"
     )
     inter = (
-        pair_lists.select(F.explode(combos).alias("p"))
+        pair_lists.select(combos)
         .select("p.doc_a", "p.doc_b", "p.na", "p.nb")
         .groupBy("doc_a", "doc_b")
         .agg(
@@ -421,28 +409,6 @@ def ngram_jaccard_pairs(
     return inter.select(
         "doc_a", "doc_b", quantize(j, 6).alias("jaccard")
     ).where(F.col("jaccard") >= threshold)
-
-
-def _estimated_bytes(df: DataFrame) -> int:
-    """Catalyst's estimated size of ``df``'s input (file-size based for
-    parquet scans) — a planning-time statistic, no job runs. Falls back to
-    0 (→ the small-input plan) if the stats walk fails, AND when Catalyst
-    reports its unknown-stats sentinel: LogicalRDD / createDataFrame-backed
-    plans have no file statistics and surface
-    ``spark.sql.defaultSizeInBytes`` (Long.MaxValue by default), which is
-    "size unknown", not "huge" — treating it as huge would route tiny
-    in-memory inputs onto the corpus-scale plans (and, pre-round-9, did)."""
-    try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return 0
-    # Long.MaxValue sentinel (or any absurd >=2^62 estimate product of it
-    # propagating through multipliers): stats are unknown — plan small.
-    if size >= (1 << 62):
-        return 0
-    return size
 
 
 def _ngram_pairs_broadcast_sizes(
@@ -469,13 +435,8 @@ def _ngram_pairs_broadcast_sizes(
         pair_lists = pair_lists.repartition(
             sh_ok.sparkSession.sparkContext.defaultParallelism, "s1", "s2"
         )
-    combos = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), y -> "
-        "struct(x AS doc_a, y AS doc_b))))"
-    )
     inter = (
-        pair_lists.select(F.explode(combos).alias("p"))
+        pair_lists.select(_inrow_pairs("ds", "x AS doc_a, y AS doc_b"))
         .select("p.doc_a", "p.doc_b")
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("i"))
@@ -996,14 +957,13 @@ def _band_combo_pairs(
         .where(F.size("ds") >= 2)
     )
     ham = " + ".join(f"bit_count(x.{c} ^ y.{c})" for c in sig_cols)
-    combos = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), y -> "
-        "struct(x.doc_id AS doc_a, y.doc_id AS doc_b, "
-        f"cast({ham} as bigint) AS hamming))))"
+    combos = _inrow_pairs(
+        "ds",
+        "x.doc_id AS doc_a, y.doc_id AS doc_b, "
+        f"cast({ham} as bigint) AS hamming",
     )
     return (
-        grp.select(*keys, F.explode(combos).alias("p"))
+        grp.select(*keys, combos)
         .select(*keys, "p.doc_a", "p.doc_b", "p.hamming")
         .where(F.col("hamming") <= max_hamming)
         .groupBy(*keys, "doc_a", "doc_b")
@@ -1583,6 +1543,43 @@ def substring_dedup_spans(
     )
 
 
+def _gram_positions(toks: DataFrame, k: int) -> DataFrame:
+    """Position stream of the substring-dedup family: (doc_id, pos, g1,
+    g2), one row per ``k``-token gram of ``toks``' ``__toks`` array, keyed
+    by the 128-bit xxhash pair of the gram string (round 14: was md5-hex
+    — ~0.19 s/pass dearer at sf0.1 and 3x the exchange-key width; see
+    content_key128). The two-level transform binds the gram string to ONE
+    lambda variable so both hash lanes read a single evaluation of the
+    concat. Documents shorter than ``k`` tokens (or NULL) have no grams."""
+    grams = F.transform(
+        F.expr(word_ngrams(k)),
+        lambda g, i: F.struct(
+            i.alias("pos"),
+            *(
+                c.alias(n)
+                for c, n in zip(content_key128(g), ("g1", "g2"))
+            ),
+        ),
+    )
+    safe = F.when(F.size("__toks") >= k, grams).otherwise(
+        F.array().cast("array<struct<pos:int,g1:bigint,g2:bigint>>")
+    )
+    return toks.select("doc_id", F.explode(safe).alias("g")).select(
+        "doc_id", "g.pos", "g.g1", "g.g2"
+    )
+
+
+def _span_lists(hits: DataFrame, k: int) -> DataFrame:
+    """(doc_id, __ss): per document of the (doc_id, pos) ``hits``, the
+    sorted, disjoint strict-overlap islands of its ``k``-token grams
+    (``_island_spans`` over one sorted per-doc position list)."""
+    return (
+        hits.groupBy("doc_id")
+        .agg(F.sort_array(F.collect_list("pos")).alias("__ps"))
+        .select("doc_id", _island_spans("__ps", k).alias("__ss"))
+    )
+
+
 def _dup_span_lists(
     df: DataFrame, text_col: str, min_tokens: int
 ) -> DataFrame:
@@ -1593,35 +1590,9 @@ def _dup_span_lists(
     ``substring_dedup_spans`` for the scale design of the position
     explode + duplicated-digest rollup + semi-join; ``_island_spans``
     for the in-row run merge."""
-    k = min_tokens
-    toks = F.col("__toks")
-    # Build the gram strings once (array<string>), then key each with the
-    # 128-bit xxhash pair (round 14: was md5-hex — ~0.19 s/pass dearer at
-    # sf0.1 and 3x the exchange-key width; see content_key128). The
-    # two-level transform binds the gram string to ONE lambda variable so
-    # both hash lanes read a single evaluation of the concat.
-    gram_strs = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - F.lit(k)),
-        lambda i: F.concat_ws(" ", *[toks[i + F.lit(j)] for j in range(k)]),
-    )
-    grams = F.transform(
-        gram_strs,
-        lambda g, i: F.struct(
-            i.alias("pos"),
-            *(
-                c.alias(n)
-                for c, n in zip(content_key128(g), ("g1", "g2"))
-            ),
-        ),
-    )
-    safe = F.when(F.size(toks) >= k, grams).otherwise(
-        F.array().cast("array<struct<pos:int,g1:bigint,g2:bigint>>")
-    )
-    pos = (
-        spread(df)
-        .select("doc_id", tokens(F.col(text_col)).alias("__toks"))
-        .select("doc_id", F.explode(safe).alias("g"))
-        .select("doc_id", "g.pos", "g.g1", "g.g2")
+    pos = _gram_positions(
+        spread(df).select("doc_id", tokens(F.col(text_col)).alias("__toks")),
+        min_tokens,
     )
     dup = (
         pos.groupBy("g1", "g2")
@@ -1632,11 +1603,7 @@ def _dup_span_lists(
     hits = pos.join(
         dup.hint("shuffle_hash"), ["g1", "g2"], "left_semi"
     ).select("doc_id", "pos")
-    return (
-        hits.groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list("pos")).alias("__ps"))
-        .select("doc_id", _island_spans("__ps", k).alias("__ss"))
-    )
+    return _span_lists(hits, min_tokens)
 
 
 def substring_dedup_apply(
@@ -1679,13 +1646,11 @@ def substring_dedup_keep_first(
     exact-substring training-data dedup, losing no content entirely.
 
     The keeper election packs (doc_id, pos) into one orderable BIGINT
-    (``LINE_STRIDE`` packing, the line_dedup convention — lexicographic
-    (doc_id, pos) order IS packed-key order inside the guarded
-    envelope) and takes MIN per shingle digest in the same PARTIAL-AGG
-    rollup that carries the corpus-frequency count — deterministic,
-    retry-stable, and map-side combinable, so a mass-duplicated shingle
-    collapses to one (digest, count, min) row per map task before the
-    exchange. The rollup joins back onto the position stream
+    (``_first_key``, shared with the line-dedup family) and takes MIN per
+    shingle digest in the same PARTIAL-AGG rollup that carries the
+    corpus-frequency count — deterministic, retry-stable, and map-side
+    combinable, so a mass-duplicated shingle collapses to one (digest,
+    count, min) row per map task before the exchange. The rollup joins back onto the position stream
     (shuffle-hash on the fixed-width hash-pair key, AQE-skew-splittable); positions that
     are not the elected minimum of a ≥2×-occurring shingle are
     redundant. Round 14 de-skew: the previous COUNT + ROW_NUMBER
@@ -1696,46 +1661,13 @@ def substring_dedup_keep_first(
     token inside a KEPT occurrence survives unless some other redundant
     occurrence also covers it.
     """
-    k = min_tokens
-    toks = F.col("__toks")
-    # Same 128-bit xxhash-pair gram key as substring_dedup_spans (round
-    # 14: was md5-hex; see content_key128 for the cost/collision math).
-    gram_strs = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - F.lit(k)),
-        lambda i: F.concat_ws(" ", *[toks[i + F.lit(j)] for j in range(k)]),
-    )
-    grams = F.transform(
-        gram_strs,
-        lambda g, i: F.struct(
-            i.alias("pos"),
-            *(
-                c.alias(n)
-                for c, n in zip(content_key128(g), ("g1", "g2"))
-            ),
-        ),
-    )
-    safe = F.when(F.size(toks) >= k, grams).otherwise(
-        F.array().cast("array<struct<pos:int,g1:bigint,g2:bigint>>")
-    )
     base = df.select("doc_id", tokens(F.col(text_col)).alias("__toks"))
-    pos = (
-        # cost=2: the k-token gram build + hash per position row is the
-        # heaviest per-byte projection in the substring family (round-14
-        # width sweep: keep_first median 1.05 s @128 KB/task → 0.84 s at
-        # the 2× width at sf0.1).
-        spread(base, cost=2)
-        .select("doc_id", "__toks", F.explode(safe).alias("g"))
-        .select("doc_id", "g.pos", "g.g1", "g.g2")
-    )
-    max_doc = (1 << 63) // LINE_STRIDE - 1
-    pk = F.expr(
-        f"if(assert_true(doc_id >= 0 AND doc_id <= {max_doc} "
-        f"AND pos < {LINE_STRIDE}, "
-        f"'substring_dedup_keep_first key packing needs 0 <= doc_id <= "
-        f"{max_doc} and < {LINE_STRIDE} token positions per document; "
-        f"chunk or re-key first') is null, "
-        f"cast(doc_id * {LINE_STRIDE}L + pos as bigint), null)"
-    )
+    # cost=2: the k-token gram build + hash per position row is the
+    # heaviest per-byte projection in the substring family (round-14
+    # width sweep: keep_first median 1.05 s @128 KB/task → 0.84 s at the
+    # 2× width at sf0.1).
+    pos = _gram_positions(spread(base, cost=2), min_tokens)
+    pk = _first_key("substring_dedup_keep_first", "token positions")
     stats = (
         pos.groupBy("g1", "g2")
         .agg(F.count(F.lit(1)).alias("__c"), F.min(pk).alias("__mk"))
@@ -1751,17 +1683,35 @@ def substring_dedup_keep_first(
     # their per-partition sort, and the (doc_id, island) aggregate are
     # replaced by one per-doc sorted list + _island_spans; the rebuild
     # goes O(tokens × spans) → O(tokens + spans) via _cut_spans).
-    sp = (
-        redundant.groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list("pos")).alias("__ps"))
-        .select("doc_id", _island_spans("__ps", k).alias("__ss"))
-    )
-    return _cut_spans(base, sp)
+    return _cut_spans(base, _span_lists(redundant, min_tokens))
 
 
 # Positions-per-document bound for packing (doc_id, pos) into one orderable
 # BIGINT key: supports documents up to 1e9 lines and doc_ids up to ~9.2e9.
 LINE_STRIDE = 1_000_000_000
+
+
+def _first_key(name: str, unit: str = "lines") -> Column:
+    """The keep-first election key: (doc_id, pos) packed into one
+    orderable BIGINT, doc_id * LINE_STRIDE + pos, so lexicographic
+    (doc_id, pos) order IS key order and MIN elects the first occurrence.
+    The packing is only injective while 0 <= pos < LINE_STRIDE and
+    0 <= doc_id <= MAX_LONG div LINE_STRIDE (the multiply wraps SILENTLY
+    under the session's non-ANSI mode); outside that envelope it would
+    mis-elect keep-first winners, so all three bounds are enforced at
+    runtime by a refusal that names the operator ``name`` and counts its
+    positions in ``unit`` (same assert_true-routing trick as simhash's
+    _swar_halves — the if() keeps the guard from being pruned as
+    unused)."""
+    max_doc = (1 << 63) // LINE_STRIDE - 1
+    return F.expr(
+        f"if(assert_true(doc_id >= 0 AND doc_id <= {max_doc} "
+        f"AND pos < {LINE_STRIDE}, "
+        f"'{name} key packing needs 0 <= doc_id <= {max_doc} "
+        f"and < {LINE_STRIDE} {unit} per document; chunk or re-key "
+        f"first') is null, "
+        f"cast(doc_id * {LINE_STRIDE}L + pos as bigint), null)"
+    )
 
 
 def line_dedup(
@@ -1784,9 +1734,54 @@ def line_dedup(
     ``delim`` must be a plain literal with no regex metacharacters (it is
     passed to ``split``'s pattern position).
 
-    Scale shape: posexplode lines; the global keep-first election packs
-    (doc_id, pos) into one orderable BIGINT and takes MIN per distinct
-    line as a PARTIAL-AGG rollup keyed by the line's 128-bit hash-pair digest
+    This is ``incremental_line_dedup`` with no history: one body,
+    ``_line_dedup``, whose scale shape is documented there. No driver
+    state.
+    """
+    return _line_dedup(df, None, text_col, delim, min_chars, "line_dedup")
+
+
+def incremental_line_dedup(
+    new_df: DataFrame,
+    history_df: DataFrame,
+    text_col: str = "text",
+    delim: str = "\n",
+    min_chars: int = 1,
+) -> DataFrame:
+    """Incremental C4/CCNet line dedup: strip from each NEW document every
+    line already present in the ingested corpus, plus batch-internal
+    duplicates (keep-first within the batch, exactly ``line_dedup``) —
+    completing the incremental family (``incremental_dedup`` for exact
+    docs, ``incremental_near_dup`` for near-dups, this for lines).
+    Returns (doc_id, clean_text, n_lines_removed) for every new document.
+
+    The history side collapses to DISTINCT line digests (xxhash64 pair —
+    16 bytes per distinct line; in a real deployment this digest index is
+    a maintained table appended once per batch, so the daily cost reads
+    the NEW batch only, exactly like ``incremental_dedup``'s digest set).
+    History membership is ONE digest equi-join on the SAME hash-pair key
+    as the batch election, so the two joins share the probe-side
+    partitioning — uniform fixed-width keys, broadcastable while the
+    index is small and hash-partitioned beyond that.
+    """
+    name = "incremental_line_dedup"
+    return _line_dedup(new_df, history_df, text_col, delim, min_chars, name)
+
+
+def _line_dedup(
+    df: DataFrame,
+    history_df: DataFrame | None,
+    text_col: str,
+    delim: str,
+    min_chars: int,
+    name: str,
+) -> DataFrame:
+    """Body of ``line_dedup`` (``history_df`` None) and
+    ``incremental_line_dedup``; ``name`` words the key-packing refusal.
+
+    Scale shape: posexplode lines; the global keep-first election takes
+    MIN of the packed (doc_id, pos) key (``_first_key``) per distinct line
+    as a PARTIAL-AGG rollup keyed by the line's 128-bit hash-pair digest
     (fixed-width uniform exchange key; map-side combine collapses a
     mass-duplicated line to one row per map task before any exchange),
     left-joined back onto the line stream (shuffle-hash, so AQE
@@ -1799,165 +1794,62 @@ def line_dedup(
     every row (windows are never AQE-skew-splittable, and the exchange
     key itself was the unbounded string); the rollup+join shape keeps
     every task bounded and exchanges the text only under a
-    skew-splittable join. No driver state.
-    """
-    lines = spread(df).select(
-        "doc_id",
-        F.posexplode(F.split(F.col(text_col), delim, -1)).alias("pos", "line"),
-    )
-    elig = F.length("line") >= min_chars
-    # The packed election key is only injective while 0 <= pos <
-    # LINE_STRIDE and 0 <= doc_id <= MAX_LONG div LINE_STRIDE (the
-    # multiply wraps SILENTLY under the session's non-ANSI mode);
-    # outside that envelope it would mis-elect keep-first winners, so
-    # enforce all three bounds at runtime (same assert_true-routing
-    # trick as simhash's _swar_halves — the if() keeps the guard from
-    # being pruned as unused).
-    max_doc = (1 << 63) // LINE_STRIDE - 1
-    key = F.expr(
-        f"if(assert_true(doc_id >= 0 AND doc_id <= {max_doc} "
-        f"AND pos < {LINE_STRIDE}, "
-        f"'line_dedup key packing needs 0 <= doc_id <= {max_doc} "
-        f"and < {LINE_STRIDE} lines per document; chunk or re-key "
-        f"first') is null, "
-        f"cast(doc_id * {LINE_STRIDE}L + pos as bigint), null)"
-    )
-    # 128-bit xxhash-pair line digest (round 14: was md5-hex — dearer to
-    # compute and 3x the exchange-key width; see content_key128)
-    h1, h2 = content_key128(F.col("line"))
-    elect = (
-        lines.where(elig)
-        .select(h1.alias("__h1"), h2.alias("__h2"), key.alias("__k"))
-        .groupBy("__h1", "__h2")
-        .agg(F.min("__k").alias("__mk"))
-    )
-    kept = ~elig | (key == F.col("__mk"))
-    rows = (
-        lines.withColumn("__h1", h1)
-        .withColumn("__h2", h2)
-        .join(elect.hint("shuffle_hash"), ["__h1", "__h2"], "left")
-        .select(
-            "doc_id",
-            "pos",
-            # Round 15 (guide §2.3, shuffle fewer bytes): a REMOVED
-            # line's text never reaches the output — only its count
-            # does — so null it out before the doc_id rebuild exchange.
-            # At corpus scale the mass-duplicated lines this operator
-            # exists to remove are exactly the rows that no longer ship
-            # their text.
-            F.when(kept, F.col("line")).alias("line"),
-            kept.alias("__kept"),
-        )
-    )
-    agg = rows.groupBy("doc_id").agg(
-        F.array_sort(F.collect_list(F.struct("pos", "__kept", "line"))).alias(
-            "ls"
-        )
-    )
-    clean = F.array_join(
-        F.expr("transform(filter(ls, s -> s.__kept), s -> s.line)"), delim
-    )
-    removed = F.size("ls") - F.expr("size(filter(ls, s -> s.__kept))")
-    return agg.select(
-        "doc_id",
-        clean.alias("clean_text"),
-        removed.cast("bigint").alias("n_lines_removed"),
-    )
-
-
-def incremental_line_dedup(
-    new_df: DataFrame,
-    history_df: DataFrame,
-    text_col: str = "text",
-    delim: str = "\n",
-    min_chars: int = 1,
-) -> DataFrame:
-    """Incremental C4/CCNet line dedup: strip from each NEW document every
-    line already present in the ingested corpus, plus batch-internal
-    duplicates (keep-first within the batch) — completing the incremental
-    family (``incremental_dedup`` for exact docs, ``incremental_near_dup``
-    for near-dups, this for lines). Returns (doc_id, clean_text,
-    n_lines_removed) for every new document.
-
-    Scale shape: the history side collapses to DISTINCT line digests
-    (xxhash64 pair — 16 bytes per distinct line; in a real deployment this digest
-    index is a maintained table appended once per batch, so the daily
-    cost reads the NEW batch only, exactly like ``incremental_dedup``'s
-    digest set). New-batch lines are posexploded; the batch-internal
-    keep-first election reuses ``line_dedup``'s round-14 de-skewed
-    shape — packed-BIGINT MIN as a PARTIAL-AGG rollup keyed by the line's
-    hash-pair digest (map-side combine collapses a mass-duplicated line before
-    the exchange), joined back shuffle-hash so AQE skew-split bounds
-    the hot-key tasks (the previous MIN window partitioned by the raw
-    line string serialized them into one task); history membership is
-    ONE digest equi-join on the SAME hash-pair key, so the two joins
-    share the probe-side partitioning — uniform fixed-width keys,
-    broadcastable while the index is small and hash-partitioned beyond
-    that.
+    skew-splittable join.
     """
     # 128-bit xxhash-pair line digest for the history index and the
     # batch election (round 14: was md5-hex; see content_key128)
     lh1, lh2 = content_key128(F.col("line"))
-    hist = (
-        spread(history_df)
-        .select(
-            F.explode(F.split(F.col(text_col), delim, -1)).alias("line")
-        )
-        .where(F.length("line") >= min_chars)
-        .select(lh1.alias("__hl1"), lh2.alias("__hl2"))
-        .distinct()
-    )
-    lines = spread(new_df).select(
+    lines = spread(df).select(
         "doc_id",
         F.posexplode(F.split(F.col(text_col), delim, -1)).alias(
             "pos", "line"
         ),
     )
     elig = F.length("line") >= min_chars
-    max_doc = (1 << 63) // LINE_STRIDE - 1
-    key = F.expr(
-        f"if(assert_true(doc_id >= 0 AND doc_id <= {max_doc} "
-        f"AND pos < {LINE_STRIDE}, "
-        f"'incremental_line_dedup key packing needs 0 <= doc_id <= "
-        f"{max_doc} and < {LINE_STRIDE} lines per document; chunk or "
-        f"re-key first') is null, "
-        f"cast(doc_id * {LINE_STRIDE}L + pos as bigint), null)"
-    )
+    key = _first_key(name)
     elect = (
         lines.where(elig)
         .select(lh1.alias("__hl1"), lh2.alias("__hl2"), key.alias("__k"))
         .groupBy("__hl1", "__hl2")
         .agg(F.min("__k").alias("__mk"))
     )
-    kept = ~F.col("__elig") | (
-        (F.col("__k") == F.col("__mk")) & F.col("__dup").isNull()
+    first = F.col("__k") == F.col("__mk")
+    flagged = lines.select(
+        "doc_id",
+        "pos",
+        "line",
+        elig.alias("__elig"),
+        key.alias("__k"),
+        lh1.alias("__hl1"),
+        lh2.alias("__hl2"),
+    ).join(elect.hint("shuffle_hash"), ["__hl1", "__hl2"], "left")
+    if history_df is not None:
+        hist = (
+            spread(history_df)
+            .select(
+                F.explode(F.split(F.col(text_col), delim, -1)).alias("line")
+            )
+            .where(F.length("line") >= min_chars)
+            .select(lh1.alias("__hl1"), lh2.alias("__hl2"))
+            .distinct()
+        )
+        flagged = flagged.join(
+            hist.withColumn("__dup", F.lit(True)), ["__hl1", "__hl2"], "left"
+        )
+        first = first & F.col("__dup").isNull()
+    kept = ~F.col("__elig") | first
+    rows = flagged.select(
+        "doc_id",
+        "pos",
+        # Round 15 (guide §2.3, shuffle fewer bytes): a REMOVED line's
+        # text never reaches the output — only its count does — so null
+        # it out before the doc_id rebuild exchange. At corpus scale the
+        # mass-duplicated lines this operator exists to remove are
+        # exactly the rows that no longer ship their text.
+        F.when(kept, F.col("line")).alias("line"),
+        kept.alias("__kept"),
     )
-    flagged = (
-        lines.select(
-            "doc_id",
-            "pos",
-            "line",
-            elig.alias("__elig"),
-            key.alias("__k"),
-            lh1.alias("__hl1"),
-            lh2.alias("__hl2"),
-        )
-        .join(elect.hint("shuffle_hash"), ["__hl1", "__hl2"], "left")
-        .join(
-            hist.withColumn("__dup", F.lit(True)),
-            ["__hl1", "__hl2"],
-            "left",
-        )
-        .select(
-            "doc_id",
-            "pos",
-            # removed lines ship no text into the rebuild exchange —
-            # see line_dedup (round 15, guide §2.3)
-            F.when(kept, F.col("line")).alias("line"),
-            kept.alias("__kept"),
-        )
-    )
-    agg = flagged.groupBy("doc_id").agg(
+    agg = rows.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(F.struct("pos", "__kept", "line"))).alias(
             "ls"
         )
@@ -2049,13 +1941,8 @@ def source_overlap(
         .agg(F.array_sort(F.collect_set("src")).alias("ss"))
         .where(F.size("ss") >= 2)
     )
-    pairs = F.expr(
-        "flatten(transform(ss, (x, i) -> "
-        "transform(slice(ss, i + 2, size(ss)), "
-        "y -> struct(x AS src_a, y AS src_b))))"
-    )
     return (
-        sets.select(F.explode(pairs).alias("p"))
+        sets.select(_inrow_pairs("ss", "x AS src_a, y AS src_b"))
         .groupBy("p.src_a", "p.src_b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared"))
     )
@@ -2174,14 +2061,12 @@ def fuzzy_pairs(
         )
         .where(F.size("ns") >= 2)
     )
-    combos = F.expr(
-        "flatten(transform(ns, (x, i) -> "
-        "transform(slice(ns, i + 2, size(ns)), y -> "
-        "struct(x.name AS name_a, x.cnt AS cnt_a, "
-        "y.name AS name_b, y.cnt AS cnt_b))))"
+    combos = _inrow_pairs(
+        "ns",
+        "x.name AS name_a, x.cnt AS cnt_a, y.name AS name_b, y.cnt AS cnt_b",
     )
     pairs = (
-        lists.select(F.explode(combos).alias("p"))
+        lists.select(combos)
         .select("p.name_a", "p.cnt_a", "p.name_b", "p.cnt_b")
         .distinct()
     )

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .aggregates import quantize
+from .cleaning import _estimated_bytes
 from .dedup import base_hash
 
 # 60-bit hash space (15 hex chars of md5, see dedup.base_hash).
@@ -285,8 +286,6 @@ def global_rank(
     from operator import add
 
     from pyspark.sql.window import Window
-
-    from .dedup import _estimated_bytes
 
     if bucket_on is None:
         raise ValueError(

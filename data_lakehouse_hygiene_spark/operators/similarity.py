@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .aggregates import quantize
+from .cleaning import _estimated_bytes, spread
 
 DOT_SCALE = int(1e12)
 N_PLANES = 8
@@ -414,9 +415,6 @@ def cosine_pairs(
     """
     import numpy as np
     import pandas as pd
-
-    from .cleaning import spread
-    from .dedup import _estimated_bytes
 
     df = _present(df, vec_col)
     # _estimated_bytes maps Catalyst's unknown-stats sentinel to 0
@@ -1241,9 +1239,6 @@ def lsh_near_dup_pairs(
     rows. Pair sets and cosine bits are test-asserted equal between the
     plans.
     """
-    from .cleaning import spread
-    from .dedup import _estimated_bytes
-
     df = spread(df, key="vec_id")
     n_planes = resolve_planes(df, n_planes)
     if _estimated_bytes(df) >= LSH_KERNEL_BYTES:
@@ -1493,8 +1488,6 @@ def semantic_dedup(
     with the re-clustering knob named instead of silently launching a
     quadratic the cluster column cannot support (the sf100 rehearsal's
     10 replicated labels planned ~2·10¹¹ pairs — SCALING.md)."""
-    from .dedup import _estimated_bytes
-
     if _estimated_bytes(df) > SEMANTIC_PROBE_BYTES:
         pair_term = (
             df.groupBy(cluster_col)
@@ -1518,8 +1511,6 @@ def semantic_dedup(
                 f"split), use lsh_near_dup, or raise max_pairs after "
                 f"sizing the cluster."
             )
-    from .cleaning import spread
-
     df = spread(df, key="vec_id")
     v = F.col(vec_col)
     n = df.select(
@@ -1575,8 +1566,6 @@ def _quantized(df: DataFrame, vec_col: str, *carry: str) -> DataFrame:
     """The k-means / PQ family's one input stage: the rows whose vector
     is not NULL (``_present``), ``spread()`` for the per-row kernels, as
     (vec_id, qv = the ``_kq``-quantized vector, *carry)."""
-    from .cleaning import spread
-
     return spread(_present(df, vec_col), key="vec_id").select(
         "vec_id", _kq(F.col(vec_col)).alias("qv"), *carry
     )

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .cleaning import _estimated_bytes
+
 # Planned-explode refusal knobs (round 13 — the cosine_pairs pattern,
 # similarity.py:518): range_join and gap_fill were the engine's last
 # data-dependent explode terms with no refusal path. One corrupt
@@ -129,8 +131,6 @@ def range_join(
     bound); callers passing an explicit ``max_explode_rows`` always get
     the probe.
     """
-    from .dedup import _estimated_bytes
-
     i_start = F.unix_timestamp(F.col(start))
     i_end = F.unix_timestamp(F.col(end))
     if (
@@ -220,8 +220,6 @@ def gap_fill(
     divisor the SHORTEST instance (28-day month), so the planned count
     is an over-estimate — the gate never under-counts.
     """
-    from .dedup import _estimated_bytes
-
     b = F.date_trunc(bucket, F.col(ts))
     if (
         max_spine_rows != GAP_SPINE_MAX_ROWS

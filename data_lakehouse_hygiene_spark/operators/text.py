@@ -63,6 +63,24 @@ def project_tokens(df: DataFrame, text_col: str = "text", *keep: str) -> DataFra
     )
 
 
+def word_ngrams(n: int, fn: str = "") -> str:
+    """SQL for the word ``n``-gram strings of the ``__toks`` array (read
+    it from ``project_tokens``' projection boundary): gram i joins tokens
+    i..i+n-1 with single spaces, wrapped in the SQL function ``fn`` when
+    one is named. The one n-gram builder of the text and dedup
+    operators.
+
+    Callers guard on ``size(__toks) >= n``: a shorter array has no grams,
+    and neither has a NULL text, whose NULL token array has size -1 (so
+    a short-document fallback must not turn a NULL text into a gram —
+    see ``dedup.shingle_rows``)."""
+    elems = ", ".join(f"__toks[i + {j}]" for j in range(n))
+    return (
+        f"transform(sequence(0, size(__toks) - {n}), "
+        f"i -> {fn}(concat_ws(' ', {elems})))"
+    )
+
+
 def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Whitespace + BPE-ish token counts per document.
 
@@ -167,13 +185,10 @@ def fingerprints(
         df = spread(df)
     df = project_tokens(df, text_col)
     t = F.col(text_col)
-    toks = F.col("__toks")
-    n = F.size(toks)
-    shingle_hashes = F.transform(
-        F.sequence(F.lit(0), n - F.lit(window)),
-        lambda i: F.md5(F.concat_ws(" ", *[toks[i + j] for j in range(window)])),
-    )
-    rolling = F.when(n >= window, F.array_min(shingle_hashes)).otherwise(F.md5(t))
+    shingle_hashes = F.expr(word_ngrams(window, "md5"))
+    rolling = F.when(
+        F.size("__toks") >= window, F.array_min(shingle_hashes)
+    ).otherwise(F.md5(t))
     return df.select(
         "doc_id",
         F.md5(t).alias("exact_md5"),
@@ -1087,12 +1102,7 @@ def boilerplate_ngrams(
     # n-gram INSTANCES (multiplicity preserved — unlike dedup's
     # shingle_rows, which array_distincts per doc, occurrence totals need
     # every instance). Same split-once projection-boundary discipline.
-    elems = ", ".join(f"__toks[i + {j}]" for j in range(n))
-    sh = F.expr(
-        f"if(size(__toks) >= {n}, "
-        f"transform(sequence(0, size(__toks) - {n}), "
-        f"i -> concat_ws(' ', {elems})), array())"
-    )
+    sh = F.expr(f"if(size(__toks) >= {n}, {word_ngrams(n)}, array())")
     inst = project_tokens(df, text_col).select(
         "doc_id", F.explode(sh).alias("shingle")
     )
@@ -1250,13 +1260,7 @@ def ngram_counts(
     """
     from .cleaning import spread
 
-    elems = ", ".join(f"__toks[i + {j}]" for j in range(n))
-    grams = F.expr(
-        f"if(size(__toks) >= {n}, "
-        f"transform(sequence(0, size(__toks) - {n}), "
-        f"i -> concat_ws(' ', {elems})), "
-        f"array())"
-    )
+    grams = F.expr(f"if(size(__toks) >= {n}, {word_ngrams(n)}, array())")
     return (
         spread(project_tokens(df, text_col))
         .select(F.explode(grams).alias("ngram"))

@@ -644,17 +644,31 @@ def test_decimate_wav_rejects_16bit():
 
 def test_line_dedup_key_packing_guard(spark):
     """A negative doc_id breaks the packed (doc_id, pos) election key's
-    injectivity — the runtime guard must fail loudly, not mis-elect."""
+    injectivity — the runtime guard of every keep-first operator must
+    fail loudly, naming that operator, not mis-elect."""
     import pytest
     from pyspark.errors.exceptions.captured import SparkRuntimeException
 
-    from data_lakehouse_hygiene_spark.operators.dedup import line_dedup
+    from data_lakehouse_hygiene_spark.operators import dedup
 
     df = spark.createDataFrame(
         [(-1, "a\nb"), (2, "a\nc")], ["doc_id", "text"]
     )
-    with pytest.raises(SparkRuntimeException, match="line_dedup"):
-        line_dedup(df).collect()
+    hist = spark.createDataFrame([(9, "z")], ["doc_id", "text"])
+    ops = {
+        "line_dedup": lambda: dedup.line_dedup(df),
+        "incremental_line_dedup": lambda: dedup.incremental_line_dedup(
+            df, hist
+        ),
+        "substring_dedup_keep_first": lambda: (
+            dedup.substring_dedup_keep_first(df, min_tokens=1)
+        ),
+    }
+    for name, op in ops.items():
+        with pytest.raises(
+            SparkRuntimeException, match=rf"(?<![a-z_]){name} key packing"
+        ):
+            op().collect()
 
 
 def test_fuzzy_pairs_blocking_and_metric(spark):

@@ -7,7 +7,7 @@ import pytest
 from .conftest import SF_ORACLE
 
 import __spark_entry__ as entrymod
-from data_lakehouse_hygiene_spark.operators import dedup, multimodal
+from data_lakehouse_hygiene_spark.operators import cleaning, dedup, multimodal
 from data_lakehouse_hygiene_spark.schemas import load_table
 
 
@@ -329,28 +329,32 @@ def test_substring_dedup_keep_first_retains_one_copy(spark):
     assert out[4] == ("mid", 24)
 
 
-def test_ngram_jaccard_plan_shapes_value_identical(spark):
+def test_ngram_jaccard_plan_shapes_value_identical(spark, monkeypatch):
     """The two ngram_jaccard plan shapes (broadcast size table vs
-    single-scan windowed sizes — selected by estimated input size) must
-    produce identical (doc_a, doc_b, jaccard) rows."""
+    single-scan windowed sizes — selected by estimated input size against
+    NGRAM_SINGLE_SCAN_BYTES, patched here to force each arm) must produce
+    identical (doc_a, doc_b, jaccard) rows."""
     docs = load_table(spark, SF_ORACLE, "documents")
-    bcast = {
-        tuple(r)
-        for r in dedup.ngram_jaccard_pairs(docs, single_scan=False).collect()
-    }
-    single = {
-        tuple(r)
-        for r in dedup.ngram_jaccard_pairs(docs, single_scan=True).collect()
-    }
+
+    def arm(crossover):
+        monkeypatch.setattr(dedup, "NGRAM_SINGLE_SCAN_BYTES", crossover)
+        df = dedup.ngram_jaccard_pairs(docs)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return {tuple(r) for r in df.collect()}, plan
+
+    bcast, bplan = arm(1 << 62)
+    single, splan = arm(-1)
+    assert "BroadcastHashJoin" in bplan and "Window" not in bplan
+    assert "Window" in splan and "BroadcastHashJoin" not in splan
     assert bcast == single and bcast
 
 
 def test_ngram_size_heuristic_picks_broadcast_at_test_scale(spark):
     """At sf0.01 the estimated input is far below the crossover, so the
-    default (single_scan=None) must resolve to the broadcast form; the
-    estimator must return a real positive size for a parquet scan."""
+    size gate must select the broadcast form; the estimator must return a
+    real positive size for a parquet scan."""
     docs = load_table(spark, SF_ORACLE, "documents")
-    est = dedup._estimated_bytes(docs)
+    est = cleaning._estimated_bytes(docs)
     assert 0 < est < dedup.NGRAM_SINGLE_SCAN_BYTES
 
 

@@ -14,14 +14,14 @@ def test_estimated_bytes_sentinel_is_unknown_not_huge(spark):
     """createDataFrame-backed plans have no file stats; Catalyst surfaces
     spark.sql.defaultSizeInBytes (Long.MaxValue). That must read as
     "unknown" -> 0 -> the small-input plan, not as a genuine huge size."""
-    from data_lakehouse_hygiene_spark.operators.dedup import _estimated_bytes
+    from data_lakehouse_hygiene_spark.operators.cleaning import _estimated_bytes
 
     df = spark.createDataFrame([(1, "a")], ["id", "s"])
     assert _estimated_bytes(df) == 0
 
 
 def test_estimated_bytes_file_backed_is_real(spark):
-    from data_lakehouse_hygiene_spark.operators.dedup import _estimated_bytes
+    from data_lakehouse_hygiene_spark.operators.cleaning import _estimated_bytes
     from .conftest import SF_SMOKE
 
     df = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
