@@ -4283,19 +4283,6 @@ GROUP BY source
 """
 
 
-# Registry order = verification priority, not build order: the driver's
-# per-round correctness sweep samples a ~50-entry PREFIX (rounds 3 and 4
-# checked the identical first 50), so the prefix must always hold (a) entries
-# whose code changed this round and (b) entries whose official driver record
-# is stalest. Round 6 rotation: the new entries (line_dedup, ccnet_bucket,
-# media_transform, quality_weighted_sample, curation_funnel,
-# streaming_near_dup, kmeans_assign, gopher_quality, vocab_topk,
-# source_dup_stats, pii_scrub, ann_recall, semantic_dedup), then
-# the 7 operators whose code paths changed this round, then the 16 rows whose
-# official record is still r01 (closing round 5's last staleness gap), then
-# the r04-checked rows; the 41 r05-green unchanged entries rotate to the
-# back. Every oracle-declared entry is additionally re-verified on every
-# local run by tests/test_oracle_parity.py regardless of position.
 def q_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance near-duplicate part-name pairs at the distinct-value
     grain: word-blocked candidates (declared-blocking contract, the LSH

@@ -73,14 +73,6 @@ def project(df: DataFrame, cols: Iterable[str]) -> DataFrame:
     return df.select(*cols)
 
 
-def rename_as(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-    """P5: canonical renames (e.g. ``waktu_mandi`` → ``timestamp``)."""
-    out = df
-    for src, dst in mapping.items():
-        out = out.withColumnRenamed(src, dst)
-    return out
-
-
 def compound_predicate(
     metric: Column, threshold: float, label: Column, needle: str
 ) -> Column:

@@ -31,12 +31,6 @@ def dim_join(
     return fact.join(F.broadcast(dim), on=on, how=how)
 
 
-def scalar_max(df: DataFrame, col: str) -> Column:
-    """A1 helper: global MAX as a 1-row aggregate (map-side partial + single
-    reduce), never ``orderBy().limit(1)`` (a global sort)."""
-    return F.max(F.col(col))
-
-
 def window_after_event(
     facts: DataFrame, markers: DataFrame, fact_ts: str, marker_ts: str
 ) -> DataFrame:

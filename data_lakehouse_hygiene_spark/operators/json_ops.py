@@ -23,13 +23,6 @@ def parse_json_col(df: DataFrame, col: str, schema: StructType | str, out: str) 
     return df.withColumn(out, F.from_json(F.col(col), schema))
 
 
-def json_get(col: str, path: str) -> Column:
-    """AQICN-style dotted-path projection (``data.iaqi.pm25.v``) without a
-    declared schema: ``get_json_object`` returns string → try_cast at the
-    call site."""
-    return F.get_json_object(F.col(col), f"$.{path}")
-
-
 def explode_levels(df: DataFrame, *levels: str) -> DataFrame:
     """BMKG-style N-level array flattening: one ``explode`` per level.
 
@@ -63,8 +56,3 @@ def nest_and_flatten(df: DataFrame, key1: str, key2: str, *fields: str) -> DataF
         .select(key1, key2, *[f"r.{f}" for f in fields])
     )
 
-
-def tokenize(df: DataFrame, text_col: str, out: str = "token") -> DataFrame:
-    """Whitespace tokenization + explode — the flatten primitive reused by
-    the dedup/text operators."""
-    return df.withColumn(out, F.explode(F.split(F.col(text_col), " ")))

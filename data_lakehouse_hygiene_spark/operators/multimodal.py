@@ -14,15 +14,20 @@ decode path round-trips against a SQL-expressible oracle.
 Scale notes:
 - ``mapInPandas`` streams Arrow record batches; per-batch Python overhead is
   amortized, payload bytes never materialize on the driver.
-- Batch size is governed by ``spark.sql.execution.arrow.maxRecordsPerBatch``;
-  for multi-MB media payloads set it low (e.g. 64) so batches fit executor
-  memory.
+- Input batches are ``session.ARROW_BATCH_ROWS`` (1024) rows: ``get_spark``
+  and ``pin_session`` both pin ``spark.sql.execution.arrow.maxRecordsPerBatch``
+  to it, so payload batches stay ~12 MB with no caller setting. Kernels
+  that fabricate payloads bound their output batches by ``_YIELD_ROWS``.
 - Feature extraction is embarrassingly parallel (no shuffle); partition
   count should track input file splits.
+
+Every container is written and read by one helper each: ``_bmp_header`` /
+``_bmp_geometry`` for BMP, ``_wav_header`` / ``_riff_chunks`` for WAV.
 """
 
 from __future__ import annotations
 
+import struct
 from collections.abc import Iterator
 
 import pandas as pd
@@ -89,44 +94,103 @@ DECODED_SCHEMA = StructType(
 )
 
 
+def _bmp_stride(w: int) -> int:
+    """Bytes per pixel row of a 24-bit BMP: rows pad to 4-byte boundaries."""
+    return (3 * w + 3) // 4 * 4
+
+
+def _bmp_header(w: int, h: int) -> bytes:
+    """54-byte header (file header + BITMAPINFOHEADER) of an uncompressed
+    24-bit ``w``×``h`` BMP whose pixel rows start at offset 54."""
+    n = _bmp_stride(w) * h
+    return struct.pack(
+        "<2sIIIIiiHHII16x", b"BM", 54 + n, 0, 54, 40, w, h, 1, 24, 0, n
+    )
+
+
+def _bmp_geometry(p: bytes) -> tuple[int, int, int, int]:
+    """(width, height, bits per pixel, pixel-array offset) of a BMP."""
+    return (
+        int.from_bytes(p[18:22], "little", signed=True),
+        int.from_bytes(p[22:26], "little", signed=True),
+        int.from_bytes(p[28:30], "little"),
+        int.from_bytes(p[10:14], "little"),
+    )
+
+
+def _bmp_batchable(p: bytes) -> tuple[int, int, int, int] | None:
+    """``_bmp_geometry`` of a BMP whose pixel array lies inside the
+    payload — what the batched kernels need — else None."""
+    if len(p) >= 54:
+        w, h, bpp, off = geometry = _bmp_geometry(p)
+        if 0 < w and 0 < h and off + _bmp_stride(w) * h <= len(p):
+            return geometry
+    return None
+
+
+def _wav_header(rate: int, n: int) -> bytes:
+    """44-byte header of an 8-bit mono PCM WAV holding ``n`` samples:
+    RIFF/WAVE, a 16-byte ``fmt `` chunk, then the ``data`` chunk's id and
+    length (byte rate = sample rate at one byte per frame)."""
+    return struct.pack(
+        "<4sI4s4sIHHIIHH4sI", b"RIFF", 36 + n, b"WAVE",
+        b"fmt ", 16, 1, 1, rate, rate, 1, 8, b"data", n,
+    )
+
+
+def _riff_chunks(p: bytes) -> Iterator[tuple[bytes, int, int]]:
+    """(chunk id, body offset, declared length) of each RIFF chunk after
+    the 12-byte RIFF/WAVE preamble, in file order (chunks are
+    word-aligned)."""
+    pos = 12
+    while pos + 8 <= len(p):
+        clen = int.from_bytes(p[pos + 4 : pos + 8], "little")
+        yield p[pos : pos + 4], pos + 8, clen
+        pos += 8 + clen + (clen % 2)
+
+
+def _wav_format(p: bytes, media_type: str) -> tuple[int, int, int, int, int]:
+    """(sample rate, channels, bits per sample, data offset, data length)
+    of a RIFF/WAVE payload; the last ``fmt `` and ``data`` chunks win, and
+    a ``fmt `` chunk shorter than its 16 PCM bytes is not one."""
+    if p[:4] != b"RIFF" or p[8:12] != b"WAVE":
+        raise NotImplementedError(
+            f"decode of {media_type!r} requires a codec library (PIL/ffmpeg);"
+            " only BMP and WAV decode natively"
+        )
+    rate = off = None
+    for cid, o, n in _riff_chunks(p):
+        if cid == b"fmt " and n >= 16:
+            channels = int.from_bytes(p[o + 2 : o + 4], "little")
+            rate = int.from_bytes(p[o + 4 : o + 8], "little")
+            bits = int.from_bytes(p[o + 14 : o + 16], "little")
+        elif cid == b"data":
+            off, nb = o, n
+    if rate is None or off is None:
+        raise ValueError("WAV missing fmt/data chunk")
+    return rate, channels, bits, off, nb
+
+
+def _wav_data(p: bytes) -> tuple[int, int]:
+    """(offset, length clipped to the payload) of the FIRST ``data``
+    chunk — the samples the fingerprints read."""
+    for cid, o, n in _riff_chunks(p):
+        if cid == b"data":
+            return o, min(n, len(p) - o)
+    raise ValueError("WAV missing data chunk")
+
+
 def make_bmp(width: int, height: int, seed: int = 0) -> bytes:
     """Minimal valid 24-bit uncompressed BMP (BITMAPINFOHEADER) with
     deterministic pixel bytes — used by ``synthesize_media`` and tests."""
-    row = (3 * width + 3) // 4 * 4  # rows pad to 4-byte boundaries
-    data = bytes((seed + i) % 256 for i in range(row * height))
-    size = 54 + len(data)
-    header = (
-        b"BM"
-        + size.to_bytes(4, "little")
-        + b"\x00\x00\x00\x00"
-        + (54).to_bytes(4, "little")
-        + (40).to_bytes(4, "little")
-        + width.to_bytes(4, "little", signed=True)
-        + height.to_bytes(4, "little", signed=True)
-        + (1).to_bytes(2, "little")
-        + (24).to_bytes(2, "little")
-        + (0).to_bytes(4, "little")
-        + len(data).to_bytes(4, "little")
-        + b"\x00" * 16
-    )
-    return header + data
+    n = _bmp_stride(width) * height
+    return _bmp_header(width, height) + bytes((seed + i) % 256 for i in range(n))
 
 
 def make_wav(sample_rate: int, n_samples: int, seed: int = 0) -> bytes:
     """Minimal valid 8-bit mono PCM WAV with deterministic sample bytes."""
     data = bytes((seed + i) % 256 for i in range(n_samples))
-    fmt = (
-        b"fmt "
-        + (16).to_bytes(4, "little")
-        + (1).to_bytes(2, "little")  # PCM
-        + (1).to_bytes(2, "little")  # mono
-        + sample_rate.to_bytes(4, "little")
-        + sample_rate.to_bytes(4, "little")  # byte rate (1 ch × 8 bit)
-        + (1).to_bytes(2, "little")  # block align
-        + (8).to_bytes(2, "little")  # bits/sample
-    )
-    chunks = fmt + b"data" + len(data).to_bytes(4, "little") + data
-    return b"RIFF" + (4 + len(chunks)).to_bytes(4, "little") + b"WAVE" + chunks
+    return _wav_header(sample_rate, n_samples) + data
 
 
 def decode_media(payload: bytes, media_type: str) -> dict:
@@ -143,40 +207,24 @@ def decode_media(payload: bytes, media_type: str) -> dict:
     if p[:2] == b"BM":
         if len(p) < 54:
             raise ValueError("truncated BMP header")
+        w, h, bpp, _ = _bmp_geometry(p)
         return {
-            "width": int.from_bytes(p[18:22], "little", signed=True),
-            "height": int.from_bytes(p[22:26], "little", signed=True),
-            "bpp": int.from_bytes(p[28:30], "little"),
+            "width": w,
+            "height": h,
+            "bpp": bpp,
             "sample_rate": None,
             "n_channels": None,
             "n_samples": None,
         }
-    if p[:4] == b"RIFF" and p[8:12] == b"WAVE":
-        pos, rate, channels, bits, data_size = 12, None, None, None, None
-        while pos + 8 <= len(p):
-            cid = p[pos : pos + 4]
-            clen = int.from_bytes(p[pos + 4 : pos + 8], "little")
-            if cid == b"fmt ":
-                channels = int.from_bytes(p[pos + 10 : pos + 12], "little")
-                rate = int.from_bytes(p[pos + 12 : pos + 16], "little")
-                bits = int.from_bytes(p[pos + 22 : pos + 24], "little")
-            elif cid == b"data":
-                data_size = clen
-            pos += 8 + clen + (clen % 2)  # chunks are word-aligned
-        if rate is None or data_size is None:
-            raise ValueError("WAV missing fmt/data chunk")
-        return {
-            "width": None,
-            "height": None,
-            "bpp": None,
-            "sample_rate": rate,
-            "n_channels": channels,
-            "n_samples": data_size // (channels * max(bits // 8, 1)),
-        }
-    raise NotImplementedError(
-        f"decode of {media_type!r} requires a codec library (PIL/ffmpeg);"
-        " only BMP and WAV decode natively"
-    )
+    rate, channels, bits, _, nb = _wav_format(p, media_type)
+    return {
+        "width": None,
+        "height": None,
+        "bpp": None,
+        "sample_rate": rate,
+        "n_channels": channels,
+        "n_samples": nb // (channels * max(bits // 8, 1)),
+    }
 
 
 def extract_features(media: DataFrame, marker: bytes = b"a") -> DataFrame:
@@ -191,19 +239,39 @@ def extract_features(media: DataFrame, marker: bytes = b"a") -> DataFrame:
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads = pdf["payload"]
+            # a NULL payload (to_media of a NULL text) has NULL features
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
                     "media_type": pdf["media_type"],
-                    "n_bytes": payloads.map(len).astype("int64"),
-                    "header_hex": payloads.map(lambda b: bytes(b[:8]).hex()),
+                    "n_bytes": payloads.map(len, na_action="ignore").astype(
+                        "Int64"
+                    ),
+                    "header_hex": payloads.map(
+                        lambda b: bytes(b[:8]).hex(), na_action="ignore"
+                    ),
                     "n_marker_bytes": payloads.map(
-                        lambda b: bytes(b).count(marker)
-                    ).astype("int64"),
+                        lambda b: bytes(b).count(marker), na_action="ignore"
+                    ).astype("Int64"),
                 }
             )
 
     return media.mapInPandas(_extract, schema=FEATURE_SCHEMA)
+
+
+def _slices(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Input batches cut to at most ``_YIELD_ROWS`` rows: a kernel that
+    fabricates payloads yields one frame per slice (see ``_YIELD_ROWS``)."""
+    for pdf in batches:
+        for c0 in range(0, len(pdf), _YIELD_ROWS):
+            yield pdf.iloc[c0 : c0 + _YIELD_ROWS]
+
+
+def _modality(ids) -> tuple:
+    """Synthesized corpora: even doc_ids are BMP images, odd doc_ids WAV
+    audio. ``ids`` is an int64 array; returns (image mask, media types)."""
+    image = ids % 2 == 0
+    return image, ["image/bmp" if m else "audio/wav" for m in image]
 
 
 def synthesize_media(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -214,27 +282,31 @@ def synthesize_media(df: DataFrame, text_col: str = "text") -> DataFrame:
     Runs in ``mapInPandas`` (payload bytes built executor-side, never on
     the driver); the parameters are pure functions of (doc_id, n_chars) so
     a SQL oracle can state the expected decode output without byte-level
-    logic — what the round-trip test then verifies is the DECODER."""
+    logic — what the round-trip test then verifies is the DECODER.
+
+    An odd doc_id with a NULL text is refused by name: its asset would be
+    a WAV with a sample rate but no sample count, which no container can
+    hold."""
 
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                if len(rows) >= _YIELD_ROWS:
-                    # bounded-memory yield — see _YIELD_ROWS
-                    yield pd.DataFrame(
-                        rows, columns=["doc_id", "media_type", "payload"]
+        for pdf in _slices(batches):
+            ids = pdf["doc_id"].to_numpy()
+            image, types = _modality(ids)
+            payloads = []
+            for i, is_image, text in zip(ids.tolist(), image, pdf[text_col]):
+                if is_image:
+                    payloads.append(make_bmp(1 + i % 16, 1 + i % 8, seed=i))
+                elif text is None:
+                    raise ValueError(
+                        f"synthesize_media: doc_id {i} has a NULL text, so"
+                        " its audio asset has no sample count"
                     )
-                    rows = []
-                i = int(doc_id)
-                if i % 2 == 0:
-                    payload = make_bmp(1 + i % 16, 1 + i % 8, seed=i)
-                    mt = "image/bmp"
                 else:
-                    payload = make_wav(8000 + 4000 * (i % 4), len(text), seed=i)
-                    mt = "audio/wav"
-                rows.append((i, mt, payload))
-            yield pd.DataFrame(rows, columns=["doc_id", "media_type", "payload"])
+                    rate = 8000 + 4000 * (i % 4)
+                    payloads.append(make_wav(rate, len(text), seed=i))
+            yield pd.DataFrame(
+                {"doc_id": ids, "media_type": types, "payload": payloads}
+            )
 
     return df.select("doc_id", text_col).mapInPandas(_synth, schema=MEDIA_SCHEMA)
 
@@ -262,15 +334,12 @@ def decode_features(media: DataFrame) -> DataFrame:
 def _resize_bmp(p: bytes, scale_div: int) -> bytes:
     """Nearest-neighbor downscale of a 24-bit uncompressed BMP by an
     integer factor (pure bytes + arithmetic, no codec library)."""
-    w = int.from_bytes(p[18:22], "little", signed=True)
-    h = int.from_bytes(p[22:26], "little", signed=True)
-    bpp = int.from_bytes(p[28:30], "little")
+    w, h, bpp, off = _bmp_geometry(p)
     if bpp != 24:
         raise ValueError(f"resize supports 24-bit BMP only, got {bpp}")
-    off = int.from_bytes(p[10:14], "little")
-    in_stride = (3 * w + 3) // 4 * 4
+    in_stride = _bmp_stride(w)
     ow, oh = max(1, w // scale_div), max(1, h // scale_div)
-    out_stride = (3 * ow + 3) // 4 * 4
+    out_stride = _bmp_stride(ow)
     out = bytearray(out_stride * oh)
     for y in range(oh):
         src_row = off + (y * h // oh) * in_stride
@@ -279,65 +348,23 @@ def _resize_bmp(p: bytes, scale_div: int) -> bytes:
             sx = src_row + (x * w // ow) * 3
             dx = dst_row + x * 3
             out[dx : dx + 3] = p[sx : sx + 3]
-    size = 54 + len(out)
-    header = (
-        b"BM"
-        + size.to_bytes(4, "little")
-        + b"\x00\x00\x00\x00"
-        + (54).to_bytes(4, "little")
-        + (40).to_bytes(4, "little")
-        + ow.to_bytes(4, "little", signed=True)
-        + oh.to_bytes(4, "little", signed=True)
-        + (1).to_bytes(2, "little")
-        + (24).to_bytes(2, "little")
-        + (0).to_bytes(4, "little")
-        + len(out).to_bytes(4, "little")
-        + b"\x00" * 16
-    )
-    return header + bytes(out)
+    return _bmp_header(ow, oh) + bytes(out)
 
 
 def _decimate_wav(p: bytes, sample_every: int) -> bytes:
     """Frame-sample an 8-bit mono PCM WAV: keep every ``sample_every``-th
     sample and divide the declared rate to match (decimation without an
     anti-alias filter — the frame-SAMPLING shape, not a resampler)."""
-    meta = decode_media(p, "audio/wav")
-    if meta["n_channels"] != 1:
+    rate, channels, bits, off, nb = _wav_format(p, "audio/wav")
+    if channels != 1:
         raise ValueError("frame sampling supports mono PCM only")
-    # find the fmt and data chunks — walk EVERY chunk (decode_media does;
-    # breaking at 'data' would leave bits unset for the legal
-    # fmt-after-data chunk order and wrongly reject a valid 8-bit file)
-    pos = 12
-    data = b""
-    rate = meta["sample_rate"]
-    bits = None
-    while pos + 8 <= len(p):
-        cid = p[pos : pos + 4]
-        clen = int.from_bytes(p[pos + 4 : pos + 8], "little")
-        if cid == b"fmt " and clen >= 16:
-            bits = int.from_bytes(p[pos + 22 : pos + 24], "little")
-        if cid == b"data":
-            data = p[pos + 8 : pos + 8 + clen]
-        pos += 8 + clen + (clen % 2)
     # byte-stride slicing below assumes 1 byte == 1 sample; a 16-bit
     # payload would be split mid-sample-pair and emit corrupt-but-valid-
     # looking audio, so fail loudly (mirror of the mono-only check).
     if bits != 8:
         raise ValueError("frame sampling supports 8-bit PCM only")
-    kept = data[::sample_every]
-    out_rate = max(1, rate // sample_every)
-    fmt = (
-        b"fmt "
-        + (16).to_bytes(4, "little")
-        + (1).to_bytes(2, "little")
-        + (1).to_bytes(2, "little")
-        + out_rate.to_bytes(4, "little")
-        + out_rate.to_bytes(4, "little")
-        + (1).to_bytes(2, "little")
-        + (8).to_bytes(2, "little")
-    )
-    chunks = fmt + b"data" + len(kept).to_bytes(4, "little") + kept
-    return b"RIFF" + (4 + len(chunks)).to_bytes(4, "little") + b"WAVE" + chunks
+    kept = p[off : off + nb][::sample_every]
+    return _wav_header(max(1, rate // sample_every), len(kept)) + kept
 
 
 def transform_media(
@@ -380,7 +407,7 @@ def _tx_payloads(
 ) -> list:
     """Batch core of ``transform_media``: raw payload list → transformed
     payload list, in input order. Same-geometry BMPs resize as one
-    strided gather per group (the scalar per-pixel Python loop was ~1k
+    strided gather per chip (the scalar per-pixel Python loop was ~1k
     iterations per 64→32 asset); byte output identical by construction.
     Shared by the chained operator and ``structured_phash``'s fused
     kernel."""
@@ -391,55 +418,23 @@ def _tx_payloads(
     for i, p in enumerate(payloads):
         if p[:2] != b"BM":
             out[i] = _decimate_wav(p, sample_every)
-            continue
-        w = int.from_bytes(p[18:22], "little", signed=True)
-        h = int.from_bytes(p[22:26], "little", signed=True)
-        bpp = int.from_bytes(p[28:30], "little")
-        off = int.from_bytes(p[10:14], "little")
-        stride = (3 * w + 3) // 4 * 4
-        if bpp == 24 and 0 < w and 0 < h and (
-            off + stride * h <= len(p)
-        ):
-            groups.setdefault((len(p), w, h, off), []).append(i)
+        elif (g := _bmp_batchable(p)) is not None and g[2] == 24:
+            groups.setdefault((len(p), *g), []).append(i)
         else:
             out[i] = _resize_bmp(p, scale_div)
-    for (L, w, h, off), idxs in groups.items():
-        in_stride = (3 * w + 3) // 4 * 4
+    for (_, w, h, _, off), chip, raw in _chips(payloads, groups):
         ow, oh = max(1, w // scale_div), max(1, h // scale_div)
-        out_stride = (3 * ow + 3) // 4 * 4
         rows_idx = (np.arange(oh) * h) // oh
         byte_idx = (
             ((np.arange(ow) * w) // ow)[:, None] * 3
             + np.arange(3)[None, :]
         ).reshape(-1)
-        size = 54 + out_stride * oh
-        hdr = (
-            b"BM" + size.to_bytes(4, "little") + b"\x00\x00\x00\x00"
-            + (54).to_bytes(4, "little")
-            + (40).to_bytes(4, "little")
-            + ow.to_bytes(4, "little", signed=True)
-            + oh.to_bytes(4, "little", signed=True)
-            + (1).to_bytes(2, "little")
-            + (24).to_bytes(2, "little")
-            + (0).to_bytes(4, "little")
-            + (out_stride * oh).to_bytes(4, "little")
-            + b"\x00" * 16
-        )
-        for c0 in range(0, len(idxs), _PHASH_CHIP):
-            chip = idxs[c0 : c0 + _PHASH_CHIP]
-            raw = np.frombuffer(
-                b"".join(payloads[i] for i in chip), dtype=np.uint8
-            ).reshape(len(chip), L)
-            px = raw[:, off : off + in_stride * h].reshape(
-                len(chip), h, in_stride
-            )
-            body = px[:, rows_idx][:, :, byte_idx]
-            buf = np.zeros(
-                (len(chip), oh, out_stride), dtype=np.uint8
-            )
-            buf[:, :, : 3 * ow] = body
-            for i, b in zip(chip, buf):
-                out[i] = hdr + b.tobytes()
+        px = raw[:, off : off + _bmp_stride(w) * h].reshape(len(chip), h, -1)
+        buf = np.zeros((len(chip), oh, _bmp_stride(ow)), dtype=np.uint8)
+        buf[:, :, : 3 * ow] = px[:, rows_idx][:, :, byte_idx]
+        hdr = _bmp_header(ow, oh)
+        for i, b in zip(chip, buf):
+            out[i] = hdr + b.tobytes()
     return out
 
 
@@ -481,10 +476,8 @@ def _phash_bmp(p: bytes, grid: int = 8) -> int:
     ``media_phash``/``media_near_dup`` full value-hash oracles."""
     import numpy as np
 
-    w = int.from_bytes(p[18:22], "little", signed=True)
-    h = int.from_bytes(p[22:26], "little", signed=True)
-    off = int.from_bytes(p[10:14], "little")
-    stride = (3 * w + 3) // 4 * 4
+    w, h, _, off = _bmp_geometry(p)
+    stride = _bmp_stride(w)
     buf = np.frombuffer(p, dtype=np.uint8)
     # BGR -> integer-weighted luma (ITU-R 601 ratios over 256), fully
     # vectorized: view the pixel array as (h, stride) and slice off the
@@ -555,19 +548,7 @@ def _phash_wav(p: bytes, n_frames: int = 64) -> int:
     amplitudes themselves, which is what the DuckDB oracle replays."""
     import numpy as np
 
-    # walk RIFF chunks to the data payload (decode_media validates the
-    # container but does not expose the chunk offset)
-    pos, off, nb = 12, None, None
-    while pos + 8 <= len(p):
-        cid = p[pos : pos + 4]
-        clen = int.from_bytes(p[pos + 4 : pos + 8], "little")
-        if cid == b"data":
-            off, nb = pos + 8, clen
-            break
-        pos += 8 + clen + (clen % 2)
-    if off is None:
-        raise ValueError("WAV missing data chunk")
-    nb = min(nb, len(p) - off)
+    off, nb = _wav_data(p)
     s = np.frombuffer(p, dtype=np.uint8, count=nb, offset=off).astype(
         np.int64
     )
@@ -599,6 +580,21 @@ def _phash_wav(p: bytes, n_frames: int = 64) -> int:
 _PHASH_CHIP = 256
 
 
+def _chips(payloads: list, groups: dict) -> Iterator[tuple]:
+    """(group key, chip, payload matrix) for every chip of at most
+    ``_PHASH_CHIP`` indices of each group: the chip's payloads, which
+    share one length, stacked as a (len(chip), length) uint8 matrix."""
+    import numpy as np
+
+    for key, idxs in groups.items():
+        for c0 in range(0, len(idxs), _PHASH_CHIP):
+            chip = idxs[c0 : c0 + _PHASH_CHIP]
+            raw = np.frombuffer(
+                b"".join(payloads[i] for i in chip), dtype=np.uint8
+            )
+            yield key, chip, raw.reshape(len(chip), -1)
+
+
 def _bits_from_bool_rows(b) -> "np.ndarray":  # noqa: F821
     """MSB-first bit packing of a (B, nbits) bool matrix into int64 —
     the vectorized form of the scalar ``(bits << 1) | bit`` loop. nbits
@@ -623,7 +619,7 @@ def _phash_bmp_batch(raw, w: int, h: int, off: int, grid: int = 8):
     amortizes it across the Arrow batch."""
     import numpy as np
 
-    stride = (3 * w + 3) // 4 * 4
+    stride = _bmp_stride(w)
     B = raw.shape[0]
     px = (
         raw[:, off : off + stride * h]
@@ -695,51 +691,24 @@ def _phash_payloads(payloads: list) -> list:
     scalar functions for odd shapes (empty WAV data chunk, geometry
     that doesn't cover the byte range). Returns signed-int64 phashes in
     input order."""
-    import numpy as np
-
     out = [0] * len(payloads)
     groups: dict = {}
     for i, p in enumerate(payloads):
         if p[:2] == b"BM":
-            if len(p) >= 54:
-                w = int.from_bytes(p[18:22], "little", signed=True)
-                h = int.from_bytes(p[22:26], "little", signed=True)
-                off = int.from_bytes(p[10:14], "little")
-                stride = (3 * w + 3) // 4 * 4
-                if 0 < w and 0 < h and off + stride * h <= len(p):
-                    groups.setdefault(
-                        ("b", len(p), w, h, off), []
-                    ).append(i)
-                    continue
-            out[i] = _phash_bmp(p)  # odd geometry: scalar (raises as before)
+            g = _bmp_batchable(p)
+            if g is None:
+                out[i] = _phash_bmp(p)  # odd geometry: scalar (raises as before)
+                continue
+            key = (_phash_bmp_batch, len(p), g[0], g[1], g[3])
         else:
-            pos, doff, nb = 12, None, None
-            while pos + 8 <= len(p):
-                cid = p[pos : pos + 4]
-                clen = int.from_bytes(p[pos + 4 : pos + 8], "little")
-                if cid == b"data":
-                    doff, nb = pos + 8, clen
-                    break
-                pos += 8 + clen + (clen % 2)
-            if doff is None:
-                raise ValueError("WAV missing data chunk")
-            nb = min(nb, len(p) - doff)
-            if nb > 0:
-                groups.setdefault(("w", len(p), doff, nb), []).append(i)
-            else:
-                out[i] = 0
-    for key, idxs in groups.items():
-        for c0 in range(0, len(idxs), _PHASH_CHIP):
-            chip = idxs[c0 : c0 + _PHASH_CHIP]
-            raw = np.frombuffer(
-                b"".join(payloads[i] for i in chip), dtype=np.uint8
-            ).reshape(len(chip), key[1])
-            if key[0] == "b":
-                hs = _phash_bmp_batch(raw, key[2], key[3], key[4])
-            else:
-                hs = _phash_wav_batch(raw, key[2], key[3])
-            for i, ph in zip(chip, hs):
-                out[i] = int(ph)
+            off, nb = _wav_data(p)
+            if nb <= 0:
+                continue  # no samples: fingerprint 0
+            key = (_phash_wav_batch, len(p), off, nb)
+        groups.setdefault(key, []).append(i)
+    for (kernel, _, *geometry), chip, raw in _chips(payloads, groups):
+        for i, ph in zip(chip, kernel(raw, *geometry)):
+            out[i] = int(ph)
     return out
 
 
@@ -863,84 +832,42 @@ def synthesize_structured_media(
     corpus. Arrow ``mapInPandas``, payloads built executor-side."""
 
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids_all = pdf["doc_id"].to_numpy()
-            # yield in _YIELD_ROWS chunks: each yielded frame becomes one
-            # Arrow batch, and 10k payload rows × 12 KB per input batch
-            # OOM'd the 500k-doc rehearsal — payload memory must be
-            # bounded per yield, not per input batch.
-            for c0 in range(0, len(ids_all), _YIELD_ROWS):
-                ids = ids_all[c0 : c0 + _YIELD_ROWS]
-                payload = _synth_structured_chunk(ids)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": [int(i) for i in ids],
-                        "media_type": [
-                            "image/bmp" if i % 2 == 0 else "audio/wav"
-                            for i in ids
-                        ],
-                        "payload": [payload[int(i)] for i in ids],
-                    }
-                )
+        for pdf in _slices(batches):
+            ids = pdf["doc_id"].to_numpy()
+            types, payloads = _synth_structured_chunk(ids)
+            yield pd.DataFrame(
+                {"doc_id": ids, "media_type": types, "payload": payloads}
+            )
 
     return df.select("doc_id").mapInPandas(_synth, schema=MEDIA_SCHEMA)
 
 
-# Constant container headers for the structured corpus (all images are
-# 64×64 BMPs, all audio 4096-sample WAVs — only the content bytes vary
-# per doc). Module-level so the chained operator and the fused
-# fingerprint kernel share one definition.
-_SBMP_DATA_LEN = 64 * 192
-_SBMP_HDR = (
-    b"BM" + (54 + _SBMP_DATA_LEN).to_bytes(4, "little") + b"\0\0\0\0"
-    + (54).to_bytes(4, "little")
-    + (40).to_bytes(4, "little")
-    + (64).to_bytes(4, "little", signed=True)
-    + (64).to_bytes(4, "little", signed=True)
-    + (1).to_bytes(2, "little")
-    + (24).to_bytes(2, "little")
-    + (0).to_bytes(4, "little")
-    + _SBMP_DATA_LEN.to_bytes(4, "little")
-    + b"\0" * 16
-)
-_SWAV_FMT = (
-    b"fmt " + (16).to_bytes(4, "little")
-    + (1).to_bytes(2, "little")
-    + (1).to_bytes(2, "little")
-    + (8000).to_bytes(4, "little")
-    + (8000).to_bytes(4, "little")
-    + (1).to_bytes(2, "little")
-    + (8).to_bytes(2, "little")
-)
-_SWAV_HDR = (
-    b"RIFF" + (4 + len(_SWAV_FMT) + 8 + 4096).to_bytes(4, "little")
-    + b"WAVE" + _SWAV_FMT + b"data" + (4096).to_bytes(4, "little")
-)
-
-
-def _synth_structured_chunk(ids) -> dict:
-    """Batch core of ``synthesize_structured_media``: doc ids →
-    {doc_id: payload bytes}. Content bytes are computed BATCHED (one
-    avalanche/upscale pass for every even id, one amplitude pass for
-    every odd id); only the per-row tobytes() stays a Python loop."""
+def _synth_structured_chunk(ids) -> tuple[list, list]:
+    """Batch core of ``synthesize_structured_media``: doc ids → (media
+    types, payload bytes) in input order. Every image is a 64×64 BMP and
+    every audio asset a 4096-sample WAV, so one header serves each
+    modality. Content bytes are computed BATCHED (one avalanche/upscale
+    pass for every image, one amplitude pass for every audio asset);
+    only the per-row tobytes() stays a Python loop."""
     import numpy as np
 
-    ev = ids[ids % 2 == 0]
-    od = ids[ids % 2 == 1]
-    payload: dict = {}
+    image, types = _modality(ids)
+    ev, od = np.flatnonzero(image), np.flatnonzero(~image)
+    payloads: list = [None] * len(ids)
     if len(ev):
-        g = _hash_grid_batch(ev, 16, 16)
+        g = _hash_grid_batch(ids[ev], 16, 16)
         img = np.repeat(np.repeat(g, 4, axis=1), 4, axis=2)
         data = np.repeat(img, 3, axis=2)  # (E, 64, 192) BGR
-        for i, d in zip(ev, data):
-            payload[int(i)] = _SBMP_HDR + d.tobytes()
+        hdr = _bmp_header(64, 64)
+        for k, d in zip(ev, data):
+            payloads[k] = hdr + d.tobytes()
     if len(od):
         # integer amplitudes (round 11): 10 + g*100//255 in
         # [10, 110], so samples are exactly 128±amp and the
         # frame energy IS the amplitude — the oracle SQL
         # replays `10 + (g*100)//255` from the hash grid
         g = (
-            _hash_grid_batch(od, 8, 8)
+            _hash_grid_batch(ids[od], 8, 8)
             .reshape(len(od), 64)
             .astype(np.int64)
         )
@@ -948,9 +875,10 @@ def _synth_structured_chunk(ids) -> dict:
         frames = np.repeat(amp, 64, axis=1)  # (O, 4096)
         sgn = np.tile([1, -1], 2048)[None, :]
         s = (128 + frames * sgn).astype(np.uint8)
-        for i, d in zip(od, s):
-            payload[int(i)] = _SWAV_HDR + d.tobytes()
-    return payload
+        hdr = _wav_header(8000, 4096)
+        for k, d in zip(od, s):
+            payloads[k] = hdr + d.tobytes()
+    return types, payloads
 
 
 def structured_phash(
@@ -978,27 +906,18 @@ def structured_phash(
     """
 
     def _fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids_all = pdf["doc_id"].to_numpy()
-            for c0 in range(0, len(ids_all), _YIELD_ROWS):
-                ids = ids_all[c0 : c0 + _YIELD_ROWS]
-                pmap = _synth_structured_chunk(ids)
-                payloads = [pmap[int(i)] for i in ids]
-                if transform is not None:
-                    payloads = _tx_payloads(
-                        payloads, transform[0], transform[1]
-                    )
-                hs = _phash_payloads(payloads)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": [int(i) + id_offset for i in ids],
-                        "media_type": [
-                            "image/bmp" if i % 2 == 0 else "audio/wav"
-                            for i in ids
-                        ],
-                        "phash": pd.Series(hs, dtype="int64"),
-                    }
-                )
+        for pdf in _slices(batches):
+            ids = pdf["doc_id"].to_numpy()
+            types, payloads = _synth_structured_chunk(ids)
+            if transform is not None:
+                payloads = _tx_payloads(payloads, transform[0], transform[1])
+            yield pd.DataFrame(
+                {
+                    "doc_id": ids + id_offset,
+                    "media_type": types,
+                    "phash": pd.Series(_phash_payloads(payloads), dtype="int64"),
+                }
+            )
 
     from .cleaning import spread
 

@@ -52,11 +52,6 @@ def read_csv(
     )
 
 
-def read_json(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
-    """S1-landed JSON files with a declared schema (no inference pass)."""
-    return spark.read.schema(schema).json(path)
-
-
 DEFAULT_HTTP_TIMEOUT = 30  # seconds — mirrors the reference's fetch timeout
 USER_AGENT = "data-lakehouse-hygiene-spark/1.0"
 

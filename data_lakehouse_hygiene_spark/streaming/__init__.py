@@ -306,32 +306,41 @@ def gated_zone_stream(
     q.awaitTermination()
 
 
-def dedup_stream(
-    events: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "ts",
-    delay: str = "1 hour",
+def _watermark_dedup(
+    rows: DataFrame, keys: list[str], ts: str, delay: str
 ) -> DataFrame:
-    """Stateful streaming deduplication: keep the first row per key seen
+    """The one body of the dedup streams: keep the first row per key seen
     within the watermark horizon (``dropDuplicatesWithinWatermark``).
+    Keys older than the watermark are evicted, so state size tracks the
+    ``delay`` window, not the stream.
 
-    This is the streaming half of the dedup family — exact dedup of an
-    UNBOUNDED stream with BOUNDED state: keys older than the watermark are
-    evicted, so state size tracks the delay window, not the stream. The
-    timestamp column is cast to TIMESTAMP (watermarks reject NTZ; the
-    session is pinned UTC so the cast is value-preserving)."""
-    src = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return src.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(
-        key_cols
+    ``ts`` is cast to TIMESTAMP (watermarks reject NTZ; the session is
+    pinned UTC so the cast is value-preserving). ``ts="__ts"`` is the
+    synthesized event time of a corpus row, which carries no timestamp:
+    doc_id seconds past 2024-01-01, deterministic, all inside one day."""
+    if ts == "__ts":
+        rows = rows.withColumn(
+            ts,
+            F.expr(
+                "timestampadd(SECOND, cast(doc_id % 86400 as int),"
+                " timestamp'2024-01-01 00:00:00')"
+            ),
+        )
+    return (
+        rows.withColumn(ts, F.col(ts).cast("timestamp"))
+        .withWatermark(ts, delay)
+        .dropDuplicatesWithinWatermark(keys)
     )
 
 
-def near_dup_stream(
-    docs: DataFrame,
-    text_col: str = "text",
-    ts_col: str | None = None,
-    delay: str = "365 days",
-) -> DataFrame:
+def dedup_stream(events: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Stateful streaming deduplication of an event stream on its ``ts``
+    event time: the streaming half of the dedup family — exact dedup of an
+    UNBOUNDED stream with state bounded by a one-hour watermark."""
+    return _watermark_dedup(events, key_cols, "ts", "1 hour")
+
+
+def near_dup_stream(docs: DataFrame) -> DataFrame:
     """Streaming NEAR-duplicate suppression: each arriving document gets a
     per-row rolling min-hash fingerprint (``text.fingerprints`` — a pure
     projection, no aggregation, so it runs on an unbounded stream), and
@@ -340,47 +349,25 @@ def near_dup_stream(
     horizon — the streaming half of the near-dup dedup family, with
     state bounded by the delay window instead of the stream.
 
-    ``ts_col=None`` synthesizes a deterministic event time from doc_id
-    (corpus tables carry no timestamp); real feeds pass their ingest
-    column. Emitted columns are (rolling_fp) only: WHICH doc of a family
-    is first is an arrival-order fact, the SET of families is not —
-    keeping the output deterministic and batch-SQL-checkable (distinct
-    fingerprints).
+    Emitted columns are (rolling_fp) only: WHICH doc of a family is first
+    is an arrival-order fact, the SET of families is not — keeping the
+    output deterministic and batch-SQL-checkable (distinct fingerprints).
     """
     from ..operators.text import fingerprints
 
-    fp = fingerprints(docs, text_col, spread_input=False).select(
+    fp = fingerprints(docs, "text", spread_input=False).select(
         "doc_id", "rolling_fp"
     )
-    if ts_col is None:
-        fp = fp.withColumn(
-            "__ts",
-            F.expr(
-                "timestampadd(SECOND, cast(doc_id % 86400 as int),"
-                " timestamp'2024-01-01 00:00:00')"
-            ),
-        )
-        ts_col = "__ts"
-    return (
-        fp.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        .withWatermark(ts_col, delay)
-        .dropDuplicatesWithinWatermark(["rolling_fp"])
-        .select("rolling_fp")
+    return _watermark_dedup(fp, ["rolling_fp"], "__ts", "365 days").select(
+        "rolling_fp"
     )
 
 
-def line_dedup_stream(
-    docs: DataFrame,
-    text_col: str = "text",
-    ts_col: str | None = None,
-    delay: str = "365 days",
-    delim: str = "\n",
-    min_chars: int = 1,
-) -> DataFrame:
+def line_dedup_stream(docs: DataFrame) -> DataFrame:
     """Streaming LINE-level dedup (round 14, completing the dedup family
     streaming-side the way ``near_dup_stream`` did for fingerprints):
-    each arriving document posexplodes to lines (a pure per-row
-    projection — runs on an unbounded stream), and
+    each arriving document explodes to its ``\\n``-separated lines (a
+    pure per-row projection — runs on an unbounded stream), and
     ``dropDuplicatesWithinWatermark`` keyed on the line's md5 digest
     emits only the FIRST occurrence of each distinct line seen inside
     the watermark horizon. This is the streaming half of the line-dedup
@@ -392,42 +379,24 @@ def line_dedup_stream(
     Emitted columns are (line_hash) only: WHICH document first carried a
     line is an arrival-order fact, the SET of distinct lines is not —
     keeping the output deterministic and batch-SQL-checkable (distinct
-    eligible-line digests). Lines shorter than ``min_chars`` are dropped
-    (separator structure, not content — they are never deduped by the
-    batch twin either). State is one digest per distinct line inside the
-    watermark horizon — bounded by the delay window and the corpus's
-    distinct-line count, never the stream length; a mass-duplicated
-    boilerplate line costs ONE state row no matter its multiplicity (the
-    skew story of the round-14 batch de-skew, for free, because state
-    lookup is a hash probe, not a partition sort).
-
-    ``ts_col=None`` synthesizes a deterministic event time from doc_id
-    (corpus tables carry no timestamp); real feeds pass their ingest
-    column. ``delim`` must be a plain literal (split pattern position).
+    non-empty-line digests). Empty lines are dropped (separator
+    structure, not content — the batch twin never dedups them either).
+    State is one digest per distinct line inside the watermark horizon —
+    bounded by the delay window and the corpus's distinct-line count,
+    never the stream length; a mass-duplicated boilerplate line costs ONE
+    state row no matter its multiplicity (the skew story of the round-14
+    batch de-skew, for free, because state lookup is a hash probe, not a
+    partition sort).
     """
-    cols = ["doc_id"] + ([ts_col] if ts_col else [])
     lines = docs.select(
-        *cols,
-        F.explode(F.split(F.col(text_col), delim, -1)).alias("line"),
-    ).where(F.length("line") >= min_chars)
-    if ts_col is None:
-        lines = lines.withColumn(
-            "__ts",
-            F.expr(
-                "timestampadd(SECOND, cast(doc_id % 86400 as int),"
-                " timestamp'2024-01-01 00:00:00')"
-            ),
-        )
-        ts_col = "__ts"
-    return (
-        lines.select(
-            F.md5("line").alias("line_hash"),
-            F.col(ts_col).cast("timestamp").alias(ts_col),
-        )
-        .withWatermark(ts_col, delay)
-        .dropDuplicatesWithinWatermark(["line_hash"])
-        .select("line_hash")
-    )
+        "doc_id", F.explode(F.split(F.col("text"), "\n", -1)).alias("line")
+    ).where(F.length("line") >= 1)
+    return _watermark_dedup(
+        lines.select(F.md5("line").alias("line_hash"), "doc_id"),
+        ["line_hash"],
+        "__ts",
+        "365 days",
+    ).select("line_hash")
 
 
 def debounce_stream(

@@ -1,8 +1,11 @@
 from __future__ import annotations
 
+import shutil
 import sys
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 REPO = Path(__file__).resolve().parent.parent
@@ -19,6 +22,32 @@ def spark():
     s = get_spark(app_name="pytest", master="local[4]", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def null_sf(tmp_path_factory):
+    """The sf0.01 tables with two NULL-text documents appended, one per
+    source: doc_ids 500 (even) and 501 (odd)."""
+    from .oracle_harness import TABLES
+
+    d = tmp_path_factory.mktemp("sf0.01_null_text")
+    for t in TABLES:
+        if t != "documents":
+            shutil.copy(f"{SF_ORACLE}/{t}.parquet", d / f"{t}.parquet")
+    docs = pq.read_table(f"{SF_ORACLE}/documents.parquet")
+    n = docs.num_rows
+    nulls = pa.table(
+        {
+            "doc_id": [n, n + 1],
+            "text": pa.array([None, None], pa.string()),
+            "lang": ["en", "en"],
+            "source": ["src0", "src1"],
+            "n_chars": [0, 0],
+        },
+        schema=docs.schema,
+    )
+    pq.write_table(pa.concat_tables([docs, nulls]), d / "documents.parquet")
+    return str(d)
 
 
 # ---------------------------------------------------------------- test tiers

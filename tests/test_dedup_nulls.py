@@ -12,16 +12,11 @@ return (doc_id, NULL, 0) for a NULL text where the oracle returns
 
 from __future__ import annotations
 
-import shutil
-
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
 import __spark_entry__ as entrymod
 
-from .conftest import SF_ORACLE
-from .oracle_harness import TABLES, compare, duck_connection
+from .oracle_harness import compare, duck_connection
 
 ROWS = (
     "exact_dedup",
@@ -45,28 +40,6 @@ ROWS = (
     "ngram_counts",
     "doc_fingerprint",
 )
-
-
-@pytest.fixture(scope="module")
-def null_sf(tmp_path_factory):
-    d = tmp_path_factory.mktemp("sf0.01_null_text")
-    for t in TABLES:
-        if t != "documents":
-            shutil.copy(f"{SF_ORACLE}/{t}.parquet", d / f"{t}.parquet")
-    docs = pq.read_table(f"{SF_ORACLE}/documents.parquet")
-    n = docs.num_rows
-    nulls = pa.table(
-        {
-            "doc_id": [n, n + 1],
-            "text": pa.array([None, None], pa.string()),
-            "lang": ["en", "en"],
-            "source": ["src0", "src1"],
-            "n_chars": [0, 0],
-        },
-        schema=docs.schema,
-    )
-    pq.write_table(pa.concat_tables([docs, nulls]), d / "documents.parquet")
-    return str(d)
 
 
 @pytest.fixture(scope="module")

@@ -2,11 +2,13 @@
 
 from __future__ import annotations
 
+import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
-from .conftest import SF_SMOKE
+from .conftest import SF_ORACLE, SF_SMOKE
 
 import __spark_entry__ as entrymod
 from data_lakehouse_hygiene_spark import sinks, streaming
@@ -469,3 +471,75 @@ def test_streaming_debounce_state_never_rewinds(spark, tmp_path):
     # 3 is 30 s after event 1 (the latest seen) -> suppressed; a rewound
     # state would have measured 3 against 2 (530 s) and emitted it
     assert kept == {1}
+
+
+# Stateful dedup rows → (table, stream body as the registry row builds
+# it). Each row's output is a set of keys or unique events, so it does
+# not depend on arrival order.
+_RESTART_ROWS = {
+    "streaming_dedup": (
+        "events",
+        lambda s: streaming.dedup_stream(s, ["event_id"]).select(
+            "event_id", "user_id", "event_type"
+        ),
+    ),
+    "streaming_near_dup": ("documents", streaming.near_dup_stream),
+    "streaming_line_dedup": ("documents", streaming.line_dedup_stream),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_RESTART_ROWS))
+def test_dedup_stream_restart_equals_one_run(spark, tmp_path, name):
+    """Restart from checkpoint: the first half of the table (in event-time
+    order) runs with a checkpoint and stops; then a second file lands —
+    the whole table, so it replays the first half — and the query
+    restarts from the checkpoint. The restored state must suppress the
+    replay: the two runs together emit exactly what one run over both
+    files emits. The later half is never behind the watermark, so no row
+    is dropped as late."""
+    table, body = _RESTART_ROWS[name]
+    rows = load_table(spark, SF_ORACLE, table)
+    if table == "documents":
+        rows = rows.select(
+            "doc_id",
+            F.regexp_replace("text", entrymod._PSEUDO_LINE_PAT, "$1\n").alias(
+                "text"
+            ),
+        )
+    order = "ts" if table == "events" else "doc_id"  # the event time
+    src = tmp_path / "src"
+    src.mkdir()
+
+    def land(df, name_):
+        stage = str(tmp_path / f"stage_{name_}")
+        df.coalesce(1).write.parquet(stage)
+        [part] = [f for f in os.listdir(stage) if f.endswith(".parquet")]
+        os.rename(f"{stage}/{part}", src / f"{name_}.parquet")
+
+    def run(out: str) -> None:
+        stream = spark.readStream.schema(rows.schema).parquet(str(src))
+        q = (
+            body(stream).writeStream.format("parquet")
+            .option("path", str(tmp_path / out))
+            .option("checkpointLocation", str(tmp_path / f"{out}_ckpt"))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    def result(out: str) -> list:
+        return sorted(
+            tuple(r) for r in spark.read.parquet(str(tmp_path / out)).collect()
+        )
+
+    land(rows.sort(order).limit(rows.count() // 2), "a")
+    run("restarted")
+    first = result("restarted")
+    land(rows, "b")
+    run("restarted")
+    run("one_run")
+    one_run = result("one_run")
+    assert len(set(one_run)) == len(one_run)  # the replay was suppressed
+    assert 0 < len(first) < len(one_run)
+    assert result("restarted") == one_run
