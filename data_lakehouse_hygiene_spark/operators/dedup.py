@@ -1878,10 +1878,13 @@ def source_dup_stats(
     window on the digest key for the cross-source fan-out (digest
     partitions are duplicate-frequency-bounded), then one rollup to the
     source grain — which is tiny by definition. No joins.
+
+    A NULL text is not a document: it has no digest, so it is neither
+    counted nor shared across sources.
     """
     h = F.md5(F.col(text_col))
     per = (
-        spread(df)
+        spread(df.where(F.col(text_col).isNotNull()))
         .select(F.col(key_col).alias("source"), h.alias("hh"))
         .groupBy("source", "hh")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -1927,13 +1930,16 @@ def source_overlap(
     source count, never the corpus) → one final tiny aggregate. No
     self-join: the join-free pair generation is the minhash bucket
     pattern, and the output is #sources² rows at most.
+
+    A NULL text is not a document, so it has no head fingerprint
+    (``concat_ws`` would give it the md5 of the empty string).
     """
     key = F.md5(
         F.concat_ws(
             " ", F.slice(F.split(F.col(text_col), " "), 1, head_tokens)
         )
     )
-    d = df.select(
+    d = df.where(F.col(text_col).isNotNull()).select(
         key.alias("k"), F.col(source_col).alias("src")
     ).distinct()
     sets = (

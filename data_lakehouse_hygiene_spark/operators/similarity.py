@@ -7,15 +7,20 @@ each pairwise product is floor-quantized to 12 decimals and summed as an
 integer DECIMAL — an order-independent exact sum, so Spark and DuckDB agree
 bit-for-bit regardless of aggregation order. sqrt/division are IEEE
 correctly-rounded, hence identical. Final cosines are quantized to 6
-decimals before any threshold/rank comparison.
+decimals before any threshold/rank comparison. Each step of that
+arithmetic is written once per engine side: ``dot_exact`` / ``norms`` /
+``_cosine`` as columns, ``_qdot`` / ``_norm`` / ``_cosq`` in NumPy for the
+Arrow kernels. A vector whose quantized norm is 0 has no cosine, so it is
+in no pair and no candidate set (``_cosine``, ``_norm``).
 
 Scale design (1e9+ vectors):
 - Brute force is O(n·q) — fine for a broadcast-able query set (q ≤ ~1e4),
   the fact side streams through one scan, top-k via per-partition partial
   rank (window) after a shuffle on query_id.
 - LSH: 8 deterministic hyperplanes → 256 buckets; candidates meet via a
-  bucket equi-join; recall/latency tuned by planes and multi-probe. An IVF
-  variant would replace hyperplanes with k-means centroids (Spark MLlib)
+  bucket equi-join; recall/latency tuned by planes and multi-probe.
+- IVF: ``ivf_ann`` and ``ivfpq_ann`` replace the hyperplanes with a
+  coarse cluster column (``kmeans_fit_assign`` is the in-repo trainer)
   — same join shape.
 """
 
@@ -31,7 +36,6 @@ from .cleaning import _estimated_bytes, spread
 
 DOT_SCALE = int(1e12)
 N_PLANES = 8
-HEX = "0123456789abcdef"
 
 
 def _qprod(x: Column, y: Column) -> Column:
@@ -56,12 +60,104 @@ def dot_exact(a: Column, b: Column) -> Column:
     return acc.cast("double") / F.lit(float(DOT_SCALE))
 
 
-def norms(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Per-vector L2 norm, computed once and joined — never recomputed per
-    pair."""
+def norms(df: DataFrame, vec_col: str = "embedding", *carry: str) -> DataFrame:
+    """(vec_id, vec_col, norm, *carry): the per-vector L2 norm, computed
+    once and joined — never recomputed per pair."""
     v = F.col(vec_col)
     return df.select(
-        "vec_id", v.alias(vec_col), F.sqrt(dot_exact(v, v)).alias("norm")
+        "vec_id",
+        v.alias(vec_col),
+        F.sqrt(dot_exact(v, v)).alias("norm"),
+        *carry,
+    )
+
+
+def _cosine(va: Column, vb: Column, na: Column, nb: Column) -> Column:
+    """The family's exact cosine column: ``dot_exact`` over the norm
+    product, quantized to 6 decimals.
+
+    The zero-norm rule: a vector whose quantized norm is 0 (every
+    |component| below ~7e-7) — or NULL, the Arrow form of ``_norm``'s NaN
+    — has no cosine. The guard makes it NULL, which no threshold passes
+    and ``_keyed_cosine_topk`` drops. The rule sits on the denominator,
+    not as a ``norm > 0`` filter: Catalyst pushes a filter on the aliased
+    norm below the Project that computes it, evaluating the self-dot
+    twice."""
+    den = na * nb
+    return quantize(dot_exact(va, vb) / F.when(den > 0, den), 6)
+
+
+def _probes(bucket: Column, n_planes: int) -> Column:
+    """The bucket and its n_planes Hamming-1 neighbours (one flipped
+    hyperplane bit each) — the multi-probe set."""
+    return F.array(
+        bucket, *[bucket.bitwiseXOR(F.lit(2**p)) for p in range(n_planes)]
+    )
+
+
+def _rows(col, dtype: str = "float64"):
+    """A batch's vectors (an Arrow array column, or any sequence of
+    them) as an (n, dim) matrix."""
+    import numpy as np
+
+    return np.stack([np.asarray(v, dtype=dtype) for v in col])
+
+
+def _qdot(x, y):
+    """``dot_exact``'s integer sum in NumPy: Σ floor(x·y·1e12 + 0.5) over
+    the last axis as int64. Each product is the same elementwise IEEE
+    double op as ``_qprod`` and the int64 sum is order-free, so self-dots,
+    pair dots and plane projections equal the column algebra bit for
+    bit."""
+    import numpy as np
+
+    units = np.floor(x * y * float(DOT_SCALE) + 0.5)
+    return units.astype(np.int64).sum(axis=-1)
+
+
+def _norm(v):
+    """Row norms with ``norms()``' bits: sqrt(self-dot / 1e12). A zero
+    quantized self-dot gives NaN — the zero-norm rule of ``_cosine``:
+    every ``_cosq`` it enters is NaN and fails every comparison, and
+    Arrow hands it to Spark as a NULL norm."""
+    import numpy as np
+
+    q = _qdot(v, v)
+    return np.where(q > 0, np.sqrt(q / float(DOT_SCALE)), np.nan)
+
+
+def _cosq(dot, na, nb):
+    """``_cosine`` in NumPy, the same double ops in the same order:
+    floor((dot / 1e12) / (na·nb) · 1e6 + 0.5) / 1e6. NaN when a norm is
+    NaN."""
+    import numpy as np
+
+    return np.floor((dot / float(DOT_SCALE)) / (na * nb) * 1e6 + 0.5) / 1e6
+
+
+_PAIRS = "vec_a long, vec_b long, cosine double"
+
+
+def _empty(schema: str):
+    """The typed empty pandas frame of a kernel's output ``schema``
+    (integer and double columns)."""
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            name: pd.Series(dtype="float64" if t == "double" else "int64")
+            for name, t in (f.split() for f in schema.split(","))
+        }
+    )
+
+
+def _pair_frame(a, b, cos):
+    """Scored pairs as (vec_a < vec_b, cosine) rows."""
+    import numpy as np
+    import pandas as pd
+
+    return pd.DataFrame(
+        {"vec_a": np.minimum(a, b), "vec_b": np.maximum(a, b), "cosine": cos}
     )
 
 
@@ -97,16 +193,22 @@ def _keyed_cosine_topk(
     ``lsh_ann``'s probed bucket): the corpus (vec_id, vec_col, norm,
     key) meets the broadcast queries (query_id, qv, qnorm, key) in one
     equi-join on the key, self-matches excluded, cosine quantized to 6
-    decimals, then ``_topk``."""
-    cos = dot_exact(F.col("qv"), F.col(vec_col)) / (
-        F.col("qnorm") * F.col("norm")
-    )
+    decimals, then ``_topk``. A NULL cosine (zero norm) ranks last, so
+    dropping it after the window leaves every other rank as it was —
+    and a filter there is not pushed below the Project that computes
+    the dot."""
     scored = (
         corpus.join(F.broadcast(queries), on=key)
         .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", quantize(cos, 6).alias("cosine"))
+        .select(
+            "query_id",
+            "vec_id",
+            _cosine(
+                F.col("qv"), F.col(vec_col), F.col("qnorm"), F.col("norm")
+            ).alias("cosine"),
+        )
     )
-    return _topk(scored, "cosine", k)
+    return _topk(scored, "cosine", k).where(F.col("cosine").isNotNull())
 
 
 N_BLOCKS = 16
@@ -248,13 +350,6 @@ def _nearest(X, C):
     return idx, dist
 
 
-def _int_rows(col):
-    """An Arrow batch's array<bigint> column as an (n, dim) int64 matrix."""
-    import numpy as np
-
-    return np.stack([np.asarray(v, dtype=np.int64) for v in col])
-
-
 def _kmeans_fit_local(sx, k: int, n_iter: int):
     """Driver-local exact-integer Lloyd over the collected sample matrix
     ``sx`` (int64, rows already vec_id-ascending so the id-ordered init
@@ -276,7 +371,7 @@ def _kmeans_fit_local(sx, k: int, n_iter: int):
     return cents
 
 
-def _np_assign(base: DataFrame, cents_arr, kscale: float) -> DataFrame:
+def _np_assign(base: DataFrame, cents_arr) -> DataFrame:
     """Scan-shaped Arrow assignment pass: per row, the ``_nearest``
     centroid plus the member-centroid cosine ``cm`` for the radius
     aggregate. The centroid matrix ships inside the serialized function
@@ -291,8 +386,7 @@ def _np_assign(base: DataFrame, cents_arr, kscale: float) -> DataFrame:
 
     def gen(it):
         for pdf in it:
-            V = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            Q = np.floor(V * kscale + 0.5).astype(np.int64)
+            Q = _kquant(_rows(pdf["v"]))
             na2 = (Q * Q).sum(axis=1)
             cl, dmin = _nearest(Q, C)
             nc2 = nc2_all[cl]
@@ -326,28 +420,23 @@ def cosine_pairs(
     df: DataFrame,
     vec_col: str = "embedding",
     threshold: float = 0.45,
-    n_blocks: int | str = "auto",
-    max_bytes: int = COSINE_PAIRS_MAX_BYTES,
-    small_bytes: int = COSINE_SMALL_BYTES,
-    fit_iters: int = 2,
-    block_rows: int = BLOCK_TARGET_ROWS,
-    max_shuffle_bytes: int = COSINE_SHUFFLE_MAX_BYTES,
 ) -> DataFrame:
     """Exact embedding-cosine near-duplicate pairs (a<b) above a threshold:
     k-means cluster blocking with triangle-inequality block-pair pruning +
     an Arrow-vectorized GEMM-screened block kernel. EXACT: every stage
     before the final filter is a provably-safe over-approximation, and
     every emitted cosine is the engine's quantized arithmetic bit-for-bit
-    (asserted equal to the pure-Catalyst witness in tests).
+    (asserted equal to the pure-Catalyst witness in tests). A vector whose
+    quantized norm is 0 has no cosine and is in no pair.
 
     Size-gated plan shape (the ngram_jaccard precedent): the k-means fit +
     radius pass cost ~3 fixed driver-coordinated jobs, pure overhead when
     the whole corpus fits a handful of kernel tasks — inputs estimated
-    under ``small_bytes`` (default 64 MiB ≈ 250k vectors) skip them and
-    hash-block on ``pmod(vec_id, P)`` (one job end-to-end, no pruning);
-    larger inputs — where pruning can remove real work and fixed jobs are
-    noise — take the cluster-blocked pruned path. Both paths share the
-    replication scheme and kernel, and the result set is
+    under ``COSINE_SMALL_BYTES`` (64 MiB ≈ 250k vectors) skip them and
+    hash-block on ``pmod(vec_id, N_BLOCKS)`` (one job end-to-end, no
+    pruning); larger inputs — where pruning can remove real work and
+    fixed jobs are noise — take the cluster-blocked pruned path. Both
+    paths share the replication scheme and kernel, and the result set is
     blocking-invariant, so the gate changes plan shape only.
 
     Why not LSH blocking: at threshold 0.45 the pair angle is ~63°, so each
@@ -366,52 +455,48 @@ def cosine_pairs(
       cosine UPPER BOUND clears below the threshold never launch at all;
     - each surviving unordered block pair (i ≤ j) becomes ONE cogroup key
       — a vector in block b replicates only to the surviving pairs
-      containing b (≤ P rows, vs the old fixed P-row grid which also
-      visited every (i, j) AND (j, i), paying each cross compare twice);
-    - in the kernel the m×n cosine matrix comes from a float64 GEMM
-      (``A @ B.T`` — BLAS-blocked SIMD, ~20× the elementwise-quantized
-      broadcast it replaces and with no m×n×d temp), screened at
-      ``threshold − 1e-4``; only screen survivors get the
-      exact floor-quantized int64 recompute, and the final ≥ threshold
-      filter runs on exact values. |GEMM − exact| ≤ d·0.5/1e12 (+ ~1e-14
-      GEMM rounding), so a qualifying pair (whose exact cosine is ≥
-      threshold − 5e-7 pre-quantization) can never fall below the screen.
+      containing b (≤ P rows), and each cross compare runs once;
+    - in the kernel the m×n cosine matrix comes from a float32 GEMM on
+      normalized rows (``A @ B.T`` — BLAS-blocked SIMD, with no m×n×d
+      temp), screened at ``threshold − 1e-4`` less its float32 and
+      quantization error bounds, so a qualifying pair can never fall
+      below the screen; only screen survivors get the exact
+      floor-quantized int64 recompute, and the final ≥ threshold filter
+      runs on exact values.
 
     Scale shape: shuffle volume ≤ O(n·P) vector rows; P(P+1)/2 tasks max,
     fewer after pruning; per-task memory is one block pair plus an m×n
-    chunked double matrix (rows chunked at 4096).
+    chunked score matrix.
 
-    Block-count self-sizing (round 9): ``n_blocks="auto"`` sizes the
-    k-means k as ceil(n / block_rows) clamped to [N_BLOCKS,
-    KMEANS_MAX_BLOCKS] — the resolve_planes occupancy rule — and, after
-    assignment, any cluster still holding > ``block_rows`` members is
-    hash-split (pmod(xxhash64(vec_id), s)) into s = ceil(m / block_rows)
+    Block-count self-sizing: the k-means k is ceil(n / BLOCK_TARGET_ROWS)
+    clamped to [N_BLOCKS, KMEANS_MAX_BLOCKS] — the resolve_planes
+    occupancy rule — and, after assignment, any cluster still holding
+    more than BLOCK_TARGET_ROWS members is hash-split
+    (pmod(xxhash64(vec_id), s)) into s = ceil(m / BLOCK_TARGET_ROWS)
     sub-blocks that inherit the parent's centroid + radius, so the
     triangle-inequality bound stays valid and the answer stays EXACT
-    while no single task ever owns a super-linear share of the pair
-    work. (Pre-round-9 the fixed 16-block grid let one filled cluster
-    serialize the whole compare on one core: measured 160 s at the
-    200k-vector rehearsal, 2.9 s at 20k — a 54× decade. Splitting
-    restores task-count ∝ work.) Total expanded blocks are capped at
-    SPLIT_MAX_BLOCKS by growing the effective block_rows — bounding the
-    pid-map plan literals and the O(P²) driver pruning loop. The
-    quadratic remains quadratic on spread-out corpora, so inputs
-    estimated above ``max_bytes`` (default 4 GiB ≈ 1e7 vectors) raise
-    with a pointer to the sub-quadratic alternatives (``lsh_near_dup``,
+    while no single task owns a super-linear share of the pair work: one
+    filled cluster otherwise serializes the whole compare on one core
+    (measured 160 s at a 200k-vector rehearsal, 2.9 s at 20k — a 54×
+    decade). Total expanded blocks are capped at SPLIT_MAX_BLOCKS by
+    growing the effective block size — bounding the pid-map plan
+    literals and the O(P²) driver pruning loop. The quadratic remains
+    quadratic on spread-out corpora, so inputs estimated above
+    ``COSINE_PAIRS_MAX_BYTES`` (4 GiB ≈ 1e7 vectors) raise with a
+    pointer to the sub-quadratic alternatives (``lsh_near_dup``,
     ``semantic_dedup``, ``lsh_ann``) rather than launching an infeasible
     job.
 
-    SECOND gate, on the PLANNED shuffle (round 12): input bytes are a
-    proxy the pruner can defeat — 2M rotated random-ish 64-d vectors
-    (~500 MB, well under ``max_bytes``) have near-π cluster radii, the
-    triangle bound clears ~nothing, and the cogroup planned ~490M
-    replicated rows ≈ 140 GB of shuffle (measured: local disk filled
-    mid-stage, SCALING.md round-12). The driver already holds the block
-    member counts and the surviving pair list, so the exact replicated
-    volume Σ_{(i,j)} (m_i + m_j)·row_bytes is computed BEFORE launch and
-    refused above ``max_shuffle_bytes`` (default
-    ``COSINE_SHUFFLE_MAX_BYTES``, 64 GiB) — the quantity that actually
-    kills the job, visible only after pruning.
+    SECOND gate, on the PLANNED shuffle: input bytes are a proxy the
+    pruner can defeat — 2M rotated random-ish 64-d vectors (~500 MB, well
+    under the input gate) have near-π cluster radii, the triangle bound
+    clears ~nothing, and the cogroup planned ~490M replicated rows ≈
+    140 GB of shuffle (measured: local disk filled mid-stage, SCALING.md
+    round-12). The driver already holds the block member counts and the
+    surviving pair list, so the exact replicated volume
+    Σ_{(i,j)} (m_i + m_j)·row_bytes is computed BEFORE launch and refused
+    above ``COSINE_SHUFFLE_MAX_BYTES`` (64 GiB) — the quantity that
+    actually kills the job, visible only after pruning.
     """
     import numpy as np
     import pandas as pd
@@ -422,24 +507,21 @@ def cosine_pairs(
     # the gate protects against pointing the exact path at a
     # corpus-scale TABLE, and tables carry file-size stats.
     est = _estimated_bytes(df)
-    if est > max_bytes:
+    if est > COSINE_PAIRS_MAX_BYTES:
         raise ValueError(
             f"cosine_pairs is the EXACT quadratic path: estimated input "
-            f"{est} B exceeds max_bytes={max_bytes} B (~1e7 vectors). Use "
+            f"{est} B exceeds COSINE_PAIRS_MAX_BYTES="
+            f"{COSINE_PAIRS_MAX_BYTES} B (~1e7 vectors). Use "
             f"lsh_near_dup / semantic_dedup (near-dup thresholds) or "
-            f"lsh_ann (top-k retrieval), or raise max_bytes explicitly "
+            f"lsh_ann (top-k retrieval), or raise COSINE_PAIRS_MAX_BYTES "
             f"after sizing the cluster for the O(n^2) compare."
         )
 
-    scale = float(DOT_SCALE)
-    qdigits = float(1e6)
-    kscale = float(KMEANS_SCALE)
-
-    if est <= small_bytes:
+    if est <= COSINE_SMALL_BYTES:
         # small input: hash blocks, full (i ≤ j) grid, zero fixed jobs.
         # No spread() either — the cogroup shuffle on pid is what fans the
         # kernel tasks out, so pre-repartitioning only adds an exchange.
-        p = max(1, N_BLOCKS if n_blocks == "auto" else int(n_blocks))
+        p = N_BLOCKS
         assign = df.select(
             "vec_id", F.col(vec_col).alias("v")
         ).withColumn(
@@ -450,16 +532,13 @@ def cosine_pairs(
         base = spread(df, key="vec_id").select(
             "vec_id", F.col(vec_col).alias("v")
         )
-        if n_blocks == "auto":
-            # occupancy-sized k (one count() job — trivial next to the
-            # pair stage it sizes; the resolve_planes rule)
-            n_rows = int(base.count())
-            k_fit = max(
-                N_BLOCKS,
-                min(KMEANS_MAX_BLOCKS, -(-n_rows // max(block_rows, 1))),
-            )
-        else:
-            k_fit = int(n_blocks)
+        # occupancy-sized k (one count() job — trivial next to the pair
+        # stage it sizes; the resolve_planes rule)
+        n_rows = int(base.count())
+        k_fit = max(
+            N_BLOCKS,
+            min(KMEANS_MAX_BLOCKS, -(-n_rows // BLOCK_TARGET_ROWS)),
+        )
         # Blocking-quality fit runs DRIVER-LOCAL on a deterministic
         # hash-ordered sample (≤ 8192 × dim floats ≈ 2 MB driver traffic —
         # the dedup_clusters-style bounded collect); the numpy Lloyd loop
@@ -479,13 +558,9 @@ def cosine_pairs(
                 F.col("vec_id").alias("vec_b"),
                 F.lit(None).cast("double").alias("cosine"),
             ).where(F.lit(False))
-        order = np.argsort(np.array([r["vec_id"] for r in samp]))
-        sx = np.floor(
-            np.array([samp[i]["v"] for i in order], dtype=np.float64)
-            * kscale
-            + 0.5
-        ).astype(np.int64)
-        cents_arr = _kmeans_fit_local(sx, k_fit, fit_iters)
+        samp.sort(key=lambda r: r["vec_id"])
+        sx = _kquant(_rows([r["v"] for r in samp]))
+        cents_arr = _kmeans_fit_local(sx, k_fit, 2)
         kp = len(cents_arr)
         dim = sx.shape[1]
 
@@ -493,9 +568,7 @@ def cosine_pairs(
         # radius agg plus both cogroup sides) and each would otherwise
         # re-run the Arrow distance pass over the full corpus. The radius
         # collect below executes first and materializes it.
-        assign = _np_assign(base, cents_arr, kscale).localCheckpoint(
-            eager=False
-        )
+        assign = _np_assign(base, cents_arr).localCheckpoint(eager=False)
 
         # Per-cluster angular radius: min member-centroid cosine + min
         # quantized norm (for the rotation pad) + member count (for the
@@ -521,15 +594,15 @@ def cosine_pairs(
         # kept parent pairs then expand into sub-block pairs below.
         kept_parent = _prune_block_pairs(cents, min_cos, threshold, rot=rot)
 
-        # Oversized-cluster split: s_i = ceil(m_i / block_rows) hash
-        # sub-blocks per cluster, inheriting the parent's geometry. If
-        # the expanded total would blow past SPLIT_MAX_BLOCKS, grow the
-        # effective block_rows instead (the compare work per task grows,
+        # Oversized-cluster split: s_i = ceil(m_i / BLOCK_TARGET_ROWS)
+        # hash sub-blocks per cluster, inheriting the parent's geometry.
+        # If the expanded total would blow past SPLIT_MAX_BLOCKS, grow the
+        # effective block size instead (the compare work per task grows,
         # the plan stays bounded).
         import math as _math
 
         counts = [radii.get(ci, (None, None, 0))[2] for ci in range(kp)]
-        eff_rows = max(block_rows, 1)
+        eff_rows = BLOCK_TARGET_ROWS
         splits = [max(1, _math.ceil(c / eff_rows)) for c in counts]
         if sum(splits) > SPLIT_MAX_BLOCKS:
             scale_up = sum(splits) / float(SPLIT_MAX_BLOCKS)
@@ -602,15 +675,17 @@ def cosine_pairs(
             )
             * row_bytes
         )
-        if planned > max_shuffle_bytes:
+        if planned > COSINE_SHUFFLE_MAX_BYTES:
             raise ValueError(
                 f"cosine_pairs planned replicated shuffle ~{planned/2**30:.1f}"
                 f" GiB ({len(kept)} surviving block pairs) exceeds "
-                f"max_shuffle_bytes={max_shuffle_bytes/2**30:.0f} GiB — the "
+                f"COSINE_SHUFFLE_MAX_BYTES="
+                f"{COSINE_SHUFFLE_MAX_BYTES/2**30:.0f} GiB — the "
                 f"block pruner removed too little (pruning-hostile vector "
                 f"geometry). Use lsh_near_dup / semantic_dedup (near-dup "
                 f"thresholds) or lsh_ann (top-k retrieval), or raise "
-                f"max_shuffle_bytes after sizing real shuffle capacity."
+                f"COSINE_SHUFFLE_MAX_BYTES after sizing real shuffle "
+                f"capacity."
             )
     a_pids: dict[int, list[int]] = {}
     b_pids: dict[int, list[int]] = {}
@@ -652,33 +727,18 @@ def cosine_pairs(
     def _block_kernel(
         key: tuple, left: pd.DataFrame, right: pd.DataFrame
     ) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "vec_a": pd.Series(dtype="int64"),
-                "vec_b": pd.Series(dtype="int64"),
-                "cosine": pd.Series(dtype="float64"),
-            }
-        )
         if len(left) == 0 or len(right) == 0:
-            return empty
+            return _empty(_PAIRS)
         bi, bj = divmod(int(key[0]), p)
-        A = np.vstack(left["v"].to_numpy()).astype(np.float64)
-        B = np.vstack(right["v_b"].to_numpy()).astype(np.float64)
+        A = _rows(left["v"])
+        B = _rows(right["v_b"])
         ia = left["vec_id"].to_numpy()
         ib = right["vec_id_b"].to_numpy()
-        # norms exactly as norms(): sqrt((Σ floor(v·v·S + .5)) / S).
-        # A zero QUANTIZED norm (all |components| < ~7e-7) is degenerate at
-        # this precision — poison it to NaN so both the screen and the
-        # exact recompute drop the row instead of dividing to ±inf
+        # A zero quantized norm is NaN (``_norm``), so the screen and the
+        # exact recompute both drop the row instead of dividing to ±inf
         # (hypothesis-found: a [6e-8, ...] vector paired at cosine = inf).
-        na = np.sqrt(
-            np.floor(A * A * scale + 0.5).astype(np.int64).sum(axis=1) / scale
-        )
-        nb = np.sqrt(
-            np.floor(B * B * scale + 0.5).astype(np.int64).sum(axis=1) / scale
-        )
-        na[na == 0.0] = np.nan
-        nb[nb == 0.0] = np.nan
+        na = _norm(A)
+        nb = _norm(B)
         # The screen GEMM runs on FLOAT32 NORMALIZED copies: the m×n
         # score matrix is the bandwidth bottleneck of the whole operator
         # (measured round 9: f64 full-grid screen 90.6 s → f32 26.4 s at
@@ -691,7 +751,7 @@ def cosine_pairs(
             An = (A * (1.0 / na)[:, None]).astype(np.float32)
             Bn = (B * (1.0 / nb)[:, None]).astype(np.float32)
         Bt = np.ascontiguousarray(Bn.T)
-        out = [empty]
+        out = [_empty(_PAIRS)]
         # Screen error budget, all in absolute cosine units:
         # - f32 normalize + accumulate: ≤ (d + 4)·2⁻²⁴ on unit rows
         #   (normalization u each side + γ_d dot accumulation, |cos| ≤ 1)
@@ -702,7 +762,7 @@ def cosine_pairs(
         #   0.61). Bounded per row-chunk via the chunk-min right norm
         #   (larger slack = safe over-approximation).
         # _SCREEN_MARGIN (1e-4) dominates both on unit-norm embeddings.
-        qerr = A.shape[1] * 0.6 / scale
+        qerr = A.shape[1] * 0.6 / float(DOT_SCALE)
         f32err = (A.shape[1] + 4) * 2.0**-24
         # BOTH matrix dimensions are chunked: rows at 4096, columns at
         # 1024 so the f32 score chunk (16 MB) stays cache-friendly — the
@@ -738,33 +798,20 @@ def cosine_pairs(
                 if len(r) == 0:
                     continue
                 # exact engine arithmetic, only for screen survivors
-                dotq = (
-                    np.floor(Ac[r] * Bc[c] * scale + 0.5)
-                    .astype(np.int64)
-                    .sum(axis=1)
-                )
-                cos = (dotq / scale) / (nac[r] * nbc[c])
-                cosq = np.floor(cos * qdigits + 0.5) / qdigits
+                cosq = _cosq(_qdot(Ac[r], Bc[c]), nac[r], nbc[c])
                 keepm = cosq >= threshold
-                if not keepm.any():
-                    continue
-                va = iac[r][keepm]
-                vb = ibc[c][keepm]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "vec_a": np.minimum(va, vb),
-                            "vec_b": np.maximum(va, vb),
-                            "cosine": cosq[keepm],
-                        }
+                if keepm.any():
+                    out.append(
+                        _pair_frame(
+                            iac[r][keepm], ibc[c][keepm], cosq[keepm]
+                        )
                     )
-                )
         return pd.concat(out, ignore_index=True)
 
     return (
         a.groupBy("pid")
         .cogroup(b.groupBy("pid"))
-        .applyInPandas(_block_kernel, "vec_a long, vec_b long, cosine double")
+        .applyInPandas(_block_kernel, _PAIRS)
     )
 
 
@@ -772,16 +819,16 @@ def cosine_pairs_catalyst(
     df: DataFrame,
     vec_col: str = "embedding",
     threshold: float = 0.45,
-    n_blocks: int = N_BLOCKS,
 ) -> DataFrame:
-    """Pure-Catalyst formulation of ``cosine_pairs`` (same block-pair
-    replication, candidates meet via a shuffle-hash equi-join and the dot
-    product runs as in-row expression lambdas). Kept as the no-Python
-    fallback and as the equality witness for the Arrow kernel — outputs
-    are asserted bit-identical in tests."""
+    """Pure-Catalyst formulation of ``cosine_pairs`` (the same N_BLOCKS
+    block-pair replication; candidates meet via a shuffle-hash equi-join
+    and the dot product runs as in-row expression lambdas). Nothing falls
+    back to it: it is the equality witness for the Arrow kernel, whose
+    outputs tests assert bit-identical to it. Its result does not depend
+    on the blocking."""
     n = norms(df, vec_col)
-    blk = F.pmod(F.col("vec_id"), F.lit(n_blocks))
-    other = F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)))
+    blk = F.pmod(F.col("vec_id"), F.lit(N_BLOCKS))
+    other = F.explode(F.sequence(F.lit(0), F.lit(N_BLOCKS - 1)))
     a = n.select(
         F.col("vec_id").alias("vec_a"),
         F.col(vec_col).alias("va"),
@@ -797,19 +844,12 @@ def cosine_pairs_catalyst(
         blk.alias("k2"),
     )
     pairs = a.hint("shuffle_hash").join(b, on=["k1", "k2"]).where(
-        (F.col("vec_a") < F.col("vec_b"))
-        # zero quantized norms are degenerate at DOT_SCALE precision:
-        # drop them (mirrors the kernel's NaN-poisoned norms) instead of
-        # letting the division emit cosine = ±inf rows
-        & (F.col("norm_a") > 0)
-        & (F.col("norm_b") > 0)
+        F.col("vec_a") < F.col("vec_b")
     )
-    cos = dot_exact(F.col("va"), F.col("vb")) / (
-        F.col("norm_a") * F.col("norm_b")
+    cos = _cosine(F.col("va"), F.col("vb"), F.col("norm_a"), F.col("norm_b"))
+    return pairs.select("vec_a", "vec_b", cos.alias("cosine")).where(
+        F.col("cosine") >= threshold
     )
-    return pairs.select(
-        "vec_a", "vec_b", quantize(cos, 6).alias("cosine")
-    ).where(F.col("cosine") >= threshold)
 
 
 def cosine_topk(
@@ -825,13 +865,12 @@ def cosine_topk(
     ``_norm_bucket_frame`` economics — interpreted HOF lambdas paid
     1+|Q| O(dim) array walks per corpus row, ~7 s of the sf10 row):
     the ≤|Q| query vectors collect driver-side (the pq_ann/ivfpq_ann
-    bounded-queries convention; their norms come from the same
-    column-algebra chain on the PUSHED filtered scan) and ship in the
-    kernel closure; per batch NumPy replays the exact ``_qprod``
-    integer dots, the int64→double/scale division, the single
-    (qnorm·norm) denominator multiply, and the floor(x·1e6 + 0.5)/1e6
-    quantize — every step an elementwise IEEE double op, bit-identical
-    to the column algebra (property-tested). The k-bounded per-query
+    bounded-queries convention; the predicate pushes into the scan) and
+    ship in the kernel closure; per batch NumPy replays the exact
+    column algebra — ``_qdot`` dots, ``_norm`` norms and the ``_cosq``
+    quantize, every step an elementwise IEEE double op, bit-identical
+    (property-tested). A zero-norm vector has no cosine: it is never a
+    candidate, and as a query it yields no rows. The k-bounded per-query
     rank window stays in Spark."""
     import numpy as np
     import pandas as pd
@@ -840,53 +879,27 @@ def cosine_topk(
         query_pred = F.col("vec_id") < 3
     df = _present(df, vec_col)
     queries = (
-        norms(df.where(query_pred), vec_col)
-        .orderBy("vec_id")
+        df.where(query_pred).select("vec_id", vec_col).orderBy("vec_id")
         .collect()
     )
-    out_schema = "query_id bigint, vec_id bigint, cosine double, rank int"
+    scored_schema = "query_id bigint, vec_id bigint, cosine double"
     if not queries:
-        return df.sparkSession.createDataFrame([], out_schema)
-    Q = [
-        (
-            int(r["vec_id"]),
-            np.asarray(list(r[vec_col]), dtype=np.float64),
-            float(r["norm"]),
+        return df.sparkSession.createDataFrame(
+            [], scored_schema + ", rank int"
         )
-        for r in queries
-    ]
-    scale = float(DOT_SCALE)
+    qids = [int(r["vec_id"]) for r in queries]
+    qv = _rows([r[vec_col] for r in queries])
+    qn = _norm(qv)
 
     def gen(it):
         for pdf in it:
-            V = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
+            V = _rows(pdf[vec_col])
             ids = pdf["vec_id"].to_numpy()
-            qself = (
-                np.floor(V * V * scale + 0.5).astype(np.int64).sum(axis=1)
-            )
-            nrm = np.sqrt(qself.astype(np.float64) / scale)
-            # zero-norm guard (mirrors cosine_pairs' norm > 0 filter): a
-            # vector whose norm quantizes to 0 while some dot quantizes
-            # nonzero would otherwise yield ±inf, which survives Arrow
-            # and ranks first under desc
-            nz = qself != 0
-            frames = []
-            for qid, qv, qnorm in Q:
-                if qnorm == 0.0:
-                    continue
-                acc = (
-                    np.floor(V * qv[None, :] * scale + 0.5)
-                    .astype(np.int64)
-                    .sum(axis=1)
-                )
-                cos = np.where(
-                    nz, (acc.astype(np.float64) / scale)
-                    / (qnorm * np.where(nz, nrm, 1.0)), 0.0
-                )
-                cosq = np.floor(cos * 1e6 + 0.5) / 1e6
-                m = (ids != qid) & nz
+            nrm = _norm(V)
+            frames = [_empty(scored_schema)]
+            for qid, q, qnorm in zip(qids, qv, qn):
+                cosq = _cosq(_qdot(V, q), qnorm, nrm)
+                m = (ids != qid) & ~np.isnan(cosq)
                 frames.append(
                     pd.DataFrame(
                         {
@@ -896,21 +909,9 @@ def cosine_topk(
                         }
                     )
                 )
-            yield (
-                pd.concat(frames, ignore_index=True)
-                if frames
-                else pd.DataFrame(
-                    {
-                        "query_id": pd.Series(dtype="int64"),
-                        "vec_id": pd.Series(dtype="int64"),
-                        "cosine": pd.Series(dtype="float64"),
-                    }
-                )
-            )
+            yield pd.concat(frames, ignore_index=True)
 
-    scored = df.select("vec_id", vec_col).mapInPandas(
-        gen, "query_id bigint, vec_id bigint, cosine double"
-    )
+    scored = df.select("vec_id", vec_col).mapInPandas(gen, scored_schema)
     return _topk(scored, "cosine", k)
 
 
@@ -993,15 +994,18 @@ def quantize_embeddings(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     )
 
 
-def resolve_planes(
-    df: DataFrame, n_planes, target_occupancy: int = 64
-) -> int:
+# resolve_planes' occupancy target: "auto" sizes the plane count so a
+# bucket expects at most this many vectors.
+PLANES_TARGET_OCCUPANCY = 64
+
+
+def resolve_planes(df: DataFrame, n_planes) -> int:
     """Resolve the hyperplane count: an integer passes through; the
     string ``"auto"`` sizes it from the corpus so expected bucket
-    occupancy n/2^planes stays ≤ ``target_occupancy`` — the simhash
-    band-width rule, automated. The sf10 rehearsal measured WHY: 200k
-    vectors on the 8-plane default is ~780/bucket and 514 s, while the
-    occupancy-bounded 12 planes runs 61.7 s (SCALING.md).
+    occupancy n/2^planes stays ≤ ``PLANES_TARGET_OCCUPANCY`` — the
+    simhash band-width rule, automated. The sf10 rehearsal measured WHY:
+    200k vectors on the 8-plane default is ~780/bucket and 514 s, while
+    the occupancy-bounded 12 planes runs 61.7 s (SCALING.md).
 
     Costs one ``count()`` job (a map-side-combined aggregate over the
     scan — trivial next to the pair stage it sizes). Auto mode changes
@@ -1014,10 +1018,33 @@ def resolve_planes(
         import math
 
         n = max(int(df.count()), 1)
-        if n <= target_occupancy:
+        if n <= PLANES_TARGET_OCCUPANCY:
             return N_PLANES
-        return max(N_PLANES, min(20, math.ceil(math.log2(n / target_occupancy))))
+        return max(
+            N_PLANES,
+            min(20, math.ceil(math.log2(n / PLANES_TARGET_OCCUPANCY))),
+        )
     return int(n_planes)
+
+
+def _norm_bucket(v, n_planes: int):
+    """``norms()`` + ``lsh_bucket()`` for a batch matrix: the ``_norm``
+    of each row and its n_planes-bit bucket (bit p = ``_qdot`` projection
+    on plane p > 0). Rows wider than the plane tables fail loudly, the
+    ``lsh_bucket`` assert_true contract."""
+    import numpy as np
+
+    dim = v.shape[1]
+    if dim > _MAX_DIM:
+        raise ValueError(
+            f"vector dim {dim} exceeds the {_MAX_DIM}-wide plane tables"
+            " (lsh_bucket dim guard)"
+        )
+    bucket = np.zeros(len(v), dtype=np.int64)
+    for p in range(n_planes):
+        plane = np.asarray(_plane_values(p)[:dim], dtype=np.float64)
+        bucket |= (_qdot(v, plane) > 0).astype(np.int64) << p
+    return _norm(v), bucket
 
 
 # Above this estimated input size lsh_near_dup_pairs switches from the
@@ -1037,61 +1064,33 @@ def _lsh_pairs_kernel(
     with the candidate evaluation vectorized and the candidate ROWS
     never materialized:
 
-    - stage 1 (mapInPandas): per batch, NumPy replays the exact
-      ``_qprod`` integer arithmetic for the self-dot (→ norm, the same
-      bits as ``norms()``) and the ``n_planes`` hyperplane projections
-      (→ bucket, the same bits as ``lsh_bucket``), then emits one EXACT
-      row (kind 0) plus one VARIANT row (kind 1) per SET bucket bit
-      with that bit cleared — the MIH set-bit rule: a bucket-distance-1
-      pair differs in exactly one bit, exactly one side has it set, so
-      the pair meets exactly once, in the cleared side's group; the
-      expected fan-out is 1 + n_planes/2 rows per vector vs the join
-      plan's 1 + n_planes probe rows.
+    - stage 1 (mapInPandas): per batch, ``_norm_bucket`` gives each
+      vector its norm and bucket (the same bits as ``norms()`` and
+      ``lsh_bucket``), then the stage emits one EXACT row (kind 0) plus
+      one VARIANT row (kind 1) per SET bucket bit with that bit cleared
+      — the MIH set-bit rule: a bucket-distance-1 pair differs in
+      exactly one bit, exactly one side has it set, so the pair meets
+      exactly once, in the cleared side's group; the expected fan-out
+      is 1 + n_planes/2 rows per vector vs the join plan's 1 + n_planes
+      probe rows.
     - stage 2 (applyInPandas by bucket): exact members E score against
       E (upper triangle by vec_id — distance-0 pairs, found once) and
       against variants V (distance-1 pairs, found once); V×V pairs are
-      distance 2 and never scored. Dots are the floor-quantized int64
-      component products summed, cosine the same double divisions and
-      the same floor(x·1e6 + 0.5)/1e6 quantize as the column algebra.
-      NaN cosines (zero-quantized norms) are EXCLUDED — verified
-      empirically against the join plan, whose ``>= threshold``
-      comparison drops NaN (NumPy's NaN-false comparison matches). Row
-      chunks bound the m×n×d temp at ~128 MB.
+      distance 2 and never scored. Dots are ``_qdot``, cosines
+      ``_cosq``. A zero-norm vector's NaN norm (NULL across the Arrow
+      hop) makes its cosines NaN, which no threshold passes — the join
+      plan's NULL cosine. Row chunks bound the m×n×d temp at ~128 MB.
     """
     import numpy as np
     import pandas as pd
-
-    scale = float(DOT_SCALE)
-    planes_full = np.array(
-        [_plane_values(p) for p in range(n_planes)], dtype=np.float64
-    )
 
     def _emit(it):
         for pdf in it:
             if not len(pdf):
                 continue
-            V = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            dim = V.shape[1]
-            if dim > _MAX_DIM:
-                raise ValueError(
-                    f"vector dim {dim} exceeds the {_MAX_DIM}-component "
-                    f"plane tables (same contract as lsh_bucket)"
-                )
+            V = _rows(pdf[vec_col])
             ids = pdf["vec_id"].to_numpy()
-            qself = (
-                np.floor(V * V * scale + 0.5).astype(np.int64).sum(axis=1)
-            )
-            nrm = np.sqrt(qself.astype(np.float64) / scale)
-            bucket = np.zeros(len(ids), dtype=np.int64)
-            for p in range(n_planes):
-                proj = (
-                    np.floor(V * planes_full[p, :dim][None, :] * scale + 0.5)
-                    .astype(np.int64)
-                    .sum(axis=1)
-                )
-                bucket |= (proj > 0).astype(np.int64) << p
+            nrm, bucket = _norm_bucket(V, n_planes)
             frames = [
                 pd.DataFrame(
                     {
@@ -1126,14 +1125,6 @@ def _lsh_pairs_kernel(
         "vec_id long, v array<double>, norm double, bkt long, kind int",
     )
 
-    _EMPTY = pd.DataFrame(
-        {
-            "vec_a": pd.Series(dtype="int64"),
-            "vec_b": pd.Series(dtype="int64"),
-            "cosine": pd.Series(dtype="float64"),
-        }
-    )
-
     def _score(pdf: pd.DataFrame) -> pd.DataFrame:
         # lexsort, not kind*(1<<62)+id: kind arrives int32 from the
         # Arrow schema and NumPy>=2.0 (NEP 50) raises OverflowError on
@@ -1144,54 +1135,29 @@ def _lsh_pairs_kernel(
         ids = pdf["vec_id"].to_numpy()[order]
         kinds = pdf["kind"].to_numpy()[order]
         nrm = pdf["norm"].to_numpy()[order]
-        V = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in pdf["v"]]
-        )[order]
+        V = _rows(pdf["v"])[order]
         n_e = int((kinds == 0).sum())
         if n_e == 0 or len(ids) < 2:
-            return _EMPTY
-        outs = [_EMPTY]
+            return _empty(_PAIRS)
+        outs = [_empty(_PAIRS)]
         cols = np.arange(len(ids))[None, :]
         for c0 in range(0, n_e, 256):
             c1 = min(c0 + 256, n_e)
             acc = np.zeros((c1 - c0, len(ids)), dtype=np.int64)
             for d0 in range(0, V.shape[1], 64):
                 d1 = min(d0 + 64, V.shape[1])
-                acc += (
-                    np.floor(
-                        V[c0:c1, None, d0:d1] * V[None, :, d0:d1] * scale
-                        + 0.5
-                    )
-                    .astype(np.int64)
-                    .sum(axis=2)
-                )
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = (acc.astype(np.float64) / scale) / (
-                    nrm[c0:c1, None] * nrm[None, :]
-                )
-                cosq = np.floor(cos * 1e6 + 0.5) / 1e6
+                acc += _qdot(V[c0:c1, None, d0:d1], V[None, :, d0:d1])
+            cosq = _cosq(acc, nrm[c0:c1, None], nrm[None, :])
             rows = np.arange(c0, c1)[:, None]
             m = (((cols < n_e) & (rows < cols)) | (cols >= n_e)) & (
                 cosq >= threshold
             )
             rr, cc = np.nonzero(m)
             if len(rr):
-                a = ids[c0 + rr]
-                b = ids[cc]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "vec_a": np.minimum(a, b),
-                            "vec_b": np.maximum(a, b),
-                            "cosine": cosq[rr, cc],
-                        }
-                    )
-                )
+                outs.append(_pair_frame(ids[c0 + rr], ids[cc], cosq[rr, cc]))
         return pd.concat(outs, ignore_index=True)
 
-    return keyed.groupBy("bkt").applyInPandas(
-        _score, "vec_a long, vec_b long, cosine double"
-    )
+    return keyed.groupBy("bkt").applyInPandas(_score, _PAIRS)
 
 
 def lsh_near_dup_pairs(
@@ -1203,6 +1169,8 @@ def lsh_near_dup_pairs(
     """SUB-QUADRATIC approximate near-dup mining: candidate pairs are
     restricted to hyperplane buckets that are equal or differ in exactly
     one bit (Hamming-1 multiprobe), then scored with the exact cosine.
+    A NULL vector is an absent row; a zero-norm vector has no cosine and
+    is in no pair.
 
     This is the scale path ``cosine_pairs`` deliberately is not: candidates
     per vector are ~9n/256 instead of n, at the price of recall. The
@@ -1239,7 +1207,7 @@ def lsh_near_dup_pairs(
     rows. Pair sets and cosine bits are test-asserted equal between the
     plans.
     """
-    df = spread(df, key="vec_id")
+    df = spread(_present(df, vec_col), key="vec_id")
     n_planes = resolve_planes(df, n_planes)
     if _estimated_bytes(df) >= LSH_KERNEL_BYTES:
         return _lsh_pairs_kernel(df, vec_col, threshold, n_planes)
@@ -1252,25 +1220,19 @@ def lsh_near_dup_pairs(
         F.col("norm").alias("norm_a"),
         "bucket",
     )
-    probes = F.array(
-        F.col("bucket"),
-        *[F.col("bucket").bitwiseXOR(F.lit(2**p)) for p in range(n_planes)],
-    )
     b = n.select(
         F.col("vec_id").alias("vec_b"),
         F.col(vec_col).alias("vb"),
         F.col("norm").alias("norm_b"),
-        F.explode(probes).alias("bucket"),
+        F.explode(_probes(F.col("bucket"), n_planes)).alias("bucket"),
     )
     pairs = a.hint("shuffle_hash").join(b, on="bucket").where(
         F.col("vec_a") < F.col("vec_b")
     )
-    cos = dot_exact(F.col("va"), F.col("vb")) / (
-        F.col("norm_a") * F.col("norm_b")
+    cos = _cosine(F.col("va"), F.col("vb"), F.col("norm_a"), F.col("norm_b"))
+    return pairs.select("vec_a", "vec_b", cos.alias("cosine")).where(
+        F.col("cosine") >= threshold
     )
-    return pairs.select(
-        "vec_a", "vec_b", quantize(cos, 6).alias("cosine")
-    ).where(F.col("cosine") >= threshold)
 
 
 def ivf_ann(
@@ -1289,19 +1251,12 @@ def ivf_ann(
     1e9 vectors each query touches ~n/n_clusters candidates. Unlike LSH the
     partitioning is data-adaptive (centroids follow density).
 
-    The norm+label projection is computed inline (``norms()`` drops the
-    cluster column, and joining it back on vec_id self-joined the
-    embeddings table — two extra corpus scans for a column that was in
-    the scan all along)."""
+    The cluster column rides through ``norms()`` (joining it back on
+    vec_id self-joined the embeddings table — two extra corpus scans for
+    a column that was in the scan all along)."""
     if query_pred is None:
         query_pred = F.col("vec_id") < 3
-    v = F.col(vec_col)
-    n = _present(df, vec_col).select(
-        "vec_id",
-        v.alias(vec_col),
-        F.sqrt(dot_exact(v, v)).alias("norm"),
-        cluster_col,
-    )
+    n = norms(_present(df, vec_col), vec_col, cluster_col)
     q = n.where(query_pred).select(
         F.col("vec_id").alias("query_id"),
         F.col(vec_col).alias("qv"),
@@ -1320,51 +1275,20 @@ def _norm_bucket_frame(
     lambdas (``aggregate``/``zip_with``) in CodegenFallback interpreted
     mode, so the column-algebra form pays 1+n_planes interpreted
     O(dim) array walks PER ROW — at 500k×64-d that alone was ~11 s of
-    the sf10 lsh_ann row. The kernel replays the exact same integer
-    arithmetic in NumPy: per element floor(x·plane·1e12 + 0.5) as
-    int64 (elementwise IEEE double ops — bit-identical to the
-    ``_qprod`` expression), exact int64 sums (order-free), then the
-    same int64→double→sqrt chain for the norm. Dim guard matches
-    ``lsh_bucket``'s assert_true contract: wider-than-plane-table
-    vectors fail loudly."""
-    import numpy as np
+    the sf10 lsh_ann row. ``_norm_bucket`` replays the same integer
+    arithmetic in NumPy; a zero-norm vector's NaN norm arrives in Spark
+    as NULL, so ``_cosine`` gives it no cosine."""
     import pandas as pd
-
-    planes = np.array(
-        [_plane_values(p) for p in range(n_planes)], dtype=np.float64
-    )  # (n_planes, _MAX_DIM)
-    scale = float(DOT_SCALE)
 
     def gen(it):
         for pdf in it:
-            V = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            if V.shape[1] > _MAX_DIM:
-                raise ValueError(
-                    f"vector dim {V.shape[1]} exceeds the {_MAX_DIM}-wide"
-                    " plane tables (lsh_bucket dim guard)"
-                )
-            P = planes[:, : V.shape[1]]
-            # qprod replay: floor((x*y)*scale + 0.5) elementwise, int64 sum
-            qself = (
-                np.floor(V * V * scale + 0.5).astype(np.int64).sum(axis=1)
-            )
-            norm = np.sqrt(qself.astype(np.float64) / scale)
-            bucket = np.zeros(len(V), dtype=np.int32)
-            for p in range(n_planes):
-                proj = (
-                    np.floor(V * P[p][None, :] * scale + 0.5)
-                    .astype(np.int64)
-                    .sum(axis=1)
-                )
-                bucket |= (proj > 0).astype(np.int32) << p
+            norm, bucket = _norm_bucket(_rows(pdf[vec_col]), n_planes)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"],
                     vec_col: pdf[vec_col],
                     "norm": norm,
-                    "bucket": bucket,
+                    "bucket": bucket.astype("int32"),
                 }
             )
 
@@ -1384,17 +1308,15 @@ def lsh_ann(
     vec_col: str = "embedding",
     query_pred: Column | None = None,
     k: int = 5,
-    multiprobe: bool = True,
     n_planes: int | str = N_PLANES,
 ) -> DataFrame:
-    """LSH-bucketed approximate nearest neighbors: queries only meet
-    candidates in their own hyperplane bucket, then exact cosine + top-k.
-
-    ``multiprobe=True`` additionally probes every bucket at Hamming
-    distance 1 (one flipped hyperplane bit): candidates grow from ~n/256
-    to ~9n/256 per query while recall rises sharply — the standard
-    multi-probe LSH trade. The probe set explodes on the (tiny, broadcast)
-    QUERY side, so the candidate join stays one equi-join.
+    """LSH-bucketed approximate nearest neighbors: queries meet
+    candidates in their own hyperplane bucket and in every bucket at
+    Hamming distance 1 (one flipped hyperplane bit), then exact cosine +
+    top-k. Multi-probe grows the candidates from ~n/256 to ~9n/256 per
+    query while recall rises sharply — the standard multi-probe LSH
+    trade. The probe set explodes on the (tiny, broadcast) QUERY side,
+    so the candidate join stays one equi-join.
 
     ``n_planes="auto"`` sizes the plane count from the corpus so bucket
     occupancy stays bounded as it grows (see ``resolve_planes``).
@@ -1415,24 +1337,17 @@ def lsh_ann(
     # filtering n would re-run the kernel over the whole corpus for a
     # handful of query rows), then column-algebra norm/bucket on the
     # tiny result — value-identical to the kernel (property-tested)
-    qsrc = norms(df.where(query_pred), vec_col).withColumn(
-        "bucket", lsh_bucket(vec_col, n_planes)
-    )
-    q = qsrc.select(
-        F.col("vec_id").alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.col("norm").alias("qnorm"),
-        "bucket",
-    )
-    if multiprobe:
-        probes = F.array(
-            F.col("bucket"),
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(2**p))
-                for p in range(n_planes)
-            ],
+    q = (
+        norms(df.where(query_pred), vec_col)
+        .withColumn("bucket", lsh_bucket(vec_col, n_planes))
+        .select(
+            F.col("vec_id").alias("query_id"),
+            F.col(vec_col).alias("qv"),
+            F.col("norm").alias("qnorm"),
+            "bucket",
         )
-        q = q.withColumn("bucket", F.explode(probes))
+        .withColumn("bucket", F.explode(_probes(F.col("bucket"), n_planes)))
+    )
     return _keyed_cosine_topk(n, q, "bucket", vec_col, k)
 
 
@@ -1455,7 +1370,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     cluster_col: str = "label",
     threshold: float = 0.45,
-    max_pairs: int = SEMANTIC_DEDUP_MAX_PAIRS,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540 — no reference-repo counterpart; capability
@@ -1463,7 +1377,8 @@ def semantic_dedup(
     an EARLIER (lower ``vec_id``) member of the SAME coarse cluster
     reaches ``threshold``. Output: one row per dropped vector with its
     keeper (``dup_of`` = the smallest qualifying earlier vec_id, the
-    deterministic keeper election) and that pair's cosine.
+    deterministic keeper election) and that pair's cosine. A NULL vector
+    is an absent row; a zero-norm vector has no cosine and is in no pair.
 
     Scale shape — the whole point of the algorithm: the quadratic
     compare is confined WITHIN clusters, so the pair term is
@@ -1484,10 +1399,12 @@ def semantic_dedup(
 
     Granularity guard (round 12): inputs past ``SEMANTIC_PROBE_BYTES``
     pay one column-pruned count agg computing the EXACT within-cluster
-    pair term Σ n_c(n_c−1)/2; above ``max_pairs`` the operator refuses
-    with the re-clustering knob named instead of silently launching a
-    quadratic the cluster column cannot support (the sf100 rehearsal's
-    10 replicated labels planned ~2·10¹¹ pairs — SCALING.md)."""
+    pair term Σ n_c(n_c−1)/2; above ``SEMANTIC_DEDUP_MAX_PAIRS`` the
+    operator refuses with the re-clustering knob named instead of
+    silently launching a quadratic the cluster column cannot support
+    (the sf100 rehearsal's 10 replicated labels planned ~2·10¹¹ pairs —
+    SCALING.md)."""
+    df = _present(df, vec_col)
     if _estimated_bytes(df) > SEMANTIC_PROBE_BYTES:
         pair_term = (
             df.groupBy(cluster_col)
@@ -1501,33 +1418,25 @@ def semantic_dedup(
             )
             .collect()[0]["__p"]
         )
-        if pair_term is not None and pair_term > max_pairs:
+        if pair_term is not None and pair_term > SEMANTIC_DEDUP_MAX_PAIRS:
             raise ValueError(
                 f"semantic_dedup within-cluster pair term "
-                f"{pair_term:.2e} exceeds max_pairs={max_pairs:.0e}: the "
+                f"{pair_term:.2e} exceeds SEMANTIC_DEDUP_MAX_PAIRS="
+                f"{SEMANTIC_DEDUP_MAX_PAIRS:.0e}: the "
                 f"'{cluster_col}' clustering is too coarse for this corpus "
                 f"(SemDeDup's contract sizes clusters to fit a task). "
                 f"Re-cluster with kmeans_assign at k ≈ n/8192 (or a hash "
-                f"split), use lsh_near_dup, or raise max_pairs after "
-                f"sizing the cluster."
+                f"split), use lsh_near_dup, or raise "
+                f"SEMANTIC_DEDUP_MAX_PAIRS after sizing the cluster."
             )
-    df = spread(df, key="vec_id")
-    v = F.col(vec_col)
-    n = df.select(
-        "vec_id",
-        v.alias(vec_col),
-        F.sqrt(dot_exact(v, v)).alias("norm"),
-        cluster_col,
-    )
+    n = norms(spread(df, key="vec_id"), vec_col, cluster_col)
     earlier = n.select(
         F.col("vec_id").alias("vec_a"),
         F.col(vec_col).alias("va"),
         F.col("norm").alias("na"),
         cluster_col,
     )
-    cos = dot_exact(F.col("va"), F.col(vec_col)) / (
-        F.col("na") * F.col("norm")
-    )
+    cos = _cosine(F.col("va"), F.col(vec_col), F.col("na"), F.col("norm"))
     cand = (
         n.join(earlier, on=cluster_col)
         .where(F.col("vec_a") < F.col("vec_id"))
@@ -1535,7 +1444,7 @@ def semantic_dedup(
             F.col(cluster_col),
             "vec_id",
             "vec_a",
-            quantize(cos, 6).alias("cosine"),
+            cos.alias("cosine"),
         )
         .where(F.col("cosine") >= threshold)
     )
@@ -1560,6 +1469,13 @@ def _kq(v: Column) -> Column:
             x.cast("double") * F.lit(float(KMEANS_SCALE)) + F.lit(0.5)
         ).cast("bigint"),
     )
+
+
+def _kquant(v):
+    """``_kq`` in NumPy: components as int64 units of 1/KMEANS_SCALE."""
+    import numpy as np
+
+    return np.floor(v * float(KMEANS_SCALE) + 0.5).astype(np.int64)
 
 
 def _quantized(df: DataFrame, vec_col: str, *carry: str) -> DataFrame:
@@ -1765,7 +1681,7 @@ def _pq_fit_books(
 
         def gen(it):
             for pdf in it:
-                V = _int_rows(pdf["qv"])
+                V = _rows(pdf["qv"], "int64")
                 out = {"qv": pdf["qv"]}
                 for s in range(m):
                     out[f"__c{s}"], _ = _nearest(
@@ -1838,7 +1754,7 @@ def _pq_encode_frame(
 
     def gen(it):
         for pdf in it:
-            V = _int_rows(pdf["qv"])
+            V = _rows(pdf["qv"], "int64")
             err = np.zeros(len(V), dtype=np.int64)
             codes = np.zeros((len(V), len(cents)), dtype=np.int32)
             for s, C in enumerate(cents):

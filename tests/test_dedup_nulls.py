@@ -4,7 +4,10 @@ The sf0.01 ``documents`` table plus two NULL-text documents (one per
 source) must still match every dedup-family oracle. Before the rule, the
 short-document fallback turned each NULL text into one NULL shingle: the
 two NULL documents paired at Jaccard 1.0 / Hamming 0 and got an all-zero
-SimHash fingerprint, where the oracle gives no row.
+SimHash fingerprint, where the oracle gives no row. The per-source
+diagnostics (``source_overlap``, ``source_dup_stats``) follow the same
+rule: a NULL text is not a document, so it is neither counted nor shared
+across sources through the md5 of an empty head.
 
 Left out: ``substring_dedup_apply`` and ``substring_dedup_keep_first``
 return (doc_id, NULL, 0) for a NULL text where the oracle returns
@@ -39,6 +42,8 @@ ROWS = (
     "boilerplate_ngrams",
     "ngram_counts",
     "doc_fingerprint",
+    "source_overlap",
+    "source_dup_stats",
 )
 
 

@@ -360,34 +360,34 @@ def test_prune_block_pairs_drops_separated_clusters():
     )) == 3
 
 
-def test_cosine_pairs_kmeans_path_matches_catalyst(spark):
-    """Forcing the cluster-blocked pruned path (small_bytes=0) on both the
+def test_cosine_pairs_kmeans_path_matches_catalyst(spark, monkeypatch):
+    """Forcing the cluster-blocked pruned path (COSINE_SMALL_BYTES = 0) on
+    both the
     fixture corpus and a synthetic clustered corpus must reproduce the
     pure-Catalyst witness bit-for-bit — pruning is an over-approximation,
     never a semantics change."""
     from data_lakehouse_hygiene_spark.operators import similarity
 
     df = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    got = sorted(
-        tuple(r)
-        for r in similarity.cosine_pairs(df, small_bytes=0).collect()
-    )
+    monkeypatch.setattr(similarity, "COSINE_SMALL_BYTES", 0)
+    got = sorted(tuple(r) for r in similarity.cosine_pairs(df).collect())
     want = sorted(
         tuple(r) for r in similarity.cosine_pairs_catalyst(df).collect()
     )
     assert got == want and len(got) > 0
 
     clustered = _two_tight_clusters(spark)
+    # two k-means blocks (and a two-block witness)
+    monkeypatch.setattr(similarity, "N_BLOCKS", 2)
+    monkeypatch.setattr(similarity, "KMEANS_MAX_BLOCKS", 2)
     got2 = sorted(
         tuple(r)
-        for r in similarity.cosine_pairs(
-            clustered, threshold=0.6, n_blocks=2, small_bytes=0
-        ).collect()
+        for r in similarity.cosine_pairs(clustered, threshold=0.6).collect()
     )
     want2 = sorted(
         tuple(r)
         for r in similarity.cosine_pairs_catalyst(
-            clustered, threshold=0.6, n_blocks=2
+            clustered, threshold=0.6
         ).collect()
     )
     assert got2 == want2 and len(got2) > 0

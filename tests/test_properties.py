@@ -11,6 +11,7 @@ from __future__ import annotations
 import math
 
 import duckdb
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -182,6 +183,7 @@ def test_cosine_pairs_matches_numpy_replay(spark, vecs, threshold):
     arbitrary blocking splits."""
     import numpy as np
 
+    from data_lakehouse_hygiene_spark.operators import similarity
     from data_lakehouse_hygiene_spark.operators.similarity import (
         cosine_pairs,
     )
@@ -202,28 +204,24 @@ def test_cosine_pairs_matches_numpy_replay(spark, vecs, threshold):
             cosq = math.floor(cos * 1e6 + 0.5) / 1e6
             if cosq >= threshold:
                 want.add((i, j, cosq))
-    got_small = {
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in cosine_pairs(df, threshold=threshold, n_blocks=3).collect()
-    }
-    assert got_small == want
-    got_kmeans = {
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in cosine_pairs(
-            df, threshold=threshold, n_blocks=3, small_bytes=0
-        ).collect()
-    }
-    assert got_kmeans == want
-    # block_rows=1 makes EVERY cluster oversize — the round-9 hash-split
-    # sub-block expansion must stay a pure plan-shape change
-    got_split = {
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in cosine_pairs(
-            df, threshold=threshold, n_blocks=2, small_bytes=0,
-            block_rows=1,
-        ).collect()
-    }
-    assert got_split == want
+    def got(**consts):
+        with pytest.MonkeyPatch.context() as mp:
+            for name, value in consts.items():
+                mp.setattr(similarity, name, value)
+            return {
+                (r["vec_a"], r["vec_b"], r["cosine"])
+                for r in cosine_pairs(df, threshold=threshold).collect()
+            }
+
+    # three hash blocks, then three k-means blocks
+    assert got(N_BLOCKS=3) == want
+    assert got(N_BLOCKS=3, KMEANS_MAX_BLOCKS=3, COSINE_SMALL_BYTES=0) == want
+    # a 1-row block target makes EVERY cluster oversize — the round-9
+    # hash-split sub-block expansion must stay a pure plan-shape change
+    assert got(
+        N_BLOCKS=2, KMEANS_MAX_BLOCKS=2, COSINE_SMALL_BYTES=0,
+        BLOCK_TARGET_ROWS=1,
+    ) == want
 
 
 def _lev(a: str, b: str) -> int:

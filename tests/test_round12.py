@@ -211,7 +211,7 @@ def test_mih_sub_bit_geometry_grows_past_ten_million(spark):
 
 
 # ------------------------- cosine_pairs planned-shuffle refusal gate
-def test_cosine_pairs_planned_shuffle_refusal(spark, tmp_path):
+def test_cosine_pairs_planned_shuffle_refusal(spark, tmp_path, monkeypatch):
     """The round-12 sf100 finding test-pinned: when the block pruner
     keeps so many pairs that the planned cogroup replication exceeds the
     shuffle budget, cosine_pairs must REFUSE with the sub-quadratic
@@ -226,15 +226,16 @@ def test_cosine_pairs_planned_shuffle_refusal(spark, tmp_path):
     path = str(tmp_path / "emb")
     emb.write.parquet(path)  # file-backed so _estimated_bytes > 0
     df = spark.read.parquet(path)
-    with _pytest.raises(ValueError) as exc:
-        similarity.cosine_pairs(
-            df, small_bytes=0, max_shuffle_bytes=0
-        ).collect()
+    monkeypatch.setattr(similarity, "COSINE_SMALL_BYTES", 0)
+    with monkeypatch.context() as mp:
+        mp.setattr(similarity, "COSINE_SHUFFLE_MAX_BYTES", 0)
+        with _pytest.raises(ValueError) as exc:
+            similarity.cosine_pairs(df).collect()
     msg = str(exc.value)
     assert "planned replicated shuffle" in msg
     assert "lsh_near_dup" in msg and "semantic_dedup" in msg
     # an adequate budget on the same input runs the normal exact path
-    got = similarity.cosine_pairs(df, small_bytes=0).limit(5).collect()
+    got = similarity.cosine_pairs(df).limit(5).collect()
     assert got is not None
 
 
@@ -249,8 +250,10 @@ def test_semantic_dedup_granularity_guard(spark, monkeypatch):
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     monkeypatch.setattr(similarity, "SEMANTIC_PROBE_BYTES", 0)
-    with _pytest.raises(ValueError) as exc:
-        similarity.semantic_dedup(emb, max_pairs=10)
+    with monkeypatch.context() as mp:
+        mp.setattr(similarity, "SEMANTIC_DEDUP_MAX_PAIRS", 10)
+        with _pytest.raises(ValueError) as exc:
+            similarity.semantic_dedup(emb)
     msg = str(exc.value)
     assert "too coarse" in msg and "kmeans_assign" in msg
     # default budget: same rows as the unguarded semantics

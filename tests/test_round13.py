@@ -15,7 +15,7 @@ import pytest
 
 
 # ------------- ADVICE 1: self pairs counted twice in the shuffle gate
-def test_cosine_gate_counts_self_pairs_twice(spark, tmp_path):
+def test_cosine_gate_counts_self_pairs_twice(spark, tmp_path, monkeypatch):
     """One cluster => the only kept block pair is the self pair (0,0).
     The cogroup ships every member row to BOTH exploded sides, so the
     planned volume is 2*n*row_bytes; a budget between 1x and 2x must
@@ -31,24 +31,22 @@ def test_cosine_gate_counts_self_pairs_twice(spark, tmp_path):
 
     from data_lakehouse_hygiene_spark.operators import similarity
 
+    want = {tuple(r) for r in similarity.cosine_pairs(emb).collect()}
+    # one k-means block on the forced cluster path
+    monkeypatch.setattr(similarity, "N_BLOCKS", 1)
+    monkeypatch.setattr(similarity, "KMEANS_MAX_BLOCKS", 1)
+    monkeypatch.setattr(similarity, "COSINE_SMALL_BYTES", 0)
+    monkeypatch.setattr(similarity, "COSINE_SHUFFLE_MAX_BYTES", between)
     with pytest.raises(ValueError) as exc:
-        similarity.cosine_pairs(
-            df, n_blocks=1, small_bytes=0, max_shuffle_bytes=between
-        ).collect()
+        similarity.cosine_pairs(df).collect()
     assert "planned replicated shuffle" in str(exc.value)
 
     # a budget ABOVE 2x the self-pair volume runs the exact path and
     # the result is blocking-invariant (equals the default small path)
-    got = {
-        tuple(r)
-        for r in similarity.cosine_pairs(
-            df,
-            n_blocks=1,
-            small_bytes=0,
-            max_shuffle_bytes=int(3.0 * n * row_bytes),
-        ).collect()
-    }
-    want = {tuple(r) for r in similarity.cosine_pairs(emb).collect()}
+    monkeypatch.setattr(
+        similarity, "COSINE_SHUFFLE_MAX_BYTES", int(3.0 * n * row_bytes)
+    )
+    got = {tuple(r) for r in similarity.cosine_pairs(df).collect()}
     assert got == want
 
 

@@ -227,7 +227,7 @@ def test_incremental_line_dedup_history_and_batch(spark):
 # --------------------------------------------------------------- auto n_planes
 
 
-def test_resolve_planes_auto(spark):
+def test_resolve_planes_auto(spark, monkeypatch):
     from data_lakehouse_hygiene_spark.operators import similarity as S
 
     small = spark.range(20).withColumnRenamed("id", "vec_id")
@@ -235,10 +235,12 @@ def test_resolve_planes_auto(spark):
     assert S.resolve_planes(small, "auto") == S.N_PLANES
     big = spark.range(300).withColumnRenamed("id", "vec_id")
     # 300 vectors at target occupancy 1 -> ceil(log2(300)) = 9 planes
-    assert S.resolve_planes(big, "auto", target_occupancy=1) == 9
+    monkeypatch.setattr(S, "PLANES_TARGET_OCCUPANCY", 1)
+    assert S.resolve_planes(big, "auto") == 9
     # integers pass through untouched; cap binds at 20
     assert S.resolve_planes(small, 12) == 12
-    huge_target = S.resolve_planes(big, "auto", target_occupancy=0.0001)
+    monkeypatch.setattr(S, "PLANES_TARGET_OCCUPANCY", 0.0001)
+    huge_target = S.resolve_planes(big, "auto")
     assert huge_target == 20
 
 

@@ -163,35 +163,33 @@ def test_dist_drift_nulls_excluded(spark):
 # ------------------------------------- cosine_pairs oversized-cluster split
 
 
-def test_cosine_pairs_split_path_matches_catalyst(spark):
-    """Forcing tiny block_rows makes every cluster oversize and exercises
-    the hash-split sub-block expansion; the pair set must still equal the
-    pure-Catalyst witness bit-for-bit (splitting is plan shape only)."""
+def test_cosine_pairs_split_path_matches_catalyst(spark, monkeypatch):
+    """Forcing tiny blocks (k = 4 clusters, 16-row block target) makes
+    every cluster oversize and exercises the hash-split sub-block
+    expansion; the pair set must still equal the pure-Catalyst witness
+    bit-for-bit (splitting is plan shape only)."""
     from data_lakehouse_hygiene_spark.operators import similarity
 
     df = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    got = sorted(
-        tuple(r)
-        for r in similarity.cosine_pairs(
-            df, small_bytes=0, n_blocks=4, block_rows=16
-        ).collect()
-    )
+    monkeypatch.setattr(similarity, "COSINE_SMALL_BYTES", 0)
+    monkeypatch.setattr(similarity, "N_BLOCKS", 4)
+    monkeypatch.setattr(similarity, "KMEANS_MAX_BLOCKS", 4)
+    monkeypatch.setattr(similarity, "BLOCK_TARGET_ROWS", 16)
+    got = sorted(tuple(r) for r in similarity.cosine_pairs(df).collect())
     want = sorted(
         tuple(r) for r in similarity.cosine_pairs_catalyst(df).collect()
     )
     assert got == want and len(got) > 0
 
 
-def test_cosine_pairs_auto_blocks_matches_catalyst(spark):
+def test_cosine_pairs_auto_blocks_matches_catalyst(spark, monkeypatch):
     """The default auto-sized block count on the forced cluster path must
     reproduce the witness (self-sizing is plan shape only)."""
     from data_lakehouse_hygiene_spark.operators import similarity
 
     df = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    got = sorted(
-        tuple(r)
-        for r in similarity.cosine_pairs(df, small_bytes=0).collect()
-    )
+    monkeypatch.setattr(similarity, "COSINE_SMALL_BYTES", 0)
+    got = sorted(tuple(r) for r in similarity.cosine_pairs(df).collect())
     want = sorted(
         tuple(r) for r in similarity.cosine_pairs_catalyst(df).collect()
     )
