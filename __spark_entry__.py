@@ -1979,14 +1979,13 @@ def q_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     drifting outside its declared 1% rank error breaks the hash match.
 
     The exact-rank envelope is computed with ``ordering.global_rank`` —
-    the bucketed two-phase rank (approx-percentile range buckets, tiny
-    offset aggregate, then a PARTITIONED per-bucket row_number) — never a
+    the bucketed rank (approx-percentile range buckets, a PARTITIONED
+    per-bucket row_number, in-plan bucket offsets) — never a
     global unpartitioned window, so no stage funnels the fact table
     through one task; the value at rank k is tie-order-invariant, so the
     bucketed rank and a serial sort agree on every extracted value. The
-    total row count is a free by-product of the offset pass (no separate
-    count scan). Scalar collects follow the A10 1-row-literal pattern
-    (wanted ranks pull back ≤ 8 rows)."""
+    total row count is one count. Scalar collects follow the A10
+    1-row-literal pattern (wanted ranks pull back ≤ 8 rows)."""
     import math
 
     from data_lakehouse_hygiene_spark.operators.ordering import global_rank
@@ -2268,9 +2267,9 @@ WHERE CAST(CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))
 def q_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Size-balanced output sharding (8 shards): rank documents by
     (n_chars DESC, doc_id), shard = (rank-1) mod 8 — sorted round-robin
-    bin packing. The rank is computed by the DISTRIBUTED two-phase
-    global rank (range partition + per-partition row_number + offset
-    collect, ``sampling.global_rank``), never a single-task global
+    bin packing. The rank is computed by the DISTRIBUTED global rank
+    (percentile range buckets + per-bucket row_number + in-plan bucket
+    offsets, ``sampling.global_rank``), never a single-task global
     window; the oracle's one-window formulation is value-identical
     because the total order fixes every rank."""
     from data_lakehouse_hygiene_spark.operators import sampling
@@ -3707,13 +3706,19 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     The declared row projects the ``array<string>`` token sequence to a
     space-joined string (BPE tokens come from whitespace-split words, so
     they never contain a space themselves): the driver canon cannot
-    hash list cells (r9 crash)."""
+    hash list cells (r9 crash). The oracle's per-document string comes
+    from the document's positions, and a NULL text has none, so the
+    row reads a NULL text's NULL tokens as no tokens: ``('', 0)``."""
     docs = _t(spark, sf_dir, "documents")
     merges = text_ops.bpe_train(docs, n_merges=40)
     return text_ops.bpe_encode(docs, merges).select(
         "doc_id",
-        F.array_join(F.col("bpe_tokens"), " ").alias("bpe_tokens"),
-        "n_bpe_tokens",
+        F.coalesce(F.array_join("bpe_tokens", " "), F.lit("")).alias(
+            "bpe_tokens"
+        ),
+        F.coalesce("n_bpe_tokens", F.lit(0).cast("bigint")).alias(
+            "n_bpe_tokens"
+        ),
     )
 
 

@@ -13,7 +13,11 @@ map-reduce over partial maxes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable
+from functools import reduce
+from operator import add
+
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 
@@ -54,65 +58,122 @@ def latest_snapshot(df: DataFrame, group: str, ts: str) -> DataFrame:
     )
 
 
-def global_rank(
+def _range_prefix(
     df: DataFrame,
-    *order_cols: str,
-    rank_col: str = "rank",
+    order: list[Column],
+    bucket_on: tuple[str, bool],
+    local: Callable[[WindowSpec], Column],
+    measure: Column,
+    out: str,
     n_buckets: int | None = None,
-) -> tuple[DataFrame, int]:
-    """Scale-safe global ``row_number`` over a total order — the distributed
-    replacement for ``Window.orderBy(...)`` with no partition key (which
-    funnels the whole table through ONE task).
+) -> DataFrame:
+    """A running prefix over a TOTAL ``order`` with no single-task global
+    window: the one range-bucket core of both global ranks and of
+    ``text.pack_sequences``' token offsets. Adds column ``out`` =
+    ``local(w)`` plus the sum of ``measure`` over every range bucket
+    before the row's, where ``w`` orders the row's own bucket.
 
-    Two-phase: (0) split the first sort column's value domain into
-    ``n_buckets`` ordered ranges via approximate percentiles (balance-only;
-    rows equal to a cut all land in the same bucket, so bucket order is
-    monotone in the sort order); (1) a tiny per-bucket count aggregate gives
-    each bucket's starting offset on the driver; (2) rank = offset +
-    per-bucket ``row_number`` (PARTITIONED window, embarrassingly parallel).
-
-    The first sort column must be percentile-able (numeric / temporal).
-    Returns ``(df_with_rank, total_rows)`` — the total is a free by-product
-    of the offset pass.
+    ``bucket_on=(name, ascending)`` names the first sort column (must be
+    percentile-able: numeric/temporal) and its direction. Its value
+    domain splits into at most ``n_buckets`` ordered ranges (default: one
+    per shuffle partition, so even a small input keeps partitioned
+    windows) at approx-percentile cuts baked into the plan as LITERALS,
+    so every consumer of ``__bkt`` computes the same bucket for a row in
+    every branch and every retry. Rows equal to a cut share a bucket, so
+    bucket order is monotone in the sort order; NULLs get sentinel bucket
+    -1, which comes first under ascending order and last under
+    descending, like Spark's ASC NULLS FIRST / DESC NULLS LAST window
+    defaults. The start offsets are computed IN the plan: the per-bucket
+    measures (at most ``n_buckets`` + 1 rows) gather into one sorted
+    array whose exclusive running sums broadcast back, with no window,
+    no second pass over the data and no driver collect.
     """
-    from functools import reduce
-    from operator import add
-
-    spark = df.sparkSession
+    name, asc = bucket_on
     if n_buckets is None:
-        n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    first = order_cols[0]
+        n_buckets = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     probs = [i / n_buckets for i in range(1, n_buckets)]
     cuts: list = []
     if probs:
-        row = df.select(
-            F.percentile_approx(first, probs, 10000).alias("c")
-        ).first()
-        cuts = sorted(set(row["c"] or []))
-    bkt = reduce(
-        add, [(F.col(first) > F.lit(c)).cast("int") for c in cuts], F.lit(0)
+        # collect(), not first(): first() is take(1), which runs the
+        # 1-row aggregate as TWO incremental-limit jobs.
+        rows = df.select(
+            F.percentile_approx(name, probs, 10000).alias("c")
+        ).collect()
+        cuts = sorted(set(rows[0]["c"] or [])) if rows else []
+    if not cuts:
+        # single bucket (small or constant-valued input): every row —
+        # NULLs included, the window's own NULLS FIRST/LAST ordering
+        # places them — shares bucket 0, the offset is identically 0,
+        # and the offsets branch and its broadcast join are skipped
+        # outright: the plan is scan → one partitioned window.
+        bucketed = df.withColumn("__bkt", F.lit(0))
+        w = Window.partitionBy("__bkt").orderBy(*order)
+        return bucketed.withColumn("__local", local(w)).select(
+            *df.columns, F.col("__local").cast("bigint").alias(out)
+        )
+    val_bkt = reduce(
+        add,
+        [(F.col(name) > F.lit(c)).cast("int") for c in cuts],
+        F.lit(0),
     )
-    bucketed = df.withColumn("__bkt", bkt)
-    counts = {
-        r["__bkt"]: r["n"]
-        for r in bucketed.groupBy("__bkt")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    offsets, acc = {}, 0
-    for b in range(len(cuts) + 1):
-        offsets[b] = acc
-        acc += counts.get(b, 0)
-    off_map = F.create_map(
-        *[F.lit(x) for b, o in offsets.items() for x in (b, o)]
+    bucketed = df.withColumn(
+        "__bkt",
+        F.when(F.col(name).isNull(), F.lit(-1)).otherwise(val_bkt),
     )
-    w = Window.partitionBy("__bkt").orderBy(*[F.asc(c) for c in order_cols])
-    ranked = bucketed.withColumn(
+    w = Window.partitionBy("__bkt").orderBy(*order)
+    ranked = bucketed.withColumn("__local", local(w))
+    per = bucketed.groupBy("__bkt").agg(
+        F.struct(
+            (F.col("__bkt") if asc else -F.col("__bkt")).alias("pos"),
+            F.col("__bkt").alias("bkt"),
+            F.coalesce(measure, F.lit(0)).cast("bigint").alias("m"),
+        ).alias("__s")
+    )
+    runs = F.array_sort(F.collect_list("__s"))
+    offs = per.agg(runs.alias("__r")).select(
+        F.inline(
+            F.transform(
+                "__r",
+                lambda s, i: F.struct(
+                    s["bkt"].alias("__bkt"),
+                    F.aggregate(
+                        F.slice("__r", 1, i),
+                        F.lit(0).cast("bigint"),
+                        lambda acc, x: acc + x["m"],
+                    ).alias("__off"),
+                ),
+            )
+        )
+    )
+    # A left join: every bucket has its offset row, and an inner join
+    # would make Catalyst re-evaluate the bucket ladder per row in an
+    # inferred isnotnull(__bkt) scan filter.
+    return ranked.join(F.broadcast(offs), "__bkt", "left").select(
+        *df.columns,
+        (F.col("__local").cast("bigint") + F.col("__off")).alias(out),
+    )
+
+
+def global_rank(
+    df: DataFrame, *order_cols: str, rank_col: str = "rank"
+) -> tuple[DataFrame, int]:
+    """Scale-safe global ``row_number`` over the ascending total order
+    ``order_cols`` — the distributed replacement for ``Window.orderBy(...)``
+    with no partition key (which funnels the whole table through ONE
+    task): ``_range_prefix`` with the per-bucket ``row_number`` and
+    counts, one bucket per shuffle partition (``sampling.global_rank``
+    sizes the buckets from the data instead).
+
+    Returns ``(df_with_rank, total_rows)``; the total is one count."""
+    ranked = _range_prefix(
+        df,
+        [F.asc(c) for c in order_cols],
+        (order_cols[0], True),
+        lambda w: F.row_number().over(w),
+        F.count(F.lit(1)),
         rank_col,
-        F.element_at(off_map, F.col("__bkt")).cast("bigint")
-        + F.row_number().over(w),
-    ).drop("__bkt")
-    return ranked, acc
+    )
+    return ranked, df.count()
 
 
 def global_ntile(

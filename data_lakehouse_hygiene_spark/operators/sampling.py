@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from .aggregates import quantize
 from .cleaning import _estimated_bytes
 from .dedup import base_hash
+from .ordering import _range_prefix
 
 # 60-bit hash space (15 hex chars of md5, see dedup.base_hash).
 HASH_SPACE = float(2**60)
@@ -251,15 +252,9 @@ def global_rank(
     The rank VALUES are a pure function of the data (the total order
     fixes them), so the result is identical under any bucket layout;
     only the work distribution depends on the bucket count. Mechanics:
-    split the first sort column's value domain into ordered ranges via
-    approx-percentile cuts baked into the plan as LITERALS, rank within
-    each bucket with a partitioned window, and add per-bucket start
-    offsets computed IN-PLAN (cumulative sum over the ≤ n_parts-row
-    bucket counts, broadcast-joined back). Rows equal to a cut share a
-    bucket, so bucket order is monotone in the sort order; NULLs get
-    sentinel bucket −1, which sorts first under ascending and last
-    under descending cumulative order — matching Spark's ASC NULLS
-    FIRST / DESC NULLS LAST window defaults.
+    ``ordering._range_prefix`` with the per-bucket ``row_number`` and
+    counts (percentile cuts as plan literals, NULLs in a sentinel
+    bucket, start offsets computed in the plan).
 
     Round 14 — REPLACES the ``repartitionByRange`` +
     ``spark_partition_id()`` + offsets-``collect()`` construction,
@@ -282,70 +277,25 @@ def global_rank(
     buckets (the probe is one cheap pass; a single-task sort of an
     actually-huge input would not be).
     """
-    from functools import reduce
-    from operator import add
-
-    from pyspark.sql.window import Window
-
     if bucket_on is None:
         raise ValueError(
             "global_rank requires bucket_on=(first_order_col, ascending): "
             "the first sort column's name and direction drive the "
             "percentile range-bucketing"
         )
-    name, asc = bucket_on
     est = _estimated_bytes(df)
     if est <= 0:
         n_buckets = n_parts  # stats unknown: assume big, keep parallel
     else:
         n_buckets = min(n_parts, int(est // GR_BYTES_PER_BUCKET) + 1)
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    cuts: list = []
-    if probs:
-        # collect(), not first(): first() is take(1), which runs the
-        # 1-row aggregate as TWO incremental-limit jobs.
-        rows = df.select(
-            F.percentile_approx(name, probs, 10000).alias("c")
-        ).collect()
-        cuts = sorted(set(rows[0]["c"] or [])) if rows else []
-    if not cuts:
-        # single bucket (small or constant-valued input): every row —
-        # NULLs included, the window's own NULLS FIRST/LAST ordering
-        # places them — shares bucket 0, the offset is identically 0,
-        # and the counts/offsets branch and its broadcast join are
-        # skipped outright: the plan is scan → one partitioned window.
-        bucketed = df.withColumn("__bkt", F.lit(0))
-        w = Window.partitionBy("__bkt").orderBy(*order)
-        return bucketed.withColumn(
-            "__local", F.row_number().over(w)
-        ).select(
-            *df.columns, F.col("__local").cast("bigint").alias("rank")
-        )
-    val_bkt = reduce(
-        add,
-        [(F.col(name) > F.lit(c)).cast("int") for c in cuts],
-        F.lit(0),
-    )
-    bucketed = df.withColumn(
-        "__bkt",
-        F.when(F.col(name).isNull(), F.lit(-1)).otherwise(val_bkt),
-    )
-    w = Window.partitionBy("__bkt").orderBy(*order)
-    ranked = bucketed.withColumn("__local", F.row_number().over(w))
-    counts = bucketed.groupBy("__bkt").agg(
-        F.count(F.lit(1)).alias("__cnt")
-    )
-    bkt_order = F.col("__bkt").asc() if asc else F.col("__bkt").desc()
-    woff = Window.orderBy(bkt_order).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offs = counts.select(
-        "__bkt",
-        F.coalesce(F.sum("__cnt").over(woff), F.lit(0)).alias("__off"),
-    )
-    return ranked.join(F.broadcast(offs), "__bkt").select(
-        *df.columns,
-        (F.col("__local").cast("bigint") + F.col("__off")).alias("rank"),
+    return _range_prefix(
+        df,
+        order,
+        bucket_on,
+        lambda w: F.row_number().over(w),
+        F.count(F.lit(1)),
+        "rank",
+        n_buckets,
     )
 
 
@@ -369,9 +319,9 @@ def shard_assign(
     per-mille (test-pinned ≤ 5% on the fixture). Deterministic, no RNG:
     the assignment is a pure function of (size, id).
 
-    Scale shape: one ``global_rank`` (range-partitioned distributed
-    sort + a #partitions-row offset collect) and a projection — no
-    global single-task window anywhere. Returns
+    Scale shape: one ``global_rank`` (percentile range buckets, a
+    partitioned window, in-plan bucket offsets) and a projection — no
+    global single-task window over the data. Returns
     (id, size, rank, shard).
     """
     ranked = global_rank(

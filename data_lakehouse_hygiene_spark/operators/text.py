@@ -18,10 +18,12 @@ Engineering rules:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .aggregates import quantize
+from .cleaning import spread
+from .ordering import _range_prefix
 
 # A "BPE-ish" pre-tokenizer: letter runs, digit runs, single non-alnum marks.
 # Kept RE2-compatible (no backrefs/lookahead) so Spark (Java regex) and
@@ -47,7 +49,7 @@ def tokens(text: Column) -> Column:
     return F.split(text, " ")
 
 
-def project_tokens(df: DataFrame, text_col: str = "text", *keep: str) -> DataFrame:
+def project_tokens(df: DataFrame, *keep: str) -> DataFrame:
     """(doc_id, [keep...], text, __toks) with the token split done ONCE.
 
     Any operator whose lambdas index the token array more than a couple of
@@ -58,9 +60,7 @@ def project_tokens(df: DataFrame, text_col: str = "text", *keep: str) -> DataFra
     survives), and without it an n-gram lambda re-splits the whole text
     O(n_tokens) times per row — measured ~7× wall on the bench corpus.
     """
-    return df.select(
-        "doc_id", *keep, F.col(text_col), tokens(F.col(text_col)).alias("__toks")
-    )
+    return df.select("doc_id", *keep, "text", tokens(F.col("text")).alias("__toks"))
 
 
 def word_ngrams(n: int, fn: str = "") -> str:
@@ -71,9 +71,10 @@ def word_ngrams(n: int, fn: str = "") -> str:
     operators.
 
     Callers guard on ``size(__toks) >= n``: a shorter array has no grams,
-    and neither has a NULL text, whose NULL token array has size -1 (so
-    a short-document fallback must not turn a NULL text into a gram —
-    see ``dedup.shingle_rows``)."""
+    and neither has a NULL text, whose NULL token array has a NULL size
+    (the session pins ``sizeOfNull`` off), so the guard is not true — a
+    short-document fallback must still not turn a NULL text into a gram
+    (see ``dedup.shingle_rows``)."""
     elems = ", ".join(f"__toks[i + {j}]" for j in range(n))
     return (
         f"transform(sequence(0, size(__toks) - {n}), "
@@ -81,12 +82,12 @@ def word_ngrams(n: int, fn: str = "") -> str:
     )
 
 
-def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
+def token_counts(df: DataFrame) -> DataFrame:
     """Whitespace + BPE-ish token counts per document.
 
     Scale: pure per-row projection — no shuffle, runs at scan throughput.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     return df.select(
         "doc_id",
         F.size(tokens(t)).alias("n_ws_tokens"),
@@ -101,12 +102,12 @@ def _stopword_hits(toks: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda x: F.array_contains(arr, x)))
 
 
-def quality_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_scores(df: DataFrame) -> DataFrame:
     """Length / punctuation / stopword-ratio quality heuristic with a CASE
     quality bucket — the A8/A9 score-and-classify shape applied to text.
     """
-    df = project_tokens(df, text_col, "n_chars")
-    t = F.col(text_col)
+    df = project_tokens(df, "n_chars")
+    t = F.col("text")
     toks = F.col("__toks")
     n_tok = F.size(toks)
     n_chars = F.length(t)
@@ -140,14 +141,14 @@ def quality_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Stopword-marker language ID (n-gram heuristic).
 
     Per-row, shuffle-free. The argmax over language hit-counts is computed
     with a deterministic first-wins CASE ladder so ties resolve identically
     in any engine.
     """
-    df = project_tokens(df, text_col)
+    df = project_tokens(df)
     toks = F.col("__toks")
     hits = {lang: _stopword_hits(toks, words) for lang, words in LANG_MARKERS}
     best = F.greatest(*hits.values())
@@ -162,14 +163,9 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.select(*sel)
 
 
-def fingerprints(
-    df: DataFrame,
-    text_col: str = "text",
-    window: int = 5,
-    spread_input: bool = True,
-) -> DataFrame:
+def fingerprints(df: DataFrame, spread_input: bool = True) -> DataFrame:
     """Document fingerprinting: full-text md5 plus a rolling-window min-hash
-    (winnowing-style): min over md5 of every ``window``-token shingle.
+    (winnowing-style): min over md5 of every 5-token shingle.
 
     Near-identical documents that differ by a few tokens still collide on
     the rolling fingerprint with high probability; the full md5 catches
@@ -180,14 +176,11 @@ def fingerprints(
     ``spread_input=False`` — the basis of ``streaming.near_dup_stream``.
     """
     if spread_input:
-        from .cleaning import spread
-
         df = spread(df)
-    df = project_tokens(df, text_col)
-    t = F.col(text_col)
-    shingle_hashes = F.expr(word_ngrams(window, "md5"))
+    df = project_tokens(df)
+    t = F.col("text")
     rolling = F.when(
-        F.size("__toks") >= window, F.array_min(shingle_hashes)
+        F.size("__toks") >= 5, F.array_min(F.expr(word_ngrams(5, "md5")))
     ).otherwise(F.md5(t))
     return df.select(
         "doc_id",
@@ -196,8 +189,8 @@ def fingerprints(
     )
 
 
-def tfidf_top_terms(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFrame:
-    """Per-document top-k terms by tf-idf — the classic corpus-relevance
+def tfidf_top_terms(df: DataFrame) -> DataFrame:
+    """Per-document top-3 terms by tf-idf — the classic corpus-relevance
     signal a training-data pipeline uses for keyword extraction and
     quality filtering.
 
@@ -212,45 +205,48 @@ def tfidf_top_terms(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFr
     the tf groupBy's own partitioning), one window top-k per doc. N comes
     from a 1-row scalar count (the A10 literal-pushdown pattern).
     """
-    from pyspark.sql.window import Window
-
     n_docs = df.count()
-    toks = df.select("doc_id", F.explode(tokens(F.col(text_col))).alias("term"))
+    toks = df.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     score = (F.col("tf") * F.lit(n_docs)) / F.col("df")
     w = Window.partitionBy("doc_id").orderBy(
         F.desc("score"), F.asc("term")
     )
-    from .aggregates import quantize
-
     return (
         tf.join(dfreq, "term")
         .select("doc_id", "term", quantize(score, 6).alias("score"))
         .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 3)
     )
 
 
-def chunk_documents(
-    df: DataFrame, text_col: str = "text", size: int = 50, stride: int = 40
-) -> DataFrame:
+# chunk_documents' window: CHUNK_TOKENS tokens per chunk, a new chunk
+# every CHUNK_STRIDE tokens (so CHUNK_TOKENS - CHUNK_STRIDE overlap).
+CHUNK_TOKENS = 50
+CHUNK_STRIDE = 40
+
+
+def chunk_documents(df: DataFrame) -> DataFrame:
     """Overlapping token-window chunking — the standard preprocessing step
     that turns long documents into training/embedding-sized pieces
-    (``size`` tokens per chunk, ``size - stride`` tokens of overlap).
+    (``CHUNK_TOKENS`` tokens per chunk, ``CHUNK_TOKENS - CHUNK_STRIDE``
+    tokens of overlap).
 
     Pure per-row explode (no shuffle): chunk i covers tokens
     [i·stride, i·stride + size) for every start inside the document; the
     last chunks truncate. Runs at scan throughput at any scale."""
-    df = project_tokens(df, text_col)
+    df = project_tokens(df)
     toks = F.col("__toks")
     n = F.size(toks)
-    last = F.floor((n - F.lit(1)) / F.lit(stride)).cast("int")
+    last = F.floor((n - F.lit(1)) / F.lit(CHUNK_STRIDE)).cast("int")
     chunks = F.transform(
         F.sequence(F.lit(0), last),
         lambda i: F.struct(
             i.cast("bigint").alias("chunk_id"),
-            F.slice(toks, i * stride + F.lit(1), size).alias("ctoks"),
+            F.slice(toks, i * CHUNK_STRIDE + F.lit(1), CHUNK_TOKENS).alias(
+                "ctoks"
+            ),
         ),
     )
     ex = df.select("doc_id", F.explode(chunks).alias("c"))
@@ -262,9 +258,7 @@ def chunk_documents(
     )
 
 
-def repetition_metrics(
-    df: DataFrame, text_col: str = "text", keep: tuple[str, ...] = ()
-) -> DataFrame:
+def repetition_metrics(df: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     """Gopher-style repetition quality signals (Rae et al. 2021 §A1.1, the
     standard "repetitive document" filters in LLM data pipelines):
 
@@ -293,7 +287,7 @@ def repetition_metrics(
 
     if "keep" in keep:
         raise ValueError("output column 'keep' is reserved")
-    in_cols = list(dict.fromkeys(["doc_id", *keep, text_col]))
+    in_cols = list(dict.fromkeys(["doc_id", *keep, "text"]))
     src = df.select(*in_cols)
     types = {f.name: f.dataType.simpleString() for f in src.schema.fields}
     out_schema = ", ".join(
@@ -311,11 +305,12 @@ def repetition_metrics(
         # exact replay of the expression semantics: split keeps empties,
         # quantize = floor(x·1e6 + 0.5)/1e6 on IEEE doubles
         if s is None:
-            # replay of the expression's NULL algebra: size(NULL) → NULL
-            # makes n_tokens/top_frac NULL, but dup_frac's when(n >= 2)
-            # predicate is NULL → falls to the otherwise(0.0) branch, and
-            # keep = (NULL <= .2) AND (0.0 <= .4) → NULL (the SQL oracle
-            # agrees — CASE WHEN NULL falls through to ELSE)
+            # a NULL text's token count is NULL (the oracle's len(NULL);
+            # size(NULL) under the session's sizeOfNull pin), so
+            # n_tokens/top_frac are NULL, the dup_frac test n >= 2 is
+            # NULL and falls to its 0.0 branch (the oracle's CASE WHEN
+            # NULL falls through to ELSE), and keep = (NULL <= .2) AND
+            # (0.0 <= .4) is NULL
             return (None, None, 0.0, None)
         toks = s.split(" ")
         n = len(toks)
@@ -333,7 +328,7 @@ def repetition_metrics(
 
     def gen(it):
         for pdf in it:
-            vals = [_row(s) for s in pdf[text_col]]
+            vals = [_row(s) for s in pdf["text"]]
             out = {"doc_id": pdf["doc_id"]}
             for k in keep:
                 out[k] = pdf[k]
@@ -354,9 +349,7 @@ PII_EMAIL_REGEX = r"[A-Za-z0-9._%+\-]+@[A-Za-z0-9.\-]+\.[A-Za-z]{2,}"
 PII_PHONE_REGEX = r"\+?[0-9][0-9()\- ]{6,}[0-9]"
 
 
-def pii_scrub(
-    df: DataFrame, text_col: str = "text", spread_input: bool = True
-) -> DataFrame:
+def pii_scrub(df: DataFrame) -> DataFrame:
     """C4-style PII redaction: replace email addresses and phone-number
     shapes with typed placeholders and report per-document redaction
     counts. Pure per-row projection (regexp_replace / regexp_count on the
@@ -365,16 +358,13 @@ def pii_scrub(
     the phone pattern could otherwise eat digit runs inside an
     already-redacted placeholder's neighborhood.
 
-    ``spread_input``: the five regex passes per row are the heaviest
-    per-byte projection in the per-row text family, and a single-row-
-    group parquet file runs them all on one core — the data-
-    proportional ``spread`` fan-out measured 0.503 → 0.285 s (−43%) at
-    sf0.1 (interleaved medians)."""
-    if spread_input:
-        from .cleaning import spread
-
-        df = spread(df)
-    t = F.col(text_col)
+    The input is ``spread`` first: the five regex passes per row are the
+    heaviest per-byte projection in the per-row text family, and a
+    single-row-group parquet file runs them all on one core — the data-
+    proportional fan-out measured 0.503 → 0.285 s (−43%) at sf0.1
+    (interleaved medians)."""
+    df = spread(df)
+    t = F.col("text")
     n_email = F.regexp_count(t, F.lit(PII_EMAIL_REGEX))
     scrubbed = F.regexp_replace(
         F.regexp_replace(t, PII_EMAIL_REGEX, "<EMAIL>"),
@@ -393,81 +383,48 @@ def pii_scrub(
     )
 
 
-def pack_sequences(
-    df: DataFrame, text_col: str = "text", budget: int = 2048
-) -> DataFrame:
+# Tokens per pack_sequences training bin.
+PACK_BUDGET = 2048
+
+
+def pack_sequences(df: DataFrame) -> DataFrame:
     """Sequential sequence packing: documents are laid out in doc_id order
-    and assigned to training bins of ``budget`` tokens by their running
-    offset (bin = floor(tokens_before / budget)).
+    and assigned to training bins of ``PACK_BUDGET`` tokens by their
+    running offset (bin = floor(tokens_before / budget)). A NULL text has
+    a NULL token count: it lands in a bin and adds no tokens, as in the
+    oracle.
 
     This is the STREAMING form of packing (a document may straddle a bin
     boundary — trainers truncate or wrap); exact first-fit packing is
     inherently sequential state, which is why production packers run
     exactly this offset formula.
 
-    SCALE DESIGN — two-phase distributed prefix sum (no global window):
-    a single ``Window.orderBy`` with no partition key funnels the whole
-    corpus through one task, the canonical global-window scale-killer.
-    Instead: (0) split the doc_id domain into ``n_buckets`` ordered ranges
-    via approximate percentiles (balance-only — exactness not needed);
-    (1) one tiny aggregate computes per-bucket token totals, whose running
-    sum on the driver gives each bucket's starting offset (n_buckets rows);
-    (2) the cumsum runs as a PARTITIONED window (partitionBy bucket) plus
-    the bucket's literal offset. Identical output to the sequential
-    formula, embarrassingly parallel; at 100 TB persist the tokenized
-    projection between phases 1 and 2 to avoid a second text scan."""
-    from functools import reduce
-    from operator import add
-
-    from pyspark.sql.window import Window
-
-    n_tok = F.size(tokens(F.col(text_col))).cast("bigint")
-    base = df.select("doc_id", n_tok.alias("n_tok"))
-
-    spark = df.sparkSession
-    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    cuts = []
-    if probs:
-        row = base.select(
-            F.percentile_approx("doc_id", probs, 10000).alias("c")
-        ).first()
-        cuts = sorted(set(row["c"] or []))
-    # Ordered range-bucket id: the number of cut points strictly below
-    # this doc_id (a handful of codegen'd comparisons, no shuffle).
-    bkt = reduce(
-        add,
-        [(F.col("doc_id") > F.lit(c)).cast("int") for c in cuts],
-        F.lit(0),
+    SCALE DESIGN — distributed prefix sum (no global window): a single
+    ``Window.orderBy`` with no partition key funnels the whole corpus
+    through one task, the canonical global-window scale-killer. Instead
+    ``ordering._range_prefix`` splits the doc_id domain into ordered
+    percentile ranges, runs the exclusive running token sum as a
+    PARTITIONED window per range, and adds each range's start offset
+    (the token totals of the ranges before it, summed in the plan).
+    Identical output to the sequential formula, embarrassingly parallel;
+    at 100 TB persist the tokenized projection to avoid a second text
+    scan."""
+    n_tok = F.size(tokens(F.col("text"))).cast("bigint")
+    binned = _range_prefix(
+        df.select("doc_id", n_tok.alias("n_tok")),
+        [F.col("doc_id").asc()],
+        ("doc_id", True),
+        lambda w: F.coalesce(
+            F.sum("n_tok").over(
+                w.rowsBetween(Window.unboundedPreceding, -1)
+            ),
+            F.lit(0).cast("bigint"),
+        ),
+        F.sum("n_tok"),
+        "before",
     )
-    bucketed = base.withColumn("bkt", bkt)
-
-    totals = {
-        r["bkt"]: r["t"]
-        for r in bucketed.groupBy("bkt")
-        .agg(F.sum("n_tok").alias("t"))
-        .collect()
-    }
-    offsets, acc = {}, 0
-    for b in range(len(cuts) + 1):
-        offsets[b] = acc
-        acc += totals.get(b) or 0
-    off_map = F.create_map(
-        *[F.lit(x) for b, o in offsets.items() for x in (b, o)]
-    )
-
-    w = (
-        Window.partitionBy("bkt")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    before = F.element_at(off_map, F.col("bkt")).cast("bigint") + F.coalesce(
-        F.sum("n_tok").over(w), F.lit(0).cast("bigint")
-    )
-    binned = bucketed.withColumn(
-        "bin_id", F.floor(before / F.lit(budget)).cast("bigint")
-    )
-    return binned.groupBy("bin_id").agg(
+    bin_id = F.floor(F.col("before") / F.lit(PACK_BUDGET)).cast("bigint")
+    return binned.groupBy(bin_id.alias("bin_id")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tok").alias("total_tokens"),
         F.min("doc_id").alias("first_doc"),
@@ -475,7 +432,7 @@ def pack_sequences(
     )
 
 
-def bigram_lm_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+def bigram_lm_score(df: DataFrame) -> DataFrame:
     """Per-document quality score from a corpus-trained bigram language
     model: the average conditional probability p(b|a) over the document's
     bigram instances — the distributed shape of CCNet-style perplexity
@@ -507,10 +464,7 @@ def bigram_lm_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     ``localCheckpoint``-materialized intermediate consistently slower
     for single consumption, because the materialization barrier
     serializes the DAG while the redundant explode pipelines freely
-    across all cores. ``ccnet_buckets`` is the exception — it
-    re-consumes the whole scored output a second time, where the same
-    A/B shows checkpointing a per-doc count table D winning — so the
-    knob lives on ``_bigram_scored``. The corpus bigram count c2's
+    across all cores. The corpus bigram count c2's
     a-marginal c1 rides a window PARTITIONED BY the first token over c2
     (one row per distinct bigram, so the partition is
     vocabulary-bounded — never corpus-bounded), and the finished LM
@@ -519,29 +473,16 @@ def bigram_lm_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     one per-doc weighted hash aggregate. No global windows, no
     self-joins, no driver-side model collect.
     """
-    return _bigram_scored(df, text_col, carry=(), materialize=False)
+    return _bigram_scored(df, carry=())
 
 
-def _bigram_scored(
-    df: DataFrame, text_col: str, carry: tuple[str, ...],
-    materialize: bool = False,
-) -> DataFrame:
+def _bigram_scored(df: DataFrame, carry: tuple[str, ...]) -> DataFrame:
     """``bigram_lm_score``'s pipeline with optional pass-through columns:
     ``carry`` names doc-level columns (functionally dependent on doc_id,
     e.g. lang) threaded through the group keys — same groups, zero extra
     rows, and composites like ``ccnet_buckets`` skip a corpus-sized
-    label join.
-
-    ``materialize=True`` checkpoints the D = (doc_id, bg, cnt) table so
-    lineage above it never re-executes. Only worth it when the CALLER
-    multiplies the rescans — ``ccnet_buckets`` consumes the scored
-    output twice, so without it the scan+explode runs 4× (measured
-    36.9 s vs 24.6 s at 500k docs). For single-consumption
-    (``bigram_lm_score``) the barrier is a straight loss — see that
-    docstring's A/B numbers."""
-    from pyspark.sql.window import Window
-
-    df = project_tokens(df, text_col, *carry)
+    label join."""
+    df = project_tokens(df, *carry)
     toks = F.col("__toks")
     grams = F.transform(
         F.sequence(F.lit(0), F.size(toks) - F.lit(2)),
@@ -553,54 +494,19 @@ def _bigram_scored(
         F.array().cast("array<struct<a:string,b:string>>")
     )
     inst = df.select("doc_id", *carry, F.explode(safe).alias("bg"))
-    if materialize:
-        # The per-doc count table D = (doc_id, bg, cnt) exists ONLY on
-        # this branch: a checkpointable artifact smaller than the
-        # instance stream, shared by both consumers below so the
-        # scan+explode runs once. Deferred (lazy) checkpoint —
-        # eager=True would run a full Spark job at DataFrame-
-        # CONSTRUCTION time (even a bare .explain() triggered it).
-        # Caveat at cluster scale: localCheckpoint blocks live on
-        # executors with no lineage to recompute them, so an executor
-        # loss mid-query fails the query; for a 100 TB run swap this
-        # for a reliable checkpoint dir or accept the rescans.
-        d = inst.groupBy("doc_id", *carry, "bg").agg(
-            F.count(F.lit(1)).alias("cnt")
-        ).localCheckpoint(eager=False)
-        c2 = d.groupBy("bg").agg(F.sum("cnt").alias("c2"))
-    else:
-        # No D table: both consumers aggregate the narrow exploded
-        # instance stream DIRECTLY, deleting the corpus-scale
-        # (doc_id, bg) exchange the round-8 plan paid once per
-        # consumer (~0.9 rows per bigram instance — the largest
-        # shuffle in the whole text family). Map-side partial
-        # aggregation does the same collapse for free: each doc's
-        # instances are task-local (narrow lineage from one row), so
-        # the c2 exchange carries distinct-bigrams-per-partition and
-        # the per-doc exchange carries one partial row per doc.
-        # Identical output (Σ units over instances ≡ Σ cnt·units over
-        # D); interleaved warm A/B at 1.5M docs: 18.5–24 s → 13–16 s.
-        c2 = inst.groupBy("bg").agg(F.count(F.lit(1)).alias("c2"))
+    c2 = inst.groupBy("bg").agg(F.count(F.lit(1)).alias("c2"))
     c1 = F.sum("c2").over(Window.partitionBy(F.col("bg.a")))
     units = F.floor(
         F.col("c2").cast("double") / c1.cast("double")
         * F.lit(1e12) + F.lit(0.5)
     ).cast("bigint")
     lm = c2.select("bg", units.alias("__units"))
-    if materialize:
-        per_doc = d.join(F.broadcast(lm), "bg").groupBy(
-            "doc_id", *carry
-        ).agg(
-            F.sum("cnt").alias("n_bigrams"),
-            F.sum(F.col("cnt") * F.col("__units")).alias("__su"),
-        )
-    else:
-        per_doc = inst.join(F.broadcast(lm), "bg").groupBy(
-            "doc_id", *carry
-        ).agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.sum("__units").alias("__su"),
-        )
+    per_doc = inst.join(F.broadcast(lm), "bg").groupBy(
+        "doc_id", *carry
+    ).agg(
+        F.count(F.lit(1)).alias("n_bigrams"),
+        F.sum("__units").alias("__su"),
+    )
     score = (
         F.col("__su").cast("double") / F.lit(1e12)
     ) / F.col("n_bigrams").cast("double")
@@ -611,27 +517,17 @@ def _bigram_scored(
 
 # The Gopher rules' stopword list (Rae et al. 2021, "Scaling Language
 # Models: ... Gopher", appendix A1.1 quality filtering): a document must
-# contain at least min_stop_hits DISTINCT words from this list.
+# contain at least two DISTINCT words from this list.
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
 def gopher_quality(
-    df: DataFrame,
-    text_col: str = "text",
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_word_ratio: float = 0.1,
-    min_alpha_word_ratio: float = 0.8,
-    min_stop_hits: int = 2,
-    keep: tuple[str, ...] = (),
-    spread_input: bool = True,
+    df: DataFrame, keep: tuple[str, ...] = (), spread_input: bool = True
 ) -> DataFrame:
     """Gopher quality rules (Rae et al. 2021 §A1.1) as per-document flag
     columns plus the conjunctive ``passes`` verdict — the standard
-    pre-training quality gate (word-count bounds, mean word length 3–10,
-    hash/ellipsis symbol ratio, ≥80% words containing a letter, ≥2
+    pre-training quality gate (50–100,000 words, mean word length 3–10,
+    hash/ellipsis symbol ratio ≤ 0.1, ≥80% words containing a letter, ≥2
     distinct stopwords present).
 
     Scale: pure per-row column algebra over one token projection — no
@@ -641,8 +537,8 @@ def gopher_quality(
     oracle compares the same quantized value). ``keep`` names
     pass-through columns so composites (curation_funnel) can chain the
     per-row gates on ONE scan instead of joining them back
-    (``text_col`` itself may be kept — the token projection already
-    carries it, so it is only re-emitted, never duplicated).
+    (``text`` itself may be kept — the token projection already carries
+    it, so it is only re-emitted, never duplicated).
 
     ``spread_input``: sf0.1 parquet arrives as ONE row group, so the
     scan planner cannot split it and the whole token/regex projection
@@ -651,11 +547,9 @@ def gopher_quality(
     already spread (or stream) pass False.
     """
     if spread_input:
-        from .cleaning import spread
-
         df = spread(df)
-    df = project_tokens(df, text_col, *[k for k in keep if k != text_col])
-    t = F.col(text_col)
+    df = project_tokens(df, *[k for k in keep if k != "text"])
+    t = F.col("text")
     toks = F.col("__toks")
     n_words = F.size(toks)
     sum_len = F.aggregate(
@@ -678,11 +572,11 @@ def gopher_quality(
     stop_hits = F.size(
         F.filter(stop_arr, lambda w: F.array_contains(toks, w))
     )
-    f_wc = (n_words >= min_words) & (n_words <= max_words)
-    f_wl = (mean_wl >= min_mean_word_len) & (mean_wl <= max_mean_word_len)
-    f_sym = sym_ratio <= max_symbol_word_ratio
-    f_alpha = alpha_ratio >= min_alpha_word_ratio
-    f_stop = stop_hits >= min_stop_hits
+    f_wc = (n_words >= 50) & (n_words <= 100_000)
+    f_wl = (mean_wl >= 3.0) & (mean_wl <= 10.0)
+    f_sym = sym_ratio <= 0.1
+    f_alpha = alpha_ratio >= 0.8
+    f_stop = stop_hits >= 2
     return df.select(
         "doc_id",
         *keep,
@@ -700,41 +594,47 @@ def gopher_quality(
     )
 
 
-def vocab_topk(
-    df: DataFrame, text_col: str = "text", top_k: int = 100
-) -> DataFrame:
-    """Corpus vocabulary head: the ``top_k`` most frequent tokens with
-    rank, corpus share, and cumulative share — the Zipf-head report a
+def _term_freq(df: DataFrame) -> DataFrame:
+    """(token, freq): the corpus term-frequency table — explode the
+    (``spread``) token split, then one map-side-combined hash aggregate
+    to the term grain (vocabulary-bounded)."""
+    return (
+        spread(df)
+        .select(F.explode(tokens(F.col("text"))).alias("token"))
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).alias("freq"))
+    )
+
+
+def _top_terms(tf: DataFrame, n: int) -> DataFrame:
+    """The top-``n`` cut of a ``_term_freq`` table (freq desc, token asc):
+    TakeOrderedAndProject, never a full sort."""
+    return tf.orderBy(F.col("freq").desc(), F.col("token").asc()).limit(n)
+
+
+# vocab_topk's head size.
+VOCAB_TOP_K = 100
+
+
+def vocab_topk(df: DataFrame) -> DataFrame:
+    """Corpus vocabulary head: the ``VOCAB_TOP_K`` most frequent tokens
+    with rank, corpus share, and cumulative share — the Zipf-head report a
     tokenizer-budget / data-mixture analysis starts from. (No log-log
     slope on purpose: libm ``log`` is not bit-stable across engines; rank
     and share carry the same signal and are exact-integer + one correctly
     rounded division each.)
 
-    Scale shape: explode → map-side-combined hash aggregate to the term
-    grain (vocabulary-bounded); the corpus total is a 1-row rollup of that
-    SAME term table (never a second corpus scan) broadcast back onto the
-    head. The top-k selection is TakeOrderedAndProject (never a full sort), and
-    only the ≤ top_k survivors pass through the single-partition ranking
-    window — bounded by ``top_k``, not by the vocabulary.
+    Scale shape: ``_term_freq``; the corpus total is a 1-row rollup of
+    that SAME term table (never a second corpus scan) broadcast back onto
+    the head. Only the ≤ ``VOCAB_TOP_K`` survivors of the ``_top_terms``
+    cut pass through the single-partition ranking window — bounded by
+    the head size, not by the vocabulary.
     """
-    from pyspark.sql.window import Window as W
-
-    from .cleaning import spread
-
-    tf = (
-        spread(df)
-        .select(F.explode(tokens(F.col(text_col))).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
+    tf = _term_freq(df)
     total = tf.agg(F.sum("freq").alias("__total"))
-    top = (
-        tf.orderBy(F.col("freq").desc(), F.col("token").asc())
-        .limit(top_k)
-        .crossJoin(F.broadcast(total))
-    )
-    w = W.orderBy(F.col("freq").desc(), F.col("token").asc())
-    ranked = top.select(
+    top = _top_terms(tf, VOCAB_TOP_K).crossJoin(F.broadcast(total))
+    w = Window.orderBy(F.col("freq").desc(), F.col("token").asc())
+    return top.select(
         F.row_number().over(w).alias("rank"),
         "token",
         "freq",
@@ -743,19 +643,15 @@ def vocab_topk(
         ).alias("share"),
         quantize(
             F.sum("freq").over(
-                w.rowsBetween(W.unboundedPreceding, W.currentRow)
+                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
             ).cast("double")
             / F.col("__total").cast("double"),
             6,
         ).alias("cum_share"),
     )
-    return ranked
 
 
-def ccnet_buckets(
-    df: DataFrame, lang_col: str = "lang", text_col: str = "text",
-    materialize: bool = False,
-) -> DataFrame:
+def ccnet_buckets(df: DataFrame) -> DataFrame:
     """CCNet-style per-language perplexity bucketing (Wenzek et al. 2020):
     score every document with the corpus-trained bigram LM
     (``bigram_lm_score`` — avg conditional probability, monotone in
@@ -773,29 +669,17 @@ def ccnet_buckets(
     (deterministic, engine-portable). The finished (lang, score → bucket)
     table broadcasts back onto the scored corpus.
     """
-    from pyspark.sql.window import Window as W
-
     # lang rides the LM aggregates as an extra group key (functionally
     # dependent on doc_id — same groups, zero extra rows), which deletes
     # the corpus-sized scored⋈lang join the round-6 plan paid twice (once
     # per consumer of the labeled corpus). The labeled output has two
     # consumers (the tercile election and the final join); it is one
     # narrow row per doc, so ITS checkpoint is cheap and deletes a whole
-    # LM re-execution — that barrier is unconditional. The D-table
-    # checkpoint (materialize=True) became a LOSS once the no-D
-    # direct-instance aggregation landed: with the labeled barrier in
-    # place the LM pipeline runs exactly once either way, so D's
-    # write+read + its (doc_id, bg) exchange buys nothing the deleted
-    # exchange didn't already pay for (500k-doc interleaved A/B:
-    # D-checkpoint 19.5–28.7 s median ~22, no-D 13.0–19.9 s median
-    # ~17.4; earlier rounds' "checkpoint wins" A/Bs predate the no-D
-    # shape). Kept as a caller knob for corpora where the scan itself —
-    # not the exchange — dominates and a shared D beats two scans.
-    labeled = (
-        _bigram_scored(df, text_col, carry=(lang_col,), materialize=materialize)
-        .withColumnRenamed(lang_col, "lang")
-        .localCheckpoint(eager=False)
-    )
+    # LM re-execution — that barrier is unconditional. A second
+    # checkpoint of the per-doc bigram count table under it measured a
+    # LOSS (500k-doc interleaved A/B: median ~22 s against ~17.4 s):
+    # with the labeled barrier the LM pipeline runs once either way.
+    labeled = _bigram_scored(df, carry=("lang",)).localCheckpoint(eager=False)
     # One exchange for the whole tercile election: hash-partitioning on
     # lang alone satisfies BOTH the (lang, lm_score) groupBy's clustered
     # distribution (lang ⊆ grouping keys ⇒ equal keys co-locate) and the
@@ -807,11 +691,11 @@ def ccnet_buckets(
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     w_prev = (
-        W.partitionBy("lang")
+        Window.partitionBy("lang")
         .orderBy(F.col("lm_score").desc())
-        .rowsBetween(W.unboundedPreceding, -1)
+        .rowsBetween(Window.unboundedPreceding, -1)
     )
-    w_lang = W.partitionBy("lang")
+    w_lang = Window.partitionBy("lang")
     cum = F.coalesce(F.sum("cnt").over(w_prev), F.lit(0)).cast("bigint")
     n_lang = F.sum("cnt").over(w_lang).cast("bigint")
     buckets = dist.select(
@@ -858,7 +742,12 @@ UNICODE_FOLDS: tuple[tuple[str, str], ...] = (
 CONTROL_CHARS_RE = "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]"
 
 
-def normalize_text(df: DataFrame, text_col: str = "text") -> DataFrame:
+def _collapse_ws(t: Column) -> Column:
+    """Whitespace runs to one space, trimmed."""
+    return F.trim(F.regexp_replace(t, "[ \\t\\r\\n]+", " "))
+
+
+def normalize_text(df: DataFrame) -> DataFrame:
     """Pre-dedup text normalization — the canonical first transform of a
     crawl→training-text pipeline (CCNet/RefinedWeb both normalize before
     hashing): fold typographic Unicode (curly quotes, dashes, ellipsis,
@@ -880,12 +769,11 @@ def normalize_text(df: DataFrame, text_col: str = "text") -> DataFrame:
     deliberately out of contract — the fold table is the deterministic,
     engine-portable subset).
     """
-    t = F.col(text_col)
+    t = F.col("text")
     n_raw = F.length(t).cast("bigint")
     for src, dst in UNICODE_FOLDS:
         t = F.replace(t, F.lit(src), F.lit(dst))
-    t = F.regexp_replace(t, CONTROL_CHARS_RE, "")
-    t = F.trim(F.regexp_replace(t, "[ \\t\\r\\n]+", " "))
+    t = _collapse_ws(F.regexp_replace(t, CONTROL_CHARS_RE, ""))
     return df.select(
         "doc_id",
         t.alias("norm_text"),
@@ -906,7 +794,7 @@ HTML_ENTITIES: tuple[tuple[str, str], ...] = (
 )
 
 
-def strip_html(df: DataFrame, text_col: str = "text") -> DataFrame:
+def strip_html(df: DataFrame) -> DataFrame:
     """Crawl-page cleanup: remove HTML tags, decode the common entities,
     collapse whitespace — the first transform a crawl→training-text
     pipeline applies. Returns (doc_id, clean_text, n_tags_removed).
@@ -918,15 +806,14 @@ def strip_html(df: DataFrame, text_col: str = "text") -> DataFrame:
     shuffle-free, scan-speed, and every step replays identically in the
     DuckDB oracle (RE2-compatible pattern, no backrefs).
     """
-    t = F.col(text_col)
+    t = F.col("text")
     n_tags = F.regexp_count(t, F.lit("<[^>]*>")).cast("bigint")
     cleaned = F.regexp_replace(t, "<[^>]*>", " ")
     for ent, ch in HTML_ENTITIES:
         cleaned = F.replace(cleaned, F.lit(ent), F.lit(ch))
-    collapsed = F.trim(F.regexp_replace(cleaned, "[ \\t\\r\\n]+", " "))
     return df.select(
         "doc_id",
-        collapsed.alias("clean_text"),
+        _collapse_ws(cleaned).alias("clean_text"),
         n_tags.alias("n_tags_removed"),
     )
 
@@ -939,9 +826,7 @@ def strip_html(df: DataFrame, text_col: str = "text") -> DataFrame:
 CHAR_CLASSES = tuple("abcdefghijklmnopqrstuvwxyz0123456789")
 
 
-def char_stats(
-    df: DataFrame, text_col: str = "text", spread_input: bool = True
-) -> DataFrame:
+def char_stats(df: DataFrame) -> DataFrame:
     """Per-document character-distribution statistics for encoding- and
     gibberish-detection: class counts (letters/digits/spaces/other),
     distinct-character richness, and the Simpson diversity index
@@ -971,23 +856,18 @@ def char_stats(
     ``_swar_bits_sql`` pathology); ~45 parsed strings are each a single
     round-trip.
 
-    ``spread_input`` (round 14): ~37 string passes per row on a single-
-    row-group parquet input all run on one core — the data-proportional
-    ``spread`` fan-out measured 0.833 → 0.539 s (−35%) at sf0.1
+    The input is ``spread`` first (round 14): ~37 string passes per row
+    on a single-row-group parquet input all run on one core — the
+    data-proportional fan-out measured 0.833 → 0.539 s (−35%) at sf0.1
     (interleaved medians).
     """
-    if spread_input:
-        from .cleaning import spread
-
-        df = spread(df)
-    ident = "`" + text_col.replace("`", "``") + "`"
-    counts = df.selectExpr(
+    counts = spread(df).selectExpr(
         "doc_id",
-        f"cast(length({ident}) as bigint) AS __n",
-        f"cast(length({ident}) - length(replace({ident}, ' ', ''))"
-        " as bigint) AS __c_sp",
+        "cast(length(text) as bigint) AS __n",
+        "cast(length(text) - length(replace(text, ' ', '')) as bigint)"
+        " AS __c_sp",
         *[
-            f"cast(length({ident}) - length(replace({ident}, '{c}', ''))"
+            f"cast(length(text) - length(replace(text, '{c}', ''))"
             f" as bigint) AS __c_{c}"
             for c in CHAR_CLASSES
         ],
@@ -1031,7 +911,7 @@ CODE_KEYWORDS = (
 CODE_SYMBOL_RE = "[{}\\[\\]()<>=;:!&|^~#@+*/%-]"
 
 
-def code_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
+def code_signals(df: DataFrame) -> DataFrame:
     """Code-vs-prose routing signals — the mixture split an LLM data
     pipeline applies before language-specific processing (code gets a
     different tokenizer/quality stack than prose).
@@ -1042,8 +922,8 @@ def code_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
     every expression replays in ANSI SQL (counts are exact integers,
     ratios one double division + floor-quantize).
     """
-    df = project_tokens(df, text_col)
-    t = F.col(text_col)
+    df = project_tokens(df)
+    t = F.col("text")
     toks = F.col("__toks")
     n_chars = F.length(t).cast("bigint")
     n_tok = F.size(toks)
@@ -1078,13 +958,8 @@ def code_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def boilerplate_ngrams(
-    df: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    min_docs: int = 20,
-) -> DataFrame:
-    """Corpus-level boilerplate mining: word n-grams that appear in at
+def boilerplate_ngrams(df: DataFrame, min_docs: int = 20) -> DataFrame:
+    """Corpus-level boilerplate mining: word 3-grams that appear in at
     least ``min_docs`` DISTINCT documents, with document frequency and
     total occurrence counts — the discovery pass that feeds template/
     banner removal (C4 and RefinedWeb both strip high-document-frequency
@@ -1102,8 +977,8 @@ def boilerplate_ngrams(
     # n-gram INSTANCES (multiplicity preserved — unlike dedup's
     # shingle_rows, which array_distincts per doc, occurrence totals need
     # every instance). Same split-once projection-boundary discipline.
-    sh = F.expr(f"if(size(__toks) >= {n}, {word_ngrams(n)}, array())")
-    inst = project_tokens(df, text_col).select(
+    sh = F.expr(f"if(size(__toks) >= 3, {word_ngrams(3)}, array())")
+    inst = project_tokens(df).select(
         "doc_id", F.explode(sh).alias("shingle")
     )
     per_doc = inst.groupBy("shingle", "doc_id").agg(
@@ -1125,21 +1000,17 @@ def boilerplate_ngrams(
 VOCAB_INLINE_MAX = 4096
 
 
-def vocab_encode(
-    df: DataFrame,
-    text_col: str = "text",
-    vocab_size: int = 256,
-    unk_id: int = -1,
-) -> DataFrame:
+def vocab_encode(df: DataFrame, vocab_size: int = 256) -> DataFrame:
     """Tokenize-and-encode — the step that turns a curated corpus into
     model input: build the top-``vocab_size`` corpus vocabulary (ids
     0..V-1 in frequency-desc / token-asc order, ``vocab_topk``'s exact
     ranking) and re-emit every document as its token-id array, with
-    out-of-vocabulary tokens mapped to ``unk_id``.
+    out-of-vocabulary tokens mapped to -1.
 
     Returns (doc_id, ids array<int>, n_tokens, n_unk): the id sequence
     preserves token order, and the OOV count is the coverage diagnostic
-    a tokenizer budget is tuned against.
+    a tokenizer budget is tuned against. A NULL text has no token
+    positions, so it is no document.
 
     Scale shape — TWO value-identical encode plans (tested equal),
     gated on ``vocab_size``:
@@ -1160,33 +1031,20 @@ def vocab_encode(
       structs, not by any cross-partition ordering assumption
       (collect_list order is undefined by contract).
 
-    Both plans build the vocab the same way: one explode feeds the
-    term-grain aggregate (vocabulary-bounded output), the top-V cut is
-    TakeOrderedAndProject (never a full sort — only ≤ V survivors pass
-    the single-partition id-assignment window).
+    Both plans build the vocab the same way: ``_term_freq``, then the
+    ``_top_terms`` cut (only ≤ V survivors pass the single-partition
+    id-assignment window).
     """
-    from pyspark.sql.window import Window as W
-
-    from .cleaning import spread
-
-    base = project_tokens(spread(df), text_col)
-    tf = (
-        base.select(F.explode("__toks").alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("freq"))
+    df = df.where(F.col("text").isNotNull())
+    base = project_tokens(spread(df))
+    w = Window.orderBy(F.col("freq").desc(), F.col("token").asc())
+    vocab = _top_terms(_term_freq(df), vocab_size).select(
+        "token",
+        (F.row_number().over(w) - F.lit(1)).cast("int").alias("__vid"),
     )
-    w = W.orderBy(F.col("freq").desc(), F.col("token").asc())
-    vocab = (
-        tf.orderBy(F.col("freq").desc(), F.col("token").asc())
-        .limit(vocab_size)
-        .select(
-            "token",
-            (F.row_number().over(w) - F.lit(1)).cast("int").alias("__vid"),
-        )
-    )
+    unk = F.lit(-1).cast("int")
     if vocab_size <= VOCAB_INLINE_MAX:
         rows = vocab.collect()  # ≤ vocab_size rows — caller-bounded
-        unk = F.lit(int(unk_id)).cast("int")
         toks = F.col("__toks")
         if rows:
             entries = []
@@ -1194,9 +1052,7 @@ def vocab_encode(
                 entries.append(F.lit(r["token"]))
                 entries.append(F.lit(int(r["__vid"])).cast("int"))
             mp = F.create_map(*entries)
-            # n_unk counts lookup MISSES (null before the unk coalesce),
-            # so a caller-chosen unk_id colliding with a real id cannot
-            # inflate the count
+            # n_unk counts lookup MISSES (null before the unk coalesce)
             raw = F.transform(toks, lambda t: F.element_at(mp, t))
         else:  # empty corpus vocab: everything is UNK
             raw = F.transform(toks, lambda t: F.lit(None).cast("int"))
@@ -1220,10 +1076,7 @@ def vocab_encode(
                 F.array_sort(
                     F.collect_list(
                         F.struct(
-                            "pos",
-                            F.coalesce(
-                                F.col("__vid"), F.lit(int(unk_id)).cast("int")
-                            ).alias("id"),
+                            "pos", F.coalesce(F.col("__vid"), unk).alias("id")
                         )
                     )
                 ),
@@ -1236,9 +1089,7 @@ def vocab_encode(
     )
 
 
-def ngram_counts(
-    df: DataFrame, text_col: str = "text", n: int = 3, min_count: int = 2
-) -> DataFrame:
+def ngram_counts(df: DataFrame, n: int = 3, min_count: int = 2) -> DataFrame:
     """Pruned corpus n-gram frequency table — the raw-count primitive an
     n-gram LM / contamination index / boilerplate miner is built from
     (counts every OCCURRENCE, unlike ``boilerplate_ngrams`` which counts
@@ -1258,11 +1109,9 @@ def ngram_counts(
     the singleton tail — the vast majority of distinct n-grams by
     Zipf — never reaches the consumer.
     """
-    from .cleaning import spread
-
     grams = F.expr(f"if(size(__toks) >= {n}, {word_ngrams(n)}, array())")
     return (
-        spread(project_tokens(df, text_col))
+        spread(project_tokens(df))
         .select(F.explode(grams).alias("ngram"))
         .groupBy("ngram")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -1271,10 +1120,7 @@ def ngram_counts(
 
 
 def cooccurrence_counts(
-    df: DataFrame,
-    text_col: str = "text",
-    window: int = 3,
-    min_count: int = 2,
+    df: DataFrame, window: int = 3, min_count: int = 2
 ) -> DataFrame:
     """Corpus within-window token co-occurrence counts — the primitive
     under word2vec/GloVe-style embedding training and PMI collocation
@@ -1296,8 +1142,6 @@ def cooccurrence_counts(
     tokens ON |i−j| ≤ w) is quadratic-prone and shuffles twice; in-row
     generation is one narrow pass.
     """
-    from .cleaning import spread
-
     w = int(window)
     pairs = F.expr(
         "if(size(__toks) >= 2, "
@@ -1308,7 +1152,7 @@ def cooccurrence_counts(
         "array())"
     )
     return (
-        spread(project_tokens(df, text_col))
+        spread(project_tokens(df))
         .select(F.explode(pairs).alias("p"))
         .groupBy("p.tok_a", "p.tok_b")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -1318,7 +1162,6 @@ def cooccurrence_counts(
 
 def collocation_lift(
     df: DataFrame,
-    text_col: str = "text",
     window: int = 3,
     min_count: int = 5,
     min_lift: float = 2.0,
@@ -1339,23 +1182,16 @@ def collocation_lift(
     is all ranking needs.
 
     Scale shape: the pair table comes from ``cooccurrence_counts`` (one
-    map-side-combined aggregate); the unigram table is
+    map-side-combined aggregate); the unigram table (``_term_freq``) is
     vocabulary-bounded and BROADCASTS onto the pair table twice (tok_a,
     tok_b legs); N is a 1-row aggregate of the unigram table (never a
     second corpus scan) attached by broadcast cross join. All arithmetic
     is exact BIGINT counts plus one double expression evaluated with the
     identical tree in the oracle.
     """
-    from .cleaning import spread
-
-    co = cooccurrence_counts(df, text_col, window, min_count)
-    uni = (
-        spread(df)
-        .select(F.explode(tokens(F.col(text_col))).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("ucnt"))
-    )
-    total = uni.agg(F.sum("ucnt").alias("__n"))
+    co = cooccurrence_counts(df, window, min_count)
+    uni = _term_freq(df)
+    total = uni.agg(F.sum("freq").alias("__n"))
     lift = (
         F.col("cnt").cast("double") * F.col("__n").cast("double")
     ) / (
@@ -1364,12 +1200,12 @@ def collocation_lift(
     return (
         co.join(
             F.broadcast(uni.select(F.col("token").alias("tok_a"),
-                                   F.col("ucnt").alias("__ua"))),
+                                   F.col("freq").alias("__ua"))),
             "tok_a",
         )
         .join(
             F.broadcast(uni.select(F.col("token").alias("tok_b"),
-                                   F.col("ucnt").alias("__ub"))),
+                                   F.col("freq").alias("__ub"))),
             "tok_b",
         )
         .crossJoin(F.broadcast(total))
@@ -1381,13 +1217,27 @@ def collocation_lift(
     )
 
 
+def _merge_pair(syms: tuple, a: str, b: str) -> tuple:
+    """``syms`` with each adjacent ``(a, b)`` replaced by ``a + b``,
+    leftmost first (so "aaa" with (a, a) gives ("aa", "a"))."""
+    out, i = [], 0
+    while i < len(syms):
+        if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
+            out.append(a + b)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return tuple(out)
+
+
 def _bpe_merge_word(word: str, ranks: dict) -> tuple:
     """Reference BPE apply for one word: repeatedly merge the
     lowest-rank adjacent symbol pair (all its occurrences, leftmost
     first) until no learnable pair remains. Pure function of
-    (word, ranks) — shared by the trainer's bookkeeping and the
-    encoder kernel so train/encode can never drift."""
-    syms = list(word)
+    (word, ranks); it shares ``_merge_pair`` with the trainer so
+    train/encode can never drift."""
+    syms = tuple(word)
     while len(syms) > 1:
         best = None
         for a, b in zip(syms, syms[1:]):
@@ -1396,55 +1246,37 @@ def _bpe_merge_word(word: str, ranks: dict) -> tuple:
                 best = (r, a, b)
         if best is None:
             break
-        _, a, b = best
-        out, i = [], 0
-        while i < len(syms):
-            if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                out.append(a + b)
-                i += 2
-            else:
-                out.append(syms[i])
-                i += 1
-        syms = out
-    return tuple(syms)
+        syms = _merge_pair(syms, best[1], best[2])
+    return syms
 
 
-def bpe_train(
-    df: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 50,
-    max_types: int = 50_000,
-) -> DataFrame:
+# bpe_train's cap on the word-type table it collects.
+BPE_MAX_TYPES = 50_000
+
+
+def bpe_train(df: DataFrame, n_merges: int = 50) -> DataFrame:
     """Learn a BPE merge table from the corpus (Sennrich et al. 2016,
     without the end-of-word marker): returns ``(rank, left, right,
     pair_count)`` — ``rank`` is merge order (0 = first), ``pair_count``
     the frequency mass the pair had when elected.
 
-    Scale shape — the corpus is touched ONCE, distributed: a map-side-
-    combined aggregate to the word-TYPE grain (Heaps-law sublinear in
-    corpus size), capped to the ``max_types`` most frequent types
-    (freq desc, word asc — deterministic; frequency-capped type tables
-    are how production tokenizer trainers bound memory, and the dropped
-    tail holds negligible pair mass by Zipf). The merge election loop
-    then runs driver-side over that BOUNDED table — ≤ ``max_types``
-    rows collected, corpus-size-independent — because each merge
-    depends on the previous one (inherently sequential; distributing it
-    would be ``n_merges`` full jobs for work a single core finishes in
-    seconds on a capped table). Election tie-break: (count desc, left
-    asc, right asc), engine-portable.
+    Scale shape — the corpus is touched ONCE, distributed: the
+    ``_term_freq`` aggregate to the word-TYPE grain (Heaps-law sublinear
+    in corpus size), capped by ``_top_terms`` to the ``BPE_MAX_TYPES``
+    most frequent non-empty types (deterministic; frequency-capped type
+    tables are how production tokenizer trainers bound memory, and the
+    dropped tail holds negligible pair mass by Zipf). The merge election
+    loop then runs driver-side over that BOUNDED table — ≤
+    ``BPE_MAX_TYPES`` rows collected, corpus-size-independent — because
+    each merge depends on the previous one (inherently sequential;
+    distributing it would be ``n_merges`` full jobs for work a single
+    core finishes in seconds on a capped table). Election tie-break:
+    (count desc, left asc, right asc), engine-portable.
     """
-    from .cleaning import spread
-
-    cap = (
-        spread(df)
-        .select(F.explode(tokens(F.col(text_col))).alias("w"))
-        .filter(F.length("w") > 0)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .orderBy(F.col("freq").desc(), F.col("w").asc())
-        .limit(int(max_types))
+    cap = _top_terms(
+        _term_freq(df).where(F.length("token") > 0), BPE_MAX_TYPES
     )
-    types = [(r["w"], int(r["freq"])) for r in cap.collect()]
+    types = [(r["token"], int(r["freq"])) for r in cap.collect()]
     word_syms = {w: tuple(w) for w, _ in types}
     merges = []
     for rank in range(int(n_merges)):
@@ -1459,35 +1291,18 @@ def bpe_train(
             counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
         )
         merges.append((rank, left, right, cnt))
-        merged = left + right
-        for w in word_syms:
-            syms = word_syms[w]
-            if left not in syms or right not in syms:
-                continue
-            out, i = [], 0
-            while i < len(syms):
-                if (
-                    i + 1 < len(syms)
-                    and syms[i] == left
-                    and syms[i + 1] == right
-                ):
-                    out.append(merged)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            word_syms[w] = tuple(out)
-    spark = df.sparkSession
-    return spark.createDataFrame(
+        for w, syms in word_syms.items():
+            if left in syms and right in syms:
+                word_syms[w] = _merge_pair(syms, left, right)
+    return df.sparkSession.createDataFrame(
         merges, "rank int, left string, right string, pair_count bigint"
     )
 
 
-def bpe_encode(
-    df: DataFrame, merges: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def bpe_encode(df: DataFrame, merges: DataFrame) -> DataFrame:
     """Apply a learned BPE merge table to the corpus: returns
-    ``(doc_id, bpe_tokens array<string>, n_bpe_tokens)``.
+    ``(doc_id, bpe_tokens array<string>, n_bpe_tokens)``; a NULL text
+    gives NULL tokens and a NULL count.
 
     Scale shape: the merge table is ≤ ``n_merges`` rows — collected once
     on the driver (bounded by construction) and shipped to every task in
@@ -1510,11 +1325,10 @@ def bpe_encode(
     def gen(it):
         memo: dict = {}
         for pdf in it:
-            toks_out, counts = [], []
-            for s in pdf[text_col]:
+            toks_out = []
+            for s in pdf["text"]:
                 if s is None:
                     toks_out.append(None)
-                    counts.append(None)
                     continue
                 enc = []
                 for w in s.split(" "):
@@ -1526,15 +1340,17 @@ def bpe_encode(
                         memo[w] = got
                     enc.extend(got)
                 toks_out.append(enc)
-                counts.append(len(enc))
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
                     "bpe_tokens": toks_out,
-                    "n_bpe_tokens": pd.array(counts, dtype="Int64"),
+                    "n_bpe_tokens": pd.array(
+                        [None if t is None else len(t) for t in toks_out],
+                        dtype="Int64",
+                    ),
                 }
             )
 
-    return df.select("doc_id", text_col).mapInPandas(
+    return df.select("doc_id", "text").mapInPandas(
         gen, "doc_id bigint, bpe_tokens array<string>, n_bpe_tokens bigint"
     )

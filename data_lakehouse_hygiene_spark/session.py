@@ -14,6 +14,11 @@ Scale notes (100 TB / 1000 executors):
   (``pd.to_numeric(errors="coerce")``); we additionally use try_cast /
   try_to_timestamp everywhere so the operators are correct under either
   ANSI setting.
+- ``spark.sql.legacy.sizeOfNull`` off, pinned beside ANSI: with ANSI off
+  Spark's legacy rule makes ``size(NULL)`` -1, where the oracle's
+  ``len(NULL)`` is NULL. A NULL text's token array is NULL, so every
+  token count the text operators derive from it must be NULL too; one
+  session rule gives that to all of them, with no per-operator guard.
 """
 
 from __future__ import annotations
@@ -76,6 +81,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.ansi.enabled", "false")
+        .config("spark.sql.legacy.sizeOfNull", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS)
@@ -106,6 +112,7 @@ def pin_session(spark: SparkSession) -> SparkSession:
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.ansi.enabled", "false")
+    spark.conf.set("spark.sql.legacy.sizeOfNull", "false")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     # Streaming aggregations bypass AQE's partition coalescing, so an
     # unpinned 200-partition default burns 200 tiny tasks per micro-batch

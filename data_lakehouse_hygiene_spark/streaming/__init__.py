@@ -355,9 +355,7 @@ def near_dup_stream(docs: DataFrame) -> DataFrame:
     """
     from ..operators.text import fingerprints
 
-    fp = fingerprints(docs, "text", spread_input=False).select(
-        "doc_id", "rolling_fp"
-    )
+    fp = fingerprints(docs, spread_input=False).select("doc_id", "rolling_fp")
     return _watermark_dedup(fp, ["rolling_fp"], "__ts", "365 days").select(
         "rolling_fp"
     )

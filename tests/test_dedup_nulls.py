@@ -1,16 +1,28 @@
-"""NULL rule of the text-dedup family: a NULL text has no shingles.
+"""NULL rules of the text families, checked against the DuckDB oracles.
 
 The sf0.01 ``documents`` table plus two NULL-text documents (one per
-source) must still match every dedup-family oracle. Before the rule, the
-short-document fallback turned each NULL text into one NULL shingle: the
-two NULL documents paired at Jaccard 1.0 / Hamming 0 and got an all-zero
-SimHash fingerprint, where the oracle gives no row. The per-source
-diagnostics (``source_overlap``, ``source_dup_stats``) follow the same
-rule: a NULL text is not a document, so it is neither counted nor shared
-across sources through the md5 of an empty head.
+source) must still match every row below.
+
+- Text dedup: a NULL text has no shingles. Before the rule, the
+  short-document fallback turned each NULL text into one NULL shingle:
+  the two NULL documents paired at Jaccard 1.0 / Hamming 0 and got an
+  all-zero SimHash fingerprint, where the oracle gives no row. The
+  per-source diagnostics (``source_overlap``, ``source_dup_stats``)
+  follow the same rule: a NULL text is not a document, so it is neither
+  counted nor shared across sources through the md5 of an empty head.
+- Token counts: a NULL text's token count is NULL, like the oracle's
+  ``len(NULL)``. The session pins ``spark.sql.legacy.sizeOfNull`` off
+  (with ANSI off, Spark's legacy ``size(NULL)`` is -1), which fixes
+  ``token_count``, ``quality_score``, ``lang_id``, ``code_detect``,
+  ``gopher_quality``, ``chunk_documents``, ``pack_sequences`` and
+  ``quality_weighted_sample``.
+- ``vocab_encode``: a NULL text has no token positions, so it is no
+  document. ``bpe_encode``: the operator gives a NULL text NULL tokens;
+  the registry row reads them as no tokens (``''``, 0), like the
+  oracle's coalesce over a document without positions.
 
 Left out: ``substring_dedup_apply`` and ``substring_dedup_keep_first``
-return (doc_id, NULL, 0) for a NULL text where the oracle returns
+return (doc_id, NULL, NULL) for a NULL text where the oracle returns
 (doc_id, '', NULL) — an open disagreement, not covered here."""
 
 from __future__ import annotations
@@ -44,6 +56,16 @@ ROWS = (
     "doc_fingerprint",
     "source_overlap",
     "source_dup_stats",
+    "token_count",
+    "quality_score",
+    "lang_id",
+    "code_detect",
+    "gopher_quality",
+    "chunk_documents",
+    "pack_sequences",
+    "quality_weighted_sample",
+    "vocab_encode",
+    "bpe_encode",
 )
 
 

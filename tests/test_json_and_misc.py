@@ -286,13 +286,14 @@ def test_gopher_quality_flags(spark):
     assert not got[6]["flag_stopwords"] and not got[6]["passes"]
 
 
-def test_vocab_topk_ranks_and_shares(spark):
+def test_vocab_topk_ranks_and_shares(spark, monkeypatch):
     """Rank by freq desc then token asc; share/cum_share quantized."""
-    from data_lakehouse_hygiene_spark.operators.text import vocab_topk
+    from data_lakehouse_hygiene_spark.operators import text
 
+    monkeypatch.setattr(text, "VOCAB_TOP_K", 3)
     rows = [(1, "b b b a a c"), (2, "a c d")]  # a:3 b:3 c:2 d:1, total 9
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = vocab_topk(df, top_k=3).orderBy("rank").collect()
+    got = text.vocab_topk(df).orderBy("rank").collect()
     assert [(r["rank"], r["token"], r["freq"]) for r in got] == [
         (1, "a", 3),
         (2, "b", 3),

@@ -159,7 +159,8 @@ def test_chunk_documents_edges(spark):
 
     rows = [(1, "one two three"), (2, " ".join(f"t{i}" for i in range(95)))]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = text_ops.chunk_documents(df, size=50, stride=40).collect()
+    assert (text_ops.CHUNK_TOKENS, text_ops.CHUNK_STRIDE) == (50, 40)
+    out = text_ops.chunk_documents(df).collect()
     by_doc = {}
     for r in out:
         by_doc.setdefault(r["doc_id"], []).append(r)
@@ -176,7 +177,8 @@ def test_pack_sequences_offsets(spark):
 
     rows = [(i, " ".join(["w"] * 1000)) for i in range(10)]  # 1000 tokens each
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {r["bin_id"]: r for r in text_ops.pack_sequences(df, budget=2048).collect()}
+    assert text_ops.PACK_BUDGET == 2048
+    out = {r["bin_id"]: r for r in text_ops.pack_sequences(df).collect()}
     # offsets 0,1000,...,9000 -> bins 0,0,0,1,1,2,2,3,3,4
     assert {b: out[b]["n_docs"] for b in sorted(out)} == {0: 3, 1: 2, 2: 2, 3: 2, 4: 1}
     assert sum(r["total_tokens"] for r in out.values()) == 10_000

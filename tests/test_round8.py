@@ -113,7 +113,7 @@ def test_boilerplate_ngrams_finds_planted_template(spark):
     docs = [(i, f"{banner} unique{i} words{i} body{i}") for i in range(6)]
     docs.append((6, "completely different text entirely here"))
     df = spark.createDataFrame(docs, ["doc_id", "text"])
-    out = boilerplate_ngrams(df, n=3, min_docs=6).collect()
+    out = boilerplate_ngrams(df, min_docs=6).collect()
     shingles = {r["shingle"]: (r["n_docs"], r["n_occurrences"]) for r in out}
     assert shingles["click here to"] == (6, 6)
     assert shingles["here to subscribe"] == (6, 6)
@@ -130,7 +130,7 @@ def test_boilerplate_ngrams_counts_multiplicity(spark):
     )
     out = {
         r["shingle"]: (r["n_docs"], r["n_occurrences"])
-        for r in boilerplate_ngrams(df, n=3, min_docs=3).collect()
+        for r in boilerplate_ngrams(df, min_docs=3).collect()
     }
     assert out["a b c"] == (3, 6)
 

@@ -1,4 +1,5 @@
-"""Session factory: JVM options that only a fresh driver JVM can show."""
+"""Session factory: JVM options that only a fresh driver JVM can show, and
+the SQL confs that ``get_spark`` and ``pin_session`` pin."""
 
 from __future__ import annotations
 
@@ -55,3 +56,21 @@ def test_driver_jvm_runs_parallel_gc_beside_driver_java_options():
         "Tier4CompileThreshold": "45000",
         "Tier4BackEdgeThreshold": "40000",
     }
+
+
+def test_size_of_null_is_pinned_off(spark):
+    """``size(NULL)`` must be NULL, as the oracle's ``len(NULL)``: with ANSI
+    off, Spark's legacy rule returns -1. ``get_spark`` builds the session
+    with the pin, and ``pin_session`` sets it again on a session that
+    turned it back on."""
+    from data_lakehouse_hygiene_spark.session import pin_session
+
+    assert spark.sparkContext.getConf().get("spark.sql.legacy.sizeOfNull") == "false"
+    spark.conf.set("spark.sql.legacy.sizeOfNull", "true")
+    try:
+        pin_session(spark)
+        assert spark.conf.get("spark.sql.legacy.sizeOfNull") == "false"
+        got = spark.sql("SELECT size(split(CAST(NULL AS STRING), ' ')) AS n").first()
+        assert got["n"] is None
+    finally:
+        spark.conf.set("spark.sql.legacy.sizeOfNull", "false")
